@@ -301,7 +301,15 @@ def main() -> None:
         fstore.insert_many(
             ftexts, [{"tenant": f"t{i % 3}"} for i in range(len(ftexts))]
         )
-        fstore.enable_batched_serving(top_k=10, max_batch=128, max_wait_ms=8)
+        # resident_max_bytes=0 keeps the facade meters on the
+        # micro-batched regime; meter_resident serves the same table
+        # through a second handle in the resident regime
+        fstore.enable_batched_serving(
+            top_k=10, max_batch=128, max_wait_ms=8, resident_max_bytes=0
+        )
+        rstore = SparkVectolite(
+            spark, f"{facade_dir}/db", embed_fn=stub_embedder(dim=64)
+        )
         fq = ftexts[:12]
         f_threads, f_per = 64, 6
 
@@ -345,14 +353,14 @@ def main() -> None:
         # collect cost stays out of the measured loop but the lifecycle is
         # exercised every rep.
         def meter_resident() -> dict:
-            fstore.enable_resident_serving()
-            fstore.query(fq[0], top_k=5)  # warm: the one-time collect
+            rstore.enable_batched_serving()
+            rstore.query(fq[0], top_k=5)  # warm: the one-time collect
             n_res = 400
             t0 = time.time()
             for i in range(n_res):
-                fstore.query(fq[i % len(fq)], top_k=5)
+                rstore.query(fq[i % len(fq)], top_k=5)
             dt = time.time() - t0
-            fstore.disable_resident_serving()
+            rstore.disable_batched_serving()
             return {
                 "serving_resident_1q_ms": round(dt / n_res * 1000, 3),
                 "serving_resident_qps": round(n_res / dt, 1),

@@ -242,3 +242,47 @@ def test_scaled_state_confs_registers_scope(spark, tmp_path):
             run_jobs(lambda: 1, lambda: 2)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert run_jobs(lambda: 1, lambda: 2) == [1, 2]
+
+
+def test_conf_scope_released_when_enter_fails(tmp_path):
+    """ADVICE r13: a failure inside ``__enter__`` after
+    ``conf_scope_acquire()`` must release the scope — a with-statement
+    never calls ``__exit__`` for a failed ``__enter__``, so a leaked
+    scope would make every later multi-thunk run_jobs raise
+    ConfScopeOverlapError. A stand-in session whose ``conf.set`` fails
+    drives both scopes into that path."""
+    import types
+
+    import pytest
+
+    from vectolite_spark.operators.dedup import _small_loop_confs
+    from vectolite_spark.parallel import run_jobs
+    from vectolite_spark.streaming.ingest import scaled_state_confs
+
+    class FailingConf:
+        vals = {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.shuffle.partitions": "8",
+        }
+
+        def get(self, key, default=None):
+            return self.vals.get(key, default)
+
+        def set(self, key, val):
+            raise RuntimeError("injected conf.set failure")
+
+    session = types.SimpleNamespace(
+        conf=FailingConf(),
+        sparkContext=types.SimpleNamespace(defaultParallelism=4),
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "tiny.txt").write_text("hello")
+    for scope in (
+        _small_loop_confs(session, 10),
+        scaled_state_confs(session, str(src)),
+    ):
+        with pytest.raises(RuntimeError, match="injected"):
+            with scope:
+                pass  # pragma: no cover - __enter__ fails
+        assert run_jobs(lambda: 1, lambda: 2) == [1, 2]

@@ -182,7 +182,7 @@ def test_store_batched_serving_facade_matches_exact_path(spark, tmp_path):
     texts = [f"facade doc number {i}" for i in range(5)]
     want = {t: store.query(t, top_k=3) for t in texts}  # per-job path
 
-    store.enable_batched_serving(top_k=5, max_wait_ms=40)
+    store.enable_batched_serving(top_k=5, max_wait_ms=40, resident_max_bytes=0)
     batcher = store._ensure_serving_batcher()
     cycles: list[int] = []
     orig = batcher._run_batch
@@ -242,7 +242,9 @@ def test_store_batched_serving_filtered_queries(spark, tmp_path):
     want_n5 = store.query(probes[0], top_k=2, metadata_filter={"n": 5})
     assert want_n5, "fixture: the n=5 doc must exist"
 
-    store.enable_batched_serving(top_k=5, max_wait_ms=40, filter_overfetch=4)
+    store.enable_batched_serving(
+        top_k=5, max_wait_ms=40, filter_overfetch=4, resident_max_bytes=0
+    )
     batcher = store._ensure_serving_batcher()
     cycles: list[int] = []
     orig = batcher._run_batch
@@ -292,7 +294,7 @@ def test_store_batched_serving_sees_mutations(spark, tmp_path):
         spark, str(tmp_path / "sdb2"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"warm doc number {i}" for i in range(10)])
-    store.enable_batched_serving(top_k=3, max_wait_ms=5)
+    store.enable_batched_serving(top_k=3, max_wait_ms=5, resident_max_bytes=0)
     before = store.query("a brand new probe text", top_k=1)
     new_id = store.insert("a brand new probe text")  # invalidates serving
     after = store.query("a brand new probe text", top_k=1)
@@ -345,7 +347,7 @@ def test_store_ann_queries_ride_the_facade(spark, tmp_path):
     # per-job ANN path (serving disabled) is the parity target
     want = {t: store.query(t, top_k=3, ann=True) for t in texts}
 
-    store.enable_batched_serving(top_k=5, max_wait_ms=40)
+    store.enable_batched_serving(top_k=5, max_wait_ms=40, resident_max_bytes=0)
     batcher = store._ensure_ann_serving_batcher()
     cycles: list[int] = []
     orig = batcher._run_batch
@@ -390,14 +392,12 @@ def test_store_ann_queries_ride_the_facade(spark, tmp_path):
 
 
 def test_resident_serving_matches_exact(spark, tmp_path):
-    """Driver-resident serving (r9, the sub-ms single-query tier):
+    """The resident regime (the sub-ms single-query tier) returns
     identical results to the exact Spark path — scores, order, filters,
-    zero-norm semantics — plus mutation teardown and the max_bytes
-    refusal tripwire."""
-    import pytest
-
+    zero-hit filters — and to the per-job ANN path; a mutation tears the
+    working set down; over budget the store serves through the batcher
+    instead of refusing, with the same answers."""
     from vectolite_spark.embed import stub_embedder
-    from vectolite_spark.errors import VectoliteError
     from vectolite_spark.store import SparkVectolite
 
     store = SparkVectolite(
@@ -413,30 +413,223 @@ def test_resident_serving_matches_exact(spark, tmp_path):
         t: store.query(t, top_k=5, metadata_filter={"tenant": "t1"})
         for t in texts
     }
+    want_deep = store.query(texts[0], top_k=40)
+    want_ann = store.query(texts[0], top_k=3, ann=True)
 
-    store.enable_resident_serving()
+    store.enable_batched_serving()
     for t in texts:
         assert store.query(t, top_k=5) == want_plain[t]
         assert (
             store.query(t, top_k=5, metadata_filter={"tenant": "t1"})
             == want_filtered[t]
         )
+    assert store._resident is not None and store._serving is None
     # selective filter with zero hits
     assert store.query(texts[0], top_k=5, metadata_filter={"tenant": "zz"}) == []
-    # ann still takes its own path (resident is exact-only)
-    assert store.query(texts[0], top_k=3, ann=True)
+    # top_k above the batcher ceiling still ranks the full resident set
+    assert store.query(texts[0], top_k=40) == want_deep
+    assert store.query(texts[0], top_k=3, ann=True) == want_ann
 
     # mutation tears the resident set down; next query sees fresh rows
     store.insert("resident doc number 999", {"tenant": "t1"})
+    assert store._resident is None
     fresh = store.query("resident doc number 999", top_k=3)
     assert any(r["text"] == "resident doc number 999" for r in fresh)
 
-    # the refusal tripwire: a tiny budget refuses instead of collecting
-    store.enable_resident_serving(max_bytes=1)
-    with pytest.raises(VectoliteError, match="resident serving refused"):
-        store.query(texts[0], top_k=3)
-    store.disable_resident_serving()
-    assert store.query(texts[0], top_k=5) == store.query(texts[0], top_k=5)
+    # over budget: the batcher serves, with the exact path's answers
+    store.enable_batched_serving(resident_max_bytes=1)
+    got = store.query(texts[0], top_k=5)
+    assert store._resident is None and store._resident_oversize
+    assert store._serving is not None
+    store.disable_batched_serving()
+    assert got == store.query(texts[0], top_k=5)
+
+
+def test_serving_regime_choice(spark, tmp_path):
+    """enable_batched_serving picks the regime at each working-set
+    build: under budget resident, ``resident_max_bytes=0`` micro-batched
+    without measuring, over budget micro-batched with answers equal to
+    the exact path; a mutation re-measures."""
+    import pytest
+
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.errors import VectoliteError
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "regimedb"), embed_fn=stub_embedder(dim=8)
+    )
+    store.insert_many(
+        [f"regime doc number {i}" for i in range(30)],
+        [{"tenant": f"t{i % 2}"} for i in range(30)],
+    )
+    qs = [f"regime doc number {i}" for i in range(4)]
+    want = {q: store.query(q, top_k=4) for q in qs}
+    want_f = {
+        q: store.query(q, top_k=4, metadata_filter={"tenant": "t1"}) for q in qs
+    }
+    with pytest.raises(VectoliteError, match="resident_max_bytes"):
+        store.enable_batched_serving(resident_max_bytes=-1)
+
+    def answers():
+        return (
+            {q: store.query(q, top_k=4) for q in qs},
+            {
+                q: store.query(q, top_k=4, metadata_filter={"tenant": "t1"})
+                for q in qs
+            },
+        )
+
+    store.enable_batched_serving()  # default 256 MiB budget
+    assert answers() == (want, want_f)
+    assert store._resident is not None and store._serving is None
+
+    store.enable_batched_serving(resident_max_bytes=0)
+    assert answers() == (want, want_f)
+    assert store._resident is None and store._serving is not None
+    assert not store._resident_oversize, "a zero budget never measures"
+
+    store.enable_batched_serving(resident_max_bytes=64)  # far too small
+    assert answers() == (want, want_f)
+    assert store._resident is None and store._resident_oversize
+    assert store._serving is not None
+    # over-budget is sticky until a mutation, which re-measures
+    store.insert("regime doc number 99", {"tenant": "t1"})
+    assert not store._resident_oversize
+    store.disable_batched_serving()
+
+
+def test_resident_ann_matches_per_job_path(spark, tmp_path):
+    """Resident ``ann=True`` answers equal the per-job
+    ``query(ann=True)`` path row for row over several queries, both
+    before any persisted index exists (default planes) and with a
+    persisted custom-plane index (its planes are authoritative)."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "rannb"), embed_fn=stub_embedder(dim=8)
+    )
+    store.insert_many(
+        [f"resident ann doc {i}" for i in range(60)],
+        [{"k": i} for i in range(60)],
+    )
+    qs = [f"resident ann doc {i}" for i in range(0, 60, 7)] + ["unrelated probe"]
+
+    # no persisted index: resident answers come from the default planes
+    assert not store._fs.exists(store._ann_path())
+    store.enable_batched_serving()
+    got = {q: store.query(q, top_k=4, ann=True) for q in qs}
+    assert store._resident is not None and store._resident.planes == (16, 6)
+    store.disable_batched_serving()
+    want = {q: store.query(q, top_k=4, ann=True) for q in qs}  # builds index
+    assert got == want
+    assert any(got.values()), "probes found candidates"
+
+    # persisted custom-plane index: resident probe uses its planes
+    store.build_ann_index(n_tables=4, n_planes=5)
+    want = {q: store.query(q, top_k=4, ann=True) for q in qs}
+    store.enable_batched_serving()
+    got = {q: store.query(q, top_k=4, ann=True) for q in qs}
+    assert store._resident.planes == (4, 5)
+    assert got == want
+    store.disable_batched_serving()
+
+
+def test_ann_rebuild_recomputes_resident_planes(spark, tmp_path):
+    """Stale-plane guard: the resident set carries SRP bucket codes, so
+    ``build_ann_index`` with other planes must drop them — resident
+    ``ann=True`` answers afterwards equal the per-job
+    ``srp_index_topk`` path under the NEW planes."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "staledb"), embed_fn=stub_embedder(dim=8)
+    )
+    store.insert_many([f"stale plane doc {i}" for i in range(60)])
+    qs = [f"stale plane doc {i}" for i in range(0, 60, 6)] + ["other probe"]
+    store.enable_batched_serving()
+    stale = {q: store.query(q, top_k=5, ann=True) for q in qs}
+    assert store._resident.planes == (16, 6)
+
+    store.build_ann_index(n_tables=8, n_planes=4)
+    assert store._resident is None, "rebuild drops the resident bucket codes"
+    got = {q: store.query(q, top_k=5, ann=True) for q in qs}
+    assert store._resident.planes == (8, 4)
+    store.disable_batched_serving()
+    want = {q: store.query(q, top_k=5, ann=True) for q in qs}
+    assert got == want
+    assert stale != want, "fixture: the two plane sets must answer differently"
+
+
+def test_resident_clients_never_see_deleted_id_after_delete(spark, tmp_path):
+    """4 concurrent resident clients (exact and ANN) run while a
+    delete_document lands: no answer to a query that started after the
+    delete returned may contain the deleted id, and the clients keep
+    getting answers throughout. Versioned store: its commits are atomic
+    for concurrent readers (the flat backend's rename swap is not)."""
+    import sys
+    import time
+
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "deldb"), embed_fn=stub_embedder(dim=8),
+        versioned=True,
+    )
+    texts = [f"delete race doc {i}" for i in range(30)]
+    ids = store.insert_many(texts)
+    target_text = texts[7]
+    target = ids[7]
+    store.enable_batched_serving()
+    assert store.query(target_text, top_k=3)[0]["id"] == target
+
+    deleted_at = [0.0]
+    stop = threading.Event()
+    log: list[tuple[float, list]] = []
+    errs: list[Exception] = []
+    lock = threading.Lock()
+
+    def client(c: int) -> None:
+        try:
+            while not stop.is_set():
+                t0 = time.perf_counter()
+                res = store.query(target_text, top_k=3, ann=bool(c % 2))
+                with lock:
+                    log.append((t0, [r["id"] for r in res]))
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the clients finely
+    try:
+        for t in threads:
+            t.start()
+        time.sleep(0.3)
+        assert store.delete_document(target)
+        deleted_at[0] = time.perf_counter()
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            with lock:
+                after = [ids_ for t0, ids_ in log if t0 > deleted_at[0]]
+            if len(after) >= 12:
+                break
+            time.sleep(0.05)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs
+    assert len(after) >= 12, "clients kept answering after the delete"
+    assert all(target not in a for a in after)
+    before = [a for t0, a in log if t0 < deleted_at[0]]
+    assert any(target in a for a in before), "fixture: target served before"
+    store.disable_batched_serving()
 
 
 def test_ann_rebuild_invalidates_ann_batcher(spark, tmp_path):
@@ -444,8 +637,8 @@ def test_ann_rebuild_invalidates_ann_batcher(spark, tmp_path):
     it resolved (n_tables, n_planes) and its precomputed bucket column
     from the PREVIOUS index state, so a custom-plane rebuild while
     batched serving is live would silently diverge from the per-job
-    query(ann=True) path. The exact batcher and resident set survive
-    (the data didn't change)."""
+    query(ann=True) path. The exact batcher survives (the data didn't
+    change); the micro-batched regime is forced with a zero budget."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -453,7 +646,7 @@ def test_ann_rebuild_invalidates_ann_batcher(spark, tmp_path):
         spark, str(tmp_path / "rebuilddb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"rebuild doc number {i}" for i in range(30)])
-    store.enable_batched_serving(top_k=5, max_wait_ms=5)
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
     q = "rebuild doc number 3"
     store.query(q, top_k=3)             # builds the exact batcher
     store.query(q, top_k=3, ann=True)   # builds the ANN batcher (default planes)
@@ -481,14 +674,16 @@ def test_ann_facade_size_gate(spark, tmp_path):
         spark, str(tmp_path / "gatedb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"gate doc number {i}" for i in range(20)])
-    store.enable_batched_serving(top_k=5, max_wait_ms=5, ann_facade_max_rows=10)
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, ann_facade_max_rows=10,
+                                 resident_max_bytes=0)
     q = "gate doc number 3"
     res = store.query(q, top_k=3, ann=True)  # falls to the per-job path
     assert store._serving_ann is None and store._serving_ann_oversize
     store.disable_batched_serving()
     assert res == store.query(q, top_k=3, ann=True)
     # under the cap the batcher builds (and carries the bucket column)
-    store.enable_batched_serving(top_k=5, max_wait_ms=5, ann_facade_max_rows=50)
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, ann_facade_max_rows=50,
+                                 resident_max_bytes=0)
     store.query(q, top_k=3, ann=True)
     assert store._serving_ann is not None
     assert not store._serving_ann_oversize
@@ -496,16 +691,14 @@ def test_ann_facade_size_gate(spark, tmp_path):
 
 
 def test_resident_guard_measures_payload(spark, tmp_path):
-    """VERDICT r9 item 4: the resident tripwire measures the real
+    """VERDICT r9 item 4: the resident budget measures the real
     text/metadata payload — KB-scale texts that the old per-row slack
-    formula waved through must refuse; compact rows under the same
-    budget must build. Also covers the cold-dim-cache path: the
+    formula waved through must stay off the driver (served by the
+    batcher instead, same answers); compact rows under the same budget
+    must go resident. Also covers the cold-dim-cache path: the
     aggregate measures dim itself, so a non-empty store is never
     unguarded."""
-    import pytest
-
     from vectolite_spark.embed import stub_embedder
-    from vectolite_spark.errors import VectoliteError
     from vectolite_spark.store import SparkVectolite
 
     dim = 8
@@ -518,35 +711,35 @@ def test_resident_guard_measures_payload(spark, tmp_path):
     # budget; measured: >= 2*4000*n chars alone blows it
     budget = 64 * 1024
     assert n * (dim * 4 + 256) < budget
+    want = store.query("resident payload", top_k=3)
     store._dim_cache = None  # cold dim cache must not skip the guard
-    store.enable_resident_serving(max_bytes=budget)
-    with pytest.raises(VectoliteError, match="resident serving refused"):
-        store.query("resident payload", top_k=3)
-    store.disable_resident_serving()
+    store.enable_batched_serving(resident_max_bytes=budget)
+    assert store.query("resident payload", top_k=3) == want
+    assert store._resident is None and store._resident_oversize
+    assert store._serving is not None
+    store.disable_batched_serving()
     # same row count, compact payload: passes the same budget and serves
     store2 = SparkVectolite(
         spark, str(tmp_path / "measdb2"), embed_fn=stub_embedder(dim=dim)
     )
     store2.insert_many([f"compact doc number {i}" for i in range(n)])
     want = store2.query("compact doc number 3", top_k=3)
-    store2.enable_resident_serving(max_bytes=budget)
+    store2.enable_batched_serving(resident_max_bytes=budget)
     assert store2.query("compact doc number 3", top_k=3) == want
-    store2.disable_resident_serving()
+    assert store2._resident is not None
+    store2.disable_batched_serving()
 
 
 def test_resident_guard_measures_char_width(spark, tmp_path):
     """VERDICT r10 item 6: the byte estimate must be width-aware — the
     old flat 2 B/char term modeled mostly-ASCII text, but CPython
     stores BMP CJK at 2 B/char (PEP 393) while each such char is 3
-    UTF-8 octets, so a CJK-heavy corpus could pass the tripwire at ~2x
-    the budget. The fix charges ``chars + octets`` (octet_length is a
-    per-char upper bound on PEP-393 width): a CJK corpus that the old
-    formula waved through must refuse, while a Latin corpus with the
-    SAME character count under the same budget still builds."""
-    import pytest
-
+    UTF-8 octets, so a CJK-heavy corpus could pass the budget at ~2x.
+    The estimate charges ``chars + octets`` (octet_length is a per-char
+    upper bound on PEP-393 width): a CJK corpus that the old formula
+    waved through must stay micro-batched, while a Latin corpus with
+    the SAME character count under the same budget goes resident."""
     from vectolite_spark.embed import stub_embedder
-    from vectolite_spark.errors import VectoliteError
     from vectolite_spark.store import SparkVectolite
 
     dim, n, text_chars = 8, 32, 2000
@@ -561,20 +754,21 @@ def test_resident_guard_measures_char_width(spark, tmp_path):
         spark, str(tmp_path / "cjkdb"), embed_fn=stub_embedder(dim=dim)
     )
     cjk.insert_many(["数据" * (text_chars // 2) for _ in range(n)])
-    cjk.enable_resident_serving(max_bytes=budget)
-    with pytest.raises(VectoliteError, match="resident serving refused"):
-        cjk.query("数据", top_k=3)
-    cjk.disable_resident_serving()
+    want = cjk.query("数据", top_k=3)
+    cjk.enable_batched_serving(resident_max_bytes=budget)
+    assert cjk.query("数据", top_k=3) == want
+    assert cjk._resident is None and cjk._resident_oversize
+    cjk.disable_batched_serving()
 
     latin = SparkVectolite(
         spark, str(tmp_path / "latindb"), embed_fn=stub_embedder(dim=dim)
     )
     latin.insert_many(["da" * (text_chars // 2) for _ in range(n)])
     want = latin.query("da", top_k=3)
-    latin.enable_resident_serving(max_bytes=budget)
+    latin.enable_batched_serving(resident_max_bytes=budget)
     assert latin.query("da", top_k=3) == want
     assert latin._resident is not None  # served resident, not fallback
-    latin.disable_resident_serving()
+    latin.disable_batched_serving()
 
 
 def test_resident_collect_generation_fence(spark, tmp_path):
@@ -583,7 +777,7 @@ def test_resident_collect_generation_fence(spark, tmp_path):
     stale snapshot from being published. The fence is the serving
     generation counter: simulate the race by invalidating between the
     measuring aggregate and the collect, and assert the build returns
-    None (caller falls back to the exact path) without publishing."""
+    None (caller falls back for this query) without publishing."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -591,7 +785,7 @@ def test_resident_collect_generation_fence(spark, tmp_path):
         spark, str(tmp_path / "fencedb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"fence doc number {i}" for i in range(10)])
-    store.enable_resident_serving()
+    store.enable_batched_serving()
 
     orig_df = store.df
     fired = {"n": 0}
@@ -613,7 +807,7 @@ def test_resident_collect_generation_fence(spark, tmp_path):
     want = store.query("fence doc number 3", top_k=3)
     assert store._resident is not None
     assert store.query("fence doc number 3", top_k=3) == want
-    store.disable_resident_serving()
+    store.disable_batched_serving()
 
 
 def test_srp_serving_mapper_bucket_col_parity():
@@ -676,7 +870,7 @@ def test_resident_build_single_flight(spark, tmp_path):
         spark, str(tmp_path / "sfdb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"singleflight doc {i}" for i in range(20)])
-    store.enable_resident_serving()
+    store.enable_batched_serving()
     store.query("singleflight doc 0", top_k=3)  # warm dim cache + build
     store._invalidate_serving()  # drop the resident set, keep dim cache
     orig_df = store.df
@@ -707,7 +901,7 @@ def test_resident_build_single_flight(spark, tmp_path):
         )
     finally:
         store.df = orig_df
-        store.disable_resident_serving()
+        store.disable_batched_serving()
 
 
 def test_ann_batcher_shares_exact_cache(spark, tmp_path):
@@ -721,7 +915,7 @@ def test_ann_batcher_shares_exact_cache(spark, tmp_path):
         spark, str(tmp_path / "sharedb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"share doc number {i}" for i in range(30)])
-    store.enable_batched_serving(top_k=5, max_wait_ms=5)
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
     q = "share doc number 3"
     store.query(q, top_k=3)  # builds the exact batcher + shared base
     assert store._serving_base is not None

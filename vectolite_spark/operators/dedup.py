@@ -1106,26 +1106,40 @@ class _small_loop_confs:
 
             conf_scope_acquire()  # raises if a run_jobs pool is draining
             self._scoped = True
-            p = max(1, min(
-                self._spark.sparkContext.defaultParallelism,
-                self._n_edges // 100_000 + 1,
-            ))
-            for key, val in (
-                ("spark.sql.adaptive.enabled", "false"),
-                ("spark.sql.shuffle.partitions", str(p)),
-            ):
-                self._saved[key] = self._spark.conf.get(key)
-                self._spark.conf.set(key, val)
+            try:
+                p = max(1, min(
+                    self._spark.sparkContext.defaultParallelism,
+                    self._n_edges // 100_000 + 1,
+                ))
+                for key, val in (
+                    ("spark.sql.adaptive.enabled", "false"),
+                    ("spark.sql.shuffle.partitions", str(p)),
+                ):
+                    self._saved[key] = self._spark.conf.get(key)
+                    self._spark.conf.set(key, val)
+            except BaseException:
+                # a with-statement never calls __exit__ for a failed
+                # __enter__: undo here, or the scope leaks and every
+                # later run_jobs pool raises ConfScopeOverlapError;
+                # the original failure is the one reported
+                try:
+                    self.__exit__(None, None, None)
+                except Exception:
+                    pass
+                raise
         return self
 
     def __exit__(self, *exc):
-        for key, val in self._saved.items():
-            self._spark.conf.set(key, val)
-        if getattr(self, "_scoped", False):
-            from vectolite_spark.parallel import conf_scope_release
+        try:
+            for key, val in self._saved.items():
+                self._spark.conf.set(key, val)
+        finally:
+            self._saved = {}
+            if getattr(self, "_scoped", False):
+                from vectolite_spark.parallel import conf_scope_release
 
-            conf_scope_release()
-            self._scoped = False
+                conf_scope_release()
+                self._scoped = False
         return False
 
 

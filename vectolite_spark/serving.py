@@ -3,19 +3,35 @@
 A single Spark job has a fixed scheduling floor (~0.2 s on this box at
 ANY data size), and the DAGScheduler admits jobs through one event
 loop — so per-query jobs cap out near ~30 queries/s no matter how many
-client threads submit (measured, round 6). The batch path is two orders
-of magnitude cheaper per query (one ``topk_batch`` job scores Q queries
-with a single (N_p x d) @ (d x Q) matmul per partition; ~3-4 ms/query at
-Q=100). The standard serving architecture bridging the two is DYNAMIC
-BATCHING, as used by model-inference servers (e.g. Triton's dynamic
-batcher, public docs): concurrent requests queue briefly, a dispatcher
-drains the queue into one batch job, and every waiter gets its own
-slice of the result.
+client threads submit (measured, round 6). The store's online serving
+(``SparkVectolite.enable_batched_serving``) therefore never pays one
+job per query. It picks one of two regimes at each working-set build,
+by a measured driver-memory budget (``resident_max_bytes``, default
+256 MiB):
 
-Latency/throughput contract: a lone query pays at most ``max_wait_ms``
-extra latency; under load the batch fills to ``max_batch`` and
-throughput approaches the batch path's per-query cost. No result ever
-crosses queries: the batch job keys every row by query_id.
+- **Resident** (the working set fits the budget): the corpus is
+  collected once onto the driver and every query — exact, filtered or
+  SRP-approximate — is answered in numpy with no Spark job at all.
+- **Micro-batched** (over budget): this module's ``MicroBatcher``. The
+  batch path is two orders of magnitude cheaper per query than a job
+  each (one ``topk_batch`` job scores Q queries with a single
+  (N_p x d) @ (d x Q) matmul per partition; ~3-4 ms/query at Q=100).
+  The standard serving architecture bridging the two is DYNAMIC
+  BATCHING, as used by model-inference servers (e.g. Triton's dynamic
+  batcher, public docs): concurrent requests queue briefly, a
+  dispatcher drains the queue into one batch job, and every waiter
+  gets its own slice of the result.
+
+Both regimes share the ranking contract of the per-job paths, and the
+SRP probe kernel (``_pandas_udfs.make_srp_serving_mapper``) runs
+unchanged in either: over the resident frame on the driver, or inside
+the batcher's one-task job.
+
+Latency/throughput contract of the batcher: a lone query pays at most
+``max_wait_ms`` extra latency; under load the batch fills to
+``max_batch`` and throughput approaches the batch path's per-query
+cost. No result ever crosses queries: the batch job keys every row by
+query_id.
 """
 
 from __future__ import annotations

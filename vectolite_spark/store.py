@@ -103,6 +103,156 @@ class _HadoopFS:
             inp.close()
 
 
+def _release(batchers, caches) -> None:
+    """Close torn-down serving batchers and unpersist their caches."""
+    for b in batchers:
+        if b is not None:
+            b.close()
+    for c in caches:
+        if c is not None:
+            try:
+                c.unpersist(blocking=False)
+            except Exception:
+                pass  # session teardown races are benign here
+
+
+def _hit(vid, score, text, meta_json) -> dict:
+    """One ``query()``-shaped result row, metadata JSON decoded."""
+    return {
+        "id": int(vid),
+        "score": float(score),
+        "text": text,
+        "metadata": json.loads(meta_json or "{}"),
+    }
+
+
+def _parse_meta(meta_json: str | None) -> dict | None:
+    """Metadata JSON as a dict, or None when it is not a JSON object
+    (no filter predicate can match it)."""
+    try:
+        d = json.loads(meta_json or "{}")
+    except ValueError:
+        return None
+    return d if isinstance(d, dict) else None
+
+
+def _match_filter(meta: dict | None, fcmp: dict) -> bool:
+    """Driver-side twin of the exact path's
+    ``get_json_object(metadata, $.key) == cmp`` predicates, over metadata
+    already parsed by ``_parse_meta`` (the resident set parses once at
+    build; the facade parses its over-fetched prefix once per query): a
+    present value compares by its JSON text form (unquoted strings,
+    'true'/'false', JSON number formatting — the same normalization fcmp
+    was built with); a missing key, JSON null, or metadata that is not a
+    JSON object never matches, exactly like get_json_object's NULL."""
+    if meta is None:
+        return False
+    for key, cmp in fcmp.items():
+        v = meta.get(key)
+        if v is None:
+            return False
+        if (v if isinstance(v, str) else json.dumps(v)) != cmp:
+            return False
+    return True
+
+
+def _top_positions(sc, ids, k: int):
+    """Positions of the ``k`` best rows by (score desc, id asc).
+    ``argpartition`` first narrows to the rows scoring at least the
+    k-th best score — every row tied at that score stays in, so the id
+    tie-break sees the whole tie group — then one lexsort orders them.
+    NaN scores sort last, as in a full lexsort."""
+    import numpy as np
+
+    cand = np.arange(len(sc))
+    if k < len(sc):
+        kth = sc[np.argpartition(-sc, k - 1)[k - 1]]
+        cand = np.flatnonzero(~(sc < kth))
+    return cand[np.lexsort((ids[cand], -sc[cand]))[:k]]
+
+
+class _ResidentSet:
+    """The resident serving regime's working set, built from one
+    collected pandas frame (vec_id, embedding, text, metadata,
+    srp_buckets): ``ids``/``E`` (float64)/``norms`` for exact ranking,
+    ``parsed`` metadata dicts for filter masks, and ``frame`` — the
+    collected rows with each embedding a view into ``E`` — for the SRP
+    probe with bucket codes derived from ``planes``."""
+
+    def __init__(self, pdf, planes: tuple[int, int]):
+        import numpy as np
+
+        n = len(pdf)
+        self.planes = planes
+        self.ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        self.E = (
+            np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            if n
+            else np.zeros((0, 0))
+        )
+        self.norms = np.sqrt((self.E * self.E).sum(axis=1))
+        self.texts = pdf["text"].to_numpy()
+        self.metas = pdf["metadata"].to_numpy()
+        self.parsed = [_parse_meta(m) for m in self.metas]
+        views = np.empty(n, dtype=object)
+        for i in range(n):
+            views[i] = self.E[i]  # one float64 copy of the vectors, not two
+        pdf["embedding"] = views
+        self.frame = pdf
+
+    def query(self, qvec, top_k: int, fcmp: dict | None, ann: bool) -> list[dict]:
+        """Exact: same rounded cosine scores (round-half-up 6dp,
+        zero-norm -> 0.0 on either side), same (score desc, id asc)
+        order and same ``_match_filter`` normalization as the exact
+        Spark path. ``ann``: the batched regime's SRP probe kernel over
+        ``frame``, whose bucket codes came from the persisted index's
+        planes — row for row the per-job ``srp_index_topk`` answer.
+        Pinned by tests/test_serving.py
+        (``test_resident_serving_matches_exact``,
+        ``test_resident_ann_matches_per_job_path``)."""
+        import numpy as np
+
+        from vectolite_spark._pandas_udfs import (
+            make_srp_serving_mapper,
+            round_half_up,
+        )
+
+        if len(self.ids) == 0:
+            return []
+        if ann:
+            nt, npl = self.planes
+            hits = next(
+                make_srp_serving_mapper(
+                    [0], [qvec], top_k, n_tables=nt, n_planes=npl,
+                    payload_cols=("text", "metadata"),
+                    bucket_col="srp_buckets",
+                )(iter([self.frame]))
+            )
+            return [
+                _hit(*r)
+                for r in zip(
+                    hits["vec_id"], hits["score"], hits["text"], hits["metadata"]
+                )
+            ]
+        E, norms, ids, rows = self.E, self.norms, self.ids, None
+        if fcmp:
+            rows = np.flatnonzero([_match_filter(d, fcmp) for d in self.parsed])
+            if len(rows) == 0:
+                return []
+            E, norms, ids = E[rows], norms[rows], ids[rows]
+        q = np.asarray(qvec, dtype=np.float64)
+        denom = norms * float(np.sqrt((q * q).sum()))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sc = np.where(denom == 0.0, 0.0, E @ q / denom)
+        sc = round_half_up(sc, 6)
+        top = _top_positions(sc, ids, top_k)
+        src = top if rows is None else rows[top]
+        return [
+            _hit(ids[o], sc[o], self.texts[i], self.metas[i])
+            for o, i in zip(top, src)
+        ]
+
+
 class SparkVectolite:
     """Parquet-backed document+vector store with the reference's semantics."""
 
@@ -138,8 +288,8 @@ class SparkVectolite:
         self._serving_ann_payload = None  # its OWN cache (None when shared)
         self._serving_ann_oversize = False  # size-gated: per-job path wins
         self._serving_base_planes = None  # (n_tables, n_planes) on the base
-        self._resident_cfg = None         # driver-resident serving config
-        self._resident = None             # (ids, E, norms, texts, metas)
+        self._resident = None             # _ResidentSet (resident regime)
+        self._resident_oversize = False   # measured over budget: batched
         self._serving_gen = 0             # bumped by every invalidation
         self._serving_lock = threading.Lock()
         # serializes working-set BUILDS (batcher bases, resident collect)
@@ -236,27 +386,43 @@ class SparkVectolite:
 
         Versioned backend: the rewrite is a snapshot ``overwrite`` commit —
         atomic by manifest CAS, and the prior version stays readable."""
-        self._invalidate_indexes()
-        if self._snap is not None:
-            self._max_id_cache = None
-            self._snap.overwrite(df)
-            return
-        self._recover()
         self._max_id_cache = None  # rewrites may drop or remap the max id
-        tmp, bak = self.path + ".tmp", self.path + ".bak"
-        df.write.mode("overwrite").parquet(tmp)
-        self._fs.rename(self.path, bak)
-        self._fs.rename(tmp, self.path)
-        self._fs.delete(bak)
+        if self._snap is not None:
+            self._mutate(lambda: self._snap.overwrite(df))
+            return
+
+        def swap():
+            self._recover()
+            tmp, bak = self.path + ".tmp", self.path + ".bak"
+            df.write.mode("overwrite").parquet(tmp)
+            self._fs.rename(self.path, bak)
+            self._fs.rename(tmp, self.path)
+            self._fs.delete(bak)
+
+        self._mutate(swap)
 
     def _append(self, df: DataFrame) -> None:
         """Route an append through the active backend: flat parquet append,
         or a snapshot ``append`` commit (new dir + manifest CAS)."""
-        self._invalidate_indexes()
         if self._snap is not None:
-            self._snap.append(df)
+            self._mutate(lambda: self._snap.append(df))
         else:
-            df.write.mode("append").parquet(self.path)
+            self._mutate(lambda: df.write.mode("append").parquet(self.path))
+
+    def _mutate(self, commit: Callable[[], object]):
+        """Run one table mutation between two invalidations of
+        everything derived from the table (indexes, serving working
+        sets, dim cache): before, so nothing built on the old state
+        serves while it changes; after, so whatever a concurrent reader
+        built from the pre-commit table in between is dropped too — the
+        generation bump fences serving builds still in flight. Without
+        the second pass a query racing the write could publish a
+        resident set that still holds a deleted row."""
+        self._invalidate_indexes()
+        try:
+            return commit()
+        finally:
+            self._invalidate_indexes()
 
     # -- ANN acceleration (extension; reference is scan-only) ---------------
 
@@ -287,12 +453,12 @@ class SparkVectolite:
             n_tables=n_tables,
             n_planes=n_planes,
         )
-        # the ANN serving batcher resolved its plane parameters (and its
-        # precomputed bucket column) from the PREVIOUS index state — a
-        # rebuild with custom planes would leave the facade probing with
-        # stale parameters, silently diverging from the per-job path
-        # (ADVICE r9). Data didn't change, so the exact batcher and the
-        # resident working set stay; only the ANN batcher is dropped.
+        # the ANN serving batcher and the resident working set resolved
+        # their plane parameters (and precomputed bucket codes) from the
+        # PREVIOUS index state — a rebuild with custom planes would leave
+        # them probing with stale planes, silently diverging from the
+        # per-job path (ADVICE r9). Data didn't change, so the exact
+        # batcher stays.
         self._invalidate_ann_serving()
 
     # -- text-index acceleration (extension; mirrors the ANN lifecycle) -----
@@ -311,15 +477,16 @@ class SparkVectolite:
     def _invalidate_indexes(self) -> None:
         """Umbrella for every mutation entry point: BOTH persisted
         indexes index a table state that no longer exists after any
-        mutation — flat-backend paths hit this via _rewrite/_append;
-        the versioned backend's dir-pruned merge/delete and rollback
-        commits MUST call it directly (they bypass _rewrite)."""
+        mutation. Every mutation runs through ``_mutate``, which calls
+        this on both sides of the commit (the versioned backend's
+        dir-pruned merge/delete and rollback bypass _rewrite/_append
+        and call ``_mutate`` directly)."""
         self._dim_cache = None  # rollback/delete can change the stored dim
         self._invalidate_ann()
         self._invalidate_text_index()
         self._invalidate_serving()
 
-    # -- batched online serving (extension; see serving.MicroBatcher) -------
+    # -- online serving (extension; resident set or serving.MicroBatcher) ---
 
     def enable_batched_serving(
         self,
@@ -329,48 +496,63 @@ class SparkVectolite:
         cache: bool = True,
         filter_overfetch: int = 4,
         ann_facade_max_rows: int = 200_000,
+        resident_max_bytes: int = 256 * 1024 * 1024,
     ) -> None:
-        """Route eligible ``query()`` calls through a shared
-        ``serving.MicroBatcher``: concurrent callers (the threaded UI,
-        any multi-client front end) coalesce into ONE batch top-k job
-        per dispatch cycle instead of one Spark job each — the
-        job-per-query path caps near ~30 q/s on the DAGScheduler
-        admission loop regardless of data size; the batched facade
-        measured >100 q/s end-to-end (bench: serving_facade_qps).
+        """Serve eligible ``query()`` calls from a shared working set
+        instead of one Spark job per call. A lone ``query()`` pays
+        Spark's per-job scheduling floor (~0.2-0.4 s at ANY data size)
+        and job-per-query caps near ~30 q/s on the DAGScheduler
+        admission loop; serving picks one of two regimes at each
+        working-set build (the first eligible query after enabling or
+        after any mutation):
 
-        Eligible = cosine search with ``top_k <=`` this mode's ``top_k``
-        (results are a prefix of the batcher's ranking, so a smaller
-        top_k slices exactly), with or without ``metadata_filter``.
-        Filtered queries ride the SAME batcher via recall-safe
-        over-fetch (VERDICT r7 item 7): the batcher fetches
-        ``top_k * filter_overfetch`` global rows per query and the
-        facade post-filters driver-side; a query whose filtered hits
-        within that prefix reach ``top_k`` (or whose prefix already
-        covers the whole corpus) is PROVABLY complete — every global
-        row outside the prefix scores below the returned ones — and is
-        answered batched. Only queries too selective for the prefix
-        fall back to the exact filtered job, so selective-tenant
-        workloads pay the job floor per miss, not per query.
-        ``ann=True`` queries ride their own mode-keyed batcher whose
-        kernel is the in-mapper SRP probe (r9; see
-        ``_ensure_ann_serving_batcher``) — results match the per-job
-        ANN path row for row, and corpora above ``ann_facade_max_rows``
-        keep the per-job persisted-index path instead (the in-mapper
-        probe scans the working set per cycle; block-directory pruning
-        is the big-corpus answer). ``diversify`` (and ann+filter, which
-        is rejected) fall through to their dedicated paths.
+        - **Resident** — the working set measures under
+          ``resident_max_bytes`` (default 256 MiB). One measuring
+          aggregate (row count, dim, text+metadata chars and UTF-8
+          octets; see ``_build_resident``) and one collect put the
+          corpus on the driver as a float64 numpy matrix plus a pandas
+          frame carrying each row's SRP bucket codes. Exact and
+          metadata-filtered queries rank the full matrix in numpy
+          (metadata JSON is parsed once at build); unfiltered
+          ``ann=True`` queries run ``_pandas_udfs.make_srp_serving_mapper``
+          — the batched regime's probe kernel — over that frame. No
+          Spark job per query, any ``top_k``.
+        - **Micro-batched** — over budget (or ``resident_max_bytes=0``).
+          Concurrent callers (the threaded UI, any multi-client front
+          end) coalesce through ``serving.MicroBatcher`` into one batch
+          job per dispatch cycle. Eligible = ``top_k <=`` this mode's
+          ``top_k`` (results are a prefix of the batcher's ranking).
+          Filtered queries ride the same batcher via recall-safe
+          over-fetch (VERDICT r7 item 7): the batcher fetches
+          ``top_k * filter_overfetch`` global rows and the facade
+          post-filters them; a prefix holding ``top_k`` hits (or
+          covering the whole corpus) is PROVABLY complete, anything
+          more selective falls back to the exact filtered job.
+          ``ann=True`` rides its own batcher whose kernel is the same
+          in-mapper SRP probe over the cached single partition; corpora
+          above ``ann_facade_max_rows`` keep the per-job
+          persisted-index path (block-directory pruning is the
+          big-corpus answer).
 
-        Lazy + mutation-safe: the batcher (and its cached working set,
-        when ``cache=True``) is built on first eligible query and torn
-        down by ANY store mutation — the next query rebuilds over the
-        fresh table state, so batched results can never serve a stale
-        snapshot."""
+        Both regimes return exactly the per-job answers (same rounded
+        cosine scores, (score desc, id asc) order, filter
+        normalization, and SRP planes as the persisted index —
+        pytest-pinned). ``diversify`` and ann+filter (rejected loudly)
+        keep their dedicated paths.
+
+        Lazy + mutation-safe: the working set is built on first
+        eligible query and torn down by ANY store mutation (and, for
+        everything derived from SRP planes, by ``build_ann_index``);
+        builds are single-flight and generation-fenced, so serving can
+        never answer from a stale snapshot."""
         if top_k <= 0:
             raise VectoliteError("top_k must be positive")
         if filter_overfetch < 1:
             raise VectoliteError("filter_overfetch must be >= 1")
         if ann_facade_max_rows < 1:
             raise VectoliteError("ann_facade_max_rows must be >= 1")
+        if resident_max_bytes < 0:
+            raise VectoliteError("resident_max_bytes must be >= 0")
         self._invalidate_serving()
         with self._serving_lock:  # cfg writes pair with _ensure's read
             self._serving_cfg = {
@@ -380,6 +562,7 @@ class SparkVectolite:
                 "cache": bool(cache),
                 "overfetch": int(filter_overfetch),
                 "ann_max_rows": int(ann_facade_max_rows),
+                "resident_max_bytes": int(resident_max_bytes),
             }
 
     def disable_batched_serving(self) -> None:
@@ -387,93 +570,58 @@ class SparkVectolite:
             self._serving_cfg = None
         self._invalidate_serving()
 
-    # -- driver-resident serving (extension; the sub-ms single-query path) --
-
-    def enable_resident_serving(self, max_bytes: int = 256 * 1024 * 1024) -> None:
-        """Serve eligible ``query()`` calls from a DRIVER-RESIDENT numpy
-        working set — the architecture every local vector store
-        (including the reference's in-process SQLite scan) uses, offered
-        here as the answer to the one regime where a distributed engine
-        structurally loses: single-query latency on a corpus that fits
-        one machine. A lone ``query()`` pays Spark's per-job scheduling
-        floor (~0.2-0.4 s on this box at ANY data size); the resident
-        path answers in microseconds-to-ms with IDENTICAL results
-        (same rounded-cosine scores, same (score desc, id asc) order,
-        same metadata-filter normalization — parity pytest-pinned).
-
-        Scope and honesty: the working set is collected ONCE from the
-        authoritative Spark table (and torn down by ANY mutation, like
-        the batched facade, so it can never serve stale rows), and the
-        collect REFUSES above ``max_bytes`` (estimated) — beyond that,
-        single queries belong to the batched facade or the ANN index
-        paths; this path is explicitly the corpus-fits-in-memory
-        serving tier, not a replacement for the engine.
-
-        Eligible = cosine search, with or without ``metadata_filter``
-        (exact driver-side filtering — no over-fetch proof needed, the
-        FULL ranking is resident); ``ann``/``diversify`` keep their
-        dedicated paths. Composes with ``enable_batched_serving``: the
-        resident path wins when both are on."""
-        if max_bytes <= 0:
-            raise VectoliteError("max_bytes must be positive")
+    def _ensure_resident(self) -> _ResidentSet | None:
+        """The resident working set, built on first use; None means the
+        micro-batched regime (measured over budget, or a zero budget) or
+        serving disabled/invalidated concurrently — the caller then
+        takes the batcher or exact path. Builds are SINGLE-FLIGHT
+        (``_serving_build_lock``): without it, N concurrent first
+        queries would each collect the corpus and hold N working sets
+        on the driver at once — the budget bounds ONE build, not N."""
         with self._serving_lock:
-            self._resident_cfg = {"max_bytes": int(max_bytes)}
-            self._resident = None
+            if self._resident is not None:
+                return self._resident
+            cfg = self._serving_cfg
+            if (
+                cfg is None
+                or cfg["resident_max_bytes"] <= 0
+                or self._resident_oversize
+            ):
+                return None
+        with self._serving_build_lock:
+            return self._build_resident(cfg)
 
-    def disable_resident_serving(self) -> None:
-        with self._serving_lock:
-            self._resident_cfg = None
-            self._resident = None
+    def _build_resident(self, cfg: dict) -> _ResidentSet | None:
+        """Measure, then collect if under budget.
 
-    def _ensure_resident(self):
-        """Build (or return) the driver-resident working set.
-
-        The ``max_bytes`` tripwire MEASURES the payload instead of
-        assuming it (VERDICT r9 item 4): one aggregate over the real
-        table — row count, embedding dim, total text+metadata chars
-        AND UTF-8 octets — feeds the estimate
-        ``n*(dim*8 + 144) + chars + octets``: float64 vectors (the
-        resident matrix is float64, not the stored float32), ~144 B/row
-        of numpy+list+object slack, and a WIDTH-MEASURED string term
-        (VERDICT r10 item 6 — the old flat ``2*chars`` assumed
-        mostly-ASCII and let CJK/astral corpora through at ~2x the
-        budget). ``octet_length`` is a provable upper bound on CPython's
-        PEP-393 payload per character (ASCII: 1 utf8 = width 1; U+0080–
-        U+07FF: 2 utf8 >= width 1-2; U+0800–U+FFFF: 3 utf8 >= width 2;
-        astral: 4 utf8 = width 4), so ``chars + octets`` never
-        underestimates while keeping the same ~2x headroom the old
-        formula gave ASCII text (latin: chars+octets == 2*chars). The
-        old ``n*(dim*4+256)`` form let a KB-texts corpus several times
-        the budget through; it also skipped the check entirely when the
-        dim cache was cold — the aggregate measures dim itself, so
-        there is no unguarded path for a non-empty store.
+        The budget check MEASURES the payload instead of assuming it
+        (VERDICT r9 item 4): one aggregate over the real table — row
+        count, embedding dim, total text+metadata chars AND UTF-8
+        octets — feeds the estimate ``n*(dim*8 + 144) + chars +
+        octets``: float64 vectors (the resident matrix is float64, not
+        the stored float32), ~144 B/row of numpy+list+object slack, and
+        a WIDTH-MEASURED string term (VERDICT r10 item 6). ``octet_length``
+        is a provable upper bound on CPython's PEP-393 payload per
+        character (ASCII: 1 utf8 = width 1; U+0080–U+07FF: 2 utf8 >=
+        width 1-2; U+0800–U+FFFF: 3 utf8 >= width 2; astral: 4 utf8 =
+        width 4), so ``chars + octets`` never underestimates the
+        strings while keeping ~2x headroom for ASCII text. The
+        aggregate measures dim itself, so a cold dim cache never skips
+        the check. Over budget marks the micro-batched regime (sticky
+        until the next invalidation) instead of collecting.
 
         The collect runs OUTSIDE ``_serving_lock`` (ADVICE r9: holding
         it blocked every mutation and serving query for the build);
         ``_serving_gen`` fences publication — if any invalidation
         landed mid-collect, the stale rows are dropped and the caller
-        falls back to the exact path for this query. Builds are
-        SINGLE-FLIGHT (``_serving_build_lock``): without it, N
-        concurrent first queries would each run their own full-corpus
-        collect and hold N working sets on the driver at once — the
-        max_bytes tripwire bounds ONE build, not N."""
-        import numpy as np
-
-        with self._serving_lock:
-            if self._resident is not None:
-                return self._resident
-            cfg = self._resident_cfg
-            if cfg is None:
-                return None
-        with self._serving_build_lock:
-            return self._build_resident(cfg, np)
-
-    def _build_resident(self, cfg, np):
+        falls back for this query. The collect carries each row's SRP
+        bucket codes (``make_srp_bucket_codes_udf``, planes from
+        ``_serving_planes``), the same column the batched regime caches."""
         with self._serving_lock:
             if self._resident is not None:
                 return self._resident  # a prior builder published
-            if self._resident_cfg is not cfg:
-                return None  # disabled/reconfigured while we waited
+            if self._serving_cfg is not cfg or self._resident_oversize:
+                return None  # reconfigured or measured while we waited
             gen = self._serving_gen
         stats = self.df().agg(
             F.count(F.lit(1)).alias("n"),
@@ -490,85 +638,64 @@ class SparkVectolite:
         n, dim = stats["n"], stats["dim"] or 0
         chars, octets = stats["chars"] or 0, stats["octets"] or 0
         est = n * (dim * 8 + 144) + chars + octets
-        if est > cfg["max_bytes"]:
-            raise VectoliteError(
-                f"resident serving refused: ~{est >> 20} MB measured "
-                f"working set exceeds max_bytes={cfg['max_bytes'] >> 20} MB"
-                " — use the batched facade or the ANN index paths"
-            )
-        rows = self.df().select(
-            "id", "embedding", "text", "metadata"
-        ).collect()
-        if rows:
-            ids = np.asarray([r["id"] for r in rows], dtype=np.int64)
-            E = np.asarray(
-                [[float(x) for x in r["embedding"]] for r in rows],
-                dtype=np.float64,
-            )
-            norms = np.sqrt((E * E).sum(axis=1))
-            built = (
-                ids, E, norms,
-                [r["text"] for r in rows],
-                [r["metadata"] for r in rows],
-            )
-        else:
-            built = ([], None, None, [], [])
+        if est > cfg["resident_max_bytes"]:
+            with self._serving_lock:
+                if self._serving_cfg is cfg and self._serving_gen == gen:
+                    self._resident_oversize = True
+            return None
+        from vectolite_spark._pandas_udfs import make_srp_bucket_codes_udf
+
+        planes = self._serving_planes()
+        pdf = self.df().select(
+            F.col("id").alias("vec_id"),
+            "embedding",
+            "text",
+            "metadata",
+            make_srp_bucket_codes_udf(*planes)(F.col("embedding")).alias(
+                "srp_buckets"
+            ),
+        ).toPandas()
+        built = _ResidentSet(pdf, planes)
         with self._serving_lock:
-            if self._resident_cfg is not cfg or self._serving_gen != gen:
-                return None  # invalidated mid-collect; caller goes exact
+            if self._serving_cfg is not cfg or self._serving_gen != gen:
+                return None  # invalidated mid-collect; caller falls back
             self._resident = built
-            return self._resident
+            return built
 
     def _invalidate_serving(self) -> None:
-        """Mutation hook: the live batcher holds a snapshot of the table
-        state at build time — close it (waking any parked waiters) and
-        drop its cache; the next eligible query rebuilds lazily."""
+        """Mutation hook: the resident set and the live batchers hold a
+        snapshot of the table state at build time — drop the set, close
+        the batchers (waking any parked waiters) and their caches; the
+        next eligible query re-measures and rebuilds lazily."""
         with self._serving_lock:
-            batcher, base = self._serving, self._serving_base
-            ann_batcher = self._serving_ann
-            ann_payload = self._serving_ann_payload
+            batchers = (self._serving, self._serving_ann)
+            caches = [self._serving_base, *(self._serving_ann_payload or [])]
             self._serving, self._serving_base = None, None
             self._serving_ann, self._serving_ann_payload = None, None
             self._serving_ann_oversize = False  # re-measure on fresh state
             self._serving_base_planes = None
             self._resident = None  # cfg survives; next query re-collects
+            self._resident_oversize = False
             self._serving_gen += 1  # fences in-flight working-set builds
-        for b in (batcher, ann_batcher):
-            if b is not None:
-                b.close()
-        ann_cached = ann_payload if isinstance(ann_payload, list) else (
-            [ann_payload] if ann_payload is not None else []
-        )
-        for c in [base, *ann_cached]:
-            if c is not None:
-                try:
-                    c.unpersist(blocking=False)
-                except Exception:
-                    pass  # session teardown races are benign here
+        _release(batchers, caches)
 
     def _invalidate_ann_serving(self) -> None:
-        """Narrow teardown for ``build_ann_index``: only the ANN-mode
-        batcher depends on the persisted index's plane parameters — the
-        exact batcher and the resident working set see the same table
-        state and survive an index rebuild untouched."""
+        """Narrow teardown for ``build_ann_index``: the ANN-mode batcher
+        and the resident set carry bucket codes derived from the
+        persisted index's plane parameters; the exact batcher sees the
+        same table state and survives an index rebuild untouched. The
+        generation bump fences builds that read the old planes."""
         with self._serving_lock:
-            ann_batcher = self._serving_ann
-            ann_payload = self._serving_ann_payload
+            batcher = self._serving_ann
+            caches = self._serving_ann_payload or []
             self._serving_ann, self._serving_ann_payload = None, None
-            # _serving_ann_oversize survives: an index rebuild doesn't
+            self._resident = None
+            self._serving_gen += 1
+            # both oversize flags survive: an index rebuild doesn't
             # change the corpus size, and the per-job fallback path
             # itself calls build_ann_index — resetting here would make
-            # every gated query re-run the count job
-        if ann_batcher is not None:
-            ann_batcher.close()
-        ann_cached = ann_payload if isinstance(ann_payload, list) else (
-            [ann_payload] if ann_payload is not None else []
-        )
-        for c in ann_cached:
-            try:
-                c.unpersist(blocking=False)
-            except Exception:
-                pass  # session teardown races are benign here
+            # every gated query re-run its measuring job
+        _release((batcher,), caches)
 
     def _serving_planes(self) -> tuple[int, int]:
         """(n_tables, n_planes) the serving working set's bucket codes
@@ -651,12 +778,7 @@ class SparkVectolite:
                     self._serving_base = base if cfg["cache"] else None
                     self._serving_base_planes = (nt, npl)
             if stale:
-                batcher.close()
-                if cfg["cache"]:
-                    try:
-                        base.unpersist(blocking=False)
-                    except Exception:
-                        pass
+                _release((batcher,), [base] if cfg["cache"] else [])
                 return None
             return batcher
 
@@ -770,12 +892,7 @@ class SparkVectolite:
                     self._serving_ann = batcher
                     self._serving_ann_payload = own_cache
             if stale:
-                batcher.close()
-                for c in own_cache or []:
-                    try:
-                        c.unpersist(blocking=False)
-                    except Exception:
-                        pass
+                _release((batcher,), own_cache or [])
                 return None
             return batcher
 
@@ -799,70 +916,6 @@ class SparkVectolite:
             "batched serving unavailable (repeated concurrent "
             "invalidation); retry or disable_batched_serving()"
         )
-
-    def _resident_query(self, rs, qvec, top_k: int, fcmp) -> list[dict]:
-        """Rank the resident working set: same rounded-cosine scores
-        (round-half-up 6dp, zero-norm -> 0.0 on either side), same
-        (score desc, id asc) order, same ``_match_filter`` predicate
-        normalization as the exact Spark path — pinned by
-        tests/test_serving.py::test_resident_serving_matches_exact."""
-        import numpy as np
-
-        from vectolite_spark._pandas_udfs import round_half_up
-
-        ids, E, norms, texts, metas = rs
-        if len(ids) == 0:
-            return []
-        mask = np.ones(len(ids), dtype=bool)
-        if fcmp:
-            mask = np.asarray(
-                [self._match_filter(m, fcmp) for m in metas], dtype=bool
-            )
-            if not mask.any():
-                return []
-        q = np.asarray(qvec, dtype=np.float64)
-        qn = float(np.sqrt((q * q).sum()))
-        sub = E[mask]
-        denom = norms[mask] * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sc = np.where(denom == 0.0, 0.0, sub @ q / denom)
-        sc = round_half_up(sc, 6)
-        sids = ids[mask]
-        order = np.lexsort((sids, -sc))[:top_k]
-        midx = np.nonzero(mask)[0][order]
-        return [
-            {
-                "id": int(sids[o]),
-                "score": float(sc[o]),
-                "text": texts[i],
-                "metadata": json.loads(metas[i] or "{}"),
-            }
-            for o, i in zip(order, midx)
-        ]
-
-    @staticmethod
-    def _match_filter(meta_json: str | None, fcmp: dict) -> bool:
-        """Driver-side twin of the exact path's
-        ``get_json_object(metadata, $.key) == cmp`` predicates, applied
-        to the batcher's over-fetched prefix: a present value compares
-        by its JSON text form (unquoted strings, 'true'/'false', JSON
-        number formatting — the same normalization fcmp was built
-        with); a missing key or JSON null never matches, exactly like
-        get_json_object's NULL."""
-        try:
-            d = json.loads(meta_json or "{}")
-        except ValueError:
-            return False
-        if not isinstance(d, dict):
-            return False
-        for key, cmp in fcmp.items():
-            v = d.get(key)
-            if v is None:
-                return False
-            s = v if isinstance(v, str) else json.dumps(v)
-            if s != cmp:
-                return False
-        return True
 
     def _has_text_index(self) -> bool:
         return self._fs.exists(f"{self._text_index_path()}/stats/_SUCCESS")
@@ -1055,16 +1108,20 @@ class SparkVectolite:
         # read the cfg ONCE: a concurrent disable_batched_serving() between
         # the None-check and the subscript would otherwise raise TypeError
         # instead of falling back to the exact path
-        if self._resident_cfg is not None and not ann and diversify is None:
-            # driver-resident fast path (enable_resident_serving): full
-            # ranking in numpy, identical results to the exact job
+        serving_cfg = self._serving_cfg
+        if serving_cfg is not None and diversify is None and not (ann and fcmp):
+            # resident regime: the whole ranking (or the SRP probe) in
+            # driver numpy, identical results to the per-job paths
             rs = self._ensure_resident()
             if rs is not None:
-                return self._resident_query(rs, qvec, top_k, fcmp)
-            # disabled concurrently -> distributed paths below
-        serving_cfg = self._serving_cfg
+                return rs.query(qvec, top_k, fcmp, ann)
+        # batchers serve only the micro-batched regime; a resident build
+        # fenced by a concurrent mutation sends this query per-job
+        batched = serving_cfg is not None and (
+            serving_cfg["resident_max_bytes"] <= 0 or self._resident_oversize
+        )
         if (
-            serving_cfg is not None
+            batched
             and ann
             and not metadata_filter
             and diversify is None
@@ -1080,18 +1137,10 @@ class SparkVectolite:
                 self._ensure_ann_serving_batcher, qvec, k=top_k
             )
             if rows is not None:
-                return [
-                    {
-                        "id": vid,
-                        "score": float(score),
-                        "text": text,
-                        "metadata": json.loads(meta or "{}"),
-                    }
-                    for vid, score, text, meta in rows[:top_k]
-                ]
+                return [_hit(*r) for r in rows[:top_k]]
             # serving disabled concurrently -> exact ann path below
         if (
-            serving_cfg is not None
+            batched
             and not ann
             and diversify is None
             and top_k <= serving_cfg["top_k"]
@@ -1112,7 +1161,9 @@ class SparkVectolite:
                 n_global = len(rows)
                 if fcmp is not None:
                     rows = [
-                        r for r in rows if self._match_filter(r[3], fcmp)
+                        r
+                        for r in rows
+                        if _match_filter(_parse_meta(r[3]), fcmp)
                     ]
                 # completeness proof: every global row outside the
                 # fetched prefix scores below every row inside it, so a
@@ -1124,15 +1175,7 @@ class SparkVectolite:
                     or len(rows) >= top_k
                     or n_global < k_fetch
                 ):
-                    return [
-                        {
-                            "id": vid,
-                            "score": float(score),
-                            "text": text,
-                            "metadata": json.loads(meta or "{}"),
-                        }
-                        for vid, score, text, meta in rows[:top_k]
-                    ]
+                    return [_hit(*r) for r in rows[:top_k]]
                 # too selective for the prefix: exact filtered job below
         if ann:
             if metadata_filter:
@@ -1148,19 +1191,11 @@ class SparkVectolite:
             docs = self.df().select("id", "text", "metadata")
             out = (
                 cand.join(docs, cand.vec_id == docs.id)
-                .select("id", "text", "metadata", "score")
+                .select("id", "score", "text", "metadata")
                 .orderBy(F.desc("score"), F.asc("id"))
                 .collect()
             )
-            return [
-                {
-                    "id": r["id"],
-                    "score": float(r["score"]),
-                    "text": r["text"],
-                    "metadata": json.loads(r["metadata"] or "{}"),
-                }
-                for r in out
-            ]
+            return [_hit(*r) for r in out]
         base = self.df()
         if fcmp:
             for key, cmp in fcmp.items():
@@ -1183,41 +1218,25 @@ class SparkVectolite:
             docs = base.select("id", "text", "metadata")
             rows = (
                 picked.join(docs, picked.vec_id == docs.id)
-                .select("id", "text", "metadata", "rel", "rn")
+                .select("id", "rel", "text", "metadata", "rn")
                 .orderBy("rn")
                 .collect()
             )
-            return [
-                {
-                    "id": r["id"],
-                    "score": float(r["rel"]),
-                    "text": r["text"],
-                    "metadata": json.loads(r["metadata"] or "{}"),
-                }
-                for r in rows
-            ]
+            return [_hit(*r[:4]) for r in rows]
         out = (
             base.select(
                 "id",
-                "text",
-                "metadata",
                 F.round(cosine_score(F.col("embedding"), qvec), SCORE_DECIMALS).alias(
                     "score"
                 ),
+                "text",
+                "metadata",
             )
             .orderBy(F.desc("score"), F.asc("id"))
             .limit(top_k)
             .collect()
         )
-        return [
-            {
-                "id": r["id"],
-                "score": float(r["score"]),
-                "text": r["text"],
-                "metadata": json.loads(r["metadata"] or "{}"),
-            }
-            for r in out
-        ]
+        return [_hit(*r) for r in out]
 
     def query_many(
         self, query_texts: Sequence[str], top_k: int = 3, ann: bool = False
@@ -1282,12 +1301,7 @@ class SparkVectolite:
         out: list[list[dict]] = [[] for _ in texts]
         for r in sorted(rows, key=lambda r: (r["query_id"], r["rn"])):
             out[r["query_id"]].append(
-                {
-                    "id": r["vec_id"],
-                    "score": float(r["score"]),
-                    "text": r["text"],
-                    "metadata": json.loads(r["metadata"] or "{}"),
-                }
+                _hit(r["vec_id"], r["score"], r["text"], r["metadata"])
             )
         return out
 
@@ -1361,9 +1375,8 @@ class SparkVectolite:
         n_matched = existing.join(incoming, "id", "left_semi").count()
         if self._snap is not None:
             # dir-pruned MERGE: O(delta + affected dirs), not O(table)
-            self._invalidate_indexes()
             self._max_id_cache = None
-            self._snap.merge(incoming, key="id")
+            self._mutate(lambda: self._snap.merge(incoming, key="id"))
         else:
             merged = existing.join(incoming, "id", "left_anti").unionByName(incoming)
             self._rewrite(merged)
@@ -1382,9 +1395,8 @@ class SparkVectolite:
         if df.filter(F.col("id") == doc_id).limit(1).count() == 0:
             return False
         if self._snap is not None:
-            self._invalidate_indexes()
             self._max_id_cache = None
-            self._snap.delete_where(F.col("id") == doc_id)
+            self._mutate(lambda: self._snap.delete_where(F.col("id") == doc_id))
         else:
             self._rewrite(df.filter(F.col("id") != doc_id))
         return True
@@ -1564,21 +1576,13 @@ class SparkVectolite:
         )
         rows = (
             self.df()
-            .select("id", "text", "metadata", sim.alias("score"))
+            .select("id", sim.alias("score"), "text", "metadata")
             .filter(F.col("score") > 0)
             .orderBy(F.desc("score"), F.asc("id"))
             .limit(top_k)
             .collect()
         )
-        return [
-            {
-                "id": r["id"],
-                "score": float(r["score"]),
-                "text": r["text"],
-                "metadata": json.loads(r["metadata"] or "{}"),
-            }
-            for r in rows
-        ]
+        return [_hit(*r) for r in rows]
 
     def stats(self) -> dict:
         """A2 (vectolite.py:538-555): doc count + storage bytes (Hadoop
@@ -1615,9 +1619,8 @@ class SparkVectolite:
     def rollback(self, version: int) -> int:
         """Restore ``version`` as a NEW commit (history is never mutated)."""
         snap = self._require_versioned()
-        self._invalidate_indexes()
         self._max_id_cache = None
-        return snap.rollback(version)
+        return self._mutate(lambda: snap.rollback(version))
 
     def vacuum(self, keep_versions: int = 2) -> dict:
         """Drop old manifests + unreferenced data dirs (retention GC)."""
@@ -1675,16 +1678,8 @@ class SparkVectolite:
         )
         rows = (
             base.join(F.broadcast(fused), "id")
-            .select("id", "text", "metadata", "rrf")
+            .select("id", "rrf", "text", "metadata")
             .orderBy(F.desc("rrf"), F.asc("id"))
             .collect()
         )
-        return [
-            {
-                "id": r["id"],
-                "score": float(r["rrf"]),
-                "text": r["text"],
-                "metadata": json.loads(r["metadata"] or "{}"),
-            }
-            for r in rows
-        ]
+        return [_hit(*r) for r in rows]

@@ -85,16 +85,29 @@ class scaled_state_confs:
 
             conf_scope_acquire()  # raises if a run_jobs pool is draining
             self._saved = str(cur)
-            self._spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            try:
+                self._spark.conf.set("spark.sql.shuffle.partitions", str(p))
+            except BaseException:
+                # a with-statement never calls __exit__ for a failed
+                # __enter__: undo here, or the scope leaks and every
+                # later run_jobs pool raises ConfScopeOverlapError;
+                # the original failure is the one reported
+                try:
+                    self.__exit__(None, None, None)
+                except Exception:
+                    pass
+                raise
         return self
 
     def __exit__(self, *exc):
         if self._saved is not None:
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._saved)
-            from vectolite_spark.parallel import conf_scope_release
+            saved, self._saved = self._saved, None
+            try:
+                self._spark.conf.set("spark.sql.shuffle.partitions", saved)
+            finally:
+                from vectolite_spark.parallel import conf_scope_release
 
-            conf_scope_release()
-            self._saved = None
+                conf_scope_release()
         return False
 
 

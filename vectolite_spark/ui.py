@@ -278,14 +278,15 @@ def serve_ui(
     """Bind the UI server (port=0 for an ephemeral port). Caller runs
     ``.serve_forever()`` (or a thread does, in tests).
 
-    ``batched`` (default on): concurrent search requests from this
-    THREADED server coalesce through the store's MicroBatcher facade
-    into one Spark job per dispatch cycle instead of one job per request
-    (store.enable_batched_serving) — job-per-query caps near ~30 q/s on
-    the scheduler admission loop no matter the data size. Setup is lazy
-    (first search builds the batcher) and any store mutation tears it
-    down, so Add-panel writes are immediately visible to the next
-    search."""
+    ``batched`` (default on): search requests from this THREADED server
+    are served by ``store.enable_batched_serving`` instead of one Spark
+    job per request — job-per-query caps near ~30 q/s on the scheduler
+    admission loop no matter the data size. A store that fits the
+    resident budget answers from the driver; a larger one coalesces
+    concurrent requests through its MicroBatcher into one job per
+    dispatch cycle. Setup is lazy (first search builds the working set)
+    and any store mutation tears it down, so Add-panel writes are
+    immediately visible to the next search."""
     if batched and store.embed_fn is not None:
         store.enable_batched_serving()
     return ThreadingHTTPServer((host, port), make_handler(store))
