@@ -734,7 +734,8 @@ def main() -> None:
                 src_bytes += os.path.getsize(os.path.join(_r, _f))
             except OSError:
                 pass
-    canary_rows = max(1_000_000, min(200_000_000, src_bytes * 4))
+    canary_cap = 200_000_000
+    canary_rows = max(1_000_000, min(canary_cap, src_bytes * 4))
     spark.sparkContext.setJobDescription("bench: scaling canary (md5 chain)")
     canary_runs = []
     for _ in range(2):
@@ -777,6 +778,11 @@ def main() -> None:
         if canary_runs[len(canary_runs) // 2] > 0
         else 0.0,
         "n": len(canary_runs),
+        # the work size behind the timing, and whether the row cap cut
+        # it below the source-bytes sizing (then it no longer tracks the
+        # dataset)
+        "canary_rows": canary_rows,
+        "canary_clamped": src_bytes * 4 > canary_cap,
     }
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

@@ -914,9 +914,10 @@ def test_srp_resolve_lost_race_keeps_theirs(spark, sf_dir, tmp_path, monkeypatch
 
 
 def test_handle_cache_session_object_keys():
-    """ADVICE r8: handle caches key by the SESSION OBJECT, not id(spark)
-    (id reuse after GC could hand a new session a dead session's handle);
-    _purge_dead_sessions drops entries bound to stopped sessions."""
+    """ADVICE r8: the registry's one handle cache keys by the SESSION
+    OBJECT, not id(spark) (id reuse after GC could hand a new session a
+    dead session's handle); _purge_dead_sessions drops entries bound to
+    stopped sessions, and every handle miss purges first."""
     from vectolite_spark import registry
 
     class _Ctx:
@@ -931,9 +932,26 @@ def test_handle_cache_session_object_keys():
     assert registry._session_stopped(dead) is True
     assert registry._session_stopped(live) is False
     assert registry._session_stopped(object()) is True  # no context at all
-    cache = {("p", dead): "h_dead", ("q", live): "h_live"}
-    registry._purge_dead_sessions(cache)
-    assert cache == {("q", live): "h_live"}
+    cache = registry._HANDLE_CACHE
+    saved = dict(cache)
+    cache.clear()
+    try:
+        cache[("p", "bm25", dead)] = "h_dead"
+        cache[("q", 8, live)] = "h_live"
+        registry._purge_dead_sessions()
+        assert cache == {("q", 8, live): "h_live"}
+
+        cache[("p", "bm25", dead)] = "h_dead"
+        assert registry._handle(live, "r", "pq", lambda: "h_new") == "h_new"
+        assert ("p", "bm25", dead) not in cache  # purged on the miss
+        # a hit returns the open handle, never re-opens
+        assert registry._handle(live, "r", "pq", lambda: "again") == "h_new"
+        # the same path in another (live) session gets its own handle
+        other = _Sess(object())
+        assert registry._handle(other, "r", "pq", lambda: "h_other") == "h_other"
+    finally:
+        cache.clear()
+        cache.update(saved)
 
 
 def test_ivfpq_append_onto_missing_cells_layout(spark, sf_dir, tmp_path):
@@ -1193,3 +1211,47 @@ def test_fused_partial_sum_centroids_match_build_centroids(spark, sf_dir):
     new_seed = via_new_seed(adv, 4)
     assert_bitwise(old_seed, new_seed)
     assert_bitwise(via_old_assign(adv, old_seed), via_new_assign(adv, new_seed))
+
+
+def test_fused_ivf_build_matches_build_centroids_at_large_magnitudes(
+    spark, tmp_path
+):
+    """ADVICE r13: the fused Lloyd pass quantizes every element to
+    decimal(28,12) as a scaled integer, and elements with |x| >= ~9.2e6
+    overflowed the int64 matrix (the column sums could wrap too). The
+    unlabeled IVF build must persist centroids bit-equal to
+    build_centroids' exact-DECIMAL means over its own cells at 1e7 and
+    1e15, with small values mixed into the same batches."""
+    import numpy as np
+
+    from vectolite_spark.operators.ann import build_centroids, build_ivf_index
+
+    rng = np.random.RandomState(11)
+    for scale in (1e7, 1e15):
+        rows = [
+            (i, [
+                float(np.float32(x))
+                for x in rng.normal(0, 1, 8) * ([scale] * 4 + [1.0] * 4)
+            ])
+            for i in range(60)
+        ]
+        embs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        path = str(tmp_path / f"ivf_{scale:g}")
+        build_ivf_index(embs, path, cluster_col=None, n_iters=2)
+        got = sorted(
+            (int(r["cluster"]), list(r["centroid"]))
+            for r in spark.read.parquet(f"{path}/centroids").collect()
+        )
+        want = sorted(
+            (int(r["cluster"]), list(r["centroid"]))
+            for r in build_centroids(
+                spark.read.parquet(f"{path}/cells"), "cell"
+            ).collect()
+        )
+        assert [c for c, _ in got] == [c for c, _ in want]
+        assert sum(
+            r["n"] for r in spark.read.parquet(f"{path}/cells")
+            .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
+        ) == 60
+        for (c, g), (_, w) in zip(got, want):
+            assert g == w, (scale, c, g, w)

@@ -245,3 +245,157 @@ def test_sync_trigram_serves_delta_and_guards_replay(store, spark, tmp_path):
     set_index_watermark(spark, idx, v0)
     with pytest.raises(ValueError, match="already indexed"):
         sync_trigram_index(store, idx)
+
+
+def _vecs8(spark, ids):
+    return spark.createDataFrame(
+        [(i, i % 2, [float(i % 7), 1.0, float(i % 3), 0.5] * 2) for i in ids],
+        "vec_id long, label int, embedding array<float>",
+    )
+
+
+def _cells_audit(spark, index_path):
+    r = spark.read.parquet(f"{index_path}/cells").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("vec_id").alias("c")
+    ).collect()[0]
+    return r["n"], r["c"]
+
+
+# family -> (builder, delta append the sync calls, sync, build kwargs,
+# sync kwargs)
+_FENCED_FAMILIES = {
+    "ivf": ("build_ivf_index", "ivf_index_append", "sync_ivf_index",
+            {"cluster_col": "label"}, {}),
+    "srp": ("build_srp_index", "srp_index_append", "sync_srp_index",
+            {"n_tables": 2, "n_planes": 3}, {}),
+    "ivfpq": ("build_ivfpq_index", "ivfpq_index_append", "sync_ivfpq_index",
+              {"cluster_col": "label", "m": 4}, {"m": 4}),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FENCED_FAMILIES))
+def test_sync_crash_after_append_is_fenced(spark, tmp_path, monkeypatch, family):
+    """Crash injection between the delta append and the watermark write:
+    the retry must refuse (the IVF, SRP and IVF-PQ appends have no
+    id-overlap guard, so a replay would double-index the delta) and leave
+    the cells untouched; rebuild_and_fast_forward then restores exactly
+    the clean run's cells."""
+    from vectolite_spark.operators import ann, index_sync
+    from vectolite_spark.operators.index_sync import rebuild_and_fast_forward
+
+    build_name, append_name, sync_name, build_kw, sync_kw = (
+        _FENCED_FAMILIES[family]
+    )
+
+    def build(df, path):
+        getattr(ann, build_name)(df, path, **build_kw)
+
+    def sync(st, path):
+        return getattr(index_sync, sync_name)(st, path, **sync_kw)
+
+    def two_commits_past_build(root):
+        st = SnapshotStore(spark, str(root / "table"))
+        v0 = st.append(_vecs8(spark, range(0, 20)))
+        idx = str(root / "idx")
+        build(st.read(v0), idx)
+        set_index_watermark(spark, idx, v0)
+        st.append(_vecs8(spark, range(20, 26)))
+        st.append(_vecs8(spark, range(26, 30)))
+        return st, idx
+
+    st, clean = two_commits_past_build(tmp_path / "clean")
+    sync(st, clean)
+    want = _cells_audit(spark, clean)
+
+    st, idx = two_commits_past_build(tmp_path / "crash")
+    real_append = getattr(ann, append_name)
+
+    def append_then_crash(*args, **kwargs):
+        real_append(*args, **kwargs)
+        raise RuntimeError("crashed before the watermark write")
+
+    monkeypatch.setattr(ann, append_name, append_then_crash)
+    with pytest.raises(RuntimeError, match="crashed before"):
+        sync(st, idx)
+    monkeypatch.setattr(ann, append_name, real_append)
+    after_crash = _cells_audit(spark, idx)
+    assert after_crash == want  # the append itself did land
+
+    with pytest.raises(VectoliteError, match="rebuild_and_fast_forward"):
+        sync(st, idx)
+    assert _cells_audit(spark, idx) == after_crash  # nothing re-appended
+
+    rebuild_and_fast_forward(st, idx, build)
+    assert sync(st, idx)["n_rows"] == 0
+    assert _cells_audit(spark, idx) == want
+    assert index_watermark(spark, idx) == st.current_version()
+
+
+def test_partial_build_is_not_ready_and_gets_rebuilt(spark, tmp_path, monkeypatch):
+    """A builder that raises after writing its first parts (the SRP cells
+    land, the meta write fails) leaves an index that index_ready
+    rejects; store.query(ann=True) and the registry's _cached_index both
+    rebuild it, and their answers equal a clean build's."""
+    import os
+    import shutil
+
+    from vectolite_spark import registry
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.operators import ann
+    from vectolite_spark.operators.index_sync import index_ready
+    from vectolite_spark.store import SparkVectolite
+
+    def meta_write_fails(*args, **kwargs):
+        raise RuntimeError("crash mid-build")
+
+    builds = []
+    real_build = ann.build_srp_index
+
+    def counted_build(*args, **kwargs):
+        builds.append(1)
+        return real_build(*args, **kwargs)
+
+    texts = [f"document number {i} about topic {i % 3}" for i in range(24)]
+    clean = SparkVectolite(spark, str(tmp_path / "clean"), embed_fn=stub_embedder(16))
+    broken = SparkVectolite(spark, str(tmp_path / "broken"), embed_fn=stub_embedder(16))
+    clean.insert_many(texts)
+    broken.insert_many(texts)
+    clean.build_ann_index()
+    with monkeypatch.context() as m:
+        m.setattr(ann, "local_df", meta_write_fails)
+        with pytest.raises(RuntimeError, match="crash mid-build"):
+            broken.build_ann_index()
+    assert os.path.isdir(f"{broken._ann_path()}/cells")  # first parts landed
+    assert not index_ready(spark, broken._ann_path())
+    monkeypatch.setattr(ann, "build_srp_index", counted_build)
+    got = broken.query(texts[5], top_k=4, ann=True)
+    assert builds == [1] and index_ready(spark, broken._ann_path())
+    assert got == clean.query(texts[5], top_k=4, ann=True)
+
+    embs = _vecs8(spark, range(40))
+    want_path = str(tmp_path / "srp_clean")
+    real_build(embs, want_path)
+    qvec = [3.0, 1.0, 2.0, 0.5] * 2
+    want = ann.srp_index_topk(spark, want_path, qvec, k=5).collect()
+    sf = str(tmp_path / "sf_partial")
+    path = registry.index_cache_path("partial_build_test", sf)
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(ann, "local_df", meta_write_fails)
+            with pytest.raises(RuntimeError, match="crash mid-build"):
+                registry._cached_index(
+                    "partial_build_test", sf, lambda p: real_build(embs, p)
+                )
+        assert os.path.isdir(f"{path}/cells")
+        assert not index_ready(spark, path)
+        builds.clear()
+        assert registry._cached_index(
+            "partial_build_test", sf, lambda p: counted_build(embs, p)
+        ) == path
+        assert builds == [1] and index_ready(spark, path)
+        assert ann.srp_index_topk(spark, path, qvec, k=5).collect() == want
+        # a hit never rebuilds
+        registry._cached_index("partial_build_test", sf, counted_build)
+        assert builds == [1]
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -215,15 +215,15 @@ def test_index_cache_vacuum_policy(tmp_path):
 def test_index_cache_rebuild_on_miss(spark):
     """Eviction is always safe: every .cache consumer is build-if-absent,
     so a vacuumed index is rebuilt on the next ensure call."""
-    import os
     import shutil
 
     from vectolite_spark import registry
+    from vectolite_spark.operators.index_sync import index_ready
 
     sf = "/root/testdata/sf0.001"
     path = registry._ensure_ivf_index(spark, sf)
-    assert os.path.exists(os.path.join(path, "cells", "_SUCCESS"))
+    assert index_ready(spark, path)
     shutil.rmtree(path)
     path2 = registry._ensure_ivf_index(spark, sf)
     assert path2 == path
-    assert os.path.exists(os.path.join(path, "cells", "_SUCCESS"))
+    assert index_ready(spark, path)

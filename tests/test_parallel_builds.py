@@ -3,18 +3,16 @@
 The builds now submit independent artifact jobs from driver threads.
 Results must be identical to the sequential builds (the append==rebuild
 tests pin scores); these tests pin the NEW structural invariants:
-- the build-complete gate (stats/_SUCCESS) still exists after a build
-  and no stats_tmp/termstats_tmp staging dir is left behind (the gate
-  is computed in the pool but renamed into place last);
+- every build ends with the index marked ready (``index_ready``);
 - every derived artifact is consistent with the written postings;
 - run_jobs propagates the earliest failure after all thunks finish.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
+
+from vectolite_spark.operators.index_sync import index_ready
 
 
 def test_run_jobs_results_and_error_order():
@@ -52,9 +50,7 @@ def test_trigram_build_artifacts_consistent(spark, sf_dir, tmp_path):
     path = str(tmp_path / "trgm")
     build_trigram_index(docs, path, n_buckets=4)
 
-    # gate appears, staging dir does not survive
-    assert os.path.exists(os.path.join(path, "stats", "_SUCCESS"))
-    assert not os.path.exists(os.path.join(path, "stats_tmp"))
+    assert index_ready(spark, path)
 
     post = spark.read.parquet(f"{path}/postings")
     doclen = {
@@ -96,8 +92,7 @@ def test_bm25_build_artifacts_consistent(spark, sf_dir, tmp_path):
     path = str(tmp_path / "bm25")
     build_bm25_index(docs, path, n_buckets=8)
 
-    assert os.path.exists(os.path.join(path, "stats", "_SUCCESS"))
-    assert not os.path.exists(os.path.join(path, "stats_tmp"))
+    assert index_ready(spark, path)
 
     post = spark.read.parquet(f"{path}/postings")
     termstats = {
@@ -138,7 +133,7 @@ def test_ivfpq_build_artifacts_consistent(spark, tmp_path):
         vecs, path, n_cells=4, m=4, pq_k=8, pq_iters=1, ivf_iters=1
     )
 
-    assert os.path.exists(os.path.join(path, "cells", "_SUCCESS"))
+    assert index_ready(spark, path)
 
     # the threaded codebook equals a sequential training run exactly
     cb = np.array(
@@ -286,3 +281,31 @@ def test_conf_scope_released_when_enter_fails(tmp_path):
             with scope:
                 pass  # pragma: no cover - __enter__ fails
         assert run_jobs(lambda: 1, lambda: 2) == [1, 2]
+
+
+def test_phase_restores_description_when_block_raises(spark):
+    """phase(label) labels the block's jobs and restores the previous
+    description on exit — also when the block raises — and never
+    touches the job group (a tracer owns it)."""
+    import pytest
+
+    from vectolite_spark.session import phase
+
+    sc = spark.sparkContext
+    desc, group = "spark.job.description", "spark.jobGroup.id"
+    sc.setJobDescription("outer")
+    sc.setLocalProperty(group, "tracer-group")
+    try:
+        with pytest.raises(ValueError, match="boom"):
+            with phase("inner"):
+                assert sc.getLocalProperty(desc) == "inner"
+                raise ValueError("boom")
+        assert sc.getLocalProperty(desc) == "outer"
+        assert sc.getLocalProperty(group) == "tracer-group"
+        sc.setJobDescription(None)
+        with phase("inner"):
+            spark.range(3).count()
+        assert sc.getLocalProperty(desc) is None
+    finally:
+        sc.setJobDescription(None)
+        sc.setLocalProperty(group, None)

@@ -44,6 +44,8 @@ if REPO not in sys.path:
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from vectolite_spark.operators.index_sync import index_ready  # noqa: E402
+
 
 print = functools.partial(print, flush=True)
 
@@ -120,7 +122,7 @@ def main() -> None:
         n_cells = max(1024, 1 << (n // 1000).bit_length() - 1)
         m, pq_k, refine = 32, 256, 1000
         path = f"{work}/ivfpq_m32{gtag}_n{n}"
-        if not os.path.exists(f"{path}/cells/_SUCCESS"):
+        if not index_ready(spark, path):
             shutil.rmtree(path, ignore_errors=True)
             t0 = time.time()
             build_ivfpq_index(
@@ -190,7 +192,7 @@ def main() -> None:
     # refine must exceed the PQ tie width at the chosen m.
     ivfpq_path = f"{work}/ivfpq_m16{gtag}_n{n}"
     n_cells, m, pq_k, refine = 1024, 16, 256, 1000
-    if not os.path.exists(f"{ivfpq_path}/cells/_SUCCESS"):
+    if not index_ready(spark, ivfpq_path):
         shutil.rmtree(ivfpq_path, ignore_errors=True)
         t0 = time.time()
         build_ivfpq_index(
@@ -227,7 +229,7 @@ def main() -> None:
     # ---- SRP-LSH ---------------------------------------------------------
     srp_path = f"{work}/srp{gtag}_n{n}"
     n_tables, n_planes = 8, 10
-    if not os.path.exists(f"{srp_path}/cells/_SUCCESS"):
+    if not index_ready(spark, srp_path):
         shutil.rmtree(srp_path, ignore_errors=True)
         t0 = time.time()
         build_srp_index(embs, srp_path, n_tables=n_tables, n_planes=n_planes)

@@ -593,10 +593,11 @@ def _decimal12_scaled(mat):
     units for |x| < 16, so only elements inside a +-1e-2 guard band of
     the .5 tie — plus anything outside the fast-path domain — take the
     exact ``Decimal(repr(x))`` path (repr is the same shortest decimal
-    string). Returns ``(scaled int64 matrix, valid mask)``: non-finite
-    or decimal-overflow elements (NULL after Spark's cast) are invalid,
+    string). Returns ``(scaled matrix, valid mask)``: non-finite or
+    decimal-overflow elements (NULL after Spark's cast) are invalid,
     contribute 0, and must be excluded from sums exactly like Spark's
-    null-skipping SUM.
+    null-skipping SUM. The matrix is int64 only when no element or
+    column sum can leave int64; otherwise it holds exact Python ints.
     """
     from decimal import ROUND_HALF_UP, Decimal, localcontext
 
@@ -612,6 +613,11 @@ def _decimal12_scaled(mat):
     np.multiply(out, np.sign(mat).astype(np.int64), out=out)
     valid = finite & (np.abs(mat) < 1e16)
     slow = valid & ~fast
+    # outside the fast domain one scaled element reaches 1e28, and a
+    # tall enough batch of fast-domain elements (< 1.6e13 each) could
+    # wrap an int64 column sum: such batches accumulate as Python ints
+    if (valid & (np.abs(mat) >= 16.0)).any() or mat.shape[0] * 16e12 >= 2**63:
+        out = out.astype(object)
     if slow.any():
         with localcontext() as ctx:
             ctx.prec = 60
@@ -630,9 +636,9 @@ def _partial_sum_frame(cells, mat):
     """One batch's (cell, pos, psum, cnt) partial-sum rows: per assigned
     cell, the exact decimal(28,12)-quantized column sums as integer
     strings (exact at any depth once Spark re-sums them as
-    decimal(38,0)) plus the batch's cell row count. int64 column sums
-    are safe: |scaled element| < 1.6e13 (fast-path domain) and Arrow
-    batches are <= ~10k rows, 5 orders below int64 overflow."""
+    decimal(38,0)) plus the batch's cell row count. Column sums are
+    exact either way: ``_decimal12_scaled`` hands back int64 only when
+    no sum can wrap, and Python ints otherwise."""
     scaled, valid = _decimal12_scaled(mat)
     if not valid.all():
         scaled = np.where(valid, scaled, 0)

@@ -30,7 +30,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectolite_spark.localframe import local_df
+from vectolite_spark.operators.index_sync import clear_index_ready, mark_index_ready
 from vectolite_spark.operators.topk import SCORE_DECIMALS, topk_ids
+from vectolite_spark.session import phase
 
 
 def lsh_topk(
@@ -393,6 +395,7 @@ def build_ivf_index(
     The reference has no index at all (vectolite.py:145-171 is always a
     full scan); this is the north-star extension's build/probe split.
     """
+    clear_index_ready(embeddings.sparkSession, index_path)
     if cluster_col is None:
         # seed centroids from a deterministic coarse partition of the id
         # space, then ``n_iters`` Lloyd rounds (assign -> exact-DECIMAL
@@ -467,6 +470,7 @@ def build_ivf_index(
         .partitionBy("cell")
         .parquet(f"{index_path}/cells")
     )
+    mark_index_ready(embeddings.sparkSession, index_path)
 
 
 class IVFIndex:
@@ -900,6 +904,8 @@ def build_ivfpq_index(
 
     from vectolite_spark._pandas_udfs import make_assign_encode_mapper
 
+    spark = embeddings.sparkSession
+    clear_index_ready(spark, index_path)
     # The IVF side (seed -> top-up -> Lloyd refinement) and the PQ side
     # (codebook training) are independent computations over the same
     # immutable input — neither reads anything the other produces until
@@ -980,11 +986,9 @@ def build_ivfpq_index(
         codebook = fut_codebook.result()
     finally:
         pq_pool.shutdown(wait=True)
-    spark = embeddings.sparkSession
 
-    # the two tiny metadata writes are independent of each other —
-    # overlap them; the big cells write stays LAST alone (its _SUCCESS
-    # is the build-complete gate the registry checks)
+    # the three artifact writes are independent — overlapped as
+    # concurrent jobs (guide §2.6); the ready marker follows them all
     from vectolite_spark.parallel import run_jobs
 
     def _write_centroids():
@@ -1008,21 +1012,25 @@ def build_ivfpq_index(
             f"{index_path}/codebook"
         )
 
-    run_jobs(_write_centroids, _write_codebook)
     mapper = make_assign_encode_mapper(
         None if cluster_col is not None else [c for c, _ in cents_list],
         None if cluster_col is not None else [v for _, v in cents_list],
         codebook,
         m,
     )
-    (
-        fused_in.mapInPandas(mapper, schema=fused_schema)
-        # cluster by cell before partitionBy — see build_ivf_index note
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{index_path}/cells")
-    )
+
+    def _write_cells():
+        (
+            fused_in.mapInPandas(mapper, schema=fused_schema)
+            # cluster by cell before partitionBy — see build_ivf_index note
+            .repartition(F.col("cell"))
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(f"{index_path}/cells")
+        )
+
+    run_jobs(_write_centroids, _write_codebook, _write_cells)
+    mark_index_ready(spark, index_path)
 
 
 class IVFPQIndex:
@@ -1609,6 +1617,8 @@ def build_srp_index(
     from vectolite_spark._pandas_udfs import make_srp_bucket_mapper
     from vectolite_spark.operators.layout import fan_out_small_scan
 
+    spark = embeddings.sparkSession
+    clear_index_ready(spark, index_path)
     mapper = make_srp_bucket_mapper(n_tables, n_planes)
     # fan out a sub-parallelism scan BEFORE the T-way replicating Arrow
     # mapper (guide §2.5: one unsplittable input otherwise runs the
@@ -1617,12 +1627,8 @@ def build_srp_index(
         embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
     ).mapInPandas(mapper, schema="vec_id long, embedding array<float>, block string")
     # the cells write and the tiny meta write are independent —
-    # overlapped as concurrent jobs (guide §2.6). The build gate stays
-    # cells/_SUCCESS: a crash that lands meta without cells fails the
-    # gate and rebuilds (both writes are mode=overwrite — new window,
-    # harmless), and a crash that lands cells without meta is repaired
-    # by _srp_resolve's default-meta path (the window the sequential
-    # order already had).
+    # overlapped as concurrent jobs (guide §2.6); the ready marker
+    # follows both
     from vectolite_spark.parallel import run_jobs
 
     def _write_cells():
@@ -1634,8 +1640,6 @@ def build_srp_index(
         # ~3 MB of data). The shuffle moves only the delta the write
         # itself is about to move, AQE sizes the partition count, and
         # each block dir comes out as one splittable file.
-        sc = embeddings.sparkSession.sparkContext
-        sc.setJobDescription("srp build: cells write")
         # explicit numPartitions = defaultParallelism: an AQE-coalesced
         # keyed exchange packs these tiny-BYTE partitions onto a few
         # tasks, but the write cost here is per-FILE (one parquet
@@ -1643,9 +1647,12 @@ def build_srp_index(
         # ~1024 file creates behind ~6 tasks. A fixed partition count
         # keyed by block keeps whole blocks together (still one file
         # per dir) while spreading file creation across the cluster.
-        vb.repartition(sc.defaultParallelism, F.col("block")).write.mode(
-            "overwrite"
-        ).partitionBy("block").parquet(f"{index_path}/cells")
+        with phase("srp build: cells write"):
+            vb.repartition(
+                spark.sparkContext.defaultParallelism, F.col("block")
+            ).write.mode("overwrite").partitionBy("block").parquet(
+                f"{index_path}/cells"
+            )
 
     def _write_meta():
         # persist the build hyperparameters (the trigram index's meta
@@ -1653,12 +1660,13 @@ def build_srp_index(
         # here so a non-default build can never be probed with default
         # planes
         local_df(
-            embeddings.sparkSession,
+            spark,
             [(int(n_tables), int(n_planes))],
             "n_tables int, n_planes int",
         ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
 
     run_jobs(_write_cells, _write_meta)
+    mark_index_ready(spark, index_path)
 
 
 def srp_index_topk(

@@ -1,22 +1,34 @@
-"""CDF-driven index maintenance (VERDICT r7 item 6).
+"""Persisted-index lifecycle: the ready marker and CDF-driven sync.
 
-A persisted index (IVF cells, trigram postings) serving a VERSIONED
-table needs upkeep per commit. These helpers bind an index directory to
-a ``SnapshotStore`` through a WATERMARK file recording the last store
-version folded into the index; each ``sync_*`` call consumes exactly
-``store.read_changes(watermark, current)`` — delta bytes only, never a
-corpus rescan — and then advances the watermark. ``read_changes``' own
-rewrite-window refusal is deliberately inherited: a compact / delete /
-merge commit between syncs raises instead of replaying moved rows as
-inserts (the index must be REBUILT from that version and the watermark
-fast-forwarded with ``set_index_watermark``).
+Every index family (IVF, IVF-PQ, SRP, BM25, trigram) shares one
+lifecycle, owned here:
 
-Crash window: the watermark advances AFTER the data append, so a crash
-between the two replays the delta on retry (at-least-once). The trigram
-path's id-overlap guard turns that replay into a loud error when the
-prior attempt reached ``doclen``; the IVF path documents the same
-ordering trade in ``ivf_index_append`` — exactly-once across arbitrary
-crashes belongs to the streaming sink's batch-id fence, not here.
+- **Ready marker.** A builder's first step is ``clear_index_ready`` and
+  its last is ``mark_index_ready``, which writes one ``_BUILT`` file at
+  the index root, so a build (or rebuild) that dies part-way never reads
+  as complete. ``index_ready`` is the only "is this index complete?"
+  check: no caller inspects a family's subdirectories or their
+  ``_SUCCESS`` files, and builders may write their artifacts in any
+  order, concurrently.
+- **Watermark.** An index serving a VERSIONED table is bound to a
+  ``SnapshotStore`` through a watermark file recording the last store
+  version folded into the index. Each ``sync_*`` call consumes exactly
+  ``store.read_changes(watermark, current)`` — delta bytes only, never a
+  corpus rescan — and then advances the watermark. ``read_changes``' own
+  rewrite-window refusal is inherited: a compact / delete / merge commit
+  between syncs raises instead of replaying moved rows as inserts (the
+  index must be REBUILT from that version and the watermark
+  fast-forwarded, ``rebuild_and_fast_forward``).
+- **Replay fence.** Before appending a delta, the sync records the
+  pending window ``{v_from, v_to}`` in the watermark file; advancing the
+  watermark clears it. A crash between the append and the watermark
+  write therefore leaves the window on disk, and the next sync raises
+  instead of appending the same rows again (IVF, SRP and IVF-PQ appends
+  have no id-overlap guard of their own, so a replay would silently
+  double-index them). Recovery is ``rebuild_and_fast_forward``, whose
+  ``set_index_watermark`` clears the window. The fence is deliberately
+  conservative: an append that failed before writing anything also
+  requires the rebuild, because the sync cannot tell the two apart.
 
 No reference counterpart (vectolite.py has neither indexes nor a
 versioned store) — north-star extension surface.
@@ -32,15 +44,50 @@ from vectolite_spark.errors import VectoliteError
 from vectolite_spark.store import _HadoopFS
 
 _WATERMARK = "_store_watermark.json"
+_READY = "_BUILT"
+
+
+def mark_index_ready(spark: SparkSession, index_path: str) -> None:
+    """Declare the index at ``index_path`` complete: every builder's last
+    step, after all of its artifacts have landed."""
+    _HadoopFS(spark, index_path).write_text(
+        f"{index_path}/{_READY}", "built", overwrite=True
+    )
+
+
+def clear_index_ready(spark: SparkSession, index_path: str) -> None:
+    """Withdraw the ready marker: every builder's first step, so a
+    rebuild over an existing index reads as incomplete until it ends."""
+    fs = _HadoopFS(spark, index_path)
+    if fs.exists(f"{index_path}/{_READY}"):
+        fs.delete(f"{index_path}/{_READY}")
+
+
+def index_ready(spark: SparkSession, index_path: str) -> bool:
+    """True when a build of the index at ``index_path`` ran to the end."""
+    return _HadoopFS(spark, index_path).exists(f"{index_path}/{_READY}")
+
+
+def _watermark_state(spark: SparkSession, index_path: str) -> dict | None:
+    fs = _HadoopFS(spark, index_path)
+    p = f"{index_path}/{_WATERMARK}"
+    if not fs.exists(p):
+        return None
+    return json.loads(fs.read_text(p))
+
+
+def _write_watermark(spark: SparkSession, index_path: str, state: dict) -> None:
+    fs = _HadoopFS(spark, index_path)
+    fs.mkdirs(index_path)
+    fs.write_text(
+        f"{index_path}/{_WATERMARK}", json.dumps(state), overwrite=True
+    )
 
 
 def index_watermark(spark: SparkSession, index_path: str) -> int:
     """Last store version folded into the index; -1 if never bound."""
-    fs = _HadoopFS(spark, index_path)
-    p = f"{index_path}/{_WATERMARK}"
-    if not fs.exists(p):
-        return -1
-    return int(json.loads(fs.read_text(p))["version"])
+    state = _watermark_state(spark, index_path)
+    return -1 if state is None else int(state["version"])
 
 
 def set_index_watermark(
@@ -48,25 +95,30 @@ def set_index_watermark(
 ) -> None:
     """Bind the index to a store version. Call once after the initial
     build (over ``store.read(version)``) and after any rebuild that
-    crosses a rewrite commit; ``sync_*`` advances it automatically."""
-    fs = _HadoopFS(spark, index_path)
-    fs.mkdirs(index_path)
-    fs.write_text(
-        f"{index_path}/{_WATERMARK}",
-        json.dumps({"version": int(version)}),
-        overwrite=True,
-    )
+    crosses a rewrite commit; ``sync_*`` advances it automatically.
+    Clears the pending window an interrupted sync left behind."""
+    _write_watermark(spark, index_path, {"version": int(version)})
 
 
 def _sync(store, index_path: str, append_fn) -> dict:
     spark = store.spark
-    v_from = index_watermark(spark, index_path)
-    if v_from < 0:
+    state = _watermark_state(spark, index_path)
+    if state is None:
         raise VectoliteError(
             f"index at {index_path} has no store watermark — build it "
             "over store.read(v) first, then set_index_watermark(spark, "
             "index_path, v)"
         )
+    if "pending" in state:
+        w = state["pending"]
+        raise VectoliteError(
+            f"index at {index_path} has an interrupted sync of store "
+            f"versions {w['v_from']}..{w['v_to']}: its delta may already "
+            "be partly appended, and appending it again would double-index "
+            "those rows. Recover with rebuild_and_fast_forward(store, "
+            "index_path, build_fn)"
+        )
+    v_from = int(state["version"])
     v_to = store.current_version()
     if v_to <= v_from:
         return {"v_from": v_from, "v_to": v_from, "n_rows": 0}
@@ -78,6 +130,13 @@ def _sync(store, index_path: str, append_fn) -> dict:
     try:
         n = int(delta.count())
         if n:
+            # the fence lands before the first appended byte and is
+            # cleared only by the watermark advance below
+            _write_watermark(
+                spark,
+                index_path,
+                {"version": v_from, "pending": {"v_from": v_from, "v_to": v_to}},
+            )
             append_fn(delta)
     finally:
         delta.unpersist(blocking=False)
@@ -104,10 +163,11 @@ def sync_ivf_index(store, index_path: str, id_col: str = "vec_id") -> dict:
 def rebuild_and_fast_forward(
     store, index_path: str, build_fn, version: int | None = None
 ) -> dict:
-    """The recovery path the sync refusal points to: when a rewrite
+    """The recovery path the sync refusals point to: when a rewrite
     commit (delete / compact / merge / rollback) lands inside the sync
     window, ``sync_*`` raises — moved rows are not inserts, and folding
-    them in as deltas would double-index every moved row. This helper
+    them in as deltas would double-index every moved row — and so does
+    a sync that finds the pending window of an interrupted one. This helper
     rebuilds the index over the CURRENT snapshot and fast-forwards the
     watermark in one call:
 

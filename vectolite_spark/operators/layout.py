@@ -94,15 +94,27 @@ def ensure_bucketed_table(
     future join).  Later sessions re-attach the existing files with a
     metadata-only DDL.
     """
-    from vectolite_spark.registry import index_cache_path
+    from vectolite_spark.registry import _cached_index, index_cache_path
     from vectolite_spark.schema import load_table
 
-    path = index_cache_path(f"bktv1_{table}_{key}_b{buckets}", sf_dir)
-    name = _table_ident(path)
+    recipe = f"bktv1_{table}_{key}_b{buckets}"
+    name = _table_ident(index_cache_path(recipe, sf_dir))
     if spark.catalog.tableExists(name):
         return name
 
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
+    def _write(path):
+        (
+            load_table(spark, sf_dir, table)
+            .repartition(buckets, F.col(key))
+            .write.bucketBy(buckets, key)
+            .sortBy(key)
+            .option("path", path)
+            .mode("overwrite")
+            .saveAsTable(name)
+        )
+
+    path = _cached_index(recipe, sf_dir, _write)
+    if not spark.catalog.tableExists(name):
         # files exist from a prior session: metadata-only re-attach
         schema_ddl = spark.read.parquet(path).schema.toDDL()
         spark.sql(
@@ -110,17 +122,6 @@ def ensure_bucketed_table(
             f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
             f"LOCATION '{path}'"
         )
-        return name
-
-    df = load_table(spark, sf_dir, table)
-    (
-        df.repartition(buckets, F.col(key))
-        .write.bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(name)
-    )
     return name
 
 

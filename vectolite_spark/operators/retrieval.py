@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from vectolite_spark.localframe import local_df
 from vectolite_spark.operators.dedup import norm_tokens
+from vectolite_spark.operators.index_sync import clear_index_ready, mark_index_ready
+from vectolite_spark.session import phase
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -225,6 +227,7 @@ def build_bm25_index(
     from vectolite_spark.operators.layout import fan_out_small_scan
 
     spark = docs.sparkSession
+    clear_index_ready(spark, index_path)
     src = fan_out_small_scan(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
     )
@@ -241,69 +244,58 @@ def build_bm25_index(
     # concurrent jobs (guide §2.6) so the second pass back-fills the
     # first pass's straggler tail instead of waiting for it. termstats
     # and stats then derive from the two written tables, also disjoint
-    # and also overlapped; stats is the build-complete gate (registry
-    # checks stats/_SUCCESS), so it is computed into a tmp dir in the
-    # pool and renamed into place after everything else has landed —
-    # the gate still APPEARS last, the crash contract is unchanged.
+    # and also overlapped; the ready marker follows them all.
     from vectolite_spark.parallel import run_jobs
-    from vectolite_spark.store import _HadoopFS
-
-    sc = spark.sparkContext
 
     def _write_postings():
-        sc.setJobDescription("bm25 build: postings write")
-        (
-            tf.withColumn(
-                "bucket", _term_bucket_col(F.col("term"), n_buckets)
+        with phase("bm25 build: postings write"):
+            (
+                tf.withColumn(
+                    "bucket", _term_bucket_col(F.col("term"), n_buckets)
+                )
+                .select("bucket", "term", "doc_id", "tf", "dl")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(f"{index_path}/postings")
             )
-            .select("bucket", "term", "doc_id", "tf", "dl")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{index_path}/postings")
-        )
 
     def _write_doclen():
-        sc.setJobDescription("bm25 build: doclen write")
-        dl.write.mode("overwrite").parquet(f"{index_path}/doclen")
+        with phase("bm25 build: doclen write"):
+            dl.write.mode("overwrite").parquet(f"{index_path}/doclen")
 
     run_jobs(_write_postings, _write_doclen)
 
     def _write_termstats():
         # df = posting rows per term — counted off the written postings
         # (column-pruned term scan), not a third tokenize of the corpus
-        sc.setJobDescription("bm25 build: termstats write")
-        (
-            spark.read.parquet(f"{index_path}/postings")
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/termstats")
-        )
-
-    stats_tmp = f"{index_path}/stats_tmp"
-
-    def _write_stats_tmp():
-        sc.setJobDescription("bm25 build: stats write")
-        (
-            spark.read.parquet(f"{index_path}/doclen")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0))
-                .cast("long")
-                .alias("total_dl"),
+        with phase("bm25 build: termstats write"):
+            (
+                spark.read.parquet(f"{index_path}/postings")
+                .groupBy("term")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{index_path}/termstats")
             )
-            .withColumn("n_buckets", F.lit(n_buckets))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stats_tmp)
-        )
 
-    run_jobs(_write_termstats, _write_stats_tmp)
-    fs = _HadoopFS(spark, index_path)
-    fs.delete(f"{index_path}/stats")
-    fs.rename(stats_tmp, f"{index_path}/stats")
-    sc.setJobDescription(None)
+    def _write_stats():
+        with phase("bm25 build: stats write"):
+            (
+                spark.read.parquet(f"{index_path}/doclen")
+                .agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.coalesce(F.sum("dl"), F.lit(0))
+                    .cast("long")
+                    .alias("total_dl"),
+                )
+                .withColumn("n_buckets", F.lit(n_buckets))
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{index_path}/stats")
+            )
+
+    run_jobs(_write_termstats, _write_stats)
+    mark_index_ready(spark, index_path)
 
 
 def append_bm25_index(
@@ -384,23 +376,21 @@ def append_bm25_index(
     from vectolite_spark.parallel import run_jobs
     from vectolite_spark.store import _HadoopFS
 
-    sc = spark.sparkContext
-
     def _append_postings():
-        sc.setJobDescription("bm25 append: postings append")
-        (
-            tf.withColumn(
-                "bucket", _term_bucket_col(F.col("term"), n_buckets)
+        with phase("bm25 append: postings append"):
+            (
+                tf.withColumn(
+                    "bucket", _term_bucket_col(F.col("term"), n_buckets)
+                )
+                .select("bucket", "term", "doc_id", "tf", "dl")
+                .write.mode("append")
+                .partitionBy("bucket")
+                .parquet(f"{index_path}/postings")
             )
-            .select("bucket", "term", "doc_id", "tf", "dl")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{index_path}/postings")
-        )
 
     def _append_doclen():
-        sc.setJobDescription("bm25 append: doclen append")
-        dl.write.mode("append").parquet(f"{index_path}/doclen")
+        with phase("bm25 append: doclen append"):
+            dl.write.mode("append").parquet(f"{index_path}/doclen")
 
     # overwrite-while-reading hazard (Spark cannot overwrite a dir its
     # own plan is reading): write the DISTRIBUTED merge to a tmp dir,
@@ -418,15 +408,14 @@ def append_bm25_index(
     tmp = f"{index_path}/termstats_tmp"
 
     def _write_termstats_tmp():
-        sc.setJobDescription("bm25 append: termstats merge")
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+        with phase("bm25 append: termstats merge"):
+            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
 
     run_jobs(_append_postings, _append_doclen, _write_termstats_tmp)
     toks.unpersist()
     fs = _HadoopFS(spark, index_path)
     fs.delete(f"{index_path}/termstats")
     fs.rename(tmp, f"{index_path}/termstats")
-    sc.setJobDescription(None)
     local_df(
         spark,
         [
@@ -741,17 +730,16 @@ def build_trigram_index(
     Catalyst ``_trigram_col`` form — measured ~10x); ``stats`` is
     then derived by re-reading just the narrow trigram column of what
     was written (columnar scan of the index, not the corpus — measured
-    ~2x build win over tokenizing twice). Write order postings -> meta
-    -> stats makes the LAST artifact the build-if-absent gate
-    (registry ``_ensure_trigram_index`` checks ``stats/_SUCCESS``), so
-    a crash mid-build always rebuilds. A probe reads only the buckets
+    ~2x build win over tokenizing twice). The ready marker
+    (``index_sync.mark_index_ready``) lands after every artifact, so a
+    crash mid-build always rebuilds. A probe reads only the buckets
     of the pattern's trigrams — partition pruning turns a 100 TB
     corpus problem into a posting-list problem."""
     from vectolite_spark._pandas_udfs import make_trigram_udf
     from vectolite_spark.operators.layout import fan_out_small_scan
 
     spark = docs.sparkSession
-    sc = spark.sparkContext
+    clear_index_ready(spark, index_path)
     # column-prune BEFORE the fan-out decision so a tiny corpus ships
     # only (id, text) through the (tiny) repartition; at scale the scan
     # already has >= parallelism splits and src IS narrow (no shuffle)
@@ -771,63 +759,53 @@ def build_trigram_index(
         # fan-out tasks writes a sliver into every bucket (guide §6
         # small-files). Never reached at scale (src is narrow there).
         post = post.repartition(n_buckets, "bucket")
-    sc.setJobDescription("trgm build: postings write")
-    (
-        post.write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{index_path}/postings")
-    )
+    with phase("trgm build: postings write"):
+        (
+            post.write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(f"{index_path}/postings")
+        )
 
     # meta, doclen and stats all derive from the written postings (or a
     # constant) and write to disjoint directories — independent jobs,
     # overlapped from driver threads (guide §2.6) instead of paying
-    # three sequential job launches. stats is the build-complete gate
-    # (registry checks stats/_SUCCESS), so it is computed into a tmp
-    # dir in the pool and renamed into place only after every other
-    # artifact has landed — the gate still APPEARS last, the crash
-    # contract is unchanged.
+    # three sequential job launches; the ready marker follows them all.
     from vectolite_spark.parallel import run_jobs
-    from vectolite_spark.store import _HadoopFS
 
     def _write_meta():
-        sc.setJobDescription("trgm build: meta write")
-        local_df(
-            spark, [(n_buckets,)], "n_buckets int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+        with phase("trgm build: meta write"):
+            local_df(
+                spark, [(n_buckets,)], "n_buckets int"
+            ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
 
     def _write_doclen():
         # doclen (per-doc distinct-trigram count) powers
         # similarity_topk's Jaccard denominator
-        sc.setJobDescription("trgm build: doclen write")
-        (
-            spark.read.parquet(f"{index_path}/postings")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_tri"))
-            .write.mode("overwrite")
-            .parquet(f"{index_path}/doclen")
-        )
-
-    stats_tmp = f"{index_path}/stats_tmp"
-
-    def _write_stats_tmp():
-        sc.setJobDescription("trgm build: stats write")
-        (
-            spark.read.parquet(f"{index_path}/postings")
-            .groupBy("trigram")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .withColumn(
-                "bucket", _term_bucket_col(F.col("trigram"), n_buckets)
+        with phase("trgm build: doclen write"):
+            (
+                spark.read.parquet(f"{index_path}/postings")
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).alias("n_tri"))
+                .write.mode("overwrite")
+                .parquet(f"{index_path}/doclen")
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stats_tmp)
-        )
 
-    run_jobs(_write_meta, _write_doclen, _write_stats_tmp)
-    fs = _HadoopFS(spark, index_path)
-    fs.delete(f"{index_path}/stats")
-    fs.rename(stats_tmp, f"{index_path}/stats")
-    sc.setJobDescription(None)
+    def _write_stats():
+        with phase("trgm build: stats write"):
+            (
+                spark.read.parquet(f"{index_path}/postings")
+                .groupBy("trigram")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .withColumn(
+                    "bucket", _term_bucket_col(F.col("trigram"), n_buckets)
+                )
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(f"{index_path}/stats")
+            )
+
+    run_jobs(_write_meta, _write_doclen, _write_stats)
+    mark_index_ready(spark, index_path)
 
 
 def append_trigram_index(
@@ -909,7 +887,6 @@ def append_trigram_index(
     # postings first: if the stats rewrite then fails, probes still
     # return correct results (stats only steer rarest-first selection,
     # stale df never loses a match)
-    sc = spark.sparkContext
     delta_post = tri.withColumn(
         "bucket", _term_bucket_col(F.col("trigram"), n_buckets)
     ).select("bucket", "trigram", "doc_id")
@@ -932,12 +909,12 @@ def append_trigram_index(
     from vectolite_spark.parallel import run_jobs
 
     def _append_postings():
-        sc.setJobDescription("trgm append: postings append")
-        (
-            delta_post.write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{index_path}/postings")
-        )
+        with phase("trgm append: postings append"):
+            (
+                delta_post.write.mode("append")
+                .partitionBy("bucket")
+                .parquet(f"{index_path}/postings")
+            )
 
     def _append_doclen():
         # delta doclen rows are for NEW doc ids only (enforced above),
@@ -945,28 +922,27 @@ def append_trigram_index(
         # countDistinct (== count today: the trigram UDF emits distinct
         # trigrams per doc) keeps |D| correct even if a future path
         # feeds duplicate (doc_id, trigram) rows through here
-        sc.setJobDescription("trgm append: doclen append")
-        (
-            tri.groupBy("doc_id")
-            .agg(F.countDistinct("trigram").alias("n_tri"))
-            .write.mode("append")
-            .parquet(f"{index_path}/doclen")
-        )
+        with phase("trgm append: doclen append"):
+            (
+                tri.groupBy("doc_id")
+                .agg(F.countDistinct("trigram").alias("n_tri"))
+                .write.mode("append")
+                .parquet(f"{index_path}/doclen")
+            )
 
     def _collect_stats():
         # overwrite-while-reading hazard: materialize the merged stats
         # on the driver first (vocabulary-bounded — at most |charset|^3
         # rows, tiny by construction), then write fresh after the join
-        sc.setJobDescription("trgm append: stats merge collect")
-        return merged.collect()
+        with phase("trgm append: stats merge collect"):
+            return merged.collect()
 
     _, _, rows = run_jobs(_append_postings, _append_doclen, _collect_stats)
     tri.unpersist()
-    sc.setJobDescription("trgm append: stats write")
-    local_df(
-        spark, rows, "trigram string, df bigint, bucket bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/stats")
-    sc.setJobDescription(None)
+    with phase("trgm append: stats write"):
+        local_df(
+            spark, rows, "trigram string, df bigint, bucket bigint"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/stats")
 
 
 def compact_trigram_index(spark, index_path: str) -> int:

@@ -16,11 +16,10 @@ Correctness notes:
   sequentially; only wall-clock submission order changes.
 - Job descriptions/groups are thread-local in Spark, so a thunk that
   sets its own description labels only its own jobs.
-- Crash-safety gates (the "this artifact is written LAST so its
-  _SUCCESS marks build-complete" pattern) must NOT be put in the pool
-  with the artifacts they gate: compute the gated artifact to a tmp
-  dir in the pool and rename it into place after every other future
-  completes, or keep it strictly after the join.
+- Build completion is one marker, not an artifact ordering: index
+  builders may put every artifact write in the pool and call
+  ``index_sync.mark_index_ready`` after the join; nothing reads an
+  artifact's own ``_SUCCESS`` as "the index is complete".
 """
 
 from __future__ import annotations

@@ -15,7 +15,9 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _SHIPPED_APPS: set[str] = set()
@@ -69,3 +71,25 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def phase(label: str):
+    """Label every Spark job the block submits from this thread with
+    ``label`` (``spark.job.description``, what the UI and the event log
+    show), and restore the previous label on exit — also when the block
+    raises, so no label outlives its block. Only the description is
+    touched: ``spark.jobGroup.id`` belongs to callers that group jobs
+    (a tracer, ``cancelJobGroup``). Job descriptions are thread-local,
+    so a ``run_jobs`` thunk labels only its own jobs."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        yield
+        return
+    key = "spark.job.description"
+    prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(key, prev)

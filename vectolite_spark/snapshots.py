@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from vectolite_spark.errors import VectoliteError
 from vectolite_spark.localframe import local_df
+from vectolite_spark.session import phase
 from vectolite_spark.store import _HadoopFS
 
 
@@ -200,11 +201,8 @@ class SnapshotStore:
         prev = self._read_manifest(version - 1) if version > 0 else {"dirs": []}
         schema = self._evolve_schema(self._schema_of(version - 1), df.schema)
         new_dir = self._new_data_dir(version, "append")
-        self.spark.sparkContext.setJobDescription(
-            f"snapshot append v{version}"
-        )
-        df.write.mode("error").parquet(new_dir)
-        self.spark.sparkContext.setJobDescription(None)
+        with phase(f"snapshot append v{version}"):
+            df.write.mode("error").parquet(new_dir)
         dirs = prev["dirs"]
         extra: dict = {"schema": schema.json()}
         carried = self._carried_zonemaps(prev, dirs)

@@ -432,6 +432,11 @@ class SparkVectolite:
         # never see index files mixed into the table
         return self.path + ".ann"
 
+    def _index_ready(self, path: str) -> bool:
+        from vectolite_spark.operators.index_sync import index_ready
+
+        return index_ready(self.spark, path)
+
     def _invalidate_ann(self) -> None:
         """Every mutation drops the ANN index (it indexes a table state
         that no longer exists); the next ``query(ann=True)`` rebuilds it
@@ -702,7 +707,7 @@ class SparkVectolite:
         are derived from: the persisted index's meta when one exists (a
         custom-plane ``build_ann_index`` stays authoritative), else the
         build defaults."""
-        if self._fs.exists(self._ann_path() + "/cells/_SUCCESS"):
+        if self._index_ready(self._ann_path()):
             from vectolite_spark.operators.ann import _srp_resolve
 
             return _srp_resolve(self.spark, self._ann_path(), None, None)
@@ -918,7 +923,7 @@ class SparkVectolite:
         )
 
     def _has_text_index(self) -> bool:
-        return self._fs.exists(f"{self._text_index_path()}/stats/_SUCCESS")
+        return self._index_ready(self._text_index_path())
 
     def build_text_index(self, n_buckets: int = 8) -> None:
         """Persist a trigram index over the stored text
@@ -1185,7 +1190,7 @@ class SparkVectolite:
                 )
             from vectolite_spark.operators.ann import srp_index_topk
 
-            if not self._fs.exists(self._ann_path() + "/cells/_SUCCESS"):
+            if not self._index_ready(self._ann_path()):
                 self.build_ann_index()
             cand = srp_index_topk(self.spark, self._ann_path(), qvec, k=top_k)
             docs = self.df().select("id", "text", "metadata")
@@ -1284,7 +1289,7 @@ class SparkVectolite:
         if ann:
             from vectolite_spark.operators.ann import srp_index_topk_batch
 
-            if not self._fs.exists(self._ann_path() + "/cells/_SUCCESS"):
+            if not self._index_ready(self._ann_path()):
                 self.build_ann_index()
             hits = srp_index_topk_batch(
                 self.spark, self._ann_path(), queries, k=top_k

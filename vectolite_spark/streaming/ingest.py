@@ -222,6 +222,7 @@ def stream_trigram_maintenance(
     pending files then stops). At 100 TB this is the index lifecycle: a
     continuous corpus never rebuilds, it appends per micro-batch and
     runs ``compact_trigram_index`` on a maintenance cadence."""
+    from vectolite_spark.operators.index_sync import index_ready
     from vectolite_spark.operators.retrieval import (
         append_trigram_index,
         build_trigram_index,
@@ -247,7 +248,7 @@ def stream_trigram_maintenance(
         marker = f"{index_path}/_batch_{batch_id}"
         if fs.exists(marker):
             return
-        if not fs.exists(f"{index_path}/stats/_SUCCESS"):
+        if not index_ready(batch_df.sparkSession, index_path):
             build_trigram_index(
                 batch_df,
                 index_path,
