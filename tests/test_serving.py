@@ -8,9 +8,13 @@ import threading
 
 from pyspark.sql import functions as F
 
+import pytest
+
+from vectolite_spark import store as store_mod
 from vectolite_spark.operators.topk import topk_ids
 from vectolite_spark.schema import load_table
 from vectolite_spark.serving import MicroBatcher
+from vectolite_spark.store import _BatchedSet, _ResidentSet
 
 SF = "/root/testdata/sf0.001"
 
@@ -82,22 +86,6 @@ def test_microbatcher_single_query_and_overflow(spark):
     with pytest.raises(RuntimeError):
         mb.query(qv)
     embs.unpersist()
-
-
-def test_store_make_batcher(spark, tmp_path):
-    from vectolite_spark.embed import stub_embedder
-    from vectolite_spark.store import SparkVectolite
-
-    store = SparkVectolite(
-        spark, str(tmp_path / "sdb"), embed_fn=stub_embedder(dim=8)
-    )
-    store.insert_many([f"doc number {i}" for i in range(20)])
-    mb = store.make_batcher(top_k=3)
-    qv = [float(x) for x in store.embed_fn(["doc number 7"])[0]]
-    got = mb.query(qv)
-    want = [(d["id"], d["score"]) for d in store.query("doc number 7", top_k=3)]
-    assert got == want
-    mb.close()
 
 
 def test_microbatcher_dispatch_failure_resets_latch(spark):
@@ -183,7 +171,7 @@ def test_store_batched_serving_facade_matches_exact_path(spark, tmp_path):
     want = {t: store.query(t, top_k=3) for t in texts}  # per-job path
 
     store.enable_batched_serving(top_k=5, max_wait_ms=40, resident_max_bytes=0)
-    batcher = store._ensure_serving_batcher()
+    batcher = store._ensure_working_set().exact
     cycles: list[int] = []
     orig = batcher._run_batch
 
@@ -242,10 +230,9 @@ def test_store_batched_serving_filtered_queries(spark, tmp_path):
     want_n5 = store.query(probes[0], top_k=2, metadata_filter={"n": 5})
     assert want_n5, "fixture: the n=5 doc must exist"
 
-    store.enable_batched_serving(
-        top_k=5, max_wait_ms=40, filter_overfetch=4, resident_max_bytes=0
-    )
-    batcher = store._ensure_serving_batcher()
+    store.enable_batched_serving(top_k=5, max_wait_ms=40, resident_max_bytes=0)
+    batcher = store._ensure_working_set().exact
+    assert batcher._k == 5 * store_mod._FILTER_OVERFETCH == 20
     cycles: list[int] = []
     orig = batcher._run_batch
 
@@ -348,15 +335,23 @@ def test_store_ann_queries_ride_the_facade(spark, tmp_path):
     want = {t: store.query(t, top_k=3, ann=True) for t in texts}
 
     store.enable_batched_serving(top_k=5, max_wait_ms=40, resident_max_bytes=0)
-    batcher = store._ensure_ann_serving_batcher()
+    ws = store._ensure_working_set()
+    batcher = ws.ann
     cycles: list[int] = []
+    exact_cycles: list[int] = []
     orig = batcher._run_batch
+    orig_exact = ws.exact._run_batch
 
     def counting(qvecs, ks=None):
         cycles.append(len(qvecs))
         return orig(qvecs, ks)
 
+    def counting_exact(qvecs, ks=None):
+        exact_cycles.append(len(qvecs))
+        return orig_exact(qvecs, ks)
+
     batcher._run_batch = counting
+    ws.exact._run_batch = counting_exact
 
     got: dict[int, list] = {}
     errs: list[Exception] = []
@@ -377,15 +372,15 @@ def test_store_ann_queries_ride_the_facade(spark, tmp_path):
     assert len(cycles) < 8, "concurrent ANN callers coalesced into fewer jobs"
     for i, res in got.items():
         assert res == want[texts[i % 5]]
-    # the exact-mode batcher was never built by ANN traffic
-    assert store._serving is None
+    # ANN traffic never dispatched through the exact-mode batcher
+    assert exact_cycles == []
     # ann+filter keeps its loud rejection (never silently batched)
     with pytest.raises(VectoliteError, match="metadata_filter"):
         store.query(texts[0], top_k=3, ann=True, metadata_filter={"k": 1})
     # a mutation tears the ANN batcher down; the next ANN query rebuilds
     # over fresh state and sees the new document
     store.insert("ann facade doc number 999", {"k": 999})
-    assert store._serving_ann is None
+    assert store._working_set is None
     fresh = store.query("ann facade doc number 999", top_k=3, ann=True)
     assert any(r["text"] == "ann facade doc number 999" for r in fresh)
     store.disable_batched_serving()
@@ -423,7 +418,7 @@ def test_resident_serving_matches_exact(spark, tmp_path):
             store.query(t, top_k=5, metadata_filter={"tenant": "t1"})
             == want_filtered[t]
         )
-    assert store._resident is not None and store._serving is None
+    assert isinstance(store._working_set, _ResidentSet)
     # selective filter with zero hits
     assert store.query(texts[0], top_k=5, metadata_filter={"tenant": "zz"}) == []
     # top_k above the batcher ceiling still ranks the full resident set
@@ -432,15 +427,14 @@ def test_resident_serving_matches_exact(spark, tmp_path):
 
     # mutation tears the resident set down; next query sees fresh rows
     store.insert("resident doc number 999", {"tenant": "t1"})
-    assert store._resident is None
+    assert store._working_set is None
     fresh = store.query("resident doc number 999", top_k=3)
     assert any(r["text"] == "resident doc number 999" for r in fresh)
 
     # over budget: the batcher serves, with the exact path's answers
     store.enable_batched_serving(resident_max_bytes=1)
     got = store.query(texts[0], top_k=5)
-    assert store._resident is None and store._resident_oversize
-    assert store._serving is not None
+    assert isinstance(store._working_set, _BatchedSet)
     store.disable_batched_serving()
     assert got == store.query(texts[0], top_k=5)
 
@@ -480,22 +474,42 @@ def test_serving_regime_choice(spark, tmp_path):
             },
         )
 
-    store.enable_batched_serving()  # default 256 MiB budget
-    assert answers() == (want, want_f)
-    assert store._resident is not None and store._serving is None
+    orig_df = store.df
+    reads = {"n": 0}
 
-    store.enable_batched_serving(resident_max_bytes=0)
-    assert answers() == (want, want_f)
-    assert store._resident is None and store._serving is not None
-    assert not store._resident_oversize, "a zero budget never measures"
+    def counting_df():
+        reads["n"] += 1
+        return orig_df()
 
-    store.enable_batched_serving(resident_max_bytes=64)  # far too small
-    assert answers() == (want, want_f)
-    assert store._resident is None and store._resident_oversize
-    assert store._serving is not None
-    # over-budget is sticky until a mutation, which re-measures
+    store.df = counting_df
+    try:
+        store.enable_batched_serving()  # default 256 MiB budget
+        assert answers() == (want, want_f)
+        assert isinstance(store._working_set, _ResidentSet)
+        assert reads["n"] == 2, "one build: measuring aggregate + collect"
+
+        reads["n"] = 0
+        store.enable_batched_serving(resident_max_bytes=0)
+        assert answers() == (want, want_f)
+        assert isinstance(store._working_set, _BatchedSet)
+        assert reads["n"] == 1, "a zero budget never measures"
+
+        reads["n"] = 0
+        store.enable_batched_serving(resident_max_bytes=64)  # far too small
+        assert answers() == (want, want_f)
+        batched = store._working_set
+        assert isinstance(batched, _BatchedSet)
+        assert reads["n"] == 2, "measured once, then cached"
+        # over-budget is sticky until a mutation, which re-measures
+        assert answers() == (want, want_f)
+        assert store._working_set is batched and reads["n"] == 2
+    finally:
+        store.df = orig_df
     store.insert("regime doc number 99", {"tenant": "t1"})
-    assert not store._resident_oversize
+    assert store._working_set is None
+    store.query(qs[0], top_k=4)
+    assert isinstance(store._working_set, _BatchedSet)
+    assert store._working_set is not batched
     store.disable_batched_serving()
 
 
@@ -520,7 +534,8 @@ def test_resident_ann_matches_per_job_path(spark, tmp_path):
     assert not store._fs.exists(store._ann_path())
     store.enable_batched_serving()
     got = {q: store.query(q, top_k=4, ann=True) for q in qs}
-    assert store._resident is not None and store._resident.planes == (16, 6)
+    assert isinstance(store._working_set, _ResidentSet)
+    assert store._working_set.planes == (16, 6)
     store.disable_batched_serving()
     want = {q: store.query(q, top_k=4, ann=True) for q in qs}  # builds index
     assert got == want
@@ -531,7 +546,7 @@ def test_resident_ann_matches_per_job_path(spark, tmp_path):
     want = {q: store.query(q, top_k=4, ann=True) for q in qs}
     store.enable_batched_serving()
     got = {q: store.query(q, top_k=4, ann=True) for q in qs}
-    assert store._resident.planes == (4, 5)
+    assert store._working_set.planes == (4, 5)
     assert got == want
     store.disable_batched_serving()
 
@@ -551,24 +566,33 @@ def test_ann_rebuild_recomputes_resident_planes(spark, tmp_path):
     qs = [f"stale plane doc {i}" for i in range(0, 60, 6)] + ["other probe"]
     store.enable_batched_serving()
     stale = {q: store.query(q, top_k=5, ann=True) for q in qs}
-    assert store._resident.planes == (16, 6)
+    assert store._working_set.planes == (16, 6)
 
     store.build_ann_index(n_tables=8, n_planes=4)
-    assert store._resident is None, "rebuild drops the resident bucket codes"
+    assert store._working_set is None, "rebuild drops the resident bucket codes"
     got = {q: store.query(q, top_k=5, ann=True) for q in qs}
-    assert store._resident.planes == (8, 4)
+    assert store._working_set.planes == (8, 4)
     store.disable_batched_serving()
     want = {q: store.query(q, top_k=5, ann=True) for q in qs}
     assert got == want
     assert stale != want, "fixture: the two plane sets must answer differently"
 
 
-def test_resident_clients_never_see_deleted_id_after_delete(spark, tmp_path):
-    """4 concurrent resident clients (exact and ANN) run while a
+@pytest.mark.parametrize(
+    "serving_kw,regime",
+    [({}, _ResidentSet), ({"resident_max_bytes": 0}, _BatchedSet)],
+    ids=["resident", "micro_batched"],
+)
+def test_resident_clients_never_see_deleted_id_after_delete(
+    spark, tmp_path, serving_kw, regime
+):
+    """4 concurrent serving clients (exact and ANN) run while a
     delete_document lands: no answer to a query that started after the
     delete returned may contain the deleted id, and the clients keep
-    getting answers throughout. Versioned store: its commits are atomic
-    for concurrent readers (the flat backend's rename swap is not)."""
+    getting answers throughout. Runs in both regimes (default budget:
+    resident; zero budget: micro-batched). Versioned store: its commits
+    are atomic for concurrent readers (the flat backend's rename swap
+    is not)."""
     import sys
     import time
 
@@ -583,8 +607,9 @@ def test_resident_clients_never_see_deleted_id_after_delete(spark, tmp_path):
     ids = store.insert_many(texts)
     target_text = texts[7]
     target = ids[7]
-    store.enable_batched_serving()
+    store.enable_batched_serving(**serving_kw)
     assert store.query(target_text, top_k=3)[0]["id"] == target
+    assert isinstance(store._working_set, regime)
 
     deleted_at = [0.0]
     stop = threading.Event()
@@ -637,8 +662,8 @@ def test_ann_rebuild_invalidates_ann_batcher(spark, tmp_path):
     it resolved (n_tables, n_planes) and its precomputed bucket column
     from the PREVIOUS index state, so a custom-plane rebuild while
     batched serving is live would silently diverge from the per-job
-    query(ann=True) path. The exact batcher survives (the data didn't
-    change); the micro-batched regime is forced with a zero budget."""
+    query(ann=True) path. The rebuild empties the whole serving slot;
+    the micro-batched regime is forced with a zero budget."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -648,25 +673,24 @@ def test_ann_rebuild_invalidates_ann_batcher(spark, tmp_path):
     store.insert_many([f"rebuild doc number {i}" for i in range(30)])
     store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
     q = "rebuild doc number 3"
-    store.query(q, top_k=3)             # builds the exact batcher
-    store.query(q, top_k=3, ann=True)   # builds the ANN batcher (default planes)
-    exact_batcher = store._serving
-    assert store._serving_ann is not None
+    store.query(q, top_k=3)             # builds both batchers
+    store.query(q, top_k=3, ann=True)   # ANN batcher (default planes)
+    assert store._working_set.ann is not None
     store.build_ann_index(n_tables=4, n_planes=3)  # custom planes
-    assert store._serving_ann is None, "ANN batcher dropped on index rebuild"
-    assert store._serving is exact_batcher, "exact batcher untouched"
+    assert store._working_set is None, "ANN batcher dropped on index rebuild"
     # the rebuilt facade mirrors the per-job path under the NEW planes
     got = store.query(q, top_k=3, ann=True)
+    assert store._working_set.ann is not None, "served by the rebuilt facade"
     store.disable_batched_serving()
     want = store.query(q, top_k=3, ann=True)
     assert got == want
 
 
-def test_ann_facade_size_gate(spark, tmp_path):
+def test_ann_facade_size_gate(spark, tmp_path, monkeypatch):
     """ADVICE r9: the ANN facade's in-mapper probe scans the working
-    set per dispatch cycle — corpora above ann_facade_max_rows must
+    set per dispatch cycle — corpora above _ANN_FACADE_MAX_ROWS must
     keep the per-job persisted-index path instead of regressing to a
-    per-cycle full scan. The gate is sticky until a mutation."""
+    per-cycle full scan. The gate is sticky until the next teardown."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -674,19 +698,25 @@ def test_ann_facade_size_gate(spark, tmp_path):
         spark, str(tmp_path / "gatedb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"gate doc number {i}" for i in range(20)])
-    store.enable_batched_serving(top_k=5, max_wait_ms=5, ann_facade_max_rows=10,
-                                 resident_max_bytes=0)
+    monkeypatch.setattr(store_mod, "_ANN_FACADE_MAX_ROWS", 10)
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
     q = "gate doc number 3"
-    res = store.query(q, top_k=3, ann=True)  # falls to the per-job path
-    assert store._serving_ann is None and store._serving_ann_oversize
+    # falls to the per-job path, whose build-if-absent index build
+    # empties the serving slot
+    res = store.query(q, top_k=3, ann=True)
+    assert res == store.query(q, top_k=3, ann=True)  # rebuilt, still gated
+    gated = store._working_set
+    assert isinstance(gated, _BatchedSet) and gated.ann is None
+    assert gated.exact is not None, "exact queries still batch"
+    assert res == store.query(q, top_k=3, ann=True)
+    assert store._working_set is gated, "the gate is sticky"
     store.disable_batched_serving()
     assert res == store.query(q, top_k=3, ann=True)
     # under the cap the batcher builds (and carries the bucket column)
-    store.enable_batched_serving(top_k=5, max_wait_ms=5, ann_facade_max_rows=50,
-                                 resident_max_bytes=0)
-    store.query(q, top_k=3, ann=True)
-    assert store._serving_ann is not None
-    assert not store._serving_ann_oversize
+    monkeypatch.setattr(store_mod, "_ANN_FACADE_MAX_ROWS", 50)
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
+    assert res == store.query(q, top_k=3, ann=True)
+    assert store._working_set.ann is not None
     store.disable_batched_serving()
 
 
@@ -715,8 +745,7 @@ def test_resident_guard_measures_payload(spark, tmp_path):
     store._dim_cache = None  # cold dim cache must not skip the guard
     store.enable_batched_serving(resident_max_bytes=budget)
     assert store.query("resident payload", top_k=3) == want
-    assert store._resident is None and store._resident_oversize
-    assert store._serving is not None
+    assert isinstance(store._working_set, _BatchedSet)
     store.disable_batched_serving()
     # same row count, compact payload: passes the same budget and serves
     store2 = SparkVectolite(
@@ -726,7 +755,7 @@ def test_resident_guard_measures_payload(spark, tmp_path):
     want = store2.query("compact doc number 3", top_k=3)
     store2.enable_batched_serving(resident_max_bytes=budget)
     assert store2.query("compact doc number 3", top_k=3) == want
-    assert store2._resident is not None
+    assert isinstance(store2._working_set, _ResidentSet)
     store2.disable_batched_serving()
 
 
@@ -757,7 +786,7 @@ def test_resident_guard_measures_char_width(spark, tmp_path):
     want = cjk.query("数据", top_k=3)
     cjk.enable_batched_serving(resident_max_bytes=budget)
     assert cjk.query("数据", top_k=3) == want
-    assert cjk._resident is None and cjk._resident_oversize
+    assert isinstance(cjk._working_set, _BatchedSet)
     cjk.disable_batched_serving()
 
     latin = SparkVectolite(
@@ -767,17 +796,25 @@ def test_resident_guard_measures_char_width(spark, tmp_path):
     want = latin.query("da", top_k=3)
     latin.enable_batched_serving(resident_max_bytes=budget)
     assert latin.query("da", top_k=3) == want
-    assert latin._resident is not None  # served resident, not fallback
+    assert isinstance(latin._working_set, _ResidentSet)  # not fallback
     latin.disable_batched_serving()
 
 
-def test_resident_collect_generation_fence(spark, tmp_path):
-    """ADVICE r9: the resident working set is collected OUTSIDE the
-    serving lock — a mutation landing mid-collect must prevent the
-    stale snapshot from being published. The fence is the serving
-    generation counter: simulate the race by invalidating between the
-    measuring aggregate and the collect, and assert the build returns
-    None (caller falls back for this query) without publishing."""
+@pytest.mark.parametrize(
+    "serving_kw,regime",
+    [({}, _ResidentSet), ({"resident_max_bytes": 0}, _BatchedSet)],
+    ids=["resident", "micro_batched"],
+)
+def test_resident_collect_generation_fence(
+    spark, tmp_path, serving_kw, regime, monkeypatch
+):
+    """ADVICE r9: the working set is collected (or cached) OUTSIDE the
+    serving lock — a mutation landing mid-build must prevent the stale
+    snapshot from being published. The fence is the serving generation
+    counter: simulate the race by invalidating as the build reads the
+    serving frame (after the measuring aggregate, when there is one),
+    and assert the build returns None (caller falls back for this
+    query) without publishing, and releases what it built."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -785,7 +822,8 @@ def test_resident_collect_generation_fence(spark, tmp_path):
         spark, str(tmp_path / "fencedb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"fence doc number {i}" for i in range(10)])
-    store.enable_batched_serving()
+    store.enable_batched_serving(**serving_kw)
+    frame_read = 2 if regime is _ResidentSet else 1  # the size agg reads first
 
     orig_df = store.df
     fired = {"n": 0}
@@ -793,19 +831,28 @@ def test_resident_collect_generation_fence(spark, tmp_path):
     def racing_df():
         df = orig_df()
         fired["n"] += 1
-        if fired["n"] == 2:  # the collect's select, after the size agg
+        if fired["n"] == frame_read:
             store._invalidate_serving()  # concurrent mutation lands here
         return df
 
+    closed: list[object] = []
+    orig_close = regime.close
+
+    def recording_close(ws):
+        closed.append(ws)
+        orig_close(ws)
+
+    monkeypatch.setattr(regime, "close", recording_close)
     store.df = racing_df
     try:
-        assert store._ensure_resident() is None
-        assert store._resident is None, "stale snapshot must not publish"
+        assert store._ensure_working_set() is None
+        assert store._working_set is None, "stale snapshot must not publish"
+        assert len(closed) == 1 and isinstance(closed[0], regime)
     finally:
         store.df = orig_df
-    # next query rebuilds cleanly over fresh state and serves resident
+    # next query rebuilds cleanly over fresh state and serves from the set
     want = store.query("fence doc number 3", top_k=3)
-    assert store._resident is not None
+    assert isinstance(store._working_set, regime)
     assert store.query("fence doc number 3", top_k=3) == want
     store.disable_batched_serving()
 
@@ -905,9 +952,10 @@ def test_resident_build_single_flight(spark, tmp_path):
 
 
 def test_ann_batcher_shares_exact_cache(spark, tmp_path):
-    """r10 review: when the exact facade's cached working set exists
-    (same plane parameters), the ANN batcher must ride it instead of
-    persisting a second full copy — and still match the per-job path."""
+    """r10 review: the ANN batcher rides the exact facade's cached
+    working set (same plane parameters) instead of persisting a second
+    full copy — one cached partition for both modes — and still matches
+    the per-job path."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -915,14 +963,51 @@ def test_ann_batcher_shares_exact_cache(spark, tmp_path):
         spark, str(tmp_path / "sharedb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"share doc number {i}" for i in range(30)])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    n_cached = persisted.size()
     store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
     q = "share doc number 3"
-    store.query(q, top_k=3)  # builds the exact batcher + shared base
-    assert store._serving_base is not None
-    assert store._serving_base_planes == (16, 6)
-    assert "srp_buckets" in store._serving_base.columns
-    got = store.query(q, top_k=3, ann=True)  # builds the ANN batcher
-    assert store._serving_ann is not None
-    assert store._serving_ann_payload is None, "no second cached copy"
+    store.query(q, top_k=3)  # builds the one working set
+    ws = store._working_set
+    assert isinstance(ws, _BatchedSet) and ws.base.is_cached
+    assert "srp_buckets" in ws.base.columns
+    assert ws.ann is not None
+    got = store.query(q, top_k=3, ann=True)
+    assert store._working_set is ws, "no second build"
+    assert (
+        spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached + 1
+    ), "no second cached copy"
     store.disable_batched_serving()
     assert got == store.query(q, top_k=3, ann=True)
+
+
+def test_micro_batched_ann_after_exact_reads_no_table(spark, tmp_path):
+    """In the micro-batched regime one build serves both modes: the
+    first ``ann=True`` query after the first exact query reads the
+    table (``df()``) zero times — no row-count job, no second cache."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "onebuild"), embed_fn=stub_embedder(dim=8)
+    )
+    store.insert_many([f"one build doc {i}" for i in range(30)])
+    q = "one build doc 4"
+    want = store.query(q, top_k=3, ann=True)  # per-job; builds the index
+    store.enable_batched_serving(top_k=5, max_wait_ms=5, resident_max_bytes=0)
+    store.query(q, top_k=3)  # first exact query: the one build
+    orig_df = store.df
+    reads = {"n": 0}
+
+    def counting_df():
+        reads["n"] += 1
+        return orig_df()
+
+    store.df = counting_df
+    try:
+        got = store.query(q, top_k=3, ann=True)
+    finally:
+        store.df = orig_df
+    assert reads["n"] == 0, f"ANN query read the table {reads['n']} times"
+    assert got == want
+    store.disable_batched_serving()

@@ -527,3 +527,79 @@ def test_versioned_mutations_invalidate_text_index(spark, tmp_path):
     s.rollback(1)  # back to pre-upsert state
     assert not s._has_text_index()
     assert s.grep("merge join") == []  # original text restored, no stale hit
+
+
+# NaN sorts first in Spark's desc order and last in numpy's, so a
+# non-finite vector made the per-job and serving paths disagree; every
+# entry point rejects one instead, after the float32 cast (1e39
+# overflows to inf there)
+NON_FINITE = pytest.mark.parametrize(
+    "bad", [float("nan"), float("inf"), float("-inf"), 1e39],
+    ids=["nan", "inf", "-inf", "1e39"],
+)
+
+
+@pytest.fixture()
+def poison_store(spark, tmp_path):
+    """4-dim flat store whose embedder returns a caller-set vector for
+    the text 'poison' (``store.poison``) and stub vectors otherwise."""
+    stub = stub_embedder(dim=4)
+
+    def embed(texts):
+        return [
+            list(store.poison) if t == "poison" else v
+            for t, v in zip(texts, stub(texts))
+        ]
+
+    store = SparkVectolite(spark, str(tmp_path / "nf"), embed_fn=embed)
+    store.insert_many([f"finite doc {i}" for i in range(4)])
+    return store
+
+
+@NON_FINITE
+def test_insert_rejects_non_finite_embedding(poison_store, bad):
+    poison_store.poison = [0.5, bad, 0.0, 0.0]
+    with pytest.raises(VectoliteError, match="non-finite"):
+        poison_store.insert("poison")
+    with pytest.raises(VectoliteError, match="non-finite"):
+        poison_store.insert_many(
+            ["explicit"], embeddings=[[bad, 0.0, 0.0, 1.0]]
+        )
+    assert poison_store.count_documents() == 4
+
+
+@NON_FINITE
+def test_append_dataframe_rejects_non_finite_embedding(poison_store, spark, bad):
+    rows = spark.createDataFrame(
+        [("ok text", "{}", [1.0, 0.0, 0.0, 0.0]), ("bad text", "{}", [0.5, 0.5, bad, 0.0])],
+        "text string, metadata string, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="non-finite"):
+        poison_store.append_dataframe(rows)
+    assert poison_store.count_documents() == 4  # the failed job committed nothing
+
+
+@NON_FINITE
+def test_upsert_rejects_non_finite_embedding(poison_store, spark, bad):
+    updates = spark.createDataFrame(
+        [(1, "replaced", None, [0.0, 0.0, 0.0, bad])],
+        "id long, text string, metadata string, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="non-finite"):
+        poison_store.upsert(updates)
+    assert poison_store.get_document(1)["text"] == "finite doc 0"
+    assert poison_store.count_documents() == 4
+
+
+@NON_FINITE
+def test_query_rejects_non_finite_query_vector(poison_store, bad):
+    poison_store.poison = [bad, 1.0, 0.0, 0.0]
+    with pytest.raises(VectoliteError, match="non-finite"):
+        poison_store.query("poison", top_k=3)
+    with pytest.raises(VectoliteError, match="non-finite"):
+        poison_store.query_many(["finite doc 1", "poison"], top_k=3)
+    # serving enabled: rejected before either regime sees it
+    poison_store.enable_batched_serving()
+    with pytest.raises(VectoliteError, match="non-finite"):
+        poison_store.query("poison", top_k=3, ann=True)
+    poison_store.disable_batched_serving()

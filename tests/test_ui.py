@@ -175,7 +175,7 @@ def test_concurrent_ui_searches_coalesce_through_batcher(ui):
     (VERDICT r6 item 2)."""
     base, store = ui
     store.enable_batched_serving(resident_max_bytes=0)
-    batcher = store._ensure_serving_batcher()
+    batcher = store._ensure_working_set().exact
     cycles: list[int] = []
     orig = batcher._run_batch
 

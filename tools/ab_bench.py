@@ -14,8 +14,8 @@ Orchestrator (run from the current repo):
         --keys bm25_index_build,ivf_index_build,ann_pq_topk \
         --reps 3 --out BENCH_r11_ab_control.json
 
-creates a detached worktree of ``--old`` under /tmp, then alternately
-spawns one measurement subprocess per side per rep (old, new, old,
+extracts ``--old`` (``git archive`` of the resolved commit) into the
+temp dir (``$TMPDIR``, default /tmp), then alternately spawns one measurement subprocess per side per rep (old, new, old,
 new, ...), each a fresh JVM/SparkSession so no page-cache or JIT state
 leaks across sides. Measurement mode (``--measure``) runs inside one
 side's code via PYTHONPATH and prints a single JSON line.
@@ -28,7 +28,8 @@ Supported keys mirror bench.py's semantics for the same names:
   ``QUERIES[name](spark, sf).count()`` min-of-``--inner`` (bench.py's
   registry loop shape — caches warmed by run 1 persist into run 2,
   exactly as in the sweep). Prebuilt-index keys get their index
-  ensured (untimed) first, as bench.py's build phase does.
+  ensured (untimed) first, as bench.py's build phase does;
+- serving keys (``*_qps``): bench.py's serving meters, median q/s.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -56,9 +58,16 @@ BUILD_KEYS = {
 }
 
 # serving QPS keys: measured with bench.py's meter shapes (same thread
-# counts, same warm pass, AQE off, 8-partition cached working set);
+# counts, same warm pass, AQE off, 8-partition cached working set; the
+# facade keys serve a 512-doc store in the micro-batched regime);
 # median over --inner reps, reported in q/s (higher = better)
-SERVING_KEYS = ("serving_concurrent_qps", "serving_microbatch_qps")
+SERVING_KEYS = (
+    "serving_concurrent_qps",
+    "serving_microbatch_qps",
+    "serving_facade_qps",
+    "serving_facade_filtered_qps",
+    "serving_facade_ann_qps",
+)
 
 # query keys that probe a prebuilt index: ensure it exists (untimed)
 # before timing, matching bench.py's build-then-sweep ordering
@@ -72,9 +81,13 @@ PREBUILT_DEPS = {
 
 def _measure_serving(spark, sf_dir: str, keys: list[str], inner: int) -> dict:
     """bench.py's serving meters, verbatim shapes: job-per-query under 16
-    parallel clients (concurrent) and the MicroBatcher dispatch loop
-    under 32 clients (microbatch). One unrecorded warm pass, then the
-    requested keys interleaved ``inner`` times; per-key MEDIAN q/s."""
+    parallel clients (concurrent), the MicroBatcher dispatch loop under
+    32 clients (microbatch), and the store facade's plain, tenant-
+    filtered and ``ann=True`` queries under 64 clients x 6 over a
+    512-doc store served micro-batched (facade keys). One unrecorded
+    warm pass, then the requested keys interleaved ``inner`` times;
+    per-key MEDIAN q/s."""
+    import shutil
     import threading
 
     from pyspark.sql import functions as F
@@ -120,6 +133,45 @@ def _measure_serving(spark, sf_dir: str, keys: list[str], inner: int) -> dict:
             32, 8, lambda tid, i: mb.query(qvecs[(tid + i) % len(qvecs)])
         ),
     }
+    fstore, facade_dir = None, None
+    if any(n.startswith("serving_facade_") for n in keys):
+        from vectolite_spark.embed import stub_embedder
+        from vectolite_spark.store import SparkVectolite
+
+        facade_dir = tempfile.mkdtemp(prefix="ab_bench_facade_")
+        fstore = SparkVectolite(
+            spark, f"{facade_dir}/db", embed_fn=stub_embedder(dim=64)
+        )
+        ftexts = [
+            r["text"]
+            for r in load_table(spark, sf_dir, "documents")
+            .select("text")
+            .limit(512)
+            .collect()
+        ]
+        fstore.insert_many(
+            ftexts, [{"tenant": f"t{i % 3}"} for i in range(len(ftexts))]
+        )
+        fstore.enable_batched_serving(
+            top_k=10, max_batch=128, max_wait_ms=8, resident_max_bytes=0
+        )
+        fq = ftexts[:12]
+
+        def ask(tid, i, **kw):
+            return fstore.query(fq[(tid + i) % len(fq)], top_k=5, **kw)
+
+        meters.update({
+            "serving_facade_qps": lambda: _threaded(64, 6, ask),
+            "serving_facade_filtered_qps": lambda: _threaded(
+                64, 6,
+                lambda tid, i: ask(
+                    tid, i, metadata_filter={"tenant": f"t{tid % 3}"}
+                ),
+            ),
+            "serving_facade_ann_qps": lambda: _threaded(
+                64, 6, lambda tid, i: ask(tid, i, ann=True)
+            ),
+        })
     for name in keys:
         meters[name]()  # unrecorded warm pass
     samples: dict[str, list[float]] = {n: [] for n in keys}
@@ -130,6 +182,11 @@ def _measure_serving(spark, sf_dir: str, keys: list[str], inner: int) -> dict:
         mb.close()
     except AttributeError:  # older refs: no close()
         pass
+    if fstore is not None:
+        # closes the batchers and unpersists the working set before its
+        # directory goes
+        fstore.disable_batched_serving()
+        shutil.rmtree(facade_dir, ignore_errors=True)
     embs.unpersist()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return {
@@ -203,13 +260,17 @@ def measure(keys: list[str], inner: int) -> dict[str, float]:
 
 
 def orchestrate(args) -> int:
-    old_wt = os.path.join("/tmp", f"ab_old_{args.old.replace('/', '_')}")
+    sha = subprocess.run(
+        ["git", "rev-parse", "--verify", f"{args.old}^{{commit}}"],
+        cwd=REPO, check=True, capture_output=True, text=True,
+    ).stdout.strip()
+    old_wt = os.path.join(tempfile.gettempdir(), f"ab_old_{sha[:12]}")
     if not os.path.isdir(old_wt):
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", old_wt, args.old],
-            cwd=REPO,
-            check=True,
-        )
+        os.makedirs(old_wt)
+        tree = subprocess.run(
+            ["git", "archive", sha], cwd=REPO, check=True, capture_output=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", old_wt], input=tree, check=True)
     sides = [("old", old_wt), ("new", REPO)]
     reps: list[dict] = []
     keys = args.keys.split(",")
@@ -245,7 +306,7 @@ def orchestrate(args) -> int:
     artifact = {
         "what": (
             "Same-hour interleaved A/B (SCALING 8d protocol, tools/"
-            f"ab_bench.py): old code (worktree @ {args.old}) vs current "
+            f"ab_bench.py): old code ({args.old} = {sha[:12]}) vs current "
             f"repo, {args.reps} alternating reps per side, fresh "
             "SparkSession per rep, min-of-"
             f"{args.inner} inner runs per key, "

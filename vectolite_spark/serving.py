@@ -5,14 +5,18 @@ ANY data size), and the DAGScheduler admits jobs through one event
 loop — so per-query jobs cap out near ~30 queries/s no matter how many
 client threads submit (measured, round 6). The store's online serving
 (``SparkVectolite.enable_batched_serving``) therefore never pays one
-job per query. It picks one of two regimes at each working-set build,
-by a measured driver-memory budget (``resident_max_bytes``, default
-256 MiB):
+job per query. It holds ONE working set in one slot, built by one
+single-flight build over one frame (vec_id, embedding, text, metadata,
+SRP bucket codes) and torn down by one invalidation. The build's
+measured driver-memory budget (``resident_max_bytes``, default 256
+MiB) picks the regime:
 
-- **Resident** (the working set fits the budget): the corpus is
+- **Resident** (the working set fits the budget): the frame is
   collected once onto the driver and every query — exact, filtered or
   SRP-approximate — is answered in numpy with no Spark job at all.
-- **Micro-batched** (over budget): this module's ``MicroBatcher``. The
+- **Micro-batched** (over budget, or a zero budget): the frame is
+  cached as one partition and two of this module's ``MicroBatcher``s
+  share it, one ranking exactly and one running the SRP probe. The
   batch path is two orders of magnitude cheaper per query than a job
   each (one ``topk_batch`` job scores Q queries with a single
   (N_p x d) @ (d x Q) matmul per partition; ~3-4 ms/query at Q=100).
@@ -25,7 +29,7 @@ by a measured driver-memory budget (``resident_max_bytes``, default
 Both regimes share the ranking contract of the per-job paths, and the
 SRP probe kernel (``_pandas_udfs.make_srp_serving_mapper``) runs
 unchanged in either: over the resident frame on the driver, or inside
-the batcher's one-task job.
+the ANN batcher's one-task job.
 
 Latency/throughput contract of the batcher: a lone query pays at most
 ``max_wait_ms`` extra latency; under load the batch fills to
@@ -57,11 +61,12 @@ class MicroBatcher:
         k: int = 10,
         max_batch: int = 64,
         max_wait_ms: float = 8.0,
-        id_col: str = "vec_id",
         payload_cols: Sequence[str] = (),
         kernel=None,
     ):
-        """``payload_cols`` (optional): extra columns of ``embeddings``
+        """``embeddings`` carries ``vec_id`` and ``embedding`` columns.
+
+        ``payload_cols`` (optional): extra columns of ``embeddings``
         (e.g. text, metadata) carried onto the top-k rows INSIDE the
         batch job's mapper — callers that need result attributes (the
         store facade returns text+metadata) still pay exactly one Spark
@@ -83,7 +88,6 @@ class MicroBatcher:
         self._k = int(k)
         self._max_batch = int(max_batch)
         self._max_wait = max_wait_ms / 1000.0
-        self._id_col = id_col
         self._payload_cols = list(payload_cols)
         self._lock = threading.Condition()
         self._pending: list[tuple[list[float], threading.Event, dict]] = []
@@ -190,7 +194,6 @@ class MicroBatcher:
                 list(range(len(qvecs))),
                 qvecs,
                 max(ks),
-                id_col=self._id_col,
                 payload_cols=self._payload_cols,
             )
         if len(set(ks)) > 1:

@@ -40,6 +40,14 @@ from vectolite_spark.schema import DOCUMENT_STORE_SCHEMA
 
 EmbedFn = Callable[[list[str]], list[list[float]]]
 
+# result attributes every serving working set carries beside the vectors
+_PAYLOAD = ("text", "metadata")
+# micro-batched serving: a filtered query post-filters top_k * this many
+# globally ranked rows, and the ANN batcher serves corpora up to this
+# many rows (above it the per-job persisted-index probe prunes better)
+_FILTER_OVERFETCH = 4
+_ANN_FACADE_MAX_ROWS = 200_000
+
 
 class _HadoopFS:
     """Thin wrapper over org.apache.hadoop.fs.FileSystem so the store's
@@ -103,19 +111,6 @@ class _HadoopFS:
             inp.close()
 
 
-def _release(batchers, caches) -> None:
-    """Close torn-down serving batchers and unpersist their caches."""
-    for b in batchers:
-        if b is not None:
-            b.close()
-    for c in caches:
-        if c is not None:
-            try:
-                c.unpersist(blocking=False)
-            except Exception:
-                pass  # session teardown races are benign here
-
-
 def _hit(vid, score, text, meta_json) -> dict:
     """One ``query()``-shaped result row, metadata JSON decoded."""
     return {
@@ -124,6 +119,22 @@ def _hit(vid, score, text, meta_json) -> dict:
         "text": text,
         "metadata": json.loads(meta_json or "{}"),
     }
+
+
+def _require_finite(vecs, what: str) -> None:
+    """Reject NaN/±inf vector elements loudly, checked AFTER the float32
+    cast the store applies (1e39 overflows to inf there): Spark sorts
+    a NaN score first in ``desc`` while numpy ranks it last, so a
+    non-finite vector would make the per-job and serving paths answer
+    differently."""
+    import numpy as np
+
+    with np.errstate(over="ignore"):
+        finite = np.isfinite(np.asarray(vecs, dtype=np.float32)).all()
+    if not finite:
+        raise VectoliteError(
+            f"{what} contains a non-finite value (NaN or inf as float32)"
+        )
 
 
 def _parse_meta(meta_json: str | None) -> dict | None:
@@ -224,7 +235,7 @@ class _ResidentSet:
             hits = next(
                 make_srp_serving_mapper(
                     [0], [qvec], top_k, n_tables=nt, n_planes=npl,
-                    payload_cols=("text", "metadata"),
+                    payload_cols=_PAYLOAD,
                     bucket_col="srp_buckets",
                 )(iter([self.frame]))
             )
@@ -251,6 +262,102 @@ class _ResidentSet:
             _hit(ids[o], sc[o], self.texts[i], self.metas[i])
             for o, i in zip(top, src)
         ]
+
+    def close(self) -> None:
+        """Nothing to release: the set lives in driver memory only."""
+
+
+class _BatchedSet:
+    """The micro-batched serving regime's working set: the serving
+    frame cached as ONE partition and two ``serving.MicroBatcher``s
+    over it. One partition lets the batch mapper's rank mode emit the
+    final ranking in-mapper — no merge shuffle, one task per dispatch
+    cycle (measured 314 -> ~90 ms/cycle vs 8 partitions + a
+    32-partition window merge); a corpus too big for one partition
+    belongs on the LSH-index path (query(ann=True) / topk_batch_lsh),
+    not a bigger cache.
+
+    ``exact`` ranks ``top_k * _FILTER_OVERFETCH`` rows so filtered
+    queries can post-filter its prefix (a deeper heap is noise next to
+    the job floor; the exact kernel column-prunes the bucket codes,
+    16 longs/row in the one shared cache). ``ann`` runs the WHOLE SRP probe for a
+    cycle's queries in one task (``make_srp_serving_mapper`` over the
+    precomputed bucket codes; in-mapper bucketing reproduces the
+    persisted index's md5-Rademacher blocks exactly, VERDICT r8 item
+    4). It scans the whole partition per cycle, the right trade only
+    for small/medium corpora (ADVICE r9): above ``_ANN_FACADE_MAX_ROWS``
+    rows it is None and ANN queries keep the per-job persisted-index
+    path, whose block-directory pruning is the big-corpus answer."""
+
+    def __init__(self, base, planes: tuple[int, int], n_rows: int, cfg: dict):
+        from vectolite_spark.serving import MicroBatcher
+
+        self.base = base
+        self.top_k = cfg["top_k"]
+        self.k_fetch = self.top_k * _FILTER_OVERFETCH
+        opts = dict(
+            max_batch=cfg["max_batch"],
+            max_wait_ms=cfg["max_wait_ms"],
+            payload_cols=_PAYLOAD,
+        )
+        self.exact = MicroBatcher(base, k=self.k_fetch, **opts)
+        self.ann = None
+        if n_rows <= _ANN_FACADE_MAX_ROWS:
+            nt, npl = planes
+
+            def kernel(qids, qvecs, kmax):
+                from vectolite_spark._pandas_udfs import make_srp_serving_mapper
+
+                return base.mapInPandas(
+                    make_srp_serving_mapper(
+                        qids, qvecs, kmax,
+                        n_tables=nt, n_planes=npl,
+                        payload_cols=_PAYLOAD,
+                        bucket_col="srp_buckets",
+                    ),
+                    schema=(
+                        "query_id long, vec_id long, score double, "
+                        "rn long, text string, metadata string"
+                    ),
+                )
+
+            self.ann = MicroBatcher(None, k=self.top_k, kernel=kernel, **opts)
+
+    def query(
+        self, qvec, top_k: int, fcmp: dict | None, ann: bool
+    ) -> list[dict] | None:
+        """The batchers' answer, or None for the per-job path: ``top_k``
+        above this mode's ``top_k``, ``ann`` over the row gate, or a
+        filtered prefix too selective to prove complete."""
+        if top_k > self.top_k or (ann and self.ann is None):
+            return None
+        if ann:
+            return [_hit(*r) for r in self.ann.query(qvec, k=top_k)]
+        # plain queries fetch only their slice; filtered ones fetch the
+        # full over-provisioned depth for the completeness proof
+        rows = self.exact.query(qvec, k=top_k if fcmp is None else None)
+        if fcmp is not None:
+            n_global = len(rows)
+            rows = [r for r in rows if _match_filter(_parse_meta(r[3]), fcmp)]
+            # completeness proof: every global row outside the fetched
+            # prefix scores below every row inside it, so a filtered
+            # prefix holding top_k hits IS the filtered top-k; a prefix
+            # shorter than k_fetch ranked the whole corpus, so whatever
+            # survived the filter is all there is
+            if len(rows) < top_k and n_global >= self.k_fetch:
+                return None  # too selective for the prefix
+        return [_hit(*r) for r in rows[:top_k]]
+
+    def close(self) -> None:
+        """Close both batchers (waking any parked waiters) and
+        unpersist the cached partition."""
+        for b in (self.exact, self.ann):
+            if b is not None:
+                b.close()
+        try:
+            self.base.unpersist(blocking=False)
+        except Exception:
+            pass  # session teardown races are benign here
 
 
 class SparkVectolite:
@@ -280,19 +387,12 @@ class SparkVectolite:
         self._dim_cache: int | None = None
         self._trgm_handle = None
         self._snap = None
-        # batched-serving facade state (enable_batched_serving)
+        # serving state (enable_batched_serving): one slot
         self._serving_cfg: dict | None = None
-        self._serving = None
-        self._serving_base = None
-        self._serving_ann = None          # ANN-mode batcher (SRP kernel)
-        self._serving_ann_payload = None  # its OWN cache (None when shared)
-        self._serving_ann_oversize = False  # size-gated: per-job path wins
-        self._serving_base_planes = None  # (n_tables, n_planes) on the base
-        self._resident = None             # _ResidentSet (resident regime)
-        self._resident_oversize = False   # measured over budget: batched
-        self._serving_gen = 0             # bumped by every invalidation
+        self._working_set = None  # _ResidentSet | _BatchedSet | None
+        self._serving_gen = 0     # bumped by every invalidation
         self._serving_lock = threading.Lock()
-        # serializes working-set BUILDS (batcher bases, resident collect)
+        # serializes working-set BUILDS (and the cold dim probe)
         # so exactly one runs at a time, WITHOUT holding _serving_lock
         # across Spark jobs — mutations and already-built serving paths
         # never stall behind a build (ADVICE r9 / r10 review)
@@ -458,13 +558,11 @@ class SparkVectolite:
             n_tables=n_tables,
             n_planes=n_planes,
         )
-        # the ANN serving batcher and the resident working set resolved
-        # their plane parameters (and precomputed bucket codes) from the
-        # PREVIOUS index state — a rebuild with custom planes would leave
-        # them probing with stale planes, silently diverging from the
-        # per-job path (ADVICE r9). Data didn't change, so the exact
-        # batcher stays.
-        self._invalidate_ann_serving()
+        # the serving working set resolved its plane parameters (and
+        # precomputed bucket codes) from the PREVIOUS index state — a
+        # rebuild with custom planes would leave it probing with stale
+        # planes, silently diverging from the per-job path (ADVICE r9)
+        self._invalidate_serving()
 
     # -- text-index acceleration (extension; mirrors the ANN lifecycle) -----
 
@@ -491,53 +589,53 @@ class SparkVectolite:
         self._invalidate_text_index()
         self._invalidate_serving()
 
-    # -- online serving (extension; resident set or serving.MicroBatcher) ---
+    # -- online serving (extension; one working set, two regimes) ----------
 
     def enable_batched_serving(
         self,
         top_k: int = 10,
         max_batch: int = 64,
         max_wait_ms: float = 8.0,
-        cache: bool = True,
-        filter_overfetch: int = 4,
-        ann_facade_max_rows: int = 200_000,
         resident_max_bytes: int = 256 * 1024 * 1024,
     ) -> None:
         """Serve eligible ``query()`` calls from a shared working set
         instead of one Spark job per call. A lone ``query()`` pays
         Spark's per-job scheduling floor (~0.2-0.4 s at ANY data size)
         and job-per-query caps near ~30 q/s on the DAGScheduler
-        admission loop; serving picks one of two regimes at each
-        working-set build (the first eligible query after enabling or
-        after any mutation):
+        admission loop.
+
+        The store keeps ONE serving slot. The first eligible query after
+        enabling, after any mutation or after ``build_ann_index`` fills
+        it with one single-flight build over one frame (vec_id,
+        embedding, text, metadata and each row's SRP bucket codes), and
+        that build's measurement picks the regime:
 
         - **Resident** — the working set measures under
-          ``resident_max_bytes`` (default 256 MiB). One measuring
-          aggregate (row count, dim, text+metadata chars and UTF-8
-          octets; see ``_build_resident``) and one collect put the
-          corpus on the driver as a float64 numpy matrix plus a pandas
-          frame carrying each row's SRP bucket codes. Exact and
-          metadata-filtered queries rank the full matrix in numpy
-          (metadata JSON is parsed once at build); unfiltered
-          ``ann=True`` queries run ``_pandas_udfs.make_srp_serving_mapper``
-          — the batched regime's probe kernel — over that frame. No
-          Spark job per query, any ``top_k``.
-        - **Micro-batched** — over budget (or ``resident_max_bytes=0``).
-          Concurrent callers (the threaded UI, any multi-client front
-          end) coalesce through ``serving.MicroBatcher`` into one batch
-          job per dispatch cycle. Eligible = ``top_k <=`` this mode's
-          ``top_k`` (results are a prefix of the batcher's ranking).
-          Filtered queries ride the same batcher via recall-safe
-          over-fetch (VERDICT r7 item 7): the batcher fetches
-          ``top_k * filter_overfetch`` global rows and the facade
-          post-filters them; a prefix holding ``top_k`` hits (or
-          covering the whole corpus) is PROVABLY complete, anything
-          more selective falls back to the exact filtered job.
-          ``ann=True`` rides its own batcher whose kernel is the same
-          in-mapper SRP probe over the cached single partition; corpora
-          above ``ann_facade_max_rows`` keep the per-job
-          persisted-index path (block-directory pruning is the
-          big-corpus answer).
+          ``resident_max_bytes`` (default 256 MiB; one measuring
+          aggregate, see ``_build_working_set``). One collect puts the
+          frame on the driver as a float64 numpy matrix plus a pandas
+          frame (``_ResidentSet``). Exact and metadata-filtered queries
+          rank the full matrix in numpy (metadata JSON is parsed once at
+          build); unfiltered ``ann=True`` queries run
+          ``_pandas_udfs.make_srp_serving_mapper`` — the micro-batched
+          regime's probe kernel — over the frame. No Spark job per
+          query, any ``top_k``.
+        - **Micro-batched** — over budget, or ``resident_max_bytes=0``
+          (which skips the measurement). The frame is cached as one
+          partition and two ``serving.MicroBatcher``s share it
+          (``_BatchedSet``): concurrent callers (the threaded UI, any
+          multi-client front end) coalesce into one batch job per
+          dispatch cycle. Eligible = ``top_k <=`` this mode's ``top_k``
+          (results are a prefix of the batcher's ranking). Filtered
+          queries ride the exact batcher via recall-safe over-fetch
+          (VERDICT r7 item 7): it fetches ``top_k * _FILTER_OVERFETCH``
+          global rows and the set post-filters them; a prefix holding
+          ``top_k`` hits (or covering the whole corpus) is PROVABLY
+          complete, anything more selective falls back to the exact
+          filtered job. ``ann=True`` rides the ANN batcher, whose kernel
+          is the same SRP probe over the cached partition; corpora above
+          ``_ANN_FACADE_MAX_ROWS`` rows keep the per-job persisted-index
+          path (block-directory pruning is the big-corpus answer).
 
         Both regimes return exactly the per-job answers (same rounded
         cosine scores, (score desc, id asc) order, filter
@@ -545,28 +643,23 @@ class SparkVectolite:
         pytest-pinned). ``diversify`` and ann+filter (rejected loudly)
         keep their dedicated paths.
 
-        Lazy + mutation-safe: the working set is built on first
-        eligible query and torn down by ANY store mutation (and, for
-        everything derived from SRP planes, by ``build_ann_index``);
-        builds are single-flight and generation-fenced, so serving can
-        never answer from a stale snapshot."""
+        Mutation-safe: ``_invalidate_serving`` — run by every mutation,
+        by ``build_ann_index`` and by re-enabling — is the one teardown;
+        a build it overtook is fenced by the serving generation and
+        never published, so serving never answers from a stale
+        snapshot. A published micro-batched set is also the sticky
+        "over budget" record: the corpus is re-measured only after the
+        next teardown."""
         if top_k <= 0:
             raise VectoliteError("top_k must be positive")
-        if filter_overfetch < 1:
-            raise VectoliteError("filter_overfetch must be >= 1")
-        if ann_facade_max_rows < 1:
-            raise VectoliteError("ann_facade_max_rows must be >= 1")
         if resident_max_bytes < 0:
             raise VectoliteError("resident_max_bytes must be >= 0")
         self._invalidate_serving()
-        with self._serving_lock:  # cfg writes pair with _ensure's read
+        with self._serving_lock:  # cfg writes pair with the build's read
             self._serving_cfg = {
                 "top_k": int(top_k),
                 "max_batch": int(max_batch),
                 "max_wait_ms": float(max_wait_ms),
-                "cache": bool(cache),
-                "overfetch": int(filter_overfetch),
-                "ann_max_rows": int(ann_facade_max_rows),
                 "resident_max_bytes": int(resident_max_bytes),
             }
 
@@ -575,29 +668,42 @@ class SparkVectolite:
             self._serving_cfg = None
         self._invalidate_serving()
 
-    def _ensure_resident(self) -> _ResidentSet | None:
-        """The resident working set, built on first use; None means the
-        micro-batched regime (measured over budget, or a zero budget) or
-        serving disabled/invalidated concurrently — the caller then
-        takes the batcher or exact path. Builds are SINGLE-FLIGHT
+    def _ensure_working_set(self) -> _ResidentSet | _BatchedSet | None:
+        """The serving slot's working set, built on first use; None means
+        serving was disabled or invalidated concurrently — the caller
+        then takes the per-job path. Builds are SINGLE-FLIGHT
         (``_serving_build_lock``): without it, N concurrent first
-        queries would each collect the corpus and hold N working sets
-        on the driver at once — the budget bounds ONE build, not N."""
+        queries would each collect or cache the corpus and hold N
+        working sets at once — the budget bounds ONE build, not N.
+
+        The build's Spark jobs run OUTSIDE ``_serving_lock`` (ADVICE r9:
+        holding it blocked every mutation and serving query for the
+        build), so cfg identity + ``_serving_gen`` fence publication: a
+        build that any invalidation overtook is released, not
+        published."""
         with self._serving_lock:
-            if self._resident is not None:
-                return self._resident
+            if self._working_set is not None:
+                return self._working_set
             cfg = self._serving_cfg
-            if (
-                cfg is None
-                or cfg["resident_max_bytes"] <= 0
-                or self._resident_oversize
-            ):
+            if cfg is None:
                 return None
         with self._serving_build_lock:
-            return self._build_resident(cfg)
+            with self._serving_lock:
+                if self._working_set is not None:
+                    return self._working_set  # a prior builder published
+                if self._serving_cfg is not cfg:
+                    return None  # reconfigured while we waited
+                gen = self._serving_gen
+            built = self._build_working_set(cfg)
+            with self._serving_lock:
+                if self._serving_cfg is cfg and self._serving_gen == gen:
+                    self._working_set = built
+                    return built
+            built.close()  # invalidated mid-build; caller falls back
+            return None
 
-    def _build_resident(self, cfg: dict) -> _ResidentSet | None:
-        """Measure, then collect if under budget.
+    def _build_working_set(self, cfg: dict) -> _ResidentSet | _BatchedSet:
+        """Measure, then build the regime the measurement picks.
 
         The budget check MEASURES the payload instead of assuming it
         (VERDICT r9 item 4): one aggregate over the real table — row
@@ -612,95 +718,65 @@ class SparkVectolite:
         width 4), so ``chars + octets`` never underestimates the
         strings while keeping ~2x headroom for ASCII text. The
         aggregate measures dim itself, so a cold dim cache never skips
-        the check. Over budget marks the micro-batched regime (sticky
-        until the next invalidation) instead of collecting.
+        the check. A zero budget skips the aggregate.
 
-        The collect runs OUTSIDE ``_serving_lock`` (ADVICE r9: holding
-        it blocked every mutation and serving query for the build);
-        ``_serving_gen`` fences publication — if any invalidation
-        landed mid-collect, the stale rows are dropped and the caller
-        falls back for this query. The collect carries each row's SRP
-        bucket codes (``make_srp_bucket_codes_udf``, planes from
-        ``_serving_planes``), the same column the batched regime caches."""
-        with self._serving_lock:
-            if self._resident is not None:
-                return self._resident  # a prior builder published
-            if self._serving_cfg is not cfg or self._resident_oversize:
-                return None  # reconfigured or measured while we waited
-            gen = self._serving_gen
-        stats = self.df().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.size("embedding")).alias("dim"),
-            (
-                F.coalesce(F.sum(F.length("text")), F.lit(0))
-                + F.coalesce(F.sum(F.length("metadata")), F.lit(0))
-            ).alias("chars"),
-            (
-                F.coalesce(F.sum(F.octet_length("text")), F.lit(0))
-                + F.coalesce(F.sum(F.octet_length("metadata")), F.lit(0))
-            ).alias("octets"),
-        ).collect()[0]
-        n, dim = stats["n"], stats["dim"] or 0
-        chars, octets = stats["chars"] or 0, stats["octets"] or 0
-        est = n * (dim * 8 + 144) + chars + octets
-        if est > cfg["resident_max_bytes"]:
-            with self._serving_lock:
-                if self._serving_cfg is cfg and self._serving_gen == gen:
-                    self._resident_oversize = True
-            return None
+        Under budget the frame is collected into a ``_ResidentSet``;
+        otherwise it is cached as one partition for a ``_BatchedSet``,
+        whose ANN row gate reads the cache-materializing ``count()`` —
+        no extra job."""
+        resident = False
+        if cfg["resident_max_bytes"] > 0:
+            stats = self.df().agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max(F.size("embedding")).alias("dim"),
+                (
+                    F.coalesce(F.sum(F.length("text")), F.lit(0))
+                    + F.coalesce(F.sum(F.length("metadata")), F.lit(0))
+                ).alias("chars"),
+                (
+                    F.coalesce(F.sum(F.octet_length("text")), F.lit(0))
+                    + F.coalesce(F.sum(F.octet_length("metadata")), F.lit(0))
+                ).alias("octets"),
+            ).collect()[0]
+            n, dim = stats["n"], stats["dim"] or 0
+            chars, octets = stats["chars"] or 0, stats["octets"] or 0
+            est = n * (dim * 8 + 144) + chars + octets
+            resident = est <= cfg["resident_max_bytes"]
+        planes = self._serving_planes()
+        frame = self._serving_frame(planes)
+        if resident:
+            return _ResidentSet(frame.toPandas(), planes)
+        base = frame.coalesce(1).cache()
+        return _BatchedSet(base, planes, base.count(), cfg)
+
+    def _serving_frame(self, planes: tuple[int, int]) -> DataFrame:
+        """The working set's rows, (vec_id, embedding, text, metadata,
+        srp_buckets): bucket codes from ``make_srp_bucket_codes_udf``
+        under ``planes``, so steady-state ANN queries skip the
+        corpus-wide bucketing matmul in either regime."""
         from vectolite_spark._pandas_udfs import make_srp_bucket_codes_udf
 
-        planes = self._serving_planes()
-        pdf = self.df().select(
+        return self.df().select(
             F.col("id").alias("vec_id"),
             "embedding",
-            "text",
-            "metadata",
+            *_PAYLOAD,
             make_srp_bucket_codes_udf(*planes)(F.col("embedding")).alias(
                 "srp_buckets"
             ),
-        ).toPandas()
-        built = _ResidentSet(pdf, planes)
-        with self._serving_lock:
-            if self._serving_cfg is not cfg or self._serving_gen != gen:
-                return None  # invalidated mid-collect; caller falls back
-            self._resident = built
-            return built
+        )
 
     def _invalidate_serving(self) -> None:
-        """Mutation hook: the resident set and the live batchers hold a
-        snapshot of the table state at build time — drop the set, close
-        the batchers (waking any parked waiters) and their caches; the
-        next eligible query re-measures and rebuilds lazily."""
+        """The one serving teardown: the working set holds a snapshot of
+        the table state (and SRP planes) at build time — empty the slot,
+        release the set (a batched set closes its batchers, waking any
+        parked waiters, and unpersists its cache) and bump the
+        generation so in-flight builds cannot publish; the next
+        eligible query re-measures and rebuilds lazily."""
         with self._serving_lock:
-            batchers = (self._serving, self._serving_ann)
-            caches = [self._serving_base, *(self._serving_ann_payload or [])]
-            self._serving, self._serving_base = None, None
-            self._serving_ann, self._serving_ann_payload = None, None
-            self._serving_ann_oversize = False  # re-measure on fresh state
-            self._serving_base_planes = None
-            self._resident = None  # cfg survives; next query re-collects
-            self._resident_oversize = False
-            self._serving_gen += 1  # fences in-flight working-set builds
-        _release(batchers, caches)
-
-    def _invalidate_ann_serving(self) -> None:
-        """Narrow teardown for ``build_ann_index``: the ANN-mode batcher
-        and the resident set carry bucket codes derived from the
-        persisted index's plane parameters; the exact batcher sees the
-        same table state and survives an index rebuild untouched. The
-        generation bump fences builds that read the old planes."""
-        with self._serving_lock:
-            batcher = self._serving_ann
-            caches = self._serving_ann_payload or []
-            self._serving_ann, self._serving_ann_payload = None, None
-            self._resident = None
+            ws, self._working_set = self._working_set, None
             self._serving_gen += 1
-            # both oversize flags survive: an index rebuild doesn't
-            # change the corpus size, and the per-job fallback path
-            # itself calls build_ann_index — resetting here would make
-            # every gated query re-run its measuring job
-        _release((batcher,), caches)
+        if ws is not None:
+            ws.close()
 
     def _serving_planes(self) -> tuple[int, int]:
         """(n_tables, n_planes) the serving working set's bucket codes
@@ -713,210 +789,20 @@ class SparkVectolite:
             return _srp_resolve(self.spark, self._ann_path(), None, None)
         return 16, 6
 
-    def _ensure_serving_batcher(self):
-        """Build (or return) the exact-mode batcher. Spark jobs (cache
-        materialization) run under ``_serving_build_lock``, NOT
-        ``_serving_lock`` — concurrent queries on already-built paths
-        and mutations never stall behind a build; publication is fenced
-        by cfg identity + ``_serving_gen`` like the resident tier.
-
-        The cached base carries the SRP bucket-code column
-        (``make_srp_bucket_codes_udf``) so the ANN batcher shares ONE
-        cached working set instead of persisting a second full copy
-        (r10 review): the exact kernel column-prunes it away (16 longs/
-        row in cache either way — noise next to text payloads)."""
-        from vectolite_spark.serving import MicroBatcher
-
-        with self._serving_lock:
-            if self._serving is not None:
-                return self._serving
-            cfg = self._serving_cfg
-            if cfg is None:
-                # a concurrent disable_batched_serving() won the race
-                # between query()'s eligibility check and this build —
-                # tell the caller to fall back to the exact path instead
-                # of dereferencing a None cfg
-                return None
-        with self._serving_build_lock:
-            with self._serving_lock:
-                if self._serving is not None:
-                    return self._serving  # a prior builder published
-                if self._serving_cfg is not cfg:
-                    return None  # reconfigured while we waited
-                gen = self._serving_gen
-            from vectolite_spark._pandas_udfs import make_srp_bucket_codes_udf
-
-            nt, npl = self._serving_planes()
-            base = self.df().select(
-                F.col("id").alias("vec_id"), "embedding", "text", "metadata"
-            ).withColumn(
-                "srp_buckets",
-                make_srp_bucket_codes_udf(nt, npl)(F.col("embedding")),
-            )
-            if cfg["cache"]:
-                # serving working set as ONE cached partition: the batch
-                # mapper's rank_mode then emits the final ranking
-                # in-mapper — no merge shuffle, one task per dispatch
-                # cycle (measured 314 -> ~90 ms/cycle vs 8 partitions +
-                # a 32-partition window merge). Right for the facade's
-                # small/medium corpus regime; a corpus too big for one
-                # partition belongs on the LSH-index serving path
-                # (query(ann=True) / topk_batch_lsh), not a bigger cache.
-                base = base.coalesce(1).cache()
-                base.count()
-            # k covers the filtered-path over-fetch: plain queries slice
-            # the prefix, filtered queries post-filter it (the heap is
-            # k*overfetch instead of k — noise next to the job floor)
-            batcher = MicroBatcher(
-                base,
-                k=cfg["top_k"] * cfg.get("overfetch", 1),
-                max_batch=cfg["max_batch"],
-                max_wait_ms=cfg["max_wait_ms"],
-                payload_cols=("text", "metadata"),
-            )
-            with self._serving_lock:
-                if self._serving_cfg is not cfg or self._serving_gen != gen:
-                    stale = True  # invalidated mid-build: don't publish
-                else:
-                    stale = False
-                    self._serving = batcher
-                    self._serving_base = base if cfg["cache"] else None
-                    self._serving_base_planes = (nt, npl)
-            if stale:
-                _release((batcher,), [base] if cfg["cache"] else [])
-                return None
-            return batcher
-
-    def _ensure_ann_serving_batcher(self):
-        """The ANN-mode twin of ``_ensure_serving_batcher`` (VERDICT r8
-        item 4): a second MicroBatcher whose dispatch kernel runs the
-        WHOLE SRP probe for the cycle's queries in ONE task over the
-        cached single-partition working set
-        (``_pandas_udfs.make_srp_serving_mapper``) — in-mapper
-        bucketing reproduces the persisted index's deterministic
-        md5-Rademacher blocks exactly, so results match the per-job
-        ``query(ann=True)`` path row for row while concurrent ANN
-        callers coalesce into one no-shuffle job per cycle instead of
-        paying the ~30 q/s job-per-query scheduling floor. Same
-        lifecycle: lazy build, torn down by any mutation alongside the
-        exact batcher (and by ``build_ann_index``, whose custom planes
-        it must mirror). Plane parameters come from the persisted
-        index's meta when one exists; otherwise the build defaults.
-
-        Size-gated (ADVICE r9): the in-mapper probe scans the whole
-        single-partition working set per dispatch cycle, which is the
-        right trade only in the facade's small/medium-corpus regime —
-        above ``ann_facade_max_rows`` this returns None and ANN queries
-        keep the per-job persisted-index path, whose block-directory
-        pruning is the actual big-corpus answer. The working set
-        carries the PRECOMPUTED SRP bucket-code column, SHARED with the
-        exact batcher's cache when its planes match (one cached copy,
-        not two); steady-state cycles skip the corpus-wide bucketing
-        matmul and stack embeddings only for candidate rows. Builds run
-        under the build lock like every other working-set build."""
-        from vectolite_spark.serving import MicroBatcher
-
-        with self._serving_lock:
-            if self._serving_ann is not None:
-                return self._serving_ann
-            cfg = self._serving_cfg
-            if cfg is None:
-                return None  # disabled concurrently -> exact path
-            if self._serving_ann_oversize:
-                return None  # measured too big for the in-mapper probe
-        with self._serving_build_lock:
-            with self._serving_lock:
-                if self._serving_ann is not None:
-                    return self._serving_ann
-                if self._serving_cfg is not cfg:
-                    return None
-                if self._serving_ann_oversize:
-                    return None
-                gen = self._serving_gen
-            n = self.df().count()
-            if n > cfg.get("ann_max_rows", 200_000):
-                with self._serving_lock:
-                    if self._serving_cfg is cfg and self._serving_gen == gen:
-                        self._serving_ann_oversize = True  # sticky
-                return None
-            from vectolite_spark._pandas_udfs import make_srp_bucket_codes_udf
-
-            nt, npl = self._serving_planes()
-            with self._serving_lock:
-                shared = (
-                    self._serving_base
-                    if self._serving_base is not None
-                    and self._serving_base_planes == (nt, npl)
-                    else None
-                )
-            own_cache = None
-            if shared is not None:
-                base = shared  # ONE cached working set for both modes
-            else:
-                base = self.df().select(
-                    F.col("id").alias("vec_id"), "embedding", "text", "metadata"
-                ).coalesce(1).withColumn(
-                    "srp_buckets",
-                    make_srp_bucket_codes_udf(nt, npl)(F.col("embedding")),
-                )
-                if cfg["cache"]:
-                    base = base.cache()
-                    base.count()
-                    own_cache = [base]
-            top_k, (ntf, nplf) = cfg["top_k"], (nt, npl)
-
-            def kernel(qids, qvecs, kmax):
-                from vectolite_spark._pandas_udfs import make_srp_serving_mapper
-
-                return base.mapInPandas(
-                    make_srp_serving_mapper(
-                        qids, qvecs, kmax,
-                        n_tables=ntf, n_planes=nplf,
-                        payload_cols=("text", "metadata"),
-                        bucket_col="srp_buckets",
-                    ),
-                    schema=(
-                        "query_id long, vec_id long, score double, "
-                        "rn long, text string, metadata string"
-                    ),
-                )
-
-            batcher = MicroBatcher(
-                None,
-                k=top_k,
-                max_batch=cfg["max_batch"],
-                max_wait_ms=cfg["max_wait_ms"],
-                payload_cols=("text", "metadata"),
-                kernel=kernel,
-            )
-            with self._serving_lock:
-                if self._serving_cfg is not cfg or self._serving_gen != gen:
-                    stale = True
-                else:
-                    stale = False
-                    self._serving_ann = batcher
-                    self._serving_ann_payload = own_cache
-            if stale:
-                _release((batcher,), own_cache or [])
-                return None
-            return batcher
-
-    def _batched_query(self, ensure, qvec, k=None):
-        """Retry-wrapped dispatch through a serving batcher: a concurrent
-        mutation can tear the batcher down between lookup and dispatch —
-        rebuild over the fresh state (bounded retries). Returns
-        ``(rows, fetch_depth)``; rows is None when serving was disabled
-        concurrently (caller falls back to the exact path)."""
+    def _serve(self, qvec, top_k: int, fcmp: dict | None, ann: bool):
+        """One query through the serving slot; None means take the
+        per-job path. A concurrent mutation can close a batched set
+        between lookup and dispatch — rebuild over the fresh state
+        (bounded retries)."""
         for _ in range(3):
-            batcher = ensure()
-            if batcher is None:
-                return None, 0
+            ws = self._ensure_working_set()
+            if ws is None:
+                return None
             try:
-                return batcher.query(qvec, k=k), batcher._k
+                return ws.query(qvec, top_k, fcmp, ann)
             except RuntimeError as e:
                 if "closed" not in str(e):
                     raise
-                continue
         raise VectoliteError(
             "batched serving unavailable (repeated concurrent "
             "invalidation); retry or disable_batched_serving()"
@@ -970,6 +856,7 @@ class SparkVectolite:
             raise VectoliteError(
                 f"Embedding dimension mismatch: store has {stored}, got {dims.pop()}"
             )
+        _require_finite(embeddings, "Embedding")
         start = self._max_id() + 1
         now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = [
@@ -987,6 +874,41 @@ class SparkVectolite:
         self._max_id_cache = start + len(texts) - 1
         return list(range(start, start + len(texts)))
 
+    def _store_rows(self, df: DataFrame, ids) -> DataFrame:
+        """``df``'s (text, metadata, embedding) rows as store rows with
+        ids ``ids``, validated IN-PLAN: an empty text, an embedding
+        whose dimension disagrees with the store, or a non-finite
+        element after the float32 cast (see ``_require_finite``) fails
+        the write job itself (raise_error), and the aborted job commits
+        nothing. Null elements pass unchanged."""
+        stored = self._dim()
+        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        text = F.when(
+            F.length(F.trim(F.col("text"))) > 0, F.col("text")
+        ).otherwise(F.raise_error(F.lit("Document text cannot be empty")))
+        emb = F.col("embedding").cast("array<float>")
+        finite = F.forall(
+            emb, lambda x: ~F.isnan(x) & (F.abs(x) != float("inf"))
+        )
+        emb = F.when(F.coalesce(finite, F.lit(True)), emb).otherwise(
+            F.raise_error(
+                F.lit("Embedding contains a non-finite value (NaN or inf as float32)")
+            )
+        )
+        if stored is not None:
+            emb = F.when(F.size("embedding") == stored, emb).otherwise(
+                F.raise_error(
+                    F.lit(f"Embedding dimension mismatch: store has {stored}")
+                )
+            )
+        return df.select(
+            ids.alias("id"),
+            text.alias("text"),
+            F.coalesce(F.col("metadata"), F.lit("{}")).alias("metadata"),
+            emb.alias("embedding"),
+            F.lit(now).cast("timestamp").alias("created_at"),
+        )
+
     def append_dataframe(self, df: DataFrame) -> int:
         """Distributed bulk append: (text, metadata, embedding) rows are
         written straight from the executors — NO corpus data moves through
@@ -1000,33 +922,15 @@ class SparkVectolite:
         afford a global sort for. ``insert_many`` keeps the reference's
         contiguous ids for the interactive path.
 
-        Validation is in-plan too: an empty text or an embedding whose
-        dimension disagrees with the store fails the write job itself
-        (raise_error) and the aborted job commits nothing. The returned
-        count comes from an ``Observation`` on the write job — no second
-        pass re-running the (possibly expensive) upstream pipeline.
+        Validation is in-plan too (``_store_rows``). The returned count
+        comes from an ``Observation`` on the write job — no second pass
+        re-running the (possibly expensive) upstream pipeline.
         """
         from pyspark.sql import Observation
 
         start = self._max_id() + 1
-        stored = self._dim()
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        text = F.when(
-            F.length(F.trim(F.col("text"))) > 0, F.col("text")
-        ).otherwise(F.raise_error(F.lit("Document text cannot be empty")))
-        emb = F.col("embedding").cast("array<float>")
-        if stored is not None:
-            emb = F.when(F.size("embedding") == stored, emb).otherwise(
-                F.raise_error(
-                    F.lit(f"Embedding dimension mismatch: store has {stored}")
-                )
-            )
-        out = df.select(
-            (F.lit(start) + F.monotonically_increasing_id()).alias("id"),
-            text.alias("text"),
-            F.coalesce(F.col("metadata"), F.lit("{}")).alias("metadata"),
-            emb.alias("embedding"),
-            F.lit(now).cast("timestamp").alias("created_at"),
+        out = self._store_rows(
+            df, F.lit(start) + F.monotonically_increasing_id()
         )
         obs = Observation("append")
         # the same observation that returns the row count also captures the
@@ -1086,6 +990,7 @@ class SparkVectolite:
             raise VectoliteError(
                 f"Embedding dimension mismatch: store has {stored}, query has {len(qvec)}"
             )
+        _require_finite(qvec, "Query embedding")
         if diversify is not None:
             if ann:
                 raise VectoliteError(
@@ -1110,78 +1015,17 @@ class SparkVectolite:
                         f"got {type(value).__name__} for key {key!r}"
                     )
                 fcmp[key] = value if isinstance(value, str) else json.dumps(value)
-        # read the cfg ONCE: a concurrent disable_batched_serving() between
-        # the None-check and the subscript would otherwise raise TypeError
-        # instead of falling back to the exact path
-        serving_cfg = self._serving_cfg
-        if serving_cfg is not None and diversify is None and not (ann and fcmp):
-            # resident regime: the whole ranking (or the SRP probe) in
-            # driver numpy, identical results to the per-job paths
-            rs = self._ensure_resident()
-            if rs is not None:
-                return rs.query(qvec, top_k, fcmp, ann)
-        # batchers serve only the micro-batched regime; a resident build
-        # fenced by a concurrent mutation sends this query per-job
-        batched = serving_cfg is not None and (
-            serving_cfg["resident_max_bytes"] <= 0 or self._resident_oversize
-        )
         if (
-            batched
-            and ann
-            and not metadata_filter
+            self._serving_cfg is not None
             and diversify is None
-            and top_k <= serving_cfg["top_k"]
+            and not (ann and fcmp)
         ):
-            # ANN serving facade (VERDICT r8 item 4): concurrent
-            # query(ann=True) callers coalesce into ONE union SRP probe
-            # per dispatch cycle instead of one Spark job each — the
-            # same dynamic-batching bridge as the exact path, keyed on
-            # query mode. ann+metadata_filter falls through to the loud
-            # rejection below; ann+diversify already raised above.
-            rows, _ = self._batched_query(
-                self._ensure_ann_serving_batcher, qvec, k=top_k
-            )
-            if rows is not None:
-                return [_hit(*r) for r in rows[:top_k]]
-            # serving disabled concurrently -> exact ann path below
-        if (
-            batched
-            and not ann
-            and diversify is None
-            and top_k <= serving_cfg["top_k"]
-        ):
-            # batched-serving facade: coalesce with concurrent callers
-            # into one Spark job; same ordering contract, so top_k is a
-            # prefix slice of the batcher's ranking. Filtered queries
-            # post-filter the over-fetched prefix and answer batched
-            # only when PROVABLY complete (see enable_batched_serving).
-            # Plain queries fetch only their slice; filtered ones fetch
-            # the full over-provisioned depth for the completeness proof.
-            rows, k_fetch = self._batched_query(
-                self._ensure_serving_batcher,
-                qvec,
-                k=top_k if fcmp is None else None,
-            )
-            if rows is not None:
-                n_global = len(rows)
-                if fcmp is not None:
-                    rows = [
-                        r
-                        for r in rows
-                        if _match_filter(_parse_meta(r[3]), fcmp)
-                    ]
-                # completeness proof: every global row outside the
-                # fetched prefix scores below every row inside it, so a
-                # filtered prefix holding top_k hits IS the filtered
-                # top-k; a prefix shorter than k_fetch ranked the whole
-                # corpus, so whatever survived the filter is all there is
-                if (
-                    fcmp is None
-                    or len(rows) >= top_k
-                    or n_global < k_fetch
-                ):
-                    return [_hit(*r) for r in rows[:top_k]]
-                # too selective for the prefix: exact filtered job below
+            # serving slot (enable_batched_serving): resident numpy or
+            # micro-batched, identical results to the per-job paths;
+            # ann+metadata_filter falls through to the loud rejection
+            hits = self._serve(qvec, top_k, fcmp, ann)
+            if hits is not None:
+                return hits
         if ann:
             if metadata_filter:
                 raise VectoliteError(
@@ -1276,6 +1120,8 @@ class SparkVectolite:
             raise VectoliteError(
                 f"Embedding dimension mismatch: store has {stored}"
             )
+        for v in qvecs:
+            _require_finite(v, "Query embedding")
         from vectolite_spark.operators.topk import topk_batch
 
         queries = local_df(
@@ -1310,26 +1156,6 @@ class SparkVectolite:
             )
         return out
 
-    def make_batcher(self, top_k: int = 10, max_batch: int = 64,
-                     max_wait_ms: float = 8.0, cache: bool = True):
-        """Online-serving front end: a ``serving.MicroBatcher`` over this
-        store's embeddings. Concurrent ``query(qvec)`` callers coalesce
-        into one batch top-k job per dispatch cycle (~112 q/s sustained
-        at 32 clients on this box vs ~30 q/s job-per-query — the
-        DAGScheduler admission floor). ``cache=True`` caches the
-        embedding working set (call after mutations settle; any store
-        mutation invalidates serving anyway since the batcher holds a
-        snapshot of the table state at creation)."""
-        from vectolite_spark.serving import MicroBatcher
-
-        embs = self.df().select(F.col("id").alias("vec_id"), "embedding")
-        if cache:
-            embs = embs.cache()
-            embs.count()
-        return MicroBatcher(
-            embs, k=top_k, max_batch=max_batch, max_wait_ms=max_wait_ms
-        )
-
     def upsert(self, updates: DataFrame) -> dict:
         """Delta-style MERGE: each update row whose ``id`` matches an
         existing document REPLACES it; unmatched rows are inserted.
@@ -1348,25 +1174,7 @@ class SparkVectolite:
 
         Returns {"updated": n, "inserted": n}.
         """
-        stored = self._dim()
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        emb = F.col("embedding").cast("array<float>")
-        if stored is not None:
-            emb = F.when(F.size("embedding") == stored, emb).otherwise(
-                F.raise_error(
-                    F.lit(f"Embedding dimension mismatch: store has {stored}")
-                )
-            )
-        text = F.when(
-            F.length(F.trim(F.col("text"))) > 0, F.col("text")
-        ).otherwise(F.raise_error(F.lit("Document text cannot be empty")))
-        incoming = updates.select(
-            F.col("id").cast("long").alias("id"),
-            text.alias("text"),
-            F.coalesce(F.col("metadata"), F.lit("{}")).alias("metadata"),
-            emb.alias("embedding"),
-            F.lit(now).cast("timestamp").alias("created_at"),
-        )
+        incoming = self._store_rows(updates, F.col("id").cast("long"))
         existing = self.df()
         n_updates = incoming.count()
         n_distinct = incoming.select("id").distinct().count()
