@@ -76,17 +76,19 @@ def test_cli_ingest_jsonl_routes_to_corpus_path(spark, tmp_path, capsys):
 
 
 def test_cli_versioned_store_lifecycle(spark, tmp_path, monkeypatch, capsys):
-    """--versioned flag + auto-detection: add/delete become snapshot
-    commits, history prints them, rollback restores, and later commands
-    pick the versioned backend WITHOUT the flag (layout detection)."""
+    """Every --db is a snapshot table: add/delete are commits, history
+    prints them, diff and rollback work on them, vacuum trims them — no
+    flag needed. The removed --versioned flag is rejected."""
     import vectolite_spark.cli as cli
     import vectolite_spark.session as sess
 
     monkeypatch.setattr(sess, "get_spark", lambda *a, **k: spark)
     db = str(tmp_path / "vdb")
-    cli.main(["add", "first doc", "--db", db, "--dim", "8", "--versioned"])
-    cli.main(["add", "second doc", "--db", db, "--dim", "8", "--versioned"])
-    # no flag from here on: the _versions layout is auto-detected
+    cli.main(["add", "first doc", "--db", db, "--dim", "8"])
+    cli.main(["add", "second doc", "--db", db, "--dim", "8"])
+    with pytest.raises(SystemExit):
+        cli.main(["history", "--db", db, "--versioned"])
+    capsys.readouterr()
     cli.main(["delete", "1", "--db", db])
     assert "Deleted document 1" in capsys.readouterr().out
     cli.main(["history", "--db", db])

@@ -169,19 +169,17 @@ def test_ingest_jsonl_end_to_end(spark, tmp_path):
 
 
 def test_ingest_pipeline_into_versioned_store(spark, tmp_path):
-    """Distributed ingest (chunk -> embed -> append_dataframe) lands in a
-    snapshot commit when the store is versioned: the Observation row
-    count still reports correctly (the write happens inside
-    SnapshotStore.append), and the ingest is one time-travelable commit."""
+    """Distributed ingest (chunk -> embed -> append_dataframe) lands in
+    one snapshot commit: the Observation row count still reports
+    correctly (the write happens inside SnapshotStore.append), and the
+    ingest is one time-travelable commit."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.ingest import ingest_files
     from vectolite_spark.store import SparkVectolite
 
     f = tmp_path / "vcorpus.txt"
     f.write_text("first paragraph\n\nsecond paragraph\n\nthird paragraph")
-    store = SparkVectolite(
-        spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8), versioned=True
-    )
+    store = SparkVectolite(spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8))
     # max_chars=20 forces one chunk per paragraph
     n = ingest_files(store, str(f), chunk=True, max_chars=20, overlap=0, embed_dim=8)
     assert n == 3 and store.count_documents() == 3

@@ -291,15 +291,14 @@ def test_store_batched_serving_sees_mutations(spark, tmp_path):
 
 
 def test_batched_serving_on_versioned_store(spark, tmp_path):
-    """The facade works over the snapshot-versioned backend too: its
-    df() reads through manifests, and a versioned mutation (a snapshot
-    commit) still tears the batcher down before the next query."""
+    """The facade over the snapshot table: its df() reads through
+    manifests, and a mutation (a snapshot commit) tears the working set
+    down before the next query."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
     store = SparkVectolite(
-        spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8),
-        versioned=True,
+        spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert_many([f"versioned doc number {i}" for i in range(12)])
     want = store.query("versioned doc number 3", top_k=2)
@@ -590,9 +589,7 @@ def test_resident_clients_never_see_deleted_id_after_delete(
     delete_document lands: no answer to a query that started after the
     delete returned may contain the deleted id, and the clients keep
     getting answers throughout. Runs in both regimes (default budget:
-    resident; zero budget: micro-batched). Versioned store: its commits
-    are atomic for concurrent readers (the flat backend's rename swap
-    is not)."""
+    resident; zero budget: micro-batched)."""
     import sys
     import time
 
@@ -600,8 +597,7 @@ def test_resident_clients_never_see_deleted_id_after_delete(
     from vectolite_spark.store import SparkVectolite
 
     store = SparkVectolite(
-        spark, str(tmp_path / "deldb"), embed_fn=stub_embedder(dim=8),
-        versioned=True,
+        spark, str(tmp_path / "deldb"), embed_fn=stub_embedder(dim=8)
     )
     texts = [f"delete race doc {i}" for i in range(30)]
     ids = store.insert_many(texts)
@@ -1011,3 +1007,41 @@ def test_micro_batched_ann_after_exact_reads_no_table(spark, tmp_path):
     assert reads["n"] == 0, f"ANN query read the table {reads['n']} times"
     assert got == want
     store.disable_batched_serving()
+
+
+def test_failed_batched_build_leaves_nothing_cached(spark, tmp_path):
+    """A micro-batched build whose cache-materializing ``count()`` fails
+    must unpersist the partition it cached: the JVM's persistent RDDs
+    are the same after the failure as before, nothing is published, and
+    the next query, with the fault gone, builds and serves normally."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "leakdb"), embed_fn=stub_embedder(dim=8)
+    )
+    store.insert_many([f"leak doc number {i}" for i in range(10)])
+    q = "leak doc number 3"
+    want = store.query(q, top_k=3)
+    store.enable_batched_serving(top_k=5, resident_max_bytes=0)
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    orig_frame = store._serving_frame
+    store._serving_frame = lambda planes: orig_frame(planes).withColumn(
+        "boom", F.raise_error(F.lit("injected build failure"))
+    )
+    before = persisted()
+    try:
+        with pytest.raises(Exception, match="injected build failure"):
+            store.query(q, top_k=3)
+    finally:
+        del store._serving_frame
+    assert persisted() == before
+    assert store._working_set is None
+    assert store.query(q, top_k=3) == want
+    assert isinstance(store._working_set, _BatchedSet)
+    store.disable_batched_serving()
+    assert persisted() == before

@@ -659,3 +659,50 @@ def test_read_pruned_time_travel_and_edge_cases(store, spark):
     )
     assert sorted(r["id"] for r in at_v0.collect()) == want
     assert (nr0, nt0) == (0, 0)  # no zone-mapped dirs at v0
+
+
+def test_reader_waits_for_a_manifest_still_being_written(store, spark):
+    """A commit's create makes the manifest visible empty, before its
+    bytes land. A reader that lists it then must wait for the bytes and
+    read THAT version — not fail, and not fall back to an older one."""
+    import json
+    import threading
+    import time
+
+    store.append(_df(spark, [1, 2]))
+    store.append(_df(spark, [3]))
+    m2 = dict(store._read_manifest(0), version=2, op="rollback:0")
+    path = store._manifest_path(2)
+    open(path, "w").close()  # v2 created, its bytes not yet written
+
+    def land() -> None:
+        time.sleep(0.05)
+        with open(path, "w") as f:
+            f.write(json.dumps(m2))
+
+    t = threading.Thread(target=land)
+    t.start()
+    try:
+        assert store.current_version() == 2
+        assert _ids(store.read()) == [1, 2]  # v2, not the older v1
+        assert store.history()[0] == {
+            "version": 2,
+            "op": "rollback:0",
+            "n_dirs": 1,
+            "committed_at": m2["committed_at"],
+        }
+    finally:
+        t.join()
+
+
+def test_manifest_that_stays_empty_raises(store, spark, monkeypatch):
+    """A listed manifest whose bytes never land fails loudly, naming the
+    path, once the bounded wait is over; the reader never skips to an
+    older version."""
+    import vectolite_spark.snapshots as snapshots
+
+    monkeypatch.setattr(snapshots, "_MANIFEST_WAIT_S", 0.3)
+    store.append(_df(spark, [1]))
+    open(store._manifest_path(1), "w").close()
+    with pytest.raises(VectoliteError, match=r"v00000001\.json"):
+        store.read()

@@ -11,14 +11,14 @@ from vectolite_spark.store import SparkVectolite
 
 @pytest.fixture(params=["flat", "versioned"])
 def store(spark, tmp_path, request):
-    """Every facade test runs against BOTH backends: the flat parquet dir
-    (reference-parity layout) and the snapshot-versioned table (manifest
-    commits + time travel) — same API, same semantics (VERDICT r2 item 6)."""
+    """Every facade test runs on both ways to open a store, which must
+    behave identically: the default constructor (id ``flat``, kept from
+    when the default was a flat parquet directory) and the legacy
+    ``versioned=True`` keyword perfbench still passes. Both open the
+    same snapshot table."""
+    kw = {"versioned": True} if request.param == "versioned" else {}
     return SparkVectolite(
-        spark,
-        str(tmp_path / "db"),
-        embed_fn=stub_embedder(dim=8),
-        versioned=request.param == "versioned",
+        spark, str(tmp_path / "db"), embed_fn=stub_embedder(dim=8), **kw
     )
 
 
@@ -106,13 +106,11 @@ def test_metadata_filtered_query(store):
 
 
 def _live_data_files(store):
-    """Parquet files the CURRENT table state reads (backend-aware)."""
+    """Parquet files the CURRENT table state reads."""
     import glob
 
-    if store._snap is not None:
-        dirs = store._snap._read_manifest(store._snap.current_version())["dirs"]
-        return sum(len(glob.glob(d + "/*.parquet")) for d in dirs)
-    return len(glob.glob(store.path + "/*.parquet"))
+    dirs = store._snap._read_manifest(store._snap.current_version())["dirs"]
+    return sum(len(glob.glob(d + "/*.parquet")) for d in dirs)
 
 
 def test_compact_merges_small_files(store):
@@ -143,28 +141,6 @@ def test_metadata_filter_typed_values(store):
         store.query("doc", top_k=5, metadata_filter={"ok": None})
     with pytest.raises(VectoliteError):
         store.query("doc", top_k=5, metadata_filter={"ok": [1, 2]})
-
-
-def test_rewrite_crash_recovery(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "crashdb")
-    store = SparkVectolite(spark, path, embed_fn=stub_embedder(dim=8))
-    store.insert_many(["survivor one", "survivor two"])
-    # simulate a crash between _rewrite's two renames: live data sits in
-    # .bak, the store path is gone, a half-written .tmp is left behind
-    os.rename(path, path + ".bak")
-    os.makedirs(path + ".tmp")
-    reopened = SparkVectolite(spark, path, embed_fn=stub_embedder(dim=8))
-    assert reopened.count_documents() == 2  # .bak restored
-    assert not os.path.exists(path + ".tmp")  # stale leftovers cleared
-    assert not os.path.exists(path + ".bak")
-    # a stale .bak alongside a LIVE path is deleted, not restored over it
-    reopened.delete_document(1)
-    os.makedirs(path + ".bak")
-    again = SparkVectolite(spark, path, embed_fn=stub_embedder(dim=8))
-    assert again.count_documents() == 1
-    assert not os.path.exists(path + ".bak")
 
 
 def test_stats(store):
@@ -247,9 +223,7 @@ def test_hybrid_query_fuses_lexical_and_vector(spark, tmp_path):
 def test_versioned_time_travel_roundtrip(spark, tmp_path):
     """VERDICT r2 item 6: delete/upsert through the facade are snapshot
     commits — every prior state stays readable, rollback restores it."""
-    db = SparkVectolite(
-        spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8), versioned=True
-    )
+    db = SparkVectolite(spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8))
     db.insert_many(["one doc", "two doc", "three doc"])
     assert db.delete_document(2) is True
     assert db.count_documents() == 2
@@ -267,9 +241,7 @@ def test_versioned_time_travel_roundtrip(spark, tmp_path):
 def test_versioned_delete_prunes_untouched_commits(spark, tmp_path):
     """A delete must rewrite ONLY the commit dirs containing the id —
     the other dirs ride into the new manifest unchanged (O(delta) COW)."""
-    db = SparkVectolite(
-        spark, str(tmp_path / "pdb"), embed_fn=stub_embedder(dim=8), versioned=True
-    )
+    db = SparkVectolite(spark, str(tmp_path / "pdb"), embed_fn=stub_embedder(dim=8))
     db.insert_many(["first batch doc"])   # commit 0
     db.insert_many(["second batch doc"])  # commit 1
     db.insert_many(["third batch doc"])   # commit 2
@@ -280,21 +252,6 @@ def test_versioned_delete_prunes_untouched_commits(spark, tmp_path):
     # the two untouched dirs are literally the same paths as before
     assert len(before & set(after["dirs"])) == 2
     assert db.count_documents() == 2
-
-
-def test_unversioned_store_rejects_versioned_api(store):
-    """BY-DESIGN skip on the versioned fixture variant (pinned, VERDICT
-    r8 item 8): this asserts the FLAT backend's loud rejection of the
-    versioned-only API; the versioned variant exercises those APIs for
-    real throughout this file, so the rejection case doesn't exist
-    there — the skip marks an intentionally empty cell of the
-    2-backend test matrix, not a missing capability."""
-    if store._snap is not None:
-        pytest.skip("BY-DESIGN: rejection case only exists on the flat backend")
-    with pytest.raises(VectoliteError, match="not versioned"):
-        store.history()
-    with pytest.raises(VectoliteError, match="not versioned"):
-        store.rollback(0)
 
 
 def test_ann_query_build_probe_and_invalidate(spark, tmp_path):
@@ -495,17 +452,12 @@ def test_store_grep_with_text_index(store):
 
 
 def test_versioned_mutations_invalidate_text_index(spark, tmp_path):
-    """The dir-pruned snapshot mutations (merge/delete/rollback) bypass
-    _rewrite/_append — they must still drop the text index, or grep
-    serves results from a table state that no longer exists."""
+    """The dir-pruned snapshot mutations (merge/delete/rollback) must
+    drop the text index, or grep serves results from a table state that
+    no longer exists."""
     import datetime as dt
 
-    s = SparkVectolite(
-        spark,
-        str(tmp_path / "vdb"),
-        embed_fn=stub_embedder(dim=8),
-        versioned=True,
-    )
+    s = SparkVectolite(spark, str(tmp_path / "vdb"), embed_fn=stub_embedder(dim=8))
     s.insert("original text one")
     s.insert("hash aggregate only")
     s.build_text_index()
@@ -603,3 +555,115 @@ def test_query_rejects_non_finite_query_vector(poison_store, bad):
     with pytest.raises(VectoliteError, match="non-finite"):
         poison_store.query("poison", top_k=3, ann=True)
     poison_store.disable_batched_serving()
+
+
+def test_versioned_false_is_rejected(spark, tmp_path):
+    """``versioned`` has one legal value: the flat backend is gone, and
+    asking for it fails before anything is created."""
+    path = tmp_path / "noflat"
+    with pytest.raises(VectoliteError, match="flat parquet backend was removed"):
+        SparkVectolite(spark, str(path), versioned=False)
+    assert not path.exists()
+
+
+def _tree_bytes(root) -> dict:
+    """Every file under ``root`` (relative path -> bytes)."""
+    import os
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            p = os.path.join(d, n)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_flat_layout_directory_is_refused(spark, tmp_path):
+    """A directory the removed flat backend wrote (parquet files at the
+    root, no ``_versions/``) or its interrupted-rewrite leftover (the
+    live rows in ``<path>.bak``) is refused loudly and left byte for
+    byte as it was; opening it as a snapshot table would see an empty
+    store and restart ids at 1. The migration the message names keeps
+    every id."""
+    import datetime as dt
+    import os
+
+    from vectolite_spark.schema import DOCUMENT_STORE_SCHEMA
+    from vectolite_spark.snapshots import SnapshotStore
+
+    old = str(tmp_path / "flatdb")
+    now = dt.datetime(2026, 1, 1)
+    rows = [
+        (i, f"legacy doc {i}", "{}", [float(i), 1.0, 0.0, 0.0], now)
+        for i in (3, 7, 9)
+    ]
+    spark.createDataFrame(rows, DOCUMENT_STORE_SCHEMA).write.parquet(old)
+    before = _tree_bytes(tmp_path)
+    with pytest.raises(VectoliteError, match="flat parquet store") as e:
+        SparkVectolite(spark, old)
+    assert "SnapshotStore(spark, new_path).append" in str(e.value)
+    assert _tree_bytes(tmp_path) == before
+
+    # a rewrite that crashed between its two renames: path gone, the
+    # live rows in <path>.bak
+    os.rename(old, old + ".bak")
+    before = _tree_bytes(tmp_path)
+    with pytest.raises(VectoliteError, match="interrupted flat-store rewrite"):
+        SparkVectolite(spark, old)
+    assert _tree_bytes(tmp_path) == before
+    assert not os.path.exists(old)
+
+    new = str(tmp_path / "migrated")
+    SnapshotStore(spark, new).append(spark.read.parquet(old + ".bak"))
+    db = SparkVectolite(spark, new, embed_fn=stub_embedder(dim=4))
+    assert db.count_documents() == 3
+    assert sorted(r["id"] for r in db.df().select("id").collect()) == [3, 7, 9]
+    assert db.insert("after migration") == 10
+
+
+def test_readers_racing_writers_see_whole_commits(spark, tmp_path):
+    """``count_documents()`` readers racing a writer that repeatedly
+    compacts and deletes on a default-constructed store: every read
+    returns a count some committed version holds, each reader's counts
+    never go back up, and no read raises. A reader must never see a
+    half-swapped table or a manifest whose bytes have not landed."""
+    import threading
+
+    db = SparkVectolite(
+        spark, str(tmp_path / "racedb"), embed_fn=stub_embedder(dim=8)
+    )
+    ids = []
+    for b in range(3):
+        ids += db.insert_many([f"race doc {b}-{i}" for i in range(20)])
+    n0, rounds = len(ids), 8
+    done = threading.Event()
+    reads: list[list[int]] = [[], []]
+    errors: list[BaseException] = []
+
+    def reader(log: list[int]) -> None:
+        while not done.is_set():
+            try:
+                log.append(db.count_documents())
+            except Exception as e:  # the test's verdict, asserted below
+                errors.append(e)
+
+    threads = [threading.Thread(target=reader, args=(r,)) for r in reads]
+    for t in threads:
+        t.start()
+    try:
+        for i in range(rounds):
+            db.compact()
+            assert db.delete_document(ids[i * 7])
+    finally:
+        done.set()
+        for t in threads:
+            t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, f"{len(errors)} reads raised, first: {errors[0]!r}"
+    allowed = {n0 - d for d in range(rounds + 1)}
+    for log in reads:
+        assert log, "each reader completed reads"
+        assert set(log) <= allowed, sorted(set(log) - allowed)
+        assert log == sorted(log, reverse=True)
+    assert db.count_documents() == n0 - rounds

@@ -101,10 +101,7 @@ def test_manage_stats_and_errors(ui):
 
 def test_manage_history_and_rollback_versioned(spark, tmp_path):
     store = SparkVectolite(
-        spark,
-        str(tmp_path / "uivdb"),
-        embed_fn=stub_embedder(dim=8),
-        versioned=True,
+        spark, str(tmp_path / "uivdb"), embed_fn=stub_embedder(dim=8)
     )
     store.insert("keep me around")
     store.insert("delete me soon")

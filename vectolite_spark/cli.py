@@ -19,20 +19,6 @@ import sys
 from vectolite_spark.errors import VectoliteError
 
 
-def _wants_versioned(args, spark) -> bool:
-    """--versioned opts in; an existing snapshot layout (a ``_versions``
-    dir) is auto-detected so a versioned store never gets misread as a
-    flat parquet dir when the flag is forgotten. The probe goes through
-    the same Hadoop FS abstraction the store uses, so detection also
-    works for non-local --db paths (hdfs://, s3a://), not just POSIX."""
-    if bool(getattr(args, "versioned", False)):
-        return True
-    from vectolite_spark.store import _HadoopFS
-
-    db = args.db.rstrip("/")
-    return _HadoopFS(spark, db).exists(f"{db}/_versions")
-
-
 def _open_store(args):
     """Read-path store (no embedder needed)."""
     from vectolite_spark.session import get_spark
@@ -40,9 +26,7 @@ def _open_store(args):
 
     spark = get_spark("vectolite-cli")
     spark.sparkContext.setLogLevel("ERROR")
-    return SparkVectolite(
-        spark, args.db, versioned=_wants_versioned(args, spark)
-    )
+    return SparkVectolite(spark, args.db)
 
 
 def _build_store(args):
@@ -59,10 +43,7 @@ def _build_store(args):
         embed_fn = resolve_embed_fn(
             getattr(args, "model", None), local=(embedder == "local")
         )
-    return SparkVectolite(
-        spark, args.db, embed_fn=embed_fn,
-        versioned=_wants_versioned(args, spark),
-    )
+    return SparkVectolite(spark, args.db, embed_fn=embed_fn)
 
 
 def _parse_metadata(raw: str | None) -> dict | None:
@@ -306,12 +287,6 @@ def make_parser() -> argparse.ArgumentParser:
 
     def common(sp, embed=True):
         sp.add_argument("--db", default="vectolite_store", help="store directory")
-        sp.add_argument(
-            "--versioned",
-            action="store_true",
-            help="snapshot-versioned backend (time travel, rollback); "
-            "auto-detected for existing versioned stores",
-        )
         if embed:
             sp.add_argument("--embedder", choices=["stub", "local", "openai"], default="stub")
             # reference-parity aliases (vectolite.py:424-447): --local /
@@ -432,7 +407,7 @@ def make_parser() -> argparse.ArgumentParser:
     common(sp, embed=False)
     sp.set_defaults(fn=cmd_show)
 
-    sp = sub.add_parser("history", help="commit log of a versioned store")
+    sp = sub.add_parser("history", help="commit log of the store")
     common(sp, embed=False)
     sp.set_defaults(fn=cmd_history)
 

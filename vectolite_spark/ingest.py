@@ -235,7 +235,7 @@ def ingest_jsonl(
     appending nothing — the file exists but is not line-delimited JSON,
     or has no non-empty text field (ADVICE r2)."""
     files_df = read_jsonl(store.spark, paths, text_field=text_field)
-    # emptiness check BEFORE the append: on a versioned store the append
+    # emptiness check BEFORE the append: every store append
     # is a commit, and a failed ingest must not leave an empty 'append'
     # version in history (ADVICE r3)
     if files_df.limit(1).count() == 0:

@@ -31,7 +31,7 @@ lifecycle, owned here:
   requires the rebuild, because the sync cannot tell the two apart.
 
 No reference counterpart (vectolite.py has neither indexes nor a
-versioned store) — north-star extension surface.
+snapshot store) — north-star extension surface.
 """
 
 from __future__ import annotations

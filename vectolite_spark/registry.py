@@ -89,7 +89,7 @@ def vacuum_index_cache(
        be read again (build-if-absent keys on the current recipe
        string) and are dropped; ALL entries at the max version survive
        — keying on the truncated family alone evicted live parameter
-       variants on every vacuum (ADVICE r9). Unversioned recipes skip
+       variants on every vacuum (ADVICE r9). Recipes without a _vN tag skip
        this rule.
     2. max_age_days: drop survivors whose mtime is older — safe by
        construction, every consumer rebuilds on miss.
@@ -9072,7 +9072,7 @@ _ZONEMAP_SQL = ORACLES["zonemap_pruned_scan"]
 
 @register("snapshot_zorder_pruned_scan", _ZONEMAP_SQL)
 def snapshot_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order compaction INSIDE the versioned store (VERDICT r6 item 5):
+    """Z-order compaction INSIDE the snapshot store (VERDICT r6 item 5):
     events land over three append commits, ``compact(zorder_by=
     ["user_id", "ts"])`` rewrites them Morton-ordered with a per-file
     zone map recorded in the manifest, and ``read_pruned`` answers the
@@ -9125,7 +9125,7 @@ WHERE doc_id % 3 = 0
 """,
 )
 def snapshot_changed_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental consumption off the versioned store (Delta CDF shape):
+    """Incremental consumption off the snapshot store (Delta CDF shape):
     commit the corpus in two appends, then ``read_changes(v0, v1)``
     hands a downstream job ONLY the rows added in between — a manifest
     set-difference whose scan touches delta bytes only, never the
@@ -9178,7 +9178,7 @@ SELECT CAST((SELECT COUNT(*) FROM documents WHERE lang = 'de') AS BIGINT)
 """,
 )
 def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-be-forgotten round trip on the versioned store: append
+    """Right-to-be-forgotten round trip on the snapshot store: append
     the corpus, COW-delete one language, AUDIT PRE-VACUUM (the audit
     must still FIND the rows in retained history — on a time-traveling
     table a delete is not erasure until retention drops the old

@@ -1,10 +1,9 @@
-"""Snapshot-versioned table layer: manifest-listed immutable parquet data
+"""Snapshot table layer: manifest-listed immutable parquet data
 directories with time travel, rollback, optimistic-concurrency commits,
 and retention vacuum — the minimum table format a 100 TB store actually
-needs, and the upgrade path ``store.py`` documents (its single-directory
-COW swap is the reference-parity layer; THIS is the Delta/Iceberg-shaped
-answer, self-contained so the engine has no external table-format
-dependency).
+needs, and the one backend behind ``store.SparkVectolite``: the
+Delta/Iceberg-shaped answer, self-contained so the engine has no
+external table-format dependency.
 
 Layout:
     <path>/data/v<NNNNNNNN>-<op>/   immutable parquet dirs, one per commit
@@ -20,12 +19,17 @@ Commit protocol (single cheap primitive, works on any Hadoop FS):
 
 Readers never list data dirs: a version IS its manifest's dir list, so a
 reader of version N is immune to concurrent commits (snapshot isolation).
+The create in step 2 makes the manifest visible before its bytes land,
+so a reader that lists it mid-write waits briefly for them
+(``_read_manifest``) instead of failing or falling back to an older
+version.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,6 +37,10 @@ from vectolite_spark.errors import VectoliteError
 from vectolite_spark.localframe import local_df
 from vectolite_spark.session import phase
 from vectolite_spark.store import _HadoopFS
+
+
+# how long a reader waits for a listed manifest's bytes to land
+_MANIFEST_WAIT_S = 2.0
 
 
 class SnapshotConflict(VectoliteError):
@@ -72,12 +80,28 @@ class SnapshotStore:
         return vs[-1] if vs else -1
 
     def _read_manifest(self, version: int) -> dict:
+        """The manifest of ``version``. A commit's create makes the file
+        visible empty, before its writer's bytes land: an empty or
+        unparseable manifest is re-read for up to ``_MANIFEST_WAIT_S``
+        (every proper prefix of a JSON object is invalid JSON, so a
+        parse never accepts a half-written one), then raises naming the
+        path — never a silent fall back to an older version."""
         p = self._manifest_path(version)
         if not self._fs.exists(p):
             raise VectoliteError(
                 f"version {version} does not exist (or was vacuumed)"
             )
-        return json.loads(self._fs.read_text(p))
+        deadline = time.monotonic() + _MANIFEST_WAIT_S
+        while True:
+            try:
+                return json.loads(self._fs.read_text(p))
+            except ValueError as e:  # empty or partially written
+                if time.monotonic() >= deadline:
+                    raise VectoliteError(
+                        f"manifest {p} is still unreadable after "
+                        f"{_MANIFEST_WAIT_S:g} s: {e}"
+                    ) from e
+            time.sleep(0.01)
 
     # -- schema evolution ------------------------------------------------------
 
@@ -406,7 +430,7 @@ class SnapshotStore:
     def read_pruned(
         self, ranges: dict[str, tuple], version: int | None = None
     ) -> tuple[DataFrame, int, int]:
-        """Zone-map data skipping over the versioned table: dirs with a
+        """Zone-map data skipping over the snapshot table: dirs with a
         recorded zone map scan ONLY the files whose (min, max) rectangle
         intersects every predicate range; dirs without one (appends since
         the last z-order compact) scan fully with the residual filter.
@@ -550,7 +574,7 @@ class SnapshotStore:
     def diff(self, v_old: int, v_new: int, key: str = "id") -> DataFrame:
         """Row-level diff between two versions keyed by ``key``: returns
         (key, change) with change in {'added', 'removed'} — the
-        CDC-style "what happened between v1 and v2" question a versioned
+        CDC-style "what happened between v1 and v2" question a snapshot
         table should answer without replaying the commit log. Shape: two
         anti-joins on the key; dirs SHARED by both manifests are read
         only for the side that still needs them, and at 100 TB both

@@ -1,4 +1,4 @@
-"""SparkVectolite — the reference's public API surface over a parquet store.
+"""SparkVectolite — the reference's public API over a parquet snapshot table.
 
 Compatibility facade (SURVEY.md §3.3): same six methods as the reference
 ``Vectolite`` class (/root/reference/vectolite.py:45-298) — insert, query,
@@ -7,18 +7,20 @@ batch-first ``insert_many`` that a Spark engine actually wants (the reference
 embeds and commits one row per call; we embed per Arrow batch and append
 once, SURVEY.md §4.1 'Batching').
 
-Store layout: a parquet directory with the DOCUMENT_STORE_SCHEMA
-(id, text, metadata JSON-string, embedding array<float>, created_at).
-At 100 TB this directory becomes a partitioned table (by ingest date or
-source) on a table format with ACID deletes (Delta/Iceberg); the facade's
-semantics don't change, only `_rewrite` stops being O(table).
+Store layout: one ``snapshots.SnapshotStore`` table with the
+DOCUMENT_STORE_SCHEMA (id, text, metadata JSON-string, embedding
+array<float>, created_at). Every mutation is a manifest commit: new
+immutable data dir first, then a create-if-absent manifest (the CAS),
+so a reader sees either the old version or the new one — never a
+half-applied delete — and a crash strands a dir for vacuum instead of
+corrupting the table. Deletes and upserts rewrite only the commit dirs
+that hold the affected ids; every store has time travel, rollback,
+vacuum and version diffs.
 
 All filesystem operations go through the Hadoop FileSystem API (via the
 JVM gateway), NOT os/shutil — so the same store code runs against
 file://, hdfs://, or s3a:// paths; the 100 TB store does not live on a
-local POSIX disk. The delete/compact swap is a write-new + double-rename;
-a crash between the renames is recovered on the next open (see
-``_recover``).
+local POSIX disk.
 """
 
 from __future__ import annotations
@@ -361,32 +363,38 @@ class _BatchedSet:
 
 
 class SparkVectolite:
-    """Parquet-backed document+vector store with the reference's semantics."""
+    """Snapshot-table document+vector store with the reference's semantics."""
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         embed_fn: EmbedFn | None = None,
-        versioned: bool = False,
+        versioned: bool = True,
     ):
-        """``versioned=True`` backs the store with ``snapshots.SnapshotStore``
-        instead of a single parquet directory: every mutation becomes a
-        manifest commit (CAS, crash = stranded dir, never a corrupt table),
-        deletes/upserts are dir-pruned O(delta) rewrites, and the store
-        gains ``history()/read_version()/rollback()/vacuum()``. The flat
-        backend keeps the reference's simple single-dir layout."""
+        """Open (or create) the store at ``path``. ``versioned`` has one
+        legal value: every store is a snapshot table, and the keyword is
+        accepted only so existing ``versioned=True`` callers keep
+        working. A directory in the removed flat parquet layout is
+        refused before anything is created (``_refuse_flat_layout``)."""
         from vectolite_spark.session import ensure_shipped
+        from vectolite_spark.snapshots import SnapshotStore
 
+        if not versioned:
+            raise VectoliteError(
+                "the flat parquet backend was removed: every store is a "
+                "snapshot table; drop versioned=False"
+            )
         self.spark = spark
         self.path = path.rstrip("/")
         self.embed_fn = embed_fn
         ensure_shipped(spark)
         self._fs = _HadoopFS(spark, self.path)
+        self._refuse_flat_layout()
+        self._snap = SnapshotStore(spark, self.path)
         self._max_id_cache: int | None = None
         self._dim_cache: int | None = None
         self._trgm_handle = None
-        self._snap = None
         # serving state (enable_batched_serving): one slot
         self._serving_cfg: dict | None = None
         self._working_set = None  # _ResidentSet | _BatchedSet | None
@@ -397,42 +405,47 @@ class SparkVectolite:
         # across Spark jobs — mutations and already-built serving paths
         # never stall behind a build (ADVICE r9 / r10 review)
         self._serving_build_lock = threading.Lock()
-        if versioned:
-            from vectolite_spark.snapshots import SnapshotStore
-
-            self._snap = SnapshotStore(spark, self.path)
-        else:
-            self._recover()
-            self._fs.mkdirs(self.path)
 
     # -- internals ---------------------------------------------------------
 
-    def _recover(self) -> None:
-        """Heal an interrupted ``_rewrite``: if a crash hit between the two
-        renames, the live data sits in ``.bak`` and ``path`` is gone —
-        restore it. Stale ``.tmp``/``.bak`` leftovers are deleted so the
-        next rewrite cannot fail on a rename collision."""
-        bak, tmp = self.path + ".bak", self.path + ".tmp"
-        if self._fs.exists(bak) and not self._fs.exists(self.path):
-            self._fs.rename(bak, self.path)
-        for stale in (tmp, bak):
-            if self._fs.exists(stale):
-                self._fs.delete(stale)
+    def _refuse_flat_layout(self) -> None:
+        """Refuse, loudly and without touching anything, a directory the
+        removed flat backend wrote: parquet part files at the root with
+        no ``_versions/``, or the backup sibling (``leftover``) its
+        rename swap left behind when a rewrite crashed between its two
+        renames.
+        Opening either as a snapshot table would see an empty store and
+        restart ids at 1."""
+        migrate = (
+            "SnapshotStore(spark, new_path).append(spark.read.parquet("
+            "old_path)) copies it into a snapshot table and keeps the ids"
+        )
+        if self._fs.has_parquet_file(self.path) and not self._fs.exists(
+            f"{self.path}/_versions"
+        ):
+            raise VectoliteError(
+                f"{self.path} is a flat parquet store, a layout this "
+                f"version no longer opens; {migrate}"
+            )
+        leftover = self.path + ".bak"
+        if self._fs.exists(leftover):
+            raise VectoliteError(
+                f"{leftover} is left over from an interrupted flat-store "
+                f"rewrite and may hold the live rows; {migrate} (old_path: "
+                "whichever of the two holds them)"
+            )
 
     def _exists(self) -> bool:
-        if self._snap is not None:
-            return self._snap.current_version() >= 0
-        return self._fs.has_parquet_file(self.path)
+        return self._snap.current_version() >= 0
 
     def df(self) -> DataFrame:
         """The documents table as a DataFrame (empty if nothing inserted)."""
-        if not self._exists():
+        version = self._snap.current_version()
+        if version < 0:
             return local_df(self.spark, [], DOCUMENT_STORE_SCHEMA)
-        if self._snap is not None:
-            return self._snap.read().select(
-                "id", "text", "metadata", "embedding", "created_at"
-            )
-        return self.spark.read.schema(DOCUMENT_STORE_SCHEMA).parquet(self.path)
+        return self._snap.read(version).select(
+            "id", "text", "metadata", "embedding", "created_at"
+        )
 
     def _max_id(self) -> int:
         """Current max id, cached on the instance so an insert loop is
@@ -474,41 +487,6 @@ class SparkVectolite:
             self._dim_cache = None if row is None else int(row["d"])
             return self._dim_cache
 
-    def _rewrite(self, df: DataFrame) -> None:
-        """Immutable rewrite for delete/compact: write-new + double-rename.
-
-        The swap is not atomic on plain parquet (Delta/Iceberg is the real
-        answer at scale, module docstring); the crash window between the
-        renames is made RECOVERABLE instead: the live rows always exist in
-        exactly one of ``path`` or ``path.bak``, and ``_recover`` (run on
-        every open and before every rewrite) restores ``.bak`` if ``path``
-        is missing and clears stale leftovers.
-
-        Versioned backend: the rewrite is a snapshot ``overwrite`` commit —
-        atomic by manifest CAS, and the prior version stays readable."""
-        self._max_id_cache = None  # rewrites may drop or remap the max id
-        if self._snap is not None:
-            self._mutate(lambda: self._snap.overwrite(df))
-            return
-
-        def swap():
-            self._recover()
-            tmp, bak = self.path + ".tmp", self.path + ".bak"
-            df.write.mode("overwrite").parquet(tmp)
-            self._fs.rename(self.path, bak)
-            self._fs.rename(tmp, self.path)
-            self._fs.delete(bak)
-
-        self._mutate(swap)
-
-    def _append(self, df: DataFrame) -> None:
-        """Route an append through the active backend: flat parquet append,
-        or a snapshot ``append`` commit (new dir + manifest CAS)."""
-        if self._snap is not None:
-            self._mutate(lambda: self._snap.append(df))
-        else:
-            self._mutate(lambda: df.write.mode("append").parquet(self.path))
-
     def _mutate(self, commit: Callable[[], object]):
         """Run one table mutation between two invalidations of
         everything derived from the table (indexes, serving working
@@ -527,9 +505,8 @@ class SparkVectolite:
     # -- ANN acceleration (extension; reference is scan-only) ---------------
 
     def _ann_path(self) -> str:
-        # OUTSIDE the data directory: the flat backend's recoverable
-        # rewrite renames the whole data dir, and the parquet reader must
-        # never see index files mixed into the table
+        # beside the table directory, whose layout (data/, _versions/)
+        # belongs to the SnapshotStore alone
         return self.path + ".ann"
 
     def _index_ready(self, path: str) -> bool:
@@ -581,9 +558,7 @@ class SparkVectolite:
         """Umbrella for every mutation entry point: BOTH persisted
         indexes index a table state that no longer exists after any
         mutation. Every mutation runs through ``_mutate``, which calls
-        this on both sides of the commit (the versioned backend's
-        dir-pruned merge/delete and rollback bypass _rewrite/_append
-        and call ``_mutate`` directly)."""
+        this on both sides of the commit."""
         self._dim_cache = None  # rollback/delete can change the stored dim
         self._invalidate_ann()
         self._invalidate_text_index()
@@ -747,7 +722,11 @@ class SparkVectolite:
         if resident:
             return _ResidentSet(frame.toPandas(), planes)
         base = frame.coalesce(1).cache()
-        return _BatchedSet(base, planes, base.count(), cfg)
+        try:
+            return _BatchedSet(base, planes, base.count(), cfg)
+        except BaseException:
+            base.unpersist(blocking=False)  # a failed build caches nothing
+            raise
 
     def _serving_frame(self, planes: tuple[int, int]) -> DataFrame:
         """The working set's rows, (vec_id, embedding, text, metadata,
@@ -870,7 +849,7 @@ class SparkVectolite:
             for i, (t, m, e) in enumerate(zip(texts, metadatas, embeddings))
         ]
         df = local_df(self.spark, rows, DOCUMENT_STORE_SCHEMA)
-        self._append(df)
+        self._mutate(lambda: self._snap.append(df))
         self._max_id_cache = start + len(texts) - 1
         return list(range(start, start + len(texts)))
 
@@ -939,7 +918,7 @@ class SparkVectolite:
         out = out.observe(
             obs, F.count(F.lit(1)).alias("n"), F.max("id").alias("max_id")
         )
-        self._append(out)
+        self._mutate(lambda: self._snap.append(out))
         got = obs.get
         if got["max_id"] is not None:
             self._max_id_cache = max(self._max_id_cache or 0, int(got["max_id"]))
@@ -1164,13 +1143,11 @@ class SparkVectolite:
         reference has no update operation at all, its only mutation is
         insert/delete, vectolite.py:92-199).
 
-        Plan: existing LEFT ANTI updates (drop every to-be-replaced row)
-        UNION ALL validated updates, then the store's recoverable
-        rewrite. This is copy-on-write MERGE at table granularity; on a
-        real 100 TB lakehouse the same statement runs as Delta/Iceberg
-        ``MERGE INTO``, which prunes the rewrite to only the files
-        containing matched keys — table-level COW is the honest parquet
-        approximation, and the anti-join+union shape is identical.
+        Plan: one dir-pruned ``snapshots.SnapshotStore.merge`` commit —
+        only the commit dirs holding a matched id are rewritten (LEFT
+        ANTI the update keys), untouched dirs carry over, and the
+        validated updates land as one new dir: O(delta + affected dirs),
+        the Delta/Iceberg ``MERGE INTO`` shape.
 
         Returns {"updated": n, "inserted": n}.
         """
@@ -1186,13 +1163,8 @@ class SparkVectolite:
                 f"({n_updates - n_distinct} extra rows)"
             )
         n_matched = existing.join(incoming, "id", "left_semi").count()
-        if self._snap is not None:
-            # dir-pruned MERGE: O(delta + affected dirs), not O(table)
-            self._max_id_cache = None
-            self._mutate(lambda: self._snap.merge(incoming, key="id"))
-        else:
-            merged = existing.join(incoming, "id", "left_anti").unionByName(incoming)
-            self._rewrite(merged)
+        self._max_id_cache = None
+        self._mutate(lambda: self._snap.merge(incoming, key="id"))
         return {"updated": n_matched, "inserted": n_updates - n_matched}
 
     def count_documents(self) -> int:
@@ -1201,17 +1173,13 @@ class SparkVectolite:
 
     def delete_document(self, doc_id: int) -> bool:
         """P3 (vectolite.py:186-199): returns True iff the row existed.
-        Versioned backend: dir-pruned COW delete — only the commit dirs
-        containing the id are rewritten (parquet footer min/max stats make
-        the per-dir probe metadata-only), history stays travelable."""
-        df = self.df()
-        if df.filter(F.col("id") == doc_id).limit(1).count() == 0:
+        Dir-pruned COW delete — only the commit dirs containing the id are
+        rewritten (parquet footer min/max stats make the per-dir probe
+        metadata-only), history stays travelable."""
+        if self.df().filter(F.col("id") == doc_id).limit(1).count() == 0:
             return False
-        if self._snap is not None:
-            self._max_id_cache = None
-            self._mutate(lambda: self._snap.delete_where(F.col("id") == doc_id))
-        else:
-            self._rewrite(df.filter(F.col("id") != doc_id))
+        self._max_id_cache = None
+        self._mutate(lambda: self._snap.delete_where(F.col("id") == doc_id))
         return True
 
     def get_document(self, doc_id: int) -> dict | None:
@@ -1268,11 +1236,13 @@ class SparkVectolite:
         """Rewrite the store into ``target_files`` parquet files, sorted by
         id. Long-lived stores accumulate one file per append (the classic
         small-files problem); compaction restores scan efficiency and
-        min/max-stat pruning on id. Returns the row count."""
+        min/max-stat pruning on id. One ``overwrite`` commit; the prior
+        version stays readable until vacuum. Returns the row count."""
         df = self.df().orderBy("id")
         n = df.count()
         if n:
-            self._rewrite(df.coalesce(max(1, target_files)))
+            arranged = df.coalesce(max(1, target_files))
+            self._mutate(lambda: self._snap.overwrite(arranged))
         return n
 
     def grep(
@@ -1408,43 +1378,33 @@ class SparkVectolite:
             "db_path": self.path,
         }
 
-    # -- versioned-backend API (snapshots.SnapshotStore passthrough) --------
-
-    def _require_versioned(self):
-        if self._snap is None:
-            raise VectoliteError(
-                "store is not versioned; open with SparkVectolite(..., versioned=True)"
-            )
-        return self._snap
+    # -- version API (snapshots.SnapshotStore passthrough) -----------------
 
     def history(self) -> list[dict]:
-        """Commit log, newest first (versioned stores only)."""
-        return self._require_versioned().history()
+        """Commit log, newest first."""
+        return self._snap.history()
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: the documents table as of ``version``."""
-        return (
-            self._require_versioned()
-            .read(version=version)
-            .select("id", "text", "metadata", "embedding", "created_at")
+        return self._snap.read(version=version).select(
+            "id", "text", "metadata", "embedding", "created_at"
         )
 
     def rollback(self, version: int) -> int:
         """Restore ``version`` as a NEW commit (history is never mutated)."""
-        snap = self._require_versioned()
         self._max_id_cache = None
-        return self._mutate(lambda: snap.rollback(version))
+        return self._mutate(lambda: self._snap.rollback(version))
 
     def vacuum(self, keep_versions: int = 2) -> dict:
         """Drop old manifests + unreferenced data dirs (retention GC)."""
-        return self._require_versioned().vacuum(keep_versions)
+        return self._snap.vacuum(keep_versions)
 
     def diff(self, v_old: int, v_new: int) -> DataFrame:
         """CDC-style row diff between two versions: (id, change) with
         change in {'added', 'removed'}; unchanged docs never leave the
         scan (manifest-set pruning, see ``snapshots.SnapshotStore.diff``).
         """
-        return self._require_versioned().diff(v_old, v_new, key="id")
+        return self._snap.diff(v_old, v_new, key="id")
 
     def hybrid_query(self, query_text: str, top_k: int = 3) -> list[dict]:
         """Hybrid search over the store (engine extension; the reference is

@@ -257,16 +257,15 @@ def make_handler(store, max_chars: int = 2000, overlap: int = 200):
                 "<p>Document ID to delete: <input name=id size=8> "
                 "<button>Delete Document by ID</button></p></form>"
             ]
-            if getattr(store, "_snap", None) is not None:
-                body.append("<hr><h3>Version History</h3>")
-                for h in store.history():
-                    body.append(
-                        f"<div class=card>v{h['version']} — {_esc(h['op'])} "
-                        f"({h['n_dirs']} dirs) {_esc(h['committed_at'])} "
-                        "<form method=post action=/rollback style=display:inline>"
-                        f'<input type=hidden name=version value={h["version"]}>'
-                        "<button>Rollback to this</button></form></div>"
-                    )
+            body.append("<hr><h3>Version History</h3>")
+            for h in store.history():
+                body.append(
+                    f"<div class=card>v{h['version']} — {_esc(h['op'])} "
+                    f"({h['n_dirs']} dirs) {_esc(h['committed_at'])} "
+                    "<form method=post action=/rollback style=display:inline>"
+                    f'<input type=hidden name=version value={h["version"]}>'
+                    "<button>Rollback to this</button></form></div>"
+                )
             self._send("".join(body))
 
     return Handler
