@@ -114,6 +114,22 @@ def test_read_files_schema(spark, tmp_path):
     assert r["filename"] == "a.txt" and r["text"] == "body text"
 
 
+def test_read_files_glob_lists_one_task_per_core(spark, tmp_path, count_jobs):
+    """A 200-file glob is listed by one Spark job of at most one task per
+    core, not one task per file; every file still reads."""
+    for i in range(200):
+        (tmp_path / f"f{i:03d}.txt").write_text(f"file {i}")
+    with count_jobs() as jobs:
+        df = read_files(spark, str(tmp_path / "*.txt"))
+    st = spark.sparkContext.statusTracker()
+    tasks = [
+        sum(st.getStageInfo(sid).numTasks for sid in st.getJobInfo(j).stageIds)
+        for j in jobs
+    ]
+    assert tasks and max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    assert df.count() == 200
+
+
 def test_read_jsonl_extracts_text_and_meta(spark, tmp_path):
     import json as _json
 

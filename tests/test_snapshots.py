@@ -168,6 +168,7 @@ def test_merge_prunes_and_upserts(store, spark):
     v = store.merge(incoming, key="id")
     m = store._read_manifest(v)
     assert m["rewritten_dirs"] == 1 and m["pruned_dirs"] == 1
+    assert m["matched_rows"] == 1  # id 2 replaced; id 9 is new
     assert len(set(dirs_before) & set(m["dirs"])) == 1
     rows = {r["id"]: r["text"] for r in store.read().collect()}
     assert rows == {1: "doc 1", 2: "doc 2 v2", 3: "doc 3", 4: "doc 4", 9: "doc 9"}
@@ -261,22 +262,54 @@ def test_delete_all_rows_of_a_dir_keeps_table_readable(store, spark):
     assert _ids(store.read()) == [1, 2]
 
 
-def test_single_probe_job_for_many_dirs(store, spark):
-    """The matched-dir probe is ONE Spark job regardless of dir count."""
+def test_single_probe_job_for_many_dirs(store, spark, count_jobs):
+    """The matched-dir probe costs a fixed number of Spark jobs
+    regardless of dir count."""
     for c in range(6):
         store.append(_df(spark, [c * 10, c * 10 + 1]))
-    sc = spark.sparkContext
-    sc.setJobGroup("snap-delete-jobs", "count jobs in delete_where")
-    try:
+    with count_jobs() as jobs:
         store.delete_where(F.col("id") == 30)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("snap-delete-jobs")
-    # constant job count (probe + rewrite + schema/AQE bookkeeping), never
-    # O(dirs) round trips — the r3 shape ran >= 1 probe job PER dir (>= 7
-    # jobs here before the rewrite even started)
-    assert len(jobs) <= 6, f"delete ran {len(jobs)} jobs for 6 dirs"
+    # the probe's aggregate (map stage + result under AQE) and the one
+    # rewrite, never O(dirs) round trips — the r3 shape ran >= 1 probe
+    # job PER dir (>= 7 jobs here before the rewrite even started)
+    assert len(jobs) <= 3, f"delete ran {len(jobs)} jobs for 6 dirs"
     assert _ids(store.read()) == [0, 1, 10, 11, 20, 21, 31, 40, 41, 50, 51]
+
+
+def test_every_mutation_job_carries_a_phase_label(
+    store, spark, count_jobs, job_description
+):
+    """Every Spark job a snapshot mutation submits is labelled with its
+    op and version, so the event log and the UI say whose job it is."""
+    for c in range(3):
+        store.append(_df(spark, [c * 10, c * 10 + 1]))
+    mutations = {
+        "delete": lambda: store.delete_where(F.col("id") == 10),
+        "merge": lambda: store.merge(_df(spark, [20, 99]), key="id"),
+        "overwrite": lambda: store.overwrite(store.read()),
+        "compact": lambda: store.compact(zorder_by=["id"]),
+    }
+    for op, mutate in mutations.items():
+        v = store.current_version() + 1
+        with count_jobs() as jobs:
+            mutate()
+        labels = [job_description(j) for j in jobs]
+        assert jobs and all(
+            (d or "").startswith(f"snapshot {op} v{v}") for d in labels
+        ), f"{op}: {labels}"
+    assert _ids(store.read()) == [0, 1, 11, 20, 21, 99]
+
+
+def test_merge_rejects_duplicate_keys_and_leaves_nothing(store, spark):
+    """Duplicate source keys are ambiguous (SQL MERGE): the merge raises
+    after writing its source, before any commit, and deletes what it
+    wrote — the data dir listing is unchanged."""
+    store.append(_df(spark, [1, 2]))
+    before = sorted(store._fs.list_names(store._data_dir))
+    with pytest.raises(VectoliteError, match=r"duplicate ids \(1 extra rows; e\.g\. id 2\)"):
+        store.merge(_df(spark, [2, 2, 3]), key="id")
+    assert store.current_version() == 0
+    assert sorted(store._fs.list_names(store._data_dir)) == before
 
 
 def test_version_diff_added_removed(store, spark):

@@ -193,6 +193,83 @@ def test_upsert_rejects_duplicate_update_ids(store, spark):
     assert store.count_documents() == 1  # nothing applied
 
 
+UPDATE_SCHEMA = "id long, text string, metadata string, embedding array<float>"
+
+
+@pytest.mark.parametrize(
+    "case", ["duplicate ids", "dimension mismatch", "non-finite"]
+)
+def test_failed_upsert_leaves_nothing_behind(spark, tmp_path, case):
+    """A rejected upsert raises, commits no version and leaves the data
+    dir listing as it was: no rewrite of the dir holding id 1 and no
+    half-written (or written, then found duplicate) update dir."""
+    s = SparkVectolite(spark, str(tmp_path / "db"), embed_fn=stub_embedder(dim=4))
+    s.insert_many(["one doc", "two doc"])
+    s.insert_many(["three doc"])
+    ok = [0.5, 0.5, 0.0, 0.0]
+    second = {
+        "duplicate ids": (1, "one v3", None, ok),
+        "dimension mismatch": (7, "wrong dim", None, [0.1] * 3),
+        "non-finite": (7, "nan vec", None, [0.0, float("nan"), 0.0, 0.0]),
+    }[case]
+    updates = spark.createDataFrame([(1, "one v2", None, ok), second], UPDATE_SCHEMA)
+    data = s.path + "/data"
+    listing, version = sorted(s._fs.list_names(data)), s._snap.current_version()
+    with pytest.raises(Exception, match=case):
+        s.upsert(updates)
+    assert sorted(s._fs.list_names(data)) == listing
+    assert s._snap.current_version() == version
+    assert s.get_document(1)["text"] == "one doc"
+
+
+def test_deleted_id_is_never_reused(store):
+    """AUTOINCREMENT semantics (the reference's SQLite ids): deleting the
+    highest id does not hand it out again."""
+    assert store.insert_many(["a doc", "b doc", "c doc"]) == [1, 2, 3]
+    assert store.delete_document(3) is True
+    assert store.insert("d doc") == 4
+
+
+def test_small_writes_submit_a_fixed_handful_of_jobs(spark, tmp_path, count_jobs):
+    """Each small write is a fixed number of Spark jobs, whatever the
+    dir count: the caller's update frame is evaluated once, a delete
+    probes once, compact counts inside its write, and an absent id costs
+    a probe and nothing else."""
+    s = SparkVectolite(spark, str(tmp_path / "db"), embed_fn=stub_embedder(dim=8))
+    for d in range(3):  # three commit dirs, ids 1..9
+        s.insert_many([f"doc {d} {j}" for j in range(3)])
+    updates = spark.createDataFrame(
+        [(2, "doc two v2", None, [0.5] * 8), (20, "doc twenty", None, [0.25] * 8)],
+        UPDATE_SCHEMA,
+    )
+    with count_jobs() as jobs:
+        assert s.upsert(updates) == {"updated": 1, "inserted": 1}
+    assert len(jobs) <= 9, f"upsert ran {len(jobs)} jobs"
+    with count_jobs() as jobs:  # the upsert raised the max id, no rescan
+        assert s.insert_many(["after upsert"]) == [21]
+    assert len(jobs) <= 2, f"insert after upsert ran {len(jobs)} jobs"
+    with count_jobs() as jobs:
+        assert s.delete_document(5) is True
+    assert len(jobs) <= 3, f"delete ran {len(jobs)} jobs"
+
+    s.build_text_index()
+    s.build_ann_index()
+    s.enable_batched_serving()
+    assert s.query("doc 2 0", top_k=1)[0]["id"] == 7
+    working_set, version = s._working_set, s._snap.current_version()
+    with count_jobs() as jobs:
+        assert s.delete_document(999) is False
+    assert len(jobs) <= 2, f"absent delete ran {len(jobs)} jobs"
+    assert s._snap.current_version() == version
+    assert s._has_text_index() and s._index_ready(s._ann_path())
+    assert s._working_set is working_set
+
+    with count_jobs() as jobs:
+        assert s.compact() == 10
+    assert len(jobs) <= 3, f"compact ran {len(jobs)} jobs"
+    assert s.count_documents() == 10
+
+
 def test_hybrid_query_fuses_lexical_and_vector(spark, tmp_path):
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite

@@ -7,8 +7,10 @@ embed call + one transaction per chunk).
 
 Spark-first inversion (SURVEY.md §3.2): ONE declarative pipeline —
 ``spark.read.text(wholetext=True)`` over a glob -> chunk UDF + posexplode ->
-Arrow-batched embedding UDF -> single append job. N files land in one job
-with one write; embedding runs once per Arrow batch, not once per chunk.
+Arrow-batched embedding UDF -> single append job. N files land in two
+Spark jobs whatever N: the glob's file listing (run as a job above 32
+paths, one task per core, see ``session.get_spark``) and the one write;
+embedding runs once per Arrow batch, not once per chunk.
 """
 
 from __future__ import annotations

@@ -8,6 +8,11 @@ Scale notes (100 TB design, tested on local[N]):
   columnar batches, not pickled rows.
 - Session timezone pinned to UTC so event-time semantics match the DuckDB
   oracle (which treats parquet timestamps as UTC instants).
+- File listing sized to the cores: a read of more than 32 paths (a
+  ``dir/*.txt`` glob over 200 files) lists them in a Spark job whose task
+  count is ``min(paths, parallelPartitionDiscovery.parallelism)``.
+  Spark's default of 10,000 meant one task per file; one per core lists
+  the same paths with the same glob semantics, and still in parallel.
 """
 
 from __future__ import annotations
@@ -62,6 +67,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -30,8 +30,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import time
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from vectolite_spark.errors import VectoliteError
 from vectolite_spark.localframe import local_df
@@ -45,6 +47,19 @@ _MANIFEST_WAIT_S = 2.0
 
 class SnapshotConflict(VectoliteError):
     """Another writer committed this version first; reload and retry."""
+
+
+@dataclass(frozen=True)
+class Probe:
+    """What ``SnapshotStore.probe`` found: at ``version`` (whose
+    ``manifest`` and ``schema`` it read), the rows matching ``condition``
+    per data dir, ``hits = {dir: rows}``."""
+
+    condition: Column
+    version: int
+    manifest: dict
+    schema: StructType | None
+    hits: dict[str, int]
 
 
 class SnapshotStore:
@@ -244,70 +259,103 @@ class SnapshotStore:
         union schema automatically because it rewrites ``read()``)."""
         version = self.current_version() + 1
         new_dir = self._new_data_dir(version, op)
-        df.write.mode("error").parquet(new_dir)
+        with phase(f"snapshot {op} v{version}"):
+            df.write.mode("error").parquet(new_dir)
         return self._commit(
             [new_dir], op, extra={"schema": df.schema.json()}, version=version
         )
 
-    def _affected_dirs(self, dirs: list[str], probe, schema=None) -> list[str]:
-        """ONE Spark job that finds which data dirs contain rows matched
-        by ``probe`` (a DataFrame -> DataFrame transform): all dirs scan as
-        a single DataFrame, each row tagged with its source dir via
-        ``input_file_name()``, and the matched-dir set aggregates in one
-        pass. The r3 shape — a sequential ``limit(1).count()`` per dir —
-        was O(dirs) driver round-trips; this is O(1) jobs regardless of
-        dir count, and the predicate still pushes down into every scan.
-        ``schema``: pin the table schema so a probe referencing an
-        evolution-added column resolves against dirs written before it."""
+    def _affected_dirs(
+        self, dirs: list[str], probe, schema=None
+    ) -> dict[str, int]:
+        """Which data dirs contain rows matched by ``probe`` (a DataFrame
+        -> DataFrame transform), and how many: ``{dir: matched rows}`` in
+        ``dirs`` order, unmatched dirs absent. All dirs scan as a single
+        DataFrame, each row tagged with its source dir via
+        ``input_file_name()``, and the counts aggregate in one pass: a
+        constant number of Spark jobs whatever the dir count (two under
+        AQE, the aggregate's map stage and its result; a probe that
+        broadcasts a key set adds the broadcast's), where the r3 shape, a
+        sequential ``limit(1).count()`` per dir, was O(dirs) round-trips.
+        The predicate still pushes down into every scan. ``schema``: pin
+        the table schema so a probe referencing an evolution-added column
+        resolves against dirs written before it."""
         from pyspark.sql import functions as F
 
         tagged = self._read_dirs(dirs, schema).withColumn(
             "_src_dir", F.element_at(F.split(F.input_file_name(), "/"), -2)
         )
-        hit = {
-            r["_src_dir"]
-            for r in probe(tagged).select("_src_dir").distinct().collect()
+        counts = {
+            r["_src_dir"]: int(r["n"])
+            for r in probe(tagged)
+            .groupBy("_src_dir")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         }
-        return [d for d in dirs if d.rstrip("/").rsplit("/", 1)[-1] in hit]
+        names = {d: d.rstrip("/").rsplit("/", 1)[-1] for d in dirs}
+        return {d: counts[names[d]] for d in dirs if names[d] in counts}
+
+    def probe(self, condition: Column) -> Probe:
+        """Which dirs of the current version hold rows matching
+        ``condition``, and how many (``Probe.hits``; empty for an empty
+        store): the first half of ``delete_where``. A caller that must
+        know whether anything matches before it deletes (the store's
+        ``delete_document`` leaves its indexes alone for an absent id)
+        probes once and hands the ``Probe`` to ``delete_where``, which
+        then rewrites without probing again."""
+        version = self.current_version()
+        if version < 0:
+            return Probe(condition, version, {"dirs": []}, None, {})
+        prev = self._read_manifest(version)
+        schema = self._schema_of(version)
+        hits = {}
+        if prev["dirs"]:
+            with phase(f"snapshot delete v{version + 1} probe"):
+                hits = self._affected_dirs(
+                    prev["dirs"], lambda df: df.filter(condition), schema=schema
+                )
+        return Probe(condition, version, prev, schema, hits)
 
     def delete_where(self, condition) -> int:
         """DIR-PRUNED copy-on-write delete (the Delta/Iceberg shape): only
         the data dirs that actually CONTAIN matching rows are rewritten;
         untouched dirs are carried into the new manifest unchanged, so at
         100 TB a one-document delete rewrites one commit's worth of files,
-        not the table. The probe is ONE job over all dirs (see
-        ``_affected_dirs``); the survivors of every affected dir rewrite
-        together as one new dir in a second job. The old version stays
-        time-travelable."""
+        not the table. The probe (``probe``, ``_affected_dirs``) costs at
+        most two Spark jobs over all dirs; the survivors of every
+        affected dir rewrite together as one new dir in one more job. The
+        old version stays time-travelable.
+
+        ``condition`` is a Column predicate, or a ``Probe`` that
+        ``probe`` returned: its dirs are rewritten as probed, and the
+        commit is planned against the version it read, so a commit
+        landing since raises ``SnapshotConflict``."""
         from pyspark.sql import functions as F
 
-        version = self.current_version() + 1
+        p = condition if isinstance(condition, Probe) else self.probe(condition)
+        version = p.version + 1
         if version == 0:
             raise VectoliteError("store is empty (no commits yet)")
-        prev = self._read_manifest(version - 1)
-        dirs = prev["dirs"]
-        schema = self._schema_of(version - 1)
-        matched = self._affected_dirs(
-            dirs, lambda df: df.filter(condition), schema=schema
-        )
-        kept = [d for d in dirs if d not in set(matched)]
-        if matched:
+        dirs = p.manifest["dirs"]
+        kept = [d for d in dirs if d not in p.hits]
+        if p.hits:
             # SQL DELETE semantics: only predicate==TRUE rows die; a NULL
             # predicate keeps the row (bare ~condition would drop it)
-            survives = ~F.coalesce(condition, F.lit(False))
+            survives = ~F.coalesce(p.condition, F.lit(False))
             new_dir = self._new_data_dir(version, "delete")
-            self._read_dirs(matched, schema).filter(survives).write.mode(
-                "error"
-            ).parquet(new_dir)
+            with phase(f"snapshot delete v{version} rewrite"):
+                self._read_dirs(list(p.hits), p.schema).filter(
+                    survives
+                ).write.mode("error").parquet(new_dir)
             if self._dir_has_data(new_dir):
                 kept.append(new_dir)
         extra = {
-            "rewritten_dirs": len(matched),
-            "pruned_dirs": len(dirs) - len(matched),
+            "rewritten_dirs": len(p.hits),
+            "pruned_dirs": len(dirs) - len(p.hits),
         }
-        if schema is not None:
-            extra["schema"] = schema.json()  # delete never changes schema
-        carried = self._carried_zonemaps(prev, kept)
+        if p.schema is not None:
+            extra["schema"] = p.schema.json()  # delete never changes schema
+        carried = self._carried_zonemaps(p.manifest, kept)
         if carried:
             extra["zonemaps"] = carried  # rewritten dirs lose their stats
         return self._commit(kept, "delete", extra=extra, version=version)
@@ -317,9 +365,18 @@ class SnapshotStore:
         rewritten WITHOUT those rows (anti-join against the broadcast key
         set), untouched dirs are carried over, and ``incoming`` lands as
         one new dir — O(delta + affected dirs), the Delta ``MERGE INTO``
-        shape. The matched-dir probe is ONE job over all dirs
-        (``_affected_dirs``), and all affected dirs rewrite together in a
-        second job. Caller guarantees ``incoming`` has distinct keys."""
+        shape.
+
+        ``incoming`` is evaluated exactly once: it is written first, as
+        the commit's ``merge-in`` dir, and every later step reads that
+        dir, so an expensive source pipeline (or an ``observe`` on it)
+        runs once. Then, before anything commits: the duplicate-key check
+        (several source rows for one key is ambiguous, as in SQL MERGE,
+        and raises), the matched-dir probe (``_affected_dirs``) and one
+        rewrite of all affected dirs — at most eight Spark jobs under AQE
+        whatever the dir count. A failure before the commit deletes the
+        dirs this call wrote. The manifest records ``matched_rows``, the
+        number of existing rows the source replaced."""
         from pyspark.sql import functions as F
 
         version = self.current_version() + 1
@@ -327,37 +384,41 @@ class SnapshotStore:
         dirs = prev["dirs"]
         prev_schema = self._schema_of(version - 1)
         schema = self._evolve_schema(prev_schema, incoming.schema)
-        # cache the key set: it drives the probe, the rewrite anti-join,
-        # and would otherwise re-execute an expensive incoming pipeline
-        # (callers with a heavy upstream should also persist `incoming`:
-        # it is evaluated once more for the final write below)
-        key_set = incoming.select(key).distinct().cache()
+        inc_dir = self._new_data_dir(version, "merge-in")
+        written = [inc_dir]
         try:
-            keys = F.broadcast(key_set)
-            matched = (
-                self._affected_dirs(
-                    dirs,
-                    lambda df: df.join(keys, key, "left_semi"),
-                    schema=prev_schema,
-                )
-                if dirs
-                else []
-            )
-            kept = [d for d in dirs if d not in set(matched)]
-            if matched:
+            with phase(f"snapshot merge v{version} write"):
+                incoming.write.mode("error").parquet(inc_dir)
+            source = self._read_dirs([inc_dir], incoming.schema)
+            with phase(f"snapshot merge v{version} duplicate check"):
+                self._require_distinct(source, key)
+            keys = F.broadcast(source.select(key))
+            hits = {}
+            if dirs:
+                with phase(f"snapshot merge v{version} probe"):
+                    hits = self._affected_dirs(
+                        dirs,
+                        lambda df: df.join(keys, key, "left_semi"),
+                        schema=prev_schema,
+                    )
+            kept = [d for d in dirs if d not in hits]
+            if hits:
                 new_dir = self._new_data_dir(version, "merge")
-                self._read_dirs(matched, prev_schema).join(
-                    keys, key, "left_anti"
-                ).write.mode("error").parquet(new_dir)
+                written.append(new_dir)
+                with phase(f"snapshot merge v{version} rewrite"):
+                    self._read_dirs(list(hits), prev_schema).join(
+                        keys, key, "left_anti"
+                    ).write.mode("error").parquet(new_dir)
                 if self._dir_has_data(new_dir):
                     kept.append(new_dir)
-            inc_dir = self._new_data_dir(version, "merge-in")
-            incoming.write.mode("error").parquet(inc_dir)
-        finally:
-            key_set.unpersist(blocking=False)
+        except BaseException:
+            for d in written:  # nothing references them yet
+                self._fs.delete(d)
+            raise
         extra = {
-            "rewritten_dirs": len(matched),
-            "pruned_dirs": len(dirs) - len(matched),
+            "rewritten_dirs": len(hits),
+            "pruned_dirs": len(dirs) - len(hits),
+            "matched_rows": sum(hits.values()),
             "schema": schema.json(),
         }
         carried = self._carried_zonemaps(prev, kept)
@@ -366,6 +427,29 @@ class SnapshotStore:
         return self._commit(
             kept + [inc_dir], "merge", extra=extra, version=version
         )
+
+    @staticmethod
+    def _require_distinct(df: DataFrame, key: str) -> None:
+        """Raise if ``key`` repeats in ``df``. One aggregation whose
+        result is observed, not collected (a ``noop`` write runs it), so
+        the check costs two Spark jobs and moves no key to the driver
+        however large the source."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        obs = Observation("merge-duplicates")
+        n = F.col("_rows")
+        df.groupBy(key).agg(F.count(F.lit(1)).alias("_rows")).observe(
+            obs,
+            F.coalesce(F.sum(n - 1), F.lit(0)).alias("extra"),
+            F.max(F.when(n > 1, F.col(key))).alias("example"),
+        ).write.format("noop").mode("overwrite").save()
+        got = obs.get
+        if got["extra"]:
+            raise VectoliteError(
+                f"merge source contains duplicate {key}s ({got['extra']} "
+                f"extra rows; e.g. {key} {got['example']!r})"
+            )
 
     def compact(
         self,
@@ -391,29 +475,29 @@ class SnapshotStore:
         version = self.current_version() + 1
         df = self.read()  # union schema, so compaction preserves evolution
         op = "compact"
-        if zorder_by is not None:
-            if not 1 <= len(zorder_by) <= 4:
-                raise VectoliteError(
-                    "zorder_by takes 1-4 columns (interleaving more "
-                    "dilutes every column below useful pruning "
-                    "resolution; partition on the extras instead)"
-                )
-            from vectolite_spark.operators.layout import zorder_frame_multi
-
-            arranged = zorder_frame_multi(
-                df, list(zorder_by), n_files=target_files
+        if zorder_by is not None and not 1 <= len(zorder_by) <= 4:
+            raise VectoliteError(
+                "zorder_by takes 1-4 columns (interleaving more "
+                "dilutes every column below useful pruning "
+                "resolution; partition on the extras instead)"
             )
-        else:
-            arranged = df.coalesce(target_files)
         new_dir = self._new_data_dir(version, op)
-        arranged.write.mode("error").parquet(new_dir)
         extra: dict = {"schema": df.schema.json()}
-        if zorder_by is not None:
-            from vectolite_spark.operators.layout import build_zonemap
+        with phase(f"snapshot {op} v{version}"):
+            if zorder_by is not None:
+                from vectolite_spark.operators.layout import (
+                    build_zonemap,
+                    zorder_frame_multi,
+                )
 
-            build_zonemap(self.spark, new_dir, list(zorder_by))
-            extra["zonemaps"] = {new_dir: new_dir + ".zonemap"}
-            extra["zorder_by"] = list(zorder_by)
+                zorder_frame_multi(
+                    df, list(zorder_by), n_files=target_files
+                ).write.mode("error").parquet(new_dir)
+                build_zonemap(self.spark, new_dir, list(zorder_by))
+                extra["zonemaps"] = {new_dir: new_dir + ".zonemap"}
+                extra["zorder_by"] = list(zorder_by)
+            else:
+                df.coalesce(target_files).write.mode("error").parquet(new_dir)
         return self._commit([new_dir], op, extra=extra, version=version)
 
     def _carried_zonemaps(self, prev_manifest: dict, dirs: list[str]) -> dict:

@@ -450,11 +450,14 @@ class SparkVectolite:
     def _max_id(self) -> int:
         """Current max id, cached on the instance so an insert loop is
         O(batch) instead of O(table) per call: the first call scans
-        (parquet footer max-statistics make even that cheap), every later
-        insert just advances the cache, and any table rewrite invalidates
-        it. Multi-writer appends to the same path need Delta/Iceberg
-        transactional ids (module docstring) — same single-writer contract
-        the reference's SQLite file has (one process, vectolite.py:60)."""
+        (parquet footer max-statistics make even that cheap), and every
+        later write only raises the cache: an insert or upsert to the max
+        id it wrote, a delete not at all, so a deleted id is never handed
+        out again (the reference's AUTOINCREMENT). Only a rollback, which
+        can lower the max, drops it. Multi-writer appends to the same
+        path need Delta/Iceberg transactional ids (module docstring) —
+        same single-writer contract the reference's SQLite file has (one
+        process, vectolite.py:60)."""
         if self._max_id_cache is None:
             if not self._exists():
                 self._max_id_cache = 0
@@ -463,12 +466,19 @@ class SparkVectolite:
                 self._max_id_cache = int(row["m"] or 0)
         return self._max_id_cache
 
+    def _raise_max_id(self, max_id) -> None:
+        """Advance the max-id cache to a written ``max_id`` (None: no
+        rows). An unset cache stays unset: the written rows say nothing
+        about the rows already stored."""
+        if max_id is not None and self._max_id_cache is not None:
+            self._max_id_cache = max(self._max_id_cache, int(max_id))
+
     def _dim(self) -> int | None:
         """Stored embedding dimension (None for an empty store). The
         reference stores no dimension and crashes at query time on mismatch
         (SURVEY.md §1.2); we validate explicitly at insert AND query.
 
-        Cached (invalidated by every mutation, like _max_id_cache): this
+        Cached (invalidated by every mutation): this
         runs on EVERY query() — an uncached probe is one extra Spark job
         per query, which alone reinstates the ~30 q/s job-admission
         ceiling the batched-serving facade exists to break (measured:
@@ -920,8 +930,7 @@ class SparkVectolite:
         )
         self._mutate(lambda: self._snap.append(out))
         got = obs.get
-        if got["max_id"] is not None:
-            self._max_id_cache = max(self._max_id_cache or 0, int(got["max_id"]))
+        self._raise_max_id(got["max_id"])
         return int(got["n"])
 
     def query(
@@ -1147,25 +1156,26 @@ class SparkVectolite:
         only the commit dirs holding a matched id are rewritten (LEFT
         ANTI the update keys), untouched dirs carry over, and the
         validated updates land as one new dir: O(delta + affected dirs),
-        the Delta/Iceberg ``MERGE INTO`` shape.
+        the Delta/Iceberg ``MERGE INTO`` shape. ``updates`` is evaluated
+        once, by the merge's first write, whose ``Observation`` yields
+        the row count and max id; the merge's probe counts the replaced
+        rows. Duplicate ids, a wrong dimension or a non-finite element
+        raise, commit nothing and leave no data dir behind. With the
+        working set's dim probe, at most nine Spark jobs under AQE.
 
         Returns {"updated": n, "inserted": n}.
         """
-        incoming = self._store_rows(updates, F.col("id").cast("long"))
-        existing = self.df()
-        n_updates = incoming.count()
-        n_distinct = incoming.select("id").distinct().count()
-        if n_distinct != n_updates:
-            # same contract as Delta/SQL MERGE: several source rows hitting
-            # one target id is ambiguous (and would append duplicate ids)
-            raise VectoliteError(
-                f"upsert updates contain duplicate ids "
-                f"({n_updates - n_distinct} extra rows)"
-            )
-        n_matched = existing.join(incoming, "id", "left_semi").count()
-        self._max_id_cache = None
-        self._mutate(lambda: self._snap.merge(incoming, key="id"))
-        return {"updated": n_matched, "inserted": n_updates - n_matched}
+        from pyspark.sql import Observation
+
+        obs = Observation("upsert")
+        incoming = self._store_rows(updates, F.col("id").cast("long")).observe(
+            obs, F.count(F.lit(1)).alias("n"), F.max("id").alias("max_id")
+        )
+        version = self._mutate(lambda: self._snap.merge(incoming, key="id"))
+        got = obs.get
+        self._raise_max_id(got["max_id"])
+        n_matched = self._snap._read_manifest(version)["matched_rows"]
+        return {"updated": n_matched, "inserted": int(got["n"]) - n_matched}
 
     def count_documents(self) -> int:
         """A1 (vectolite.py:176-184)."""
@@ -1175,11 +1185,13 @@ class SparkVectolite:
         """P3 (vectolite.py:186-199): returns True iff the row existed.
         Dir-pruned COW delete — only the commit dirs containing the id are
         rewritten (parquet footer min/max stats make the per-dir probe
-        metadata-only), history stays travelable."""
-        if self.df().filter(F.col("id") == doc_id).limit(1).count() == 0:
+        metadata-only), history stays travelable. One probe answers both
+        "does the id exist" and "which dirs hold it"; an absent id commits
+        nothing and leaves every index and the working set in place."""
+        probe = self._snap.probe(F.col("id") == doc_id)
+        if not probe.hits:
             return False
-        self._max_id_cache = None
-        self._mutate(lambda: self._snap.delete_where(F.col("id") == doc_id))
+        self._mutate(lambda: self._snap.delete_where(probe))
         return True
 
     def get_document(self, doc_id: int) -> dict | None:
@@ -1237,13 +1249,21 @@ class SparkVectolite:
         id. Long-lived stores accumulate one file per append (the classic
         small-files problem); compaction restores scan efficiency and
         min/max-stat pruning on id. One ``overwrite`` commit; the prior
-        version stays readable until vacuum. Returns the row count."""
-        df = self.df().orderBy("id")
-        n = df.count()
-        if n:
-            arranged = df.coalesce(max(1, target_files))
-            self._mutate(lambda: self._snap.overwrite(arranged))
-        return n
+        version stays readable until vacuum. Returns the row count, taken
+        by an ``Observation`` on the rewrite itself."""
+        from pyspark.sql import Observation
+
+        if not self._exists():
+            return 0
+        obs = Observation("compact")
+        arranged = (
+            self.df()
+            .orderBy("id")
+            .coalesce(max(1, target_files))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+        )
+        self._mutate(lambda: self._snap.overwrite(arranged))
+        return int(obs.get["n"])
 
     def grep(
         self, pattern: str, regex: bool = False, limit: int = 20
