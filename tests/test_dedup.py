@@ -97,8 +97,10 @@ def test_embedding_cosine_pairs(spark):
 
 
 def test_simhash_arrow_matches_expr(corpus):
+    from reference_twins import simhash_expr
+
     arrow = {r["doc_id"]: r["simhash"] for r in simhash(corpus).collect()}
-    expr = {r["doc_id"]: r["simhash"] for r in simhash(corpus, method="expr").collect()}
+    expr = {r["doc_id"]: r["simhash"] for r in simhash_expr(corpus).collect()}
     assert arrow == expr
 
 
@@ -249,35 +251,33 @@ def test_decontaminate_flags_leaked_ngram(spark):
     assert out[1]["n_eval_docs"] == 1
 
 
-def test_bigstar_matches_minlabel_on_chain(spark):
-    """A 64-node chain: worst case for min-label propagation (diameter 63),
-    the motivating case for star contraction — must converge in far fewer
-    rounds and land on the identical labeling."""
-    from vectolite_spark.operators.dedup import (
-        connected_components,
-        connected_components_bigstar,
-    )
+def test_cc_loop_converges_on_long_chain(spark, count_jobs):
+    """A 1,000-node chain is the worst case for plain min-label
+    propagation (diameter 999: one round per unit of diameter). With
+    hooking and a pointer jump per round the distributed loop closes it,
+    in its natural id order and in a shuffled one, under the default
+    ``max_iter`` and in a bounded number of jobs; too small a
+    ``max_iter`` still refuses rather than mislabel the tail, and the
+    driver union-find route lands on the identical labels."""
+    import random
 
-    chain = [(i, i + 1) for i in range(1, 64)] + [(200, 201)]
-    edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    labels, rounds = connected_components_bigstar(edges)
-    got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
-    want = {i: 1 for i in range(1, 65)} | {200: 200, 201: 200}
-    assert got == want
-    assert rounds <= 8  # O(log d), not O(d)
-    # min-label propagation needs diameter-many (63) rounds on this chain:
-    # with a smaller cap it must refuse rather than mislabel the tail
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=50, small_graph_limit=0)
-    ml = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(
-            edges, max_iter=80, small_graph_limit=0
-        ).collect()
-    }
-    assert ml == want
-    # the default path routes this tiny graph to driver-side union-find,
-    # which must produce the IDENTICAL min-label fixpoint
+    from vectolite_spark.operators.dedup import connected_components
+
+    want = {i: 1 for i in range(1, 1001)} | {2000: 2000, 2001: 2000}
+    ids = list(range(2, 1001))
+    random.Random(10).shuffle(ids)
+    for order in ([*range(1, 1001)], [1, *ids]):
+        chain = [(a, b) for a, b in zip(order, order[1:])] + [(2000, 2001)]
+        edges = spark.createDataFrame(chain, "doc_a long, doc_b long")
+        with count_jobs() as jobs:
+            got = {
+                r["doc_id"]: r["cluster_id"]
+                for r in connected_components(edges, small_graph_limit=0).collect()
+            }
+        assert got == want
+        assert len(jobs) <= 16, f"{len(jobs)} jobs"  # 14 measured
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges, max_iter=2, small_graph_limit=0)
     fast = {
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(edges).collect()
@@ -1026,19 +1026,16 @@ def test_curation_pipeline_capstone_funnel_invariants(spark):
         assert r["n_kept"] <= -(-2 * r["n_near"] // 3)
 
 
-def test_bigstar_observation_convergence_matches_union_find(spark):
-    """The r12 bigstar loop detects convergence from a (count, sum)
-    Observation riding the per-round checkpoint (star phases never
-    connect a node to a LARGER node, so per-node labels are monotone
-    non-increasing and sum-equality implies pointwise equality). Pin
-    that against the driver union-find fixpoint on an adversarial mix:
-    chains, a star hub, a clique, singleton edges, and id gaps."""
+def test_cc_distributed_matches_union_find_on_adversarial_mix(spark):
+    """The distributed loop detects convergence from a label-sum
+    Observation riding the per-round checkpoint (labels never increase,
+    so sum-equality implies pointwise equality). Pin that against the
+    driver union-find fixpoint on an adversarial mix: chains, a star
+    hub, a clique, singleton edges, id gaps, and a node whose only edge
+    is a self-loop (its own cluster on both routes)."""
     import random
 
-    from vectolite_spark.operators.dedup import (
-        connected_components,
-        connected_components_bigstar,
-    )
+    from vectolite_spark.operators.dedup import connected_components
 
     rnd = random.Random(712)
     edges = [(i, i + 1) for i in range(10, 26)]            # chain
@@ -1048,16 +1045,18 @@ def test_bigstar_observation_convergence_matches_union_find(spark):
     edges += [
         (rnd.randrange(200, 400), rnd.randrange(200, 400)) for _ in range(150)
     ]
-    edges = [(a, b) for a, b in edges if a != b]
+    edges += [(7, 7)]                                      # self-loop only
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    labels, rounds = connected_components_bigstar(df)
-    got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(df, small_graph_limit=0).collect()
+    }
     want = {
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(df).collect()  # driver union-find
     }
     assert got == want
-    assert rounds <= 8
+    assert got[7] == 7
 
 
 def test_cdc_chunk_rows_arrow_matches_catalyst(spark, sf_dir):
@@ -1065,10 +1064,9 @@ def test_cdc_chunk_rows_arrow_matches_catalyst(spark, sf_dir):
     r8–r11 Catalyst array-expression form produced — same boundary rule
     (md5('00' prefix) per window), same slices, same hashes/lengths —
     on the real corpus plus adversarial unicode/short/empty docs."""
-    from vectolite_spark.operators.dedup import (
-        _cdc_chunk_rows,
-        _cdc_chunk_rows_catalyst,
-    )
+    from reference_twins import cdc_chunk_rows_catalyst
+
+    from vectolite_spark.operators.dedup import _cdc_chunk_rows
     from vectolite_spark.schema import load_table
 
     def rows(df):
@@ -1079,7 +1077,7 @@ def test_cdc_chunk_rows_arrow_matches_catalyst(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     assert rows(_cdc_chunk_rows(docs, "text", "doc_id", 8)) == rows(
-        _cdc_chunk_rows_catalyst(docs, "text", "doc_id", 8)
+        cdc_chunk_rows_catalyst(docs, "text", "doc_id", 8)
     )
 
     tricky = spark.createDataFrame(
@@ -1096,5 +1094,5 @@ def test_cdc_chunk_rows_arrow_matches_catalyst(spark, sf_dir):
         "doc_id long, text string",
     )
     assert rows(_cdc_chunk_rows(tricky, "text", "doc_id", 8)) == rows(
-        _cdc_chunk_rows_catalyst(tricky, "text", "doc_id", 8)
+        cdc_chunk_rows_catalyst(tricky, "text", "doc_id", 8)
     )

@@ -163,10 +163,10 @@ def test_ivfpq_build_artifacts_consistent(spark, tmp_path):
 
 
 def test_conf_scope_and_pool_mutual_exclusion(spark):
-    """VERDICT r12 item 4: session-conf scopes (_small_loop_confs,
-    scaled_state_confs) and run_jobs pools must never overlap — a scope
-    entered mid-pool would leak tiny-partition/AQE-off confs into
-    concurrent jobs. The guard raises LOUDLY in both directions and
+    """VERDICT r12 item 4: session-conf scopes (``conf_scope``, as
+    _small_loop_confs and scaled_state_confs build it) and run_jobs
+    pools must never overlap — a scope entered mid-pool would leak
+    tiny-partition/AQE-off confs into concurrent jobs. The guard raises LOUDLY in both directions and
     fully releases afterward."""
     import threading
 
@@ -240,12 +240,10 @@ def test_scaled_state_confs_registers_scope(spark, tmp_path):
 
 
 def test_conf_scope_released_when_enter_fails(tmp_path):
-    """ADVICE r13: a failure inside ``__enter__`` after
-    ``conf_scope_acquire()`` must release the scope — a with-statement
-    never calls ``__exit__`` for a failed ``__enter__``, so a leaked
-    scope would make every later multi-thunk run_jobs raise
-    ConfScopeOverlapError. A stand-in session whose ``conf.set`` fails
-    drives both scopes into that path."""
+    """ADVICE r13: a conf set that fails after the scope took the pool
+    guard must release the guard — a leaked scope would make every later
+    multi-thunk run_jobs raise ConfScopeOverlapError. A stand-in session
+    whose ``conf.set`` fails drives both scopes into that path."""
     import types
 
     import pytest

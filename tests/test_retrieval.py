@@ -428,16 +428,15 @@ def trgm_index(spark, tmp_path_factory):
 
 
 def test_trigram_extraction_matches_column_twin(spark):
-    from vectolite_spark.operators.retrieval import (
-        _trigram_col,
-        extract_trigrams,
-    )
+    from reference_twins import trigram_col
+
+    from vectolite_spark.operators.retrieval import extract_trigrams
 
     texts = ["Merge Join", "ab", "", "aaaa", "xyx yxy"]
     df = spark.createDataFrame([(t,) for t in texts], "t string")
     got = {
         r["t"]: r["g"]
-        for r in df.select("t", _trigram_col(F.col("t")).alias("g")).collect()
+        for r in df.select("t", trigram_col(F.col("t")).alias("g")).collect()
     }
     for t in texts:
         assert got[t] == extract_trigrams(t), t

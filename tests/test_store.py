@@ -244,10 +244,12 @@ def test_small_writes_submit_a_fixed_handful_of_jobs(spark, tmp_path, count_jobs
     )
     with count_jobs() as jobs:
         assert s.upsert(updates) == {"updated": 1, "inserted": 1}
-    assert len(jobs) <= 9, f"upsert ran {len(jobs)} jobs"
-    with count_jobs() as jobs:  # the upsert raised the max id, no rescan
+    assert len(jobs) <= 8, f"upsert ran {len(jobs)} jobs"
+    # the upsert raised the max id and kept the stored dim: no rescan,
+    # no dim probe, only the append
+    with count_jobs() as jobs:
         assert s.insert_many(["after upsert"]) == [21]
-    assert len(jobs) <= 2, f"insert after upsert ran {len(jobs)} jobs"
+    assert len(jobs) <= 1, f"insert after upsert ran {len(jobs)} jobs"
     with count_jobs() as jobs:
         assert s.delete_document(5) is True
     assert len(jobs) <= 3, f"delete ran {len(jobs)} jobs"
@@ -268,6 +270,23 @@ def test_small_writes_submit_a_fixed_handful_of_jobs(spark, tmp_path, count_jobs
         assert s.compact() == 10
     assert len(jobs) <= 3, f"compact ran {len(jobs)} jobs"
     assert s.count_documents() == 10
+
+
+def test_dimension_is_still_validated_after_writes(store, spark):
+    """The stored dimension is probed once and kept across writes, which
+    are validated against it and cannot change it; a wrong-dimension
+    write after an upsert still raises. Deleting every row drops it, so
+    an emptied store takes a new dimension, as a fresh one does."""
+    store.insert_many(["one doc", "two doc"])
+    store.upsert(spark.createDataFrame([(2, "two v2", None, [0.5] * 8)], UPDATE_SCHEMA))
+    with pytest.raises(VectoliteError, match="dimension mismatch"):
+        store.insert_many(["short"], embeddings=[[0.1] * 4])
+    bad = spark.createDataFrame([(9, "short", None, [0.1] * 4)], UPDATE_SCHEMA)
+    with pytest.raises(Exception, match="dimension mismatch"):
+        store.upsert(bad)
+    assert store.count_documents() == 2
+    assert store.delete_document(1) and store.delete_document(2)
+    assert store.insert_many(["wide"], embeddings=[[0.1] * 4]) == [3]
 
 
 def test_hybrid_query_fuses_lexical_and_vector(spark, tmp_path):

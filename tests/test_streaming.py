@@ -590,7 +590,10 @@ def test_scaled_state_confs_shrinks_restores_and_respects_scale(
     never tuned to the local core count): tiny source -> few state
     partitions, unobservable source -> untouched, explicit override wins,
     and the session conf is restored afterwards even on failure."""
-    from vectolite_spark.streaming.ingest import scaled_state_confs
+    from vectolite_spark.streaming.ingest import (
+        _STATE_BYTES_PER_PARTITION,
+        scaled_state_confs,
+    )
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
@@ -606,7 +609,7 @@ def test_scaled_state_confs_shrinks_restores_and_respects_scale(
     # (the rule only ever SHRINKS below the session value)
     big = tmp_path / "big"
     big.mkdir()
-    bpp = scaled_state_confs._BYTES_PER_PARTITION
+    bpp = _STATE_BYTES_PER_PARTITION
     with open(big / "part-0.parquet", "wb") as f:
         f.truncate(bpp * (int(before) + 2))  # sparse: no real 2+GB write
     with scaled_state_confs(spark, str(big)):

@@ -61,6 +61,8 @@ def test_fingerprint_detects_shared_content(spark):
 
 
 def test_fingerprint_arrow_matches_expr(spark):
+    from reference_twins import fingerprint_expr
+
     # property: the Arrow hashlib pass and the pure-expression form agree
     # on long docs, unicode (multi-byte chars shift UTF-8 offsets — grams
     # are CHARACTER slices on both paths), boundary lengths, and empties
@@ -74,10 +76,7 @@ def test_fingerprint_arrow_matches_expr(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     arrow = {r["doc_id"]: r["fingerprint"] for r in fingerprint(df).collect()}
-    expr = {
-        r["doc_id"]: r["fingerprint"]
-        for r in fingerprint(df, method="expr").collect()
-    }
+    expr = {r["doc_id"]: r["fingerprint"] for r in fingerprint_expr(df).collect()}
     assert arrow == expr
 
 

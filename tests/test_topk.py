@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from vectolite_spark.functions.vector import cosine_score, cosine_score_pandas
+from vectolite_spark.functions.vector import cosine_score
 from vectolite_spark.operators.topk import topk_ids, topk_search
 from vectolite_spark.schema import load_table
 
@@ -38,18 +38,6 @@ def test_cosine_matches_reference_math(spark):
         assert got[i] == pytest.approx(_py_cosine(emb, q), abs=1e-12)
     assert got[3] == 0.0
     assert got[4] < 0.0
-
-
-def test_cosine_pandas_udf_agrees(spark):
-    q = [0.5, -1.0, 2.0, 0.0]
-    rows = [(i, [float(i), 1.0, -0.5 * i, 3.0]) for i in range(20)] + [(99, [0.0] * 4)]
-    df = spark.createDataFrame(rows, "id long, embedding array<float>")
-    expr = df.select("id", cosine_score("embedding", q).alias("s")).collect()
-    fast = df.select("id", cosine_score_pandas(q)(F.col("embedding")).alias("s")).collect()
-    e = {r["id"]: r["s"] for r in expr}
-    f = {r["id"]: r["s"] for r in fast}
-    for k in e:
-        assert f[k] == pytest.approx(e[k], abs=1e-12)
 
 
 def test_tie_break_ascending_id(spark):
@@ -101,6 +89,8 @@ def test_cosine_properties(spark):
 
 
 def test_arrow_and_expr_paths_agree(spark, sf_dir):
+    from reference_twins import topk_ids_expr
+
     from vectolite_spark.schema import load_table
 
     embs = load_table(spark, sf_dir, "embeddings")
@@ -108,7 +98,7 @@ def test_arrow_and_expr_paths_agree(spark, sf_dir):
     arrow = [(r["vec_id"], r["score"]) for r in topk_ids(embs, qvec, 20).collect()]
     expr = [
         (r["vec_id"], r["score"])
-        for r in topk_ids(embs, qvec, 20, method="expr").collect()
+        for r in topk_ids_expr(embs, qvec, 20).collect()
     ]
     assert arrow == expr
 

@@ -27,7 +27,8 @@ Supported keys mirror bench.py's semantics for the same names:
 - registry query keys: ``clear_managed_caches()`` once, then time
   ``QUERIES[name](spark, sf).count()`` min-of-``--inner`` (bench.py's
   registry loop shape — caches warmed by run 1 persist into run 2,
-  exactly as in the sweep). Prebuilt-index keys get their index
+  exactly as in the sweep), and report the Spark jobs of the last run
+  as ``<key>_jobs``. Prebuilt-index keys get their index
   ensured (untimed) first, as bench.py's build phase does;
 - serving keys (``*_qps``): bench.py's serving meters, median q/s.
 """
@@ -249,12 +250,20 @@ def measure(keys: list[str], inner: int) -> dict[str, float]:
             continue
         clear_managed_caches()
         best = None
-        for _ in range(inner):
+        sc = spark.sparkContext
+        for i in range(inner):
+            # one job group per run: the last run's job count is reported
+            # beside its time as ``<key>_jobs``
+            group = f"ab-{name}-{i}"
+            sc.setLocalProperty("spark.jobGroup.id", group)
             t0 = time.time()
             fn(spark, sf_dir).count()
             dt = time.time() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
             best = dt if best is None else min(best, dt)
         out[name] = round(best, 4)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
     spark.stop()
     return out
 
@@ -317,12 +326,11 @@ def orchestrate(args) -> int:
     }
     # per-side min/max summary so the overlap verdict is readable
     summary: dict[str, dict] = {}
-    for k in keys:
-        summary[k] = {}
+    for k in keys + [f"{k}_jobs" for k in keys]:
         for label, _ in sides:
             vals = [r[k] for r in reps if r["code"] == label and k in r]
             if vals:
-                summary[k][label] = {
+                summary.setdefault(k, {})[label] = {
                     "min": min(vals),
                     "max": max(vals),
                     "median": sorted(vals)[len(vals) // 2],

@@ -65,18 +65,18 @@ FOOTNOTES = {
         "PPJoin)."
     ),
     "dedup_clusters_distributed": (
-        "forces the distributed min-label loop (small_graph_limit=0); "
-        "each round localCheckpoints eagerly, so the censused plan is "
-        "the converged label relation — per-round physical shape is 1 "
-        "neighbor join + 1 min-aggregate shuffle over the checkpointed "
-        "edge list, x diameter rounds (operators/dedup.py "
-        "connected_components distributed path)."
+        "forces the distributed connected-components loop "
+        "(small_graph_limit=0); each round localCheckpoints eagerly, so "
+        "the censused plan is the converged label relation — per-round "
+        "physical shape is a pointer-jump self-join of the checkpointed "
+        "labels, 2 edge-to-label joins and 1 min-aggregate over the "
+        "offers (min-label + hooking), x about log d rounds "
+        "(operators/dedup.py connected_components)."
     ),
     "dedup_clusters_bigstar": (
-        "the converged label relation is localCheckpointed each "
-        "large-star/small-star round; the 1-exchange row censuses the "
-        "final labeling join only — per-round shuffle budget is 2 "
-        "exchanges x O(log d) rounds (operators/dedup.py big-star)."
+        "same plan as dedup_clusters_distributed: the key of the retired "
+        "large-star/small-star engine runs the one distributed loop "
+        "(about log d rounds, operators/dedup.py connected_components)."
     ),
 }
 
@@ -99,7 +99,7 @@ def main() -> None:
         "scale, so their census rows describe only the final label join;",
         "the pair-generation shapes are censused by their standalone",
         "entries (dedup_simhash_r1 etc.), and the distributed CC loop's",
-        "shape by dedup_clusters_bigstar.",
+        "shape by dedup_clusters_distributed.",
         "",
         "Caveat 2: queries that materialize a small intermediate with",
         "localCheckpoint (bloom_vocab_membership's vocabulary,",

@@ -1007,8 +1007,8 @@ def make_mmr_selector(lam: float, k: int):
 def make_trigram_udf():
     """Distinct character trigrams of ``lower(text)``, first-occurrence
     order — delegates to ``operators.retrieval.extract_trigrams`` so the
-    build path, the probe's driver-side twin, and the JVM column twin
-    (``_trigram_col``, kept for parity tests) share one definition.
+    build path and the probe's driver-side twin share one definition
+    (the tests pin it against a JVM column-expression twin).
     Arrow-batched because the Catalyst form (per-char ``substr`` inside
     ``transform`` + ``array_distinct``) measured ~10x slower on the
     sf0.1 build: ~15M substring expressions per corpus pass vs a tight
@@ -1033,8 +1033,8 @@ def make_trigram_udf():
 def make_cdc_chunk_udf(window=8):
     """Content-defined chunks of one document as
     ``array<struct<h, l>>`` (md5 hex of each chunk, char length) —
-    the Arrow-batched twin of the Catalyst form kept as
-    ``dedup._cdc_chunk_rows_catalyst`` (equality pinned by test).
+    the Arrow-batched form of the Catalyst array-expression chunker
+    the tests keep as its parity reference.
 
     Boundary rule unchanged (oracle parity): cut where the
     ``window``-char context's md5 hex starts '00' — tested as

@@ -1,6 +1,5 @@
 from vectolite_spark.functions.vector import (
     cosine_score,
-    cosine_score_pandas,
     dot_product,
     l2_norm,
     l2_normalize,
@@ -9,7 +8,6 @@ from vectolite_spark.functions.vector import (
 
 __all__ = [
     "cosine_score",
-    "cosine_score_pandas",
     "dot_product",
     "l2_norm",
     "l2_normalize",

@@ -7,10 +7,10 @@ inputs, with a zero-norm guard -> score 0.0; negative scores preserved
 
 Spark-first design: the score is a pure column expression over higher-order
 functions (``zip_with`` + ``aggregate``) — it stays JVM-side inside
-whole-stage codegen, no Python in the hot path. A pandas-UDF fast path
-(`cosine_score_pandas`: one NumPy matmul per Arrow batch) is provided for
-benchmarking; on wide vectors the matmul wins, on dim<=64 the codegen
-expression is competitive and shuffle-free.
+whole-stage codegen, no Python in the hot path. The top-k operators
+score with the Arrow-batched matmul kernel instead
+(``_pandas_udfs.make_batch_topk_mapper``); on wide vectors the matmul
+wins, on dim<=64 the codegen expression is competitive.
 
 At 100 TB: the expression evaluates per-row on executors with no driver
 involvement; the query vector ships as a literal inside the serialized plan
@@ -70,15 +70,3 @@ def cosine_score(emb: Column | str, qvec: Sequence[float]) -> Column:
     dot = dot_product(emb, q)
     dnorm = l2_norm(emb)
     return F.when(dnorm == 0.0, F.lit(0.0)).otherwise(dot / (dnorm * F.lit(qnorm)))
-
-
-def cosine_score_pandas(qvec: Sequence[float]):
-    """Arrow-batched NumPy fast path: one (N x d) @ (d,) matmul per batch.
-
-    Returns a pandas_udf usable as ``udf(col("embedding"))``. Prefer
-    `cosine_score` (codegen) unless profiling shows the expression is the
-    bottleneck at high dim.
-    """
-    from vectolite_spark.functions._pandas_udfs import make_cosine_udf
-
-    return make_cosine_udf(qvec)

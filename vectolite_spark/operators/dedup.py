@@ -321,7 +321,6 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 32,
-    method: str = "arrow",
 ) -> DataFrame:
     """Per-doc SimHash: each token hashes to `bits` bits (leading hex of its
     md5); bit j of the signature is the sign of the +1/-1 vote sum across
@@ -335,31 +334,10 @@ def simhash(
     the 1 << j probe masks and the oracle's BIGINT sums never touch the
     sign bit).
 
-    method="arrow" (default): one vectorized pass per row. method="expr":
-    the pure-expression form — ``bits`` chained interpreted aggregate()
-    folds that downstream projections re-evaluate per reference (the
-    17-element probe array in ``simhash_near_pairs`` made it 18 s at
-    sf0.1); kept for differential testing only."""
-    if method == "expr":
-        hexchars = bits // 4
-        tokens = norm_tokens(text_col)
-        hv = F.transform(
-            tokens,
-            lambda t: F.conv(F.substring(F.md5(t), 1, hexchars), 16, 10).cast("long"),
-        )
-
-        def voter(m):
-            return lambda acc, x: acc + F.when(
-                x.bitwiseAND(F.lit(m)) != 0, 1
-            ).otherwise(-1)
-
-        sig = None
-        for j in range(bits):
-            mask = 1 << j
-            vote = F.aggregate(hv, F.lit(0), voter(mask))
-            bit = F.when(vote > 0, F.lit(mask)).otherwise(F.lit(0))
-            sig = bit if sig is None else sig + bit
-        return df.select(F.col(id_col), sig.cast("long").alias("simhash"))
+    One Arrow-batched pass per row (the pure-expression form — ``bits``
+    chained interpreted aggregate() folds — took 18 s at sf0.1 under
+    ``simhash_near_pairs``' probes; it is the parity reference in the
+    tests)."""
     from vectolite_spark._pandas_udfs import make_simhash_udf
 
     return widen_small_input(df).select(
@@ -1087,66 +1065,31 @@ _SMALL_GRAPH_EDGES = 200_000
 _SMALL_LOOP_EDGES = 2_000_000
 
 
-class _small_loop_confs:
-    """Context manager: below ``_SMALL_LOOP_EDGES`` observed edges, run
-    an iterative loop with AQE off and an edge-count-derived shuffle
-    partition count (~100K edges/partition, capped at the cluster's
-    parallelism); restore the session confs on exit even on failure.
-    The loop owns the session only for its own rounds (bench/oracle
-    sweeps run entries sequentially)."""
+def _small_loop_confs(spark, n_edges: int):
+    """``parallel.conf_scope`` for an iterative loop: below
+    ``_SMALL_LOOP_EDGES`` observed edges, AQE off and an edge-count-derived
+    shuffle partition count (~100K edges/partition, capped at the
+    cluster's parallelism); past it, an empty scope. The loop owns the
+    session only for its own rounds (bench/oracle sweeps run entries
+    sequentially)."""
+    from vectolite_spark.parallel import conf_scope
 
-    def __init__(self, spark, n_edges: int):
-        self._spark = spark
-        self._n_edges = n_edges
-        self._saved: dict[str, str] = {}
-
-    def __enter__(self):
-        if self._n_edges <= _SMALL_LOOP_EDGES:
-            from vectolite_spark.parallel import conf_scope_acquire
-
-            conf_scope_acquire()  # raises if a run_jobs pool is draining
-            self._scoped = True
-            try:
-                p = max(1, min(
-                    self._spark.sparkContext.defaultParallelism,
-                    self._n_edges // 100_000 + 1,
-                ))
-                for key, val in (
-                    ("spark.sql.adaptive.enabled", "false"),
-                    ("spark.sql.shuffle.partitions", str(p)),
-                ):
-                    self._saved[key] = self._spark.conf.get(key)
-                    self._spark.conf.set(key, val)
-            except BaseException:
-                # a with-statement never calls __exit__ for a failed
-                # __enter__: undo here, or the scope leaks and every
-                # later run_jobs pool raises ConfScopeOverlapError;
-                # the original failure is the one reported
-                try:
-                    self.__exit__(None, None, None)
-                except Exception:
-                    pass
-                raise
-        return self
-
-    def __exit__(self, *exc):
-        try:
-            for key, val in self._saved.items():
-                self._spark.conf.set(key, val)
-        finally:
-            self._saved = {}
-            if getattr(self, "_scoped", False):
-                from vectolite_spark.parallel import conf_scope_release
-
-                conf_scope_release()
-                self._scoped = False
-        return False
+    if n_edges > _SMALL_LOOP_EDGES:
+        return conf_scope(spark, {})
+    p = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 100_000 + 1))
+    return conf_scope(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(p),
+        },
+    )
 
 
 def _union_find_labels(spark, pairs):
     """Driver-side union-find over a collected pair list: always attach
     the larger root under the smaller, so every root IS its component's
-    minimum id — the exact fixpoint both distributed algorithms compute.
+    minimum id — the exact fixpoint the distributed loop computes.
     Path-compressed; O(alpha(n)) per edge."""
     parent: dict = {}
 
@@ -1172,6 +1115,43 @@ def _union_find_labels(spark, pairs):
     )
 
 
+def _round(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """One round over the symmetric edge list and the checkpointed label
+    frame ``L``. Each endpoint's label first jumps once through itself,
+    ``J(v) = min(L(v), L(L(v)))`` (pointer jumping). Then each edge
+    (a, b) offers ``J(b)`` to ``a`` (min-label) and to ``J(a)``
+    (hooking: a's whole tree moves under the smaller label at once), and
+    ``a`` keeps its own ``J(a)`` (every node has an edge). One
+    aggregation takes the minimum offer per node. Every join reads the
+    checkpointed frame, which is already partitioned by node."""
+
+    hop = labels.select(F.col("node").alias("_via"), F.col("label").alias("_hop"))
+
+    def jumped(e: DataFrame, v: str) -> DataFrame:
+        lv = f"l{v}"
+        return (
+            e.join(labels.select(F.col("node").alias(v), F.col("label").alias(lv)), v)
+            .join(hop, F.col(lv) == F.col("_via"))
+            .withColumn(lv, F.least(lv, "_hop"))
+            .drop("_via", "_hop")
+        )
+
+    offers = jumped(jumped(und, "b"), "a")
+    return (
+        offers.select(
+            F.inline(
+                F.array(
+                    F.struct(F.col("a").alias("node"), F.col("la").alias("label")),
+                    F.struct(F.col("a").alias("node"), F.col("lb").alias("label")),
+                    F.struct(F.col("la").alias("node"), F.col("lb").alias("label")),
+                )
+            )
+        )
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -1183,20 +1163,27 @@ def connected_components(
     every pairwise detector needs before a keep-list exists (A~B and B~C
     must collapse to ONE representative even when A~C was never emitted).
 
-    Min-label propagation: every node starts labeled with itself; each
-    round a node takes the minimum label among itself and its neighbors;
-    fixpoint = components labeled by their minimum member id. The
-    iteration count is the component DIAMETER, and near-dup clusters are
-    shallow (stars/cliques around a template), so a handful of rounds
-    closes 100 TB of pairs; ``localCheckpoint`` truncates lineage each
-    round so plans stay O(1) deep. For adversarial long-chain graphs the
-    published fix is large-star/small-star (Kiveris et al.) — same
-    shuffle pattern, fewer rounds; not needed for dedup-shaped graphs.
+    Min-label propagation with hooking and pointer jumping: every node
+    starts labeled with its minimum neighbor (or itself). Each round
+    jumps every edge endpoint's label once through itself
+    (``J(v) = min(L(v), L(L(v)))``), then one aggregation takes, per
+    node, the minimum of its own label, its neighbors' labels, and —
+    hooking — the neighbors' labels of every node it labels, so a whole
+    tree moves under a smaller label at once (``_round``). Fixpoint =
+    components labeled by their minimum member id. Plain min-label needs
+    one round per unit of diameter (a 1,000-node chain: 1,000 rounds);
+    this loop closes it in about log d rounds, in any id order, so the
+    same loop serves shallow near-dup stars/cliques and adversarial long
+    chains (paginated template text). At sf0.1 (simhash radius-1 pairs,
+    3,392 edges) it takes 6 rounds where min-label took 17.
+    ``localCheckpoint`` truncates lineage each round so plans stay O(1)
+    deep.
 
     Deterministic: the fixpoint (min reachable id) is partition-order
     independent, so the DuckDB oracle reproduces it with a recursive
     reachability CTE. Returns (node, cluster_id) for every node that
-    appears in ``edges``.
+    appears in ``edges``, a self-loop-only node included (its own
+    cluster).
 
     Hybrid execution: candidate pair sets are blocked AND capped upstream,
     so after near-dup detection the edge list is usually tiny relative to
@@ -1206,7 +1193,9 @@ def connected_components(
     (microseconds, identical min-label fixpoint) instead of paying
     per-round shuffle + checkpoint jobs. The distributed loop remains the
     path for edge lists that don't fit a driver working set; pass
-    ``small_graph_limit=0`` to force it (tests do).
+    ``small_graph_limit=0`` to force it (tests do). A loop that has not
+    converged after ``max_iter`` rounds raises instead of returning
+    labels that would split clusters.
     """
     from pyspark.sql import Observation
 
@@ -1226,58 +1215,36 @@ def connected_components(
     # Execution shape derived from the OBSERVED edge count, not the
     # host — see _small_loop_confs.
     with _small_loop_confs(spark, n_edges):
-        # Seed labels with ROUND 1's result directly: min-label round 1
-        # computes min(own, min neighbor), which is exactly one groupBy
-        # over the symmetric edge list — no join needed until round 2.
-        obs1 = Observation()
-        labels = (
-            und.groupBy(F.col("a").alias("node"))
-            .agg(F.least(F.first("a"), F.min("b")).alias("label"))
-            .observe(
-                # decimal(38,0): a BIGINT sum overflows around 1e9 nodes
-                # with wide id spaces; the fixpoint test needs exactness
-                obs1,
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
-            )
-            .localCheckpoint(eager=True)
+        # Round 1 is min(own, min neighbor): one groupBy over the
+        # symmetric edge list, no join needed.
+        step = und.groupBy(F.col("a").alias("node")).agg(
+            F.least(F.first("a"), F.min("b")).alias("label")
         )
-        # Convergence detection rides the checkpoint job for FREE:
-        # labels are monotonically non-increasing (new = min(own,
-        # neighbors')), so the label SUM strictly decreases until the
-        # fixpoint — an Observation on the materializing plan captures
-        # it with zero extra jobs (the old join-and-count check cost
-        # one more job per round).
-        prev_sum = obs1.get["s"]
         converged = False
-        for _ in range(max_iter - 1):
-            nbr = und.join(labels, und["b"] == labels["node"]).select(
-                und["a"].alias("node"), "label"
-            )
+        prev_sum = None
+        for _ in range(max_iter):
+            # Convergence detection rides the checkpoint job for FREE:
+            # labels never increase (every step takes a min), so the
+            # label SUM strictly decreases until the fixpoint — an
+            # Observation on the materializing plan captures it with zero
+            # extra jobs. decimal(38,0): a BIGINT sum overflows around 1e9
+            # nodes with wide id spaces; the fixpoint test needs exactness.
             obs = Observation()
-            new = (
-                labels.union(nbr)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-                .observe(
-                    obs,
-                    F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
-                )
-                .localCheckpoint(eager=True)
-            )
+            labels = step.observe(
+                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+            ).localCheckpoint(eager=True)
             cur_sum = obs.get["s"]
-            labels = new
             if cur_sum == prev_sum:
                 converged = True
                 break
             prev_sum = cur_sum
+            step = _round(und, labels)
     if not converged:
         # Returning unconverged labels would silently split clusters (a
-        # chain longer than max_iter keeps its tail mislabeled) — refuse
-        # instead and point at the O(log d) algorithm.
+        # chain's tail keeps a label that is not its component minimum).
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_bigstar"
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter"
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
@@ -1323,124 +1290,6 @@ def decontaminate(
             F.countDistinct("g").alias("n_shared_grams"),
             F.countDistinct("eval_id").alias("n_eval_docs"),
         )
-    )
-
-
-def connected_components_bigstar(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> tuple[DataFrame, int]:
-    """Connected components by large-star / small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the published fix for ``connected_components``'s one
-    weakness: min-label propagation needs diameter-many rounds, so an
-    adversarial long chain of near-dups (paginated template text) costs
-    O(d) shuffles; star operations contract the graph in O(log d) rounds.
-
-    Each phase is two shuffles, expressed relationally (no collect_list —
-    a hot node's neighborhood never materializes on one row):
-      m(u)       = min(u, min neighbor)            -- groupBy(a).min(b)
-      large-star = emit (v, m(u)) for v in N(u), v > u
-      small-star = emit (v, m(u)) for v in N(u), v < u, plus (u, m(u))
-    At the fixpoint every node points straight at its component minimum.
-    Deterministic (same min-label fixpoint as reachability closure), so
-    the same DuckDB oracle covers both algorithms.
-
-    Returns (labels, n_rounds): (doc_id, cluster_id) for every node in
-    ``edges``, and the rounds taken (exposed so tests can assert the
-    O(log d) behavior).
-
-    Execution shape (round 12): convergence detection rides the
-    per-round label checkpoint as an Observation instead of a separate
-    join+count job — star phases never connect a node to a LARGER node,
-    so each node's min(own, min neighbor) is monotonically
-    non-increasing and the node set of the contracted graph is stable;
-    (count, sum) unchanged therefore implies labels pointwise
-    unchanged, the exact condition the old per-round join tested. The
-    ``_small_loop_confs`` treatment the min-label loop gets was
-    MEASURED SLOWER here (interleaved A/B at sf0.1: confs-on
-    consistently behind, e.g. 7.7 vs 6.6 s) — each star phase is
-    join-heavy and AQE's runtime broadcast decisions on the
-    checkpointed (size-unknown to the static planner) frames beat a
-    fixed tiny partition count, so AQE stays ON for this loop.
-
-    Round 13 (VERDICT r12 item 6): two per-round exchanges removed with
-    results unchanged — (a) the per-round labels groupBy IS the next
-    round's large-star mins (identical aggregation over the identical
-    checkpointed ``und``), so the materialized labels frame is reused
-    instead of recomputed; (b) each phase's inner pre-union distinct is
-    gone — the post-union distinct dedups the same rows in one exchange.
-    """
-    from pyspark.sql import Observation
-
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = None
-    rounds = 0
-    prev: tuple | None = None
-    for _ in range(max_iter):
-        rounds += 1
-        for keep_larger in (True, False):  # large-star, then small-star
-            if keep_larger and labels is not None:
-                # the per-round labels below ARE this round's large-star
-                # mins (same groupBy over the same checkpointed ``und``,
-                # already materialized) — reusing them removes one full
-                # groupBy exchange per round (guide §2.4)
-                mins = labels.select("a", F.col("label").alias("m"))
-            else:
-                mins = und.groupBy("a").agg(
-                    F.least(F.first("a"), F.min("b")).alias("m")
-                )
-            j = und.join(mins, "a")
-            if keep_larger:
-                out = j.filter(F.col("b") > F.col("a")).select(
-                    F.col("b").alias("a"), F.col("m").alias("b")
-                )
-            else:
-                out = j.filter(F.col("b") < F.col("a")).select(
-                    F.col("b").alias("a"), F.col("m").alias("b")
-                ).union(mins.select("a", F.col("m").alias("b")))
-            # symmetrize FIRST, dedup once: the old inner distinct before
-            # the union paid a second (a,b) exchange per phase for rows
-            # the outer distinct dedups anyway (guide §2.4)
-            out = out.filter(F.col("a") != F.col("b"))
-            und = (
-                out.union(
-                    out.select(F.col("b").alias("a"), F.col("a").alias("b"))
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        obs = Observation()
-        new_labels = (
-            und.groupBy("a")
-            .agg(F.least(F.first("a"), F.min("b")).alias("label"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                # decimal(38,0): exact at any id scale (bigint sums
-                # overflow ~1e9 nodes with wide id spaces)
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur = (obs.get["n"], obs.get["s"])
-        labels = new_labels
-        if cur == prev:
-            break
-        prev = cur
-    return (
-        labels.select(
-            F.col("a").alias("doc_id"), F.col("label").alias("cluster_id")
-        ),
-        rounds,
     )
 
 
@@ -1611,8 +1460,7 @@ def _cdc_chunk_rows(
     """(id, chunk_hash, _len) rows from content-defined chunking: cut at
     positions whose ``window``-char context md5 starts '00' (~1/256),
     slice between cuts, hash. Arrow-batched (guide §4.2): the Catalyst
-    array-expression form (kept below as ``_cdc_chunk_rows_catalyst``,
-    equality pinned by test) evaluates one md5 + substr per CHARACTER
+    array-expression form (the tests' parity reference) evaluates one md5 + substr per CHARACTER
     through interpreted higher-order functions — measured 17.5 s CPU
     per warm sf0.1 corpus pass vs ~1 s for hashlib in a tight loop.
     Chunk text still never shuffles: only (id, md5, len) leaves the
@@ -1629,42 +1477,6 @@ def _cdc_chunk_rows(
             F.col(id_col),
             F.col("h").alias("chunk_hash"),
             F.col("l").cast("int").alias("_len"),
-        )
-    )
-
-
-def _cdc_chunk_rows_catalyst(
-    df: DataFrame, text_col: str, id_col: str, window: int
-) -> DataFrame:
-    """Pure-JVM twin of ``_cdc_chunk_rows`` (the r8–r11 implementation),
-    kept as the parity reference: same boundary rule, same output rows.
-    Interpreted higher-order functions make it ~17x more CPU per pass —
-    use the Arrow form on query paths."""
-    text = F.col(text_col)
-    n = F.length(text)
-    positions = F.when(n >= window, F.sequence(F.lit(1), n - window + 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    bs = F.filter(
-        positions,
-        lambda i: F.md5(text.substr(i, F.lit(window))).substr(1, 2) == "00",
-    )
-    cuts = F.concat(F.array(F.lit(1)), bs, F.array(n + 1))
-    idxs = F.sequence(F.lit(0), F.size(cuts) - 2)
-    chunks = F.filter(
-        F.transform(
-            idxs,
-            lambda j: text.substr(F.get(cuts, j), F.get(cuts, j + 1) - F.get(cuts, j)),
-        ),
-        lambda c: F.length(c) > 0,
-    )
-    return (
-        widen_small_input(df.select(id_col, text_col))
-        .select(F.col(id_col), F.explode(chunks).alias("_chunk"))
-        .select(
-            F.col(id_col),
-            F.md5("_chunk").alias("chunk_hash"),
-            F.length("_chunk").alias("_len"),
         )
     )
 

@@ -64,13 +64,6 @@ def delete_where(df: DataFrame, predicate: Column) -> DataFrame:
     return df.filter(~F.coalesce(predicate, F.lit(False)))
 
 
-def json_get(col: Column | str, path: str) -> Column:
-    """F5 (vectolite.py:168,250,...): JSON field access on a metadata string;
-    NULL json -> NULL field (reference treats missing as {})."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, path)
-
-
 def copurchase_pairs(
     df: DataFrame,
     key_col: str,

@@ -672,10 +672,10 @@ TRGM_N = 3
 
 
 def extract_trigrams(s: str) -> list[str]:
-    """Driver-side twin of ``_trigram_col``: the DISTINCT character
-    3-grams of ``s`` lowercased, in first-occurrence order. Both sides
-    MUST agree — probe pruning sends only these trigrams' buckets to the
-    scan."""
+    """The DISTINCT character 3-grams of ``s`` lowercased, in
+    first-occurrence order: the one definition the index build (through
+    ``_pandas_udfs.make_trigram_udf``) and the probe share — probe
+    pruning sends only these trigrams' buckets to the scan."""
     t = s.lower()
     out: list[str] = []
     seen = set()
@@ -685,21 +685,6 @@ def extract_trigrams(s: str) -> list[str]:
             seen.add(g)
             out.append(g)
     return out
-
-
-def _trigram_col(text_col):
-    """Distinct character trigrams of ``lower(text)`` as a JVM array
-    expression — whole-stage-codegen'd, no Python in the build path.
-    Texts shorter than 3 chars produce an empty array (the WHEN guard
-    matters: ``sequence(1, 0)`` would DESCEND, not return empty)."""
-    lt = F.lower(text_col)
-    n = F.length(lt)
-    idx = F.when(
-        n >= TRGM_N, F.sequence(F.lit(1), n - (TRGM_N - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(idx, lambda i: lt.substr(i, F.lit(TRGM_N)))
-    )
 
 
 def build_trigram_index(
@@ -726,8 +711,8 @@ def build_trigram_index(
     computed INSIDE the row by the Arrow-batched extraction UDF before
     the explode, so the shuffle carries at most |charset|^3 * n_docs
     rows and skew on common trigrams is bounded by the per-doc dedup;
-    see ``_pandas_udfs.make_trigram_udf`` for why this is not the
-    Catalyst ``_trigram_col`` form — measured ~10x); ``stats`` is
+    see ``_pandas_udfs.make_trigram_udf`` for why this is not a
+    Catalyst array-expression form — measured ~10x); ``stats`` is
     then derived by re-reading just the narrow trigram column of what
     was written (columnar scan of the index, not the corpus — measured
     ~2x build win over tokenizing twice). The ready marker

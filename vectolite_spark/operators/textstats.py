@@ -39,15 +39,6 @@ BPE_TOKEN_RE = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
 PUNCT_RE = r"[^.!?,;:]"
 
 
-def lang_scores(text_col: Column | str) -> dict[str, Column]:
-    """Marker-hit count per language (distinct token intersection size)."""
-    toks = F.array_distinct(norm_tokens(text_col))
-    return {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def predict_lang(text_col: Column | str) -> Column:
     """argmax over marker counts; ties break alphabetically (deterministic).
     One Arrow-batched UDF: tokenize once per row, intersect all marker sets
@@ -173,28 +164,18 @@ def fingerprint(
     text_col: str = "text",
     id_col: str = "doc_id",
     gram: int = 8,
-    method: str = "arrow",
 ) -> DataFrame:
     """Winnowing-style document fingerprint: the minimum md5 over all
     character 8-gram shingles (rolling-hash family, md5 for portability).
     Equal fingerprints => near-certain shared content block.
 
-    method="arrow" (default): one Arrow-batched hashlib pass per row.
-    method="expr": pure column expressions — but transform(sequence(...))
-    evaluates ONE INTERPRETED md5 PER CHARACTER OFFSET (a 10 KB doc is
-    10 000 interpreted calls), so it is the slow path, kept only for
-    differential testing against the Arrow form."""
-    t = F.col(text_col)
-    if method == "expr":
-        grams = F.transform(
-            F.sequence(F.lit(1), F.length(t) - (gram - 1)),
-            lambda i: F.md5(t.substr(i, F.lit(gram))),
-        )
-        fp = F.when(F.length(t) >= gram, F.array_min(grams)).otherwise(F.md5(t))
-    else:
-        from vectolite_spark._pandas_udfs import make_fingerprint_udf
+    One Arrow-batched hashlib pass per row: the pure-expression form
+    (``transform(sequence(...))``, the tests' parity reference) evaluates
+    ONE INTERPRETED md5 PER CHARACTER OFFSET — a 10 KB doc is 10 000
+    interpreted calls."""
+    from vectolite_spark._pandas_udfs import make_fingerprint_udf
 
-        fp = make_fingerprint_udf(gram)(t)
+    fp = make_fingerprint_udf(gram)(F.col(text_col))
     return df.select(F.col(id_col), fp.alias("fingerprint"))
 
 

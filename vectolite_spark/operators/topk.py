@@ -5,9 +5,10 @@ scan all rows -> per-row cosine -> full sort desc -> slice top_k, ties break
 in ascending-id order (verified, SURVEY.md §2.3).
 
 Spark-first plan:
-- score as a codegen column expression (functions/vector.py), no Python;
+- score each partition's rows with one NumPy matmul per Arrow batch
+  (``_pandas_udfs.make_batch_topk_mapper``) and keep its local top-k;
 - ``orderBy(score desc, id asc).limit(k)`` compiles to
-  **TakeOrderedAndProject**: a per-partition bounded heap + driver merge of
+  **TakeOrderedAndProject** over those survivors: a driver merge of
   k*P rows — strictly better than the reference's full O(N log N) sort and
   shuffle-free (no exchange; only the k-row result moves).
 - document texts are attached AFTER the top-k, by pushing ``doc_id IN (ids)``
@@ -26,7 +27,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vectolite_spark.functions.vector import cosine_score
 from vectolite_spark.localframe import local_df
 
 SCORE_DECIMALS = 6
@@ -59,51 +59,31 @@ def collect_query_working_set(
     return rows
 
 
-def score_embeddings(
-    embeddings: DataFrame,
-    qvec: Sequence[float],
-    id_col: str = "vec_id",
-    decimals: int = SCORE_DECIMALS,
-) -> DataFrame:
-    """Project (id, score) with the reference's cosine semantics."""
-    return embeddings.select(
-        F.col(id_col),
-        F.round(cosine_score(F.col("embedding"), qvec), decimals).alias("score"),
-    )
-
-
 def topk_ids(
     embeddings: DataFrame,
     qvec: Sequence[float],
     k: int,
     id_col: str = "vec_id",
-    method: str = "arrow",
 ) -> DataFrame:
     """Top-k (id, score), ties -> ascending id.
 
-    method="arrow" (default): partition-local NumPy partial top-k via
-    mapInPandas, then TakeOrderedAndProject over <= k*P survivors. The
-    selection inside each batch uses the same total order (rounded score
-    desc, id asc) as the final merge, so results are exact.
-
-    method="expr": pure column-expression scoring (zip_with/aggregate).
-    Semantically identical; Spark evaluates higher-order-function lambdas
-    interpreted (outside codegen), so it is the slow path — kept for
-    differential testing and environments without Arrow.
+    Partition-local NumPy partial top-k via mapInPandas, then
+    TakeOrderedAndProject over <= k*P survivors. The selection inside
+    each batch uses the same total order (rounded score desc, id asc) as
+    the final merge, so results are exact. (The column-expression scorer
+    ``functions.vector.cosine_score`` is semantically identical but runs
+    its higher-order-function lambdas interpreted, outside codegen.)
     """
     if k <= 0:
         raise ValueError("top_k must be positive")  # vectolite.py:131-138 guard
-    if method == "expr":
-        scored = score_embeddings(embeddings, qvec, id_col=id_col)
-    else:
-        from vectolite_spark._pandas_udfs import make_batch_topk_mapper
+    from vectolite_spark._pandas_udfs import make_batch_topk_mapper
 
-        mapper = make_batch_topk_mapper([0], [list(map(float, qvec))], k)
-        scored = (
-            embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
-            .mapInPandas(mapper, schema="query_id long, vec_id long, score double")
-            .select(F.col("vec_id").alias(id_col), "score")
-        )
+    mapper = make_batch_topk_mapper([0], [list(map(float, qvec))], k)
+    scored = (
+        embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
+        .mapInPandas(mapper, schema="query_id long, vec_id long, score double")
+        .select(F.col("vec_id").alias(id_col), "score")
+    )
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 

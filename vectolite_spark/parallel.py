@@ -25,20 +25,23 @@ Correctness notes:
 from __future__ import annotations
 
 import threading
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from typing import Any, Callable
 
 # -- conf-scope / job-pool mutual exclusion (VERDICT r12 item 4) ----------
 #
-# Session-scoped conf mutation (``_small_loop_confs``, the streaming
-# ``scaled_state_confs``) and concurrent driver-thread pools both touch
-# the ONE shared SparkSession: a conf scope entered while a pool is
-# draining would leak tiny-partition/AQE-off confs into whichever
-# concurrent job plans next, and a pool started inside a conf scope runs
-# every pooled job under loop confs its author never saw. Nothing in the
-# codebase composes them today; this guard makes that invariant LOUD
-# instead of implicit. Both sides register here; overlap raises
-# immediately rather than silently degrading a concurrent large job.
+# A session-conf scope (``conf_scope``: the small-graph loop confs of
+# ``operators.dedup`` and the streaming state-partition confs) and
+# concurrent driver-thread pools both touch the ONE shared SparkSession:
+# a scope entered while a pool is draining would leak tiny-partition/
+# AQE-off confs into whichever concurrent job plans next, and a pool
+# started inside a scope runs every pooled job under confs its author
+# never saw. Nothing in the codebase composes them today; this guard
+# makes that invariant LOUD instead of implicit. Both sides register
+# here; overlap raises immediately rather than silently degrading a
+# concurrent large job.
 
 _guard = threading.Lock()
 _active_pools = 0
@@ -54,10 +57,9 @@ def _pool_acquire() -> None:
     with _guard:
         if _active_conf_scopes:
             raise ConfScopeOverlapError(
-                "run_jobs started inside an active session-conf scope "
-                "(_small_loop_confs / scaled_state_confs): pooled jobs "
-                "would silently plan under loop confs. Run the pool "
-                "outside the scope."
+                "run_jobs started inside an active session-conf scope: "
+                "pooled jobs would silently plan under the scope's confs. "
+                "Run the pool outside the scope."
             )
         _active_pools += 1
 
@@ -68,9 +70,7 @@ def _pool_release() -> None:
         _active_pools -= 1
 
 
-def conf_scope_acquire() -> None:
-    """Called by session-conf context managers on entry (only when they
-    actually mutate a conf). Raises if any run_jobs pool is draining."""
+def _conf_scope_acquire() -> None:
     global _active_conf_scopes
     with _guard:
         if _active_pools:
@@ -82,10 +82,36 @@ def conf_scope_acquire() -> None:
         _active_conf_scopes += 1
 
 
-def conf_scope_release() -> None:
+def _conf_scope_release() -> None:
     global _active_conf_scopes
     with _guard:
         _active_conf_scopes -= 1
+
+
+@contextmanager
+def conf_scope(spark, confs: dict[str, str]) -> Iterator[None]:
+    """Set session ``confs`` for the block and restore them on exit,
+    even on failure. A non-empty scope holds the pool guard, so it
+    raises ``ConfScopeOverlapError`` while a ``run_jobs`` pool drains
+    (and a pool started inside it raises); an empty one is a no-op. A
+    failed set undoes the sets before it and releases the guard, and
+    the original failure is the one reported."""
+    if not confs:
+        yield
+        return
+    _conf_scope_acquire()
+    saved: dict[str, str] = {}
+    try:
+        for key, val in confs.items():
+            saved[key] = spark.conf.get(key)
+            spark.conf.set(key, val)
+        yield
+    finally:
+        try:
+            for key, val in saved.items():
+                spark.conf.set(key, val)
+        finally:
+            _conf_scope_release()
 
 
 def run_jobs(*thunks: Callable[[], Any]) -> list[Any]:

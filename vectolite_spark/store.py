@@ -478,7 +478,10 @@ class SparkVectolite:
         reference stores no dimension and crashes at query time on mismatch
         (SURVEY.md §1.2); we validate explicitly at insert AND query.
 
-        Cached (invalidated by every mutation): this
+        Cached, and dropped only by ``delete_document`` and ``rollback``,
+        the two mutations that can empty the store or restore another
+        dimension: every write is validated against the stored dimension,
+        so it cannot change it. This
         runs on EVERY query() — an uncached probe is one extra Spark job
         per query, which alone reinstates the ~30 q/s job-admission
         ceiling the batched-serving facade exists to break (measured:
@@ -500,7 +503,7 @@ class SparkVectolite:
     def _mutate(self, commit: Callable[[], object]):
         """Run one table mutation between two invalidations of
         everything derived from the table (indexes, serving working
-        sets, dim cache): before, so nothing built on the old state
+        sets): before, so nothing built on the old state
         serves while it changes; after, so whatever a concurrent reader
         built from the pre-commit table in between is dropped too — the
         generation bump fences serving builds still in flight. Without
@@ -569,7 +572,6 @@ class SparkVectolite:
         indexes index a table state that no longer exists after any
         mutation. Every mutation runs through ``_mutate``, which calls
         this on both sides of the commit."""
-        self._dim_cache = None  # rollback/delete can change the stored dim
         self._invalidate_ann()
         self._invalidate_text_index()
         self._invalidate_serving()
@@ -1160,8 +1162,9 @@ class SparkVectolite:
         once, by the merge's first write, whose ``Observation`` yields
         the row count and max id; the merge's probe counts the replaced
         rows. Duplicate ids, a wrong dimension or a non-finite element
-        raise, commit nothing and leave no data dir behind. With the
-        working set's dim probe, at most nine Spark jobs under AQE.
+        raise, commit nothing and leave no data dir behind. At most
+        eight Spark jobs under AQE (nine when the stored dim is not yet
+        cached).
 
         Returns {"updated": n, "inserted": n}.
         """
@@ -1191,7 +1194,10 @@ class SparkVectolite:
         probe = self._snap.probe(F.col("id") == doc_id)
         if not probe.hits:
             return False
-        self._mutate(lambda: self._snap.delete_where(probe))
+        try:
+            self._mutate(lambda: self._snap.delete_where(probe))
+        finally:
+            self._dim_cache = None  # the last row may have gone
         return True
 
     def get_document(self, doc_id: int) -> dict | None:
@@ -1413,7 +1419,10 @@ class SparkVectolite:
     def rollback(self, version: int) -> int:
         """Restore ``version`` as a NEW commit (history is never mutated)."""
         self._max_id_cache = None
-        return self._mutate(lambda: self._snap.rollback(version))
+        try:
+            return self._mutate(lambda: self._snap.rollback(version))
+        finally:
+            self._dim_cache = None  # the restored rows may have another dim
 
     def vacuum(self, keep_versions: int = 2) -> dict:
         """Drop old manifests + unreferenced data dirs (retention GC)."""

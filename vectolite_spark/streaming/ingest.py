@@ -23,11 +23,32 @@ from pyspark.sql import functions as F
 from vectolite_spark.chunk import DEFAULT_MAX_CHARS, DEFAULT_OVERLAP
 
 
-class scaled_state_confs:
+_STATE_BYTES_PER_PARTITION = 32 * 1024 * 1024
+
+
+def _local_bytes(path: str) -> int | None:
+    """Bytes under a local directory (None: not local, or not a dir)."""
+    import os
+
+    p = path[len("file://"):] if path.startswith("file://") else path
+    if "://" in p or not os.path.isdir(p):
+        return None
+    total = 0
+    for root, _dirs, names in os.walk(p):
+        for n in names:
+            if not n.startswith(("_", ".")):
+                try:
+                    total += os.path.getsize(os.path.join(root, n))
+                except OSError:
+                    pass
+    return total
+
+
+def scaled_state_confs(spark: SparkSession, src_dir: str):
     """Scale-adaptive shuffle/state partition count for a ONE-SHOT
     streaming query (fresh checkpoint per call — the conf is read at
     query start and pinned into that checkpoint, so this never touches
-    a resumed query's layout).
+    a resumed query's layout), as a ``parallel.conf_scope``.
 
     A stateful micro-batch shuffles into ``spark.sql.shuffle.partitions``
     state partitions and instantiates one state store per partition per
@@ -40,75 +61,19 @@ class scaled_state_confs:
     whose size cannot be observed (non-local paths here) are left
     untouched. Override per deployment with
     ``spark.vectolite.stream.statePartitions``."""
+    from vectolite_spark.parallel import conf_scope
 
-    _BYTES_PER_PARTITION = 32 * 1024 * 1024
-
-    def __init__(self, spark: SparkSession, src_dir: str):
-        self._spark = spark
-        self._src = src_dir
-        self._saved: str | None = None
-
-    @staticmethod
-    def _local_bytes(path: str) -> int | None:
-        import os
-
-        p = path
-        for scheme in ("file://",):
-            if p.startswith(scheme):
-                p = p[len(scheme):]
-        if "://" in p or not os.path.isdir(p):
-            return None
-        total = 0
-        for root, _dirs, names in os.walk(p):
-            for n in names:
-                if not n.startswith(("_", ".")):
-                    try:
-                        total += os.path.getsize(os.path.join(root, n))
-                    except OSError:
-                        pass
-        return total
-
-    def __enter__(self):
-        override = self._spark.conf.get(
-            "spark.vectolite.stream.statePartitions", None
+    override = spark.conf.get("spark.vectolite.stream.statePartitions", None)
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if override is not None:
+        p = max(1, int(override))
+    else:
+        size = _local_bytes(src_dir)
+        p = cur if size is None else min(
+            cur, max(1, size // _STATE_BYTES_PER_PARTITION + 1)
         )
-        cur = int(self._spark.conf.get("spark.sql.shuffle.partitions"))
-        if override is not None:
-            p = max(1, int(override))
-        else:
-            size = self._local_bytes(self._src)
-            if size is None:
-                return self
-            p = min(cur, max(1, size // self._BYTES_PER_PARTITION + 1))
-        if p != cur:
-            from vectolite_spark.parallel import conf_scope_acquire
-
-            conf_scope_acquire()  # raises if a run_jobs pool is draining
-            self._saved = str(cur)
-            try:
-                self._spark.conf.set("spark.sql.shuffle.partitions", str(p))
-            except BaseException:
-                # a with-statement never calls __exit__ for a failed
-                # __enter__: undo here, or the scope leaks and every
-                # later run_jobs pool raises ConfScopeOverlapError;
-                # the original failure is the one reported
-                try:
-                    self.__exit__(None, None, None)
-                except Exception:
-                    pass
-                raise
-        return self
-
-    def __exit__(self, *exc):
-        if self._saved is not None:
-            saved, self._saved = self._saved, None
-            try:
-                self._spark.conf.set("spark.sql.shuffle.partitions", saved)
-            finally:
-                from vectolite_spark.parallel import conf_scope_release
-
-                conf_scope_release()
-        return False
+    confs = {} if p == cur else {"spark.sql.shuffle.partitions": str(p)}
+    return conf_scope(spark, confs)
 
 
 def stream_text_files(spark: SparkSession, input_dir: str, glob: str = "*.txt") -> DataFrame:
