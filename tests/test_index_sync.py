@@ -399,3 +399,43 @@ def test_partial_build_is_not_ready_and_gets_rebuilt(spark, tmp_path, monkeypatc
         assert builds == [1]
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def test_cached_index_rebuilds_when_its_fingerprint_changes(spark, tmp_path):
+    """A ``.cache`` index records what built it (the package sources and
+    the session's core count) in its recipe marker: an unchanged
+    fingerprint serves the cached index, a tampered or legacy one
+    rebuilds it and records the current fingerprint again."""
+    import os
+    import shutil
+
+    from vectolite_spark import registry
+
+    sf = str(tmp_path / "sf_fingerprint")
+    path = registry.index_cache_path("fingerprint_test", sf)
+    done = os.path.join(path, registry._RECIPE_DONE)
+    builds: list[str] = []
+
+    def build(p: str) -> None:
+        builds.append(p)
+        os.makedirs(p, exist_ok=True)
+
+    def marker() -> str:
+        with open(done) as f:
+            return f.read()
+
+    try:
+        assert registry._cached_index("fingerprint_test", sf, build) == path
+        fingerprint = marker()
+        assert fingerprint == registry._build_fingerprint()
+        assert f"cores={spark.sparkContext.defaultParallelism}" in fingerprint
+        registry._cached_index("fingerprint_test", sf, build)
+        assert len(builds) == 1, "an unchanged fingerprint serves the index"
+        for stale in (fingerprint.replace("cores=", "cores=9"), "done"):
+            with open(done, "w") as f:
+                f.write(stale)
+            registry._cached_index("fingerprint_test", sf, build)
+            assert marker() == fingerprint
+        assert len(builds) == 3, "each stale fingerprint rebuilt once"
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -292,8 +292,8 @@ def test_store_batched_serving_sees_mutations(spark, tmp_path):
 
 def test_batched_serving_on_versioned_store(spark, tmp_path):
     """The facade over the snapshot table: its df() reads through
-    manifests, and a mutation (a snapshot commit) tears the working set
-    down before the next query."""
+    manifests, and a mutation (a snapshot commit) reaches the working
+    set (patched, under the default budget) before the next query."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -388,9 +388,9 @@ def test_store_ann_queries_ride_the_facade(spark, tmp_path):
 def test_resident_serving_matches_exact(spark, tmp_path):
     """The resident regime (the sub-ms single-query tier) returns
     identical results to the exact Spark path — scores, order, filters,
-    zero-hit filters — and to the per-job ANN path; a mutation tears the
-    working set down; over budget the store serves through the batcher
-    instead of refusing, with the same answers."""
+    zero-hit filters — and to the per-job ANN path; a write patches the
+    working set in place of a rebuild; over budget the store serves
+    through the batcher instead of refusing, with the same answers."""
     from vectolite_spark.embed import stub_embedder
     from vectolite_spark.store import SparkVectolite
 
@@ -424,9 +424,12 @@ def test_resident_serving_matches_exact(spark, tmp_path):
     assert store.query(texts[0], top_k=40) == want_deep
     assert store.query(texts[0], top_k=3, ann=True) == want_ann
 
-    # mutation tears the resident set down; next query sees fresh rows
+    # a write patches the resident set; the next query sees fresh rows
+    ws = store._working_set
     store.insert("resident doc number 999", {"tenant": "t1"})
-    assert store._working_set is None
+    assert isinstance(store._working_set, _ResidentSet)
+    assert store._working_set is not ws
+    assert store._working_set.version == store._snap.current_version()
     fresh = store.query("resident doc number 999", top_k=3)
     assert any(r["text"] == "resident doc number 999" for r in fresh)
 
@@ -476,9 +479,9 @@ def test_serving_regime_choice(spark, tmp_path):
     orig_df = store.df
     reads = {"n": 0}
 
-    def counting_df():
+    def counting_df(*version):
         reads["n"] += 1
-        return orig_df()
+        return orig_df(*version)
 
     store.df = counting_df
     try:
@@ -824,8 +827,8 @@ def test_resident_collect_generation_fence(
     orig_df = store.df
     fired = {"n": 0}
 
-    def racing_df():
-        df = orig_df()
+    def racing_df(*version):
+        df = orig_df(*version)
         fired["n"] += 1
         if fired["n"] == frame_read:
             store._invalidate_serving()  # concurrent mutation lands here
@@ -919,9 +922,9 @@ def test_resident_build_single_flight(spark, tmp_path):
     orig_df = store.df
     calls = {"n": 0}
 
-    def counting_df():
+    def counting_df(*version):
         calls["n"] += 1
-        return orig_df()
+        return orig_df(*version)
 
     store.df = counting_df
     try:
@@ -1045,3 +1048,235 @@ def test_failed_batched_build_leaves_nothing_cached(spark, tmp_path):
     assert isinstance(store._working_set, _BatchedSet)
     store.disable_batched_serving()
     assert persisted() == before
+
+
+def _by_id(ws) -> dict:
+    """A resident set's contents in id order (row order is the scan's)."""
+    import numpy as np
+
+    o = np.argsort(ws.ids, kind="stable")
+    return {
+        "ids": ws.ids[o].tolist(),
+        "E": ws.E[o] if len(o) else ws.E.reshape(0, -1),
+        "norms": ws.norms[o],
+        "texts": ws.texts[o].tolist(),
+        "metas": ws.metas[o].tolist(),
+        "parsed": [ws.parsed[i] for i in o],
+        "codes": ws.codes[o],
+        "dirs": ws.dirs[o].tolist(),
+        "payload": ws.payload,
+        "planes": ws.planes,
+        "version": ws.version,
+    }
+
+
+def _assert_patched_equals_rebuild(store, plain) -> None:
+    """The published set equals a fresh build of the current version
+    bit for bit, and answers exact, filtered and ``ann=True`` queries as
+    the per-job paths of ``plain`` (a second, non-serving handle on the
+    same table) do."""
+    import numpy as np
+
+    ws = store._working_set
+    assert isinstance(ws, _ResidentSet), "the write patched, not tore down"
+    assert ws.version == store._snap.current_version()
+    fresh = store._build_working_set(store._serving_cfg)
+    got, want = _by_id(ws), _by_id(fresh)
+    for key, value in want.items():
+        if isinstance(value, np.ndarray):
+            assert value.dtype == got[key].dtype, key
+            assert np.array_equal(got[key], value), key
+        else:
+            assert got[key] == value, key
+    assert ws.est == fresh.est
+    for q in ("patch doc 3", "patch doc 17", "a fresh upsert row"):
+        assert store.query(q, top_k=5) == plain.query(q, top_k=5)
+        assert store.query(
+            q, top_k=5, metadata_filter={"tenant": "t1"}
+        ) == plain.query(q, top_k=5, metadata_filter={"tenant": "t1"})
+        assert store.query(q, top_k=4, ann=True) == plain.query(
+            q, top_k=4, ann=True
+        )
+    assert store._working_set is ws, "queries served from the patched set"
+
+
+def test_patched_resident_set_equals_a_rebuild(spark, tmp_path):
+    """Every write through a resident-serving store patches the working
+    set instead of dropping it, and after each step of a seeded write
+    sequence — insert_many, append_dataframe, delete_document of a live
+    and of an absent id, upsert, compact, vacuum, rollback — the set
+    holds exactly what a fresh build of the current version holds (ids,
+    vectors, norms, texts, metadata, bucket codes, dir tags) and answers
+    as the per-job paths do. Rollback is the one write that tears the
+    set down; the rebuilt set then patches again."""
+    import numpy as np
+
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    rng = np.random.default_rng(11)
+    embed = stub_embedder(dim=8)
+    path = str(tmp_path / "patchdb")
+    store = SparkVectolite(spark, path, embed_fn=embed)
+    plain = SparkVectolite(spark, path, embed_fn=embed)
+    store.enable_batched_serving()
+    empty = store._working_set
+    assert isinstance(empty, _ResidentSet) and empty.version == -1
+    assert store.query("patch doc 3", top_k=3) == []
+
+    ids = store.insert_many(
+        [f"patch doc {i}" for i in range(30)],
+        [{"tenant": f"t{i % 3}", "k": int(rng.integers(100))} for i in range(30)],
+    )
+    _assert_patched_equals_rebuild(store, plain)
+
+    vecs = embed([f"patch doc {i}" for i in range(30, 40)])
+    frame = spark.createDataFrame(
+        [
+            (f"patch doc {i}", f'{{"tenant": "t{i % 3}"}}', v)
+            for i, v in zip(range(30, 40), vecs)
+        ],
+        "text string, metadata string, embedding array<float>",
+    )
+    assert store.append_dataframe(frame) == 10
+    _assert_patched_equals_rebuild(store, plain)
+
+    victim = int(rng.choice(ids))
+    assert store.delete_document(victim) is True
+    _assert_patched_equals_rebuild(store, plain)
+    ws = store._working_set
+    assert store.delete_document(victim) is False
+    assert store._working_set is ws, "an absent id commits nothing"
+
+    live = sorted(set(ids) - {victim})
+    target = int(rng.choice(live))
+    updates = spark.createDataFrame(
+        [
+            (key, text, '{"tenant": "t1"}', embed([text])[0])
+            for key, text in (
+                (target, "a fresh upsert row"),
+                (10_000, "an inserted upsert row"),
+            )
+        ],
+        "id long, text string, metadata string, embedding array<float>",
+    )
+    assert store.upsert(updates) == {"updated": 1, "inserted": 1}
+    _assert_patched_equals_rebuild(store, plain)
+    mid = store._snap.current_version()
+
+    assert store.compact() == 40
+    _assert_patched_equals_rebuild(store, plain)
+    ws = store._working_set
+    store.vacuum(keep_versions=2)
+    assert store._working_set is ws, "vacuum commits nothing"
+    store.insert_many(["patch doc after compact"], [{"tenant": "t1"}])
+    _assert_patched_equals_rebuild(store, plain)
+
+    store.rollback(mid)
+    assert store._working_set is None, "rollback tears the set down"
+    store.query("patch doc 3", top_k=3)
+    _assert_patched_equals_rebuild(store, plain)
+    assert store.delete_document(target) is True
+    _assert_patched_equals_rebuild(store, plain)
+    store.disable_batched_serving()
+
+
+@pytest.mark.parametrize(
+    "case", ["duplicate ids", "dimension mismatch", "non-finite"]
+)
+def test_failed_upsert_leaves_resident_set_unchanged(spark, tmp_path, case):
+    """A rejected upsert on a resident-serving store raises, commits no
+    version and leaves the published working set as it was."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    store = SparkVectolite(
+        spark, str(tmp_path / "failpatch"), embed_fn=stub_embedder(dim=4)
+    )
+    store.enable_batched_serving()
+    store.insert_many(["one doc", "two doc", "three doc"])
+    ws, version = store._working_set, store._snap.current_version()
+    ok = [0.5, 0.5, 0.0, 0.0]
+    second = {
+        "duplicate ids": (1, "one v3", None, ok),
+        "dimension mismatch": (7, "wrong dim", None, [0.1] * 3),
+        "non-finite": (7, "nan vec", None, [0.0, float("nan"), 0.0, 0.0]),
+    }[case]
+    updates = spark.createDataFrame(
+        [(1, "one v2", None, ok), second],
+        "id long, text string, metadata string, embedding array<float>",
+    )
+    with pytest.raises(Exception, match=case):
+        store.upsert(updates)
+    assert store._snap.current_version() == version
+    assert store._working_set is ws and ws.version == version
+    assert store.query("one doc", top_k=1)[0]["text"] == "one doc"
+    store.disable_batched_serving()
+
+
+def test_delete_after_another_handles_commit_probes_in_spark(
+    spark, tmp_path, count_jobs
+):
+    """A commit through a second handle leaves the first handle's
+    resident set a version behind: its delete must not trust the set
+    (a stale probe would commit against an old version and raise
+    SnapshotConflict), so it probes in Spark, commits, and tears the set
+    down; the next query rebuilds over both commits."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    embed = stub_embedder(dim=8)
+    path = str(tmp_path / "twohandles")
+    first = SparkVectolite(spark, path, embed_fn=embed)
+    first.enable_batched_serving()
+    ids = first.insert_many([f"two handle doc {i}" for i in range(12)])
+    second = SparkVectolite(spark, path, embed_fn=embed)
+    second.insert_many(["written by the second handle"])
+    assert first._working_set.version == first._snap.current_version() - 1
+    with count_jobs() as jobs:
+        assert first.delete_document(ids[4]) is True
+    assert len(jobs) >= 1, "the stale set was not asked"
+    assert first._working_set is None
+    got = first.query("written by the second handle", top_k=2)
+    assert got[0]["text"] == "written by the second handle"
+    assert ids[4] not in [r["id"] for r in first.query("two handle doc 4", top_k=12)]
+    assert isinstance(first._working_set, _ResidentSet)
+    assert first._working_set.version == first._snap.current_version()
+    first.disable_batched_serving()
+
+
+def test_append_over_budget_switches_to_micro_batched(spark, tmp_path):
+    """An append that would push the resident set past
+    ``resident_max_bytes`` tears it down without collecting the new
+    rows; the next query re-measures and serves micro-batched, with the
+    per-job answers."""
+    from vectolite_spark.embed import stub_embedder
+    from vectolite_spark.store import SparkVectolite
+
+    embed = stub_embedder(dim=8)
+    store = SparkVectolite(spark, str(tmp_path / "budgetdb"), embed_fn=embed)
+    store.insert_many([f"budget doc {i}" for i in range(10)])
+    store.enable_batched_serving()
+    store.query("budget doc 1", top_k=2)
+    ws = store._working_set
+    assert isinstance(ws, _ResidentSet)
+    store.enable_batched_serving(resident_max_bytes=ws.est + 500)
+    store.query("budget doc 1", top_k=2)
+    assert isinstance(store._working_set, _ResidentSet)
+    big = spark.createDataFrame(
+        [(f"big doc {i} " + "x" * 400, "{}", embed([f"big {i}"])[0]) for i in range(4)],
+        "text string, metadata string, embedding array<float>",
+    )
+    collected = []
+    orig = store_mod._collect
+    store_mod._collect = lambda df, *extra: collected.append(df) or orig(df, *extra)
+    try:
+        assert store.append_dataframe(big) == 4
+    finally:
+        store_mod._collect = orig
+    assert collected == [], "an over-budget append never collects"
+    assert store._working_set is None
+    got = store.query("budget doc 1", top_k=3)
+    assert isinstance(store._working_set, _BatchedSet)
+    store.disable_batched_serving()
+    assert got == store.query("budget doc 1", top_k=3)

@@ -739,3 +739,46 @@ def test_manifest_that_stays_empty_raises(store, spark, monkeypatch):
     open(store._manifest_path(1), "w").close()
     with pytest.raises(VectoliteError, match=r"v00000001\.json"):
         store.read()
+
+
+def test_every_commit_records_its_row_count(store, spark, tmp_path):
+    """Each kind of commit records the version's row count in its
+    manifest (``rows``), equal to a scan of that version: appends and
+    rewrites observe it on their write, deletes and merges derive it
+    from the previous count, rollback and a shallow clone copy it. A
+    version after a manifest without a count records none."""
+    import json
+
+    from vectolite_spark.snapshots import make_stream_sink
+
+    def assert_counted(s):
+        assert s.rows() == s.read().count()
+
+    assert store.rows() == 0
+    store.append(_df(spark, [1, 2, 3]))
+    store.append(_df(spark, [4, 5]))
+    assert_counted(store)
+    store.delete_where(F.col("id").isin(2, 9))
+    assert_counted(store)
+    store.merge(_df(spark, [3, 6, 7]), key="id")
+    assert store.rows() == 6
+    assert_counted(store)
+    store.compact(target_files=1)
+    assert_counted(store)
+    store.overwrite(_df(spark, [8]))
+    assert store.rows() == 1
+    store.rollback(2)
+    assert store.rows() == store.read(version=2).count() == 4
+    clone = store.shallow_clone(str(tmp_path / "clone"))
+    assert clone.rows() == 4
+    make_stream_sink(store)(_df(spark, [10, 11]), 0)
+    assert_counted(store)
+
+    # a legacy manifest (no count) leaves its successors uncounted
+    v = store.current_version()
+    path = store._manifest_path(v)
+    legacy = {k: x for k, x in store._read_manifest(v).items() if k != "rows"}
+    store._fs.write_text(path, json.dumps(legacy), overwrite=True)
+    assert store.rows() is None
+    store.delete_where(F.col("id") == 10)
+    assert store.rows() is None

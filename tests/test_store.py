@@ -6,7 +6,7 @@ import pytest
 
 from vectolite_spark.embed import stub_embedder
 from vectolite_spark.errors import VectoliteError
-from vectolite_spark.store import SparkVectolite
+from vectolite_spark.store import SparkVectolite, _ResidentSet
 
 
 @pytest.fixture(params=["flat", "versioned"])
@@ -234,7 +234,9 @@ def test_small_writes_submit_a_fixed_handful_of_jobs(spark, tmp_path, count_jobs
     """Each small write is a fixed number of Spark jobs, whatever the
     dir count: the caller's update frame is evaluated once, a delete
     probes once, compact counts inside its write, and an absent id costs
-    a probe and nothing else."""
+    a probe and nothing else. With a resident working set the set
+    answers the probes: a delete is its rewrite alone, an absent id and
+    a count cost nothing, and a read after any write runs no job."""
     s = SparkVectolite(spark, str(tmp_path / "db"), embed_fn=stub_embedder(dim=8))
     for d in range(3):  # three commit dirs, ids 1..9
         s.insert_many([f"doc {d} {j}" for j in range(3)])
@@ -270,6 +272,44 @@ def test_small_writes_submit_a_fixed_handful_of_jobs(spark, tmp_path, count_jobs
         assert s.compact() == 10
     assert len(jobs) <= 3, f"compact ran {len(jobs)} jobs"
     assert s.count_documents() == 10
+
+    # resident serving: the working set answers the delete and upsert
+    # probes, every write patches it, and a read after a write runs none
+    r = SparkVectolite(spark, str(tmp_path / "rdb"), embed_fn=stub_embedder(dim=8))
+    r.enable_batched_serving()  # empty store: an empty set, at once
+    for d in range(3):
+        r.insert_many([f"doc {d} {j}" for j in range(3)])
+
+    def read_runs_no_job(text: str, want_id: int) -> None:
+        with count_jobs() as jobs:
+            assert r.query(text, top_k=1)[0]["id"] == want_id
+        assert jobs == [], f"read after a write ran {len(jobs)} jobs"
+
+    read_runs_no_job("doc 2 0", 7)
+    with count_jobs() as jobs:
+        assert r.insert_many(["resident insert"]) == [10]
+    assert len(jobs) <= 1, f"insert ran {len(jobs)} jobs"
+    read_runs_no_job("resident insert", 10)
+    with count_jobs() as jobs:
+        assert r.delete_document(5) is True
+    assert len(jobs) <= 1, f"delete ran {len(jobs)} jobs"
+    read_runs_no_job("doc 1 2", 6)
+    with count_jobs() as jobs:
+        assert r.delete_document(999) is False
+    assert jobs == [], f"absent delete ran {len(jobs)} jobs"
+    with count_jobs() as jobs:
+        assert r.upsert(updates) == {"updated": 1, "inserted": 1}
+    assert len(jobs) <= 3, f"upsert ran {len(jobs)} jobs"
+    read_runs_no_job("doc 0 2", 3)
+    with count_jobs() as jobs:
+        assert r.count_documents() == 10
+    assert jobs == [], f"count ran {len(jobs)} jobs"
+    with count_jobs() as jobs:
+        assert r.compact() == 10
+    assert len(jobs) <= 3, f"compact ran {len(jobs)} jobs"
+    read_runs_no_job("doc 0 0", 1)
+    assert isinstance(r._working_set, _ResidentSet)
+    r.disable_batched_serving()
 
 
 def test_dimension_is_still_validated_after_writes(store, spark):

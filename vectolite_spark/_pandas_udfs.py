@@ -358,6 +358,28 @@ def _srp_planes(n_tables, n_planes, d):
     return P
 
 
+def srp_bucket_codes(mat, n_tables, n_planes):
+    """The ``n_tables`` SRP bucket codes of each row of the float64
+    matrix ``mat`` (N x T int64): table ``t``'s code packs the signs of
+    the row's dot products with planes ``t*n_planes .. (t+1)*n_planes-1``
+    of ``_srp_planes``, bit ``j`` for plane ``j``. The one body behind
+    ``make_srp_bucket_codes_udf``, the serving probe's query bucketing
+    and the store's resident working set, so all of them agree bit for
+    bit."""
+    if len(mat) == 0:
+        return np.zeros((0, n_tables), dtype=np.int64)
+    P = _srp_planes(n_tables, n_planes, mat.shape[1])
+    bits = (mat @ P.T >= 0).astype(np.int64)  # N x (T*b)
+    shifts = np.arange(n_planes, dtype=np.int64)
+    return np.stack(
+        [
+            (bits[:, t * n_planes : (t + 1) * n_planes] << shifts).sum(axis=1)
+            for t in range(n_tables)
+        ],
+        axis=1,
+    )
+
+
 def make_srp_bucket_codes_udf(n_tables=16, n_planes=6):
     """pandas UDF: embedding -> the row's ``n_tables`` SRP bucket codes
     (``array<long>``, one per table), from the SAME memoized
@@ -365,23 +387,13 @@ def make_srp_bucket_codes_udf(n_tables=16, n_planes=6):
     serving facade precomputes this ONCE onto its cached working set
     (ADVICE r9): dispatch cycles then skip the per-cycle N x (T*b)
     matmul and touch full embeddings only for candidate rows."""
-    shifts = np.arange(n_planes, dtype=np.int64)
 
     @pandas_udf("array<long>")
     def _codes(emb: pd.Series) -> pd.Series:
         if len(emb) == 0:
             return pd.Series([], dtype=object)
         mat = np.stack(emb.to_numpy()).astype(np.float64, copy=False)
-        P = _srp_planes(n_tables, n_planes, mat.shape[1])
-        bits = (mat @ P.T >= 0).astype(np.int64)
-        codes = np.stack(
-            [
-                (bits[:, t * n_planes : (t + 1) * n_planes] << shifts).sum(axis=1)
-                for t in range(n_tables)
-            ],
-            axis=1,
-        )
-        return pd.Series(list(codes))
+        return pd.Series(list(srp_bucket_codes(mat, n_tables, n_planes)))
 
     return _codes
 
@@ -416,17 +428,6 @@ def make_srp_serving_mapper(
     qn = np.sqrt((qarr * qarr).sum(axis=1))
     qid_arr = np.asarray(qids, dtype=np.int64)
     pcols = list(payload_cols)
-    shifts = np.arange(n_planes, dtype=np.int64)
-
-    def _buckets(mat, P):
-        bits = (mat @ P.T >= 0).astype(np.int64)  # N x (T*b)
-        return np.stack(
-            [
-                (bits[:, t * n_planes : (t + 1) * n_planes] << shifts).sum(axis=1)
-                for t in range(n_tables)
-            ],
-            axis=1,
-        )  # N x T
 
     def mapper(batches):
         frames = [pdf for pdf in batches if len(pdf)]
@@ -436,15 +437,14 @@ def make_srp_serving_mapper(
         if frames:
             pdf = pd.concat(frames, ignore_index=True)
             emb_np = pdf["embedding"].to_numpy()
-            P = _srp_planes(n_tables, n_planes, qarr.shape[1])
-            q_b = _buckets(qarr, P)  # Q x T
+            q_b = srp_bucket_codes(qarr, n_tables, n_planes)  # Q x T
             if bucket_col is not None and bucket_col in pdf.columns:
                 row_b = np.stack(pdf[bucket_col].to_numpy()).astype(
                     np.int64, copy=False
                 )  # N x T, precomputed at batcher build
             else:
                 full = np.stack(emb_np).astype(np.float64, copy=False)
-                row_b = _buckets(full, P)
+                row_b = srp_bucket_codes(full, n_tables, n_planes)
             ids = pdf["vec_id"].to_numpy()
             cand_masks = [
                 (row_b == q_b[qi]).any(axis=1) for qi in range(len(qid_arr))

@@ -212,10 +212,43 @@ def vacuum_index_cache(
 _RECIPE_DONE = "_recipe_done"
 
 
+_SOURCE_HASH: list[str] = []  # memo: the package sources cannot change in-process
+
+
+def _build_fingerprint() -> str:
+    """What built a ``.cache`` index: a hash of every ``vectolite_spark``
+    source file (path and bytes, in path order) plus the active
+    session's core count, which sizes the builders' partitioning. An
+    index some other code revision or core count built may differ from
+    what this one would build, so it must not serve."""
+    import hashlib
+    import os
+
+    from pyspark import SparkContext
+
+    if not _SOURCE_HASH:
+        pkg = os.path.dirname(os.path.abspath(__file__))
+        h = hashlib.sha256()
+        for root, dirs, files in os.walk(pkg):
+            dirs.sort()
+            for name in sorted(files):
+                if name.endswith(".py"):
+                    path = os.path.join(root, name)
+                    h.update(os.path.relpath(path, pkg).encode())
+                    with open(path, "rb") as f:
+                        h.update(f.read())
+        _SOURCE_HASH.append(h.hexdigest()[:16])
+    sc = SparkContext._active_spark_context
+    cores = sc.defaultParallelism if sc is not None else 0
+    return f"{_SOURCE_HASH[0]}:cores={cores}"
+
+
 def _cached_index(recipe: str, sf_dir: str, build) -> str:
     """The one build-if-absent helper of the ``.cache`` layout: returns
     ``index_cache_path(recipe, sf_dir)``, building it first when its
-    recipe marker is missing. A miss removes whatever a crashed earlier
+    recipe marker is missing or records another ``_build_fingerprint``
+    (a stale index from other code or another core count rebuilds
+    instead of serving). A miss removes whatever a crashed earlier
     attempt left at the path and drops every open handle over it, runs
     ``build(path)``, and only then writes the marker — so a build that
     raises is redone from scratch on the next call."""
@@ -224,13 +257,19 @@ def _cached_index(recipe: str, sf_dir: str, build) -> str:
 
     path = index_cache_path(recipe, sf_dir)
     done = os.path.join(path, _RECIPE_DONE)
-    if not os.path.exists(done):
+    fingerprint = _build_fingerprint()
+    try:
+        with open(done) as f:
+            fresh = f.read() == fingerprint
+    except OSError:
+        fresh = False
+    if not fresh:
         _evict_handles([k for k in _HANDLE_CACHE if k[0] == path])
         shutil.rmtree(path, ignore_errors=True)
         build(path)
         os.makedirs(path, exist_ok=True)
         with open(done, "w") as f:
-            f.write("done")
+            f.write(fingerprint)
     return path
 
 

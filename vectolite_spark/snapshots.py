@@ -19,6 +19,9 @@ Commit protocol (single cheap primitive, works on any Hadoop FS):
 
 Readers never list data dirs: a version IS its manifest's dir list, so a
 reader of version N is immune to concurrent commits (snapshot isolation).
+Every manifest also records the version's row count (``rows``), taken on
+the commit's own write or derived from the previous count, so counting a
+version reads one small file and runs no Spark job.
 The create in step 2 makes the manifest visible before its bytes land,
 so a reader that lists it mid-write waits briefly for them
 (``_read_manifest``) instead of failing or falling back to an older
@@ -30,6 +33,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -43,10 +47,27 @@ from vectolite_spark.store import _HadoopFS
 
 # how long a reader waits for a listed manifest's bytes to land
 _MANIFEST_WAIT_S = 2.0
+# what a commit at version 0 plans against (never mutated)
+_NO_ROWS = {"dirs": [], "rows": 0}
 
 
 class SnapshotConflict(VectoliteError):
     """Another writer committed this version first; reload and retry."""
+
+
+def dir_name(path: str) -> str:
+    """A data dir's name, its last path component: what
+    ``input_file_name()``'s parent segment reads for the dir's rows."""
+    return path.rstrip("/").rsplit("/", 1)[-1]
+
+
+def duplicate_keys_error(key: str, extra: int, example) -> VectoliteError:
+    """The error a merge source whose ``key`` repeats raises: ``extra``
+    rows beyond one per key, ``example`` the largest repeated key."""
+    return VectoliteError(
+        f"merge source contains duplicate {key}s ({extra} extra rows; "
+        f"e.g. {key} {example!r})"
+    )
 
 
 @dataclass(frozen=True)
@@ -93,6 +114,16 @@ class SnapshotStore:
         """-1 for an empty store (no commits yet)."""
         vs = self._versions()
         return vs[-1] if vs else -1
+
+    def rows(self, version: int | None = None) -> int | None:
+        """The row count of ``version`` (default: current; 0 for an
+        empty store) as its manifest records it, with no Spark job; None
+        for a manifest written before commits recorded counts."""
+        if version is None:
+            version = self.current_version()
+        if version < 0:
+            return 0
+        return self._read_manifest(version).get("rows")
 
     def _read_manifest(self, version: int) -> dict:
         """The manifest of ``version``. A commit's create makes the file
@@ -212,6 +243,27 @@ class SnapshotStore:
             ) from e
         return version
 
+    @staticmethod
+    def _write_counted(df: DataFrame, path: str, mode: str = "error") -> int:
+        """Write ``df`` as a parquet dir at ``path`` and return its row
+        count, observed on the write itself (no second pass)."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            mode
+        ).parquet(path)
+        return int(obs.get["rows"])
+
+    @staticmethod
+    def _rows_after(prev: dict, delta: int) -> dict:
+        """``{"rows": ...}`` for a commit that changes ``prev``'s row count
+        by ``delta``; empty when ``prev`` records no count (a legacy
+        manifest), so one uncounted version leaves its successors
+        uncounted rather than wrong."""
+        return {"rows": prev["rows"] + delta} if "rows" in prev else {}
+
     def _new_data_dir(self, version: int, op: str) -> str:
         # per-attempt unique suffix: a crashed or commit-conflicted attempt
         # strands a dir for vacuum, and the RETRY of the same operation at
@@ -237,13 +289,13 @@ class SnapshotStore:
         committed manifest records the evolved union schema and readers
         NULL-backfill older dirs; type changes raise."""
         version = self.current_version() + 1
-        prev = self._read_manifest(version - 1) if version > 0 else {"dirs": []}
+        prev = self._read_manifest(version - 1) if version > 0 else _NO_ROWS
         schema = self._evolve_schema(self._schema_of(version - 1), df.schema)
         new_dir = self._new_data_dir(version, "append")
         with phase(f"snapshot append v{version}"):
-            df.write.mode("error").parquet(new_dir)
+            n = self._write_counted(df, new_dir)
         dirs = prev["dirs"]
-        extra: dict = {"schema": schema.json()}
+        extra: dict = {"schema": schema.json(), **self._rows_after(prev, n)}
         carried = self._carried_zonemaps(prev, dirs)
         if carried:
             extra["zonemaps"] = carried  # untouched dirs keep their stats
@@ -260,9 +312,10 @@ class SnapshotStore:
         version = self.current_version() + 1
         new_dir = self._new_data_dir(version, op)
         with phase(f"snapshot {op} v{version}"):
-            df.write.mode("error").parquet(new_dir)
+            n = self._write_counted(df, new_dir)
         return self._commit(
-            [new_dir], op, extra={"schema": df.schema.json()}, version=version
+            [new_dir], op, extra={"schema": df.schema.json(), "rows": n},
+            version=version,
         )
 
     def _affected_dirs(
@@ -292,8 +345,7 @@ class SnapshotStore:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        names = {d: d.rstrip("/").rsplit("/", 1)[-1] for d in dirs}
-        return {d: counts[names[d]] for d in dirs if names[d] in counts}
+        return {d: counts[dir_name(d)] for d in dirs if dir_name(d) in counts}
 
     def probe(self, condition: Column) -> Probe:
         """Which dirs of the current version hold rows matching
@@ -315,6 +367,24 @@ class SnapshotStore:
                     prev["dirs"], lambda df: df.filter(condition), schema=schema
                 )
         return Probe(condition, version, prev, schema, hits)
+
+    def known_probe(
+        self, condition: Column, version: int, rows_by_dir: dict[str, int]
+    ) -> Probe | None:
+        """A ``Probe`` of ``version`` built from what the caller already
+        knows, with no Spark job: ``rows_by_dir`` maps a data dir's name
+        (``dir_name``) to the rows matching ``condition`` there. None
+        when ``version`` does not list one of those dirs, so a caller
+        whose facts are not this version's probes in Spark instead."""
+        m = self._read_manifest(version) if version >= 0 else {"dirs": []}
+        hits = {
+            d: rows_by_dir[dir_name(d)]
+            for d in m["dirs"]
+            if dir_name(d) in rows_by_dir
+        }
+        if len(hits) != len(rows_by_dir):
+            return None
+        return Probe(condition, version, m, self._schema_of(version), hits)
 
     def delete_where(self, condition) -> int:
         """DIR-PRUNED copy-on-write delete (the Delta/Iceberg shape): only
@@ -352,6 +422,7 @@ class SnapshotStore:
         extra = {
             "rewritten_dirs": len(p.hits),
             "pruned_dirs": len(dirs) - len(p.hits),
+            **self._rows_after(p.manifest, -sum(p.hits.values())),
         }
         if p.schema is not None:
             extra["schema"] = p.schema.json()  # delete never changes schema
@@ -360,11 +431,16 @@ class SnapshotStore:
             extra["zonemaps"] = carried  # rewritten dirs lose their stats
         return self._commit(kept, "delete", extra=extra, version=version)
 
-    def merge(self, incoming: DataFrame, key: str = "id") -> int:
+    def merge(
+        self,
+        incoming: DataFrame,
+        key: str = "id",
+        probe: Callable[[DataFrame], Probe | None] | None = None,
+    ) -> int:
         """Dir-pruned MERGE (upsert): dirs containing a matched key are
-        rewritten WITHOUT those rows (anti-join against the broadcast key
-        set), untouched dirs are carried over, and ``incoming`` lands as
-        one new dir — O(delta + affected dirs), the Delta ``MERGE INTO``
+        rewritten WITHOUT those rows, untouched dirs are carried over, and
+        ``incoming`` lands as one new dir, listed last in the new
+        manifest — O(delta + affected dirs), the Delta ``MERGE INTO``
         shape.
 
         ``incoming`` is evaluated exactly once: it is written first, as
@@ -372,15 +448,28 @@ class SnapshotStore:
         dir, so an expensive source pipeline (or an ``observe`` on it)
         runs once. Then, before anything commits: the duplicate-key check
         (several source rows for one key is ambiguous, as in SQL MERGE,
-        and raises), the matched-dir probe (``_affected_dirs``) and one
-        rewrite of all affected dirs — at most eight Spark jobs under AQE
-        whatever the dir count. A failure before the commit deletes the
-        dirs this call wrote. The manifest records ``matched_rows``, the
-        number of existing rows the source replaced."""
+        and raises), the matched-dir probe and one rewrite of all
+        affected dirs. A failure before the commit deletes the dirs this
+        call wrote. The manifest records ``matched_rows``, the number of
+        existing rows the source replaced.
+
+        ``probe`` lets a caller that already knows the table answer the
+        check and the probe without Spark, in the way ``delete_where``
+        takes a ``Probe``: it is called with the written source (read
+        back from the ``merge-in`` dir), raises on duplicate keys
+        (``duplicate_keys_error``), and returns a ``Probe`` of the
+        version this merge plans against whose ``condition`` matches the
+        existing rows to replace. Otherwise (no ``probe``, or one that
+        returns None or a ``Probe`` of another version) the merge runs
+        both in Spark — a ``noop``-written duplicate aggregate, then
+        ``_affected_dirs`` over a broadcast key set — at most eight
+        Spark jobs under AQE in all, whatever the dir count; with a
+        ``Probe`` it is the write, the caller's read-back and the
+        rewrite."""
         from pyspark.sql import functions as F
 
         version = self.current_version() + 1
-        prev = self._read_manifest(version - 1) if version > 0 else {"dirs": []}
+        prev = self._read_manifest(version - 1) if version > 0 else _NO_ROWS
         dirs = prev["dirs"]
         prev_schema = self._schema_of(version - 1)
         schema = self._evolve_schema(prev_schema, incoming.schema)
@@ -388,26 +477,35 @@ class SnapshotStore:
         written = [inc_dir]
         try:
             with phase(f"snapshot merge v{version} write"):
-                incoming.write.mode("error").parquet(inc_dir)
+                n = self._write_counted(incoming, inc_dir)
             source = self._read_dirs([inc_dir], incoming.schema)
-            with phase(f"snapshot merge v{version} duplicate check"):
-                self._require_distinct(source, key)
-            keys = F.broadcast(source.select(key))
-            hits = {}
-            if dirs:
-                with phase(f"snapshot merge v{version} probe"):
-                    hits = self._affected_dirs(
-                        dirs,
-                        lambda df: df.join(keys, key, "left_semi"),
-                        schema=prev_schema,
-                    )
+            p = probe(source) if probe is not None else None
+            if p is not None and p.version == version - 1:
+                hits = p.hits
+                survives = ~F.coalesce(p.condition, F.lit(False))
+            else:
+                survives = None
+                with phase(f"snapshot merge v{version} duplicate check"):
+                    self._require_distinct(source, key)
+                keys = F.broadcast(source.select(key))
+                hits = {}
+                if dirs:
+                    with phase(f"snapshot merge v{version} probe"):
+                        hits = self._affected_dirs(
+                            dirs,
+                            lambda df: df.join(keys, key, "left_semi"),
+                            schema=prev_schema,
+                        )
             kept = [d for d in dirs if d not in hits]
             if hits:
                 new_dir = self._new_data_dir(version, "merge")
                 written.append(new_dir)
+                old = self._read_dirs(list(hits), prev_schema)
                 with phase(f"snapshot merge v{version} rewrite"):
-                    self._read_dirs(list(hits), prev_schema).join(
-                        keys, key, "left_anti"
+                    (
+                        old.join(keys, key, "left_anti")
+                        if survives is None
+                        else old.filter(survives)
                     ).write.mode("error").parquet(new_dir)
                 if self._dir_has_data(new_dir):
                     kept.append(new_dir)
@@ -415,11 +513,13 @@ class SnapshotStore:
             for d in written:  # nothing references them yet
                 self._fs.delete(d)
             raise
+        matched = sum(hits.values())
         extra = {
             "rewritten_dirs": len(hits),
             "pruned_dirs": len(dirs) - len(hits),
-            "matched_rows": sum(hits.values()),
+            "matched_rows": matched,
             "schema": schema.json(),
+            **self._rows_after(prev, n - matched),
         }
         carried = self._carried_zonemaps(prev, kept)
         if carried:
@@ -446,10 +546,7 @@ class SnapshotStore:
         ).write.format("noop").mode("overwrite").save()
         got = obs.get
         if got["extra"]:
-            raise VectoliteError(
-                f"merge source contains duplicate {key}s ({got['extra']} "
-                f"extra rows; e.g. {key} {got['example']!r})"
-            )
+            raise duplicate_keys_error(key, got["extra"], got["example"])
 
     def compact(
         self,
@@ -490,14 +587,19 @@ class SnapshotStore:
                     zorder_frame_multi,
                 )
 
-                zorder_frame_multi(
-                    df, list(zorder_by), n_files=target_files
-                ).write.mode("error").parquet(new_dir)
+                extra["rows"] = self._write_counted(
+                    zorder_frame_multi(
+                        df, list(zorder_by), n_files=target_files
+                    ),
+                    new_dir,
+                )
                 build_zonemap(self.spark, new_dir, list(zorder_by))
                 extra["zonemaps"] = {new_dir: new_dir + ".zonemap"}
                 extra["zorder_by"] = list(zorder_by)
             else:
-                df.coalesce(target_files).write.mode("error").parquet(new_dir)
+                extra["rows"] = self._write_counted(
+                    df.coalesce(target_files), new_dir
+                )
         return self._commit([new_dir], op, extra=extra, version=version)
 
     def _carried_zonemaps(self, prev_manifest: dict, dirs: list[str]) -> dict:
@@ -575,10 +677,12 @@ class SnapshotStore:
     def rollback(self, version: int) -> int:
         """Restore an old version AS A NEW COMMIT (never mutates history —
         the bad versions stay inspectable, exactly Delta's RESTORE). The
-        restored version's schema comes back with it."""
+        restored version's schema and row count come back with it."""
         m = self._read_manifest(version)
         extra = {
-            k: m[k] for k in ("schema", "zonemaps", "zorder_by") if k in m
+            k: m[k]
+            for k in ("schema", "zonemaps", "zorder_by", "rows")
+            if k in m
         }
         return self._commit(
             m["dirs"],
@@ -747,10 +851,9 @@ class SnapshotStore:
                 f"clone destination {dst_path} already has commits"
             )
         extra: dict = {"cloned_from": self.path, "src_version": src_v}
-        if m.get("schema"):
-            extra["schema"] = m["schema"]
-        if m.get("zonemaps"):
-            extra["zonemaps"] = m["zonemaps"]
+        for k in ("schema", "zonemaps", "rows"):
+            if m.get(k) is not None:
+                extra[k] = m[k]
         dst._commit(list(m["dirs"]), "clone", extra=extra, version=0)
         return dst
 
@@ -766,7 +869,7 @@ class SnapshotStore:
         referenced: set[str] = set()
         for v in keep:
             for d in self._read_manifest(v)["dirs"]:
-                referenced.add(d.rstrip("/").rsplit("/", 1)[-1])
+                referenced.add(dir_name(d))
         removed_dirs = 0
         for name in self._fs.list_names(self._data_dir):
             # a dir's zone map lives beside it as <dir>.zonemap and shares
@@ -799,7 +902,7 @@ class SnapshotStore:
         dirs = sorted(
             {d for v in versions for d in self._read_manifest(v)["dirs"]}
         )
-        referenced = {d.rstrip("/").rsplit("/", 1)[-1] for d in dirs}
+        referenced = {dir_name(d) for d in dirs}
         stray = [
             n
             for n in self._fs.list_names(self._data_dir)
@@ -896,14 +999,14 @@ def make_stream_sink(store: SnapshotStore):
             store._schema_of(version - 1), batch_df.schema
         )
         new_dir = f"{store._data_dir}/v{version:08d}-stream"
-        batch_df.write.mode("overwrite").parquet(new_dir)
-        prev = (
-            store._read_manifest(version - 1)
-            if version > 0
-            else {"dirs": []}
-        )
+        n = store._write_counted(batch_df, new_dir, mode="overwrite")
+        prev = store._read_manifest(version - 1) if version > 0 else _NO_ROWS
         dirs = prev["dirs"]
-        extra: dict = {"batch_id": int(batch_id), "schema": schema.json()}
+        extra: dict = {
+            "batch_id": int(batch_id),
+            "schema": schema.json(),
+            **store._rows_after(prev, n),
+        }
         # carry zone maps for untouched dirs, matching append(): without
         # this the first micro-batch after a z-order compact silently
         # drops the compacted dirs' stats and read_pruned full-scans them
