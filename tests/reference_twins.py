@@ -1,9 +1,10 @@
-"""Pure-expression reference twins of the engine's Arrow-batched kernels.
+"""Reference twins of the engine's Arrow-batched kernels.
 
-Each twin states an operator's semantics as Spark column expressions
-(interpreted higher-order functions, no Python in the plan). They are
-many times slower than the engine's forms, so they live here, where the
-parity tests compare the engine against them row for row.
+Most twins state an operator's semantics as Spark column expressions
+(interpreted higher-order functions, no Python in the plan); a few
+derive a kernel's output from its written formula in plain Python. They
+are many times slower than the engine's forms, so they live here, where
+the parity tests compare the engine against them row for row.
 """
 
 from __future__ import annotations
@@ -112,3 +113,31 @@ def cdc_chunk_rows_catalyst(
             F.length("_chunk").alias("_len"),
         )
     )
+
+
+def srp_codes_from_formula(vecs, n_tables: int, n_planes: int) -> list[list[int]]:
+    """Each vector's SRP bucket codes straight from the formula, one row
+    at a time: component j of plane g is +1 iff the first hex nibble of
+    md5('g:j') is >= 8 (else -1), and table t's code sets bit i when the
+    vector's dot product with plane t*n_planes + i is >= 0."""
+    import hashlib
+
+    def sign(g: int, j: int) -> float:
+        nib = int(hashlib.md5(f"{g}:{j}".encode()).hexdigest()[0], 16)
+        return 1.0 if nib >= 8 else -1.0
+
+    out = []
+    for v in vecs:
+        v = [float(x) for x in v]
+        row = []
+        for t in range(n_tables):
+            code = 0
+            for i in range(n_planes):
+                g = t * n_planes + i
+                dot = 0.0
+                for j, x in enumerate(v):
+                    dot += sign(g, j) * x
+                code |= int(dot >= 0) << i
+            row.append(code)
+        out.append(row)
+    return out

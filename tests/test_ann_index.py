@@ -671,6 +671,61 @@ def test_srp_index_probe_prunes_and_matches_selfcontained(spark, sf_dir, tmp_pat
     assert total_dirs > len(probed)  # probe skips most of the layout
 
 
+def test_srp_codes_and_blocks_match_the_formula():
+    """``srp_bucket_codes``, ``srp_query_blocks`` and
+    ``make_srp_bucket_mapper``'s blocks all equal the md5-Rademacher
+    formula (``reference_twins.srp_codes_from_formula``), on random
+    vectors and on zero vectors — no Spark session needed."""
+    import numpy as np
+    import pandas as pd
+    from reference_twins import srp_codes_from_formula
+
+    from vectolite_spark._pandas_udfs import (
+        make_srp_bucket_mapper,
+        srp_bucket_codes,
+    )
+    from vectolite_spark.operators.ann import srp_query_blocks
+
+    rng = np.random.default_rng(12)
+    for d, nt, npl in ((16, 16, 6), (64, 4, 8)):
+        vecs = rng.standard_normal((40, d)).astype(np.float32)
+        vecs[:3] = 0.0
+        mat = vecs.astype(np.float64)
+        want = srp_codes_from_formula(mat, nt, npl)
+        assert srp_bucket_codes(mat, nt, npl).tolist() == want
+        blocks = [[f"{t}:{c}" for t, c in enumerate(row)] for row in want]
+        assert [srp_query_blocks(list(v), nt, npl) for v in mat] == blocks
+        pdf = pd.DataFrame(
+            {"vec_id": np.arange(len(vecs), dtype=np.int64), "embedding": list(vecs)}
+        )
+        out = pd.concat(make_srp_bucket_mapper(nt, npl)(iter([pdf])))
+        assert sorted(zip(out["vec_id"].tolist(), out["block"])) == sorted(
+            (i, b) for i, row in enumerate(blocks) for b in row
+        )
+
+
+def test_greedy_probes_routes_a_rounding_tie_to_the_assigned_cell():
+    """The query (1, 0) scores just under 3.5e-6 against centroid 0 and
+    3.6e-6 against centroid 1. HALF_UP rounds both to 4e-6, so
+    ``_assign_cells`` puts the query's vector in the lower cell id, 0;
+    an ``n_probe=1`` probe must name that cell (half-to-even rounding
+    of the exact binary value would rank cell 1 first and miss the
+    stored vector)."""
+    import numpy as np
+    import pandas as pd
+
+    from vectolite_spark._pandas_udfs import make_cell_assign_mapper
+    from vectolite_spark.operators.ann import greedy_probes
+
+    cents = [(0, [3.500000000021437e-06, 1.0]), (1, [3.6e-06, 1.0])]
+    q = [1.0, 0.0]
+    assign = make_cell_assign_mapper([c for c, _ in cents], [v for _, v in cents])
+    pdf = pd.DataFrame({"vec_id": [7], "embedding": [np.asarray(q)]})
+    assert next(assign(iter([pdf])))["cell"].tolist() == [0]
+    assert greedy_probes(cents, q, 1) == [0]
+    assert greedy_probes(cents, q, 2) == [0, 1]
+
+
 def test_srp_index_append_serves_new_vectors(spark, sf_dir, tmp_path):
     """Append half the corpus after the build: probes must return the
     same answer as an index built over everything at once (block

@@ -856,52 +856,55 @@ def test_resident_collect_generation_fence(
     store.disable_batched_serving()
 
 
-def test_srp_serving_mapper_bucket_col_parity():
-    """The precomputed-bucket fast path (ADVICE r9) must be
-    row-identical to the recompute path: same candidates, same scores,
-    same order — pure pandas-level check, no Spark session needed."""
+def test_resident_srp_probe_matches_the_micro_batched_mapper():
+    """The array probe over a resident set (``_ResidentSet.query`` with
+    ``ann=True``) and the micro-batched regime's mapper over the same
+    rows give the same answer: ids, scores, order and payload — pure
+    numpy/pandas, no Spark session needed."""
+    import json
+
     import numpy as np
     import pandas as pd
 
-    from vectolite_spark._pandas_udfs import (
-        _srp_planes,
-        make_srp_serving_mapper,
-    )
+    from vectolite_spark._pandas_udfs import make_srp_serving_mapper
+    from vectolite_spark.store import _hit, _Rows
 
     rng = np.random.RandomState(3)
-    n, d, nt, npl = 200, 16, 4, 5
-    mat = rng.randn(n, d)
-    pdf = pd.DataFrame(
+    n, d, planes = 300, 16, (4, 5)
+    vecs = rng.randn(n, d).astype(np.float32)
+    vecs[5] = 0.0
+    vecs[20:25] = vecs[7]  # score ties, broken by id
+    ids = rng.permutation(n).astype(np.int64)
+    texts = np.array([f"t{i}" for i in range(n)], dtype=object)
+    metas = np.array([json.dumps({"k": i}) for i in range(n)], dtype=object)
+    ws = _ResidentSet.build(
+        _Rows(ids, vecs.astype(np.float64), texts, metas),
+        np.full(n, "d0", dtype=object), planes, 0, 0,
+    )
+    frame = pd.DataFrame(
         {
-            "vec_id": np.arange(n, dtype=np.int64),
-            "embedding": [mat[i].astype(np.float64) for i in range(n)],
-            "text": [f"t{i}" for i in range(n)],
-            "metadata": ["{}"] * n,
+            "vec_id": ids,
+            "embedding": list(vecs),
+            "text": texts,
+            "metadata": metas,
+            "srp_buckets": list(ws.codes),
         }
     )
-    # precompute bucket codes exactly as make_srp_bucket_codes_udf does
-    P = _srp_planes(nt, npl, d)
-    bits = (mat @ P.T >= 0).astype(np.int64)
-    shifts = np.arange(npl, dtype=np.int64)
-    codes = np.stack(
-        [(bits[:, t * npl : (t + 1) * npl] << shifts).sum(axis=1) for t in range(nt)],
-        axis=1,
-    )
-    with_codes = pdf.assign(srp_buckets=[codes[i] for i in range(n)])
-
-    qids = [0, 1, 2]
-    qvecs = [mat[7], mat[50], rng.randn(d)]
-    kwargs = dict(n_tables=nt, n_planes=npl, payload_cols=("text", "metadata"))
-    plain = next(
-        make_srp_serving_mapper(qids, qvecs, 5, **kwargs)(iter([pdf]))
-    )
-    fast = next(
-        make_srp_serving_mapper(qids, qvecs, 5, bucket_col="srp_buckets", **kwargs)(
-            iter([with_codes])
+    qvecs = [vecs[7], vecs[50], vecs[5], rng.randn(d)]
+    batch = next(
+        make_srp_serving_mapper(range(len(qvecs)), qvecs, 6, *planes)(
+            iter([frame])
         )
     )
-    assert plain.to_dict("records") == fast.to_dict("records")
-    assert len(plain), "probe produced candidates"
+    assert len(batch), "probe produced candidates"
+    for qi, q in enumerate(qvecs):
+        rows = batch[batch["query_id"] == qi].sort_values("rn")
+        assert rows["rn"].tolist() == list(range(1, len(rows) + 1))
+        want = [
+            _hit(*r)
+            for r in zip(rows["vec_id"], rows["score"], rows["text"], rows["metadata"])
+        ]
+        assert ws.query(q, 6, None, ann=True) == want
 
 
 def test_resident_build_single_flight(spark, tmp_path):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vectolite_spark.operators.ann import build_centroids, ivf_topk, nearest_centroid
+from vectolite_spark.operators.ann import build_centroids, greedy_probes, ivf_topk
 from vectolite_spark.operators.textstats import (
     fingerprint,
     predict_lang,
@@ -90,7 +90,7 @@ def test_ivf_centroids_and_search(spark):
     cents = {r["cluster"]: list(r["centroid"]) for r in build_centroids(embs).collect()}
     assert cents[0][0] == pytest.approx(1.0, abs=1e-6)
     assert cents[1][1] == pytest.approx(0.95, abs=1e-6)  # float32 inputs
-    assert nearest_centroid(sorted(cents.items()), [1.0, 0.05]) == 0
+    assert greedy_probes(sorted(cents.items()), [1.0, 0.05], 1)[0] == 0
     out = ivf_topk(embs, [1.0, 0.05], k=10).collect()
     ids = [r["vec_id"] for r in out]
     assert set(ids) == {1, 2, 3}  # only the probed cell is scanned

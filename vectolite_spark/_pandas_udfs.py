@@ -1,5 +1,24 @@
-"""Package-level pandas UDF constructors (no ``from __future__ import
-annotations`` — pandas_udf needs resolvable type hints)."""
+"""Package-level pandas UDF constructors and the numpy vector kernels
+they share (no ``from __future__ import annotations`` — pandas_udf
+needs resolvable type hints).
+
+Each vector kernel has one body here, and every Spark mapper,
+driver-side probe and serving set calls it:
+
+- ``rounded_cosine``: ``dot / (‖a‖·‖b‖)``, zero norm on either side
+  -> 0.0, ``round_half_up`` to 6 dp (``_assign_cells`` alone rounds
+  only its tie candidates, see its docstring);
+- ``top_positions``: the best ``k`` rows by (score desc, id asc);
+- ``_srp_planes`` / ``srp_bucket_codes``: the md5-Rademacher planes
+  and the packed sign bits of every SRP code, block key and k-means
+  seed cell (``srp_seed_cells``);
+- ``srp_probe``: the SRP candidate union, rescore and selection over
+  code and vector arrays (resident set and micro-batched mapper);
+- ``_assign_cells``: nearest-centroid assignment (IVF build, Lloyd
+  rounds), whose tie rule ``ann.greedy_probes`` shares.
+"""
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -16,6 +35,38 @@ def round_half_up(a, decimals=6):
     f = 10.0 ** decimals
     a = np.asarray(a, dtype=np.float64)
     return np.sign(a) * np.floor(np.abs(a) * f + 0.5) / f
+
+
+def row_norms(mat):
+    """The L2 norm of each row of a float64 matrix."""
+    return np.sqrt((mat * mat).sum(axis=1))
+
+
+def rounded_cosine(a, b, a_norms=None, b_norms=None, decimals=6):
+    """Cosine of every row of ``a`` (N x d, float64) with every row of
+    ``b`` (M x d), as an N x M matrix: ``dot / (‖a‖·‖b‖)``, 0.0 when
+    either norm is zero, rounded with ``round_half_up`` — the exact
+    Spark path's ``F.round(cosine_score, 6)``. ``a_norms``/``b_norms``
+    are ``row_norms`` a caller already holds."""
+    an = row_norms(a) if a_norms is None else a_norms
+    bn = row_norms(b) if b_norms is None else b_norms
+    denom = np.outer(an, bn)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sims = np.where(denom == 0.0, 0.0, (a @ b.T) / denom)
+    return round_half_up(sims, decimals)
+
+
+def top_positions(sc, ids, k):
+    """Positions of the ``k`` best rows by (score desc, id asc).
+    ``argpartition`` first narrows to the rows scoring at least the
+    k-th best score — every row tied at that score stays in, so the id
+    tie-break sees the whole tie group — then one lexsort orders them.
+    NaN scores sort last, as in a full lexsort."""
+    cand = np.arange(len(sc))
+    if 0 < k < len(sc):
+        kth = sc[np.argpartition(-sc, k - 1)[k - 1]]
+        cand = np.flatnonzero(~(sc < kth))
+    return cand[np.lexsort((ids[cand], -sc[cand]))[:k]]
 
 
 def make_shingle_udf(n=3):
@@ -54,12 +105,8 @@ def make_block_cosine_pairs_fn(min_score, decimals=6):
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        sims = mat @ mat.T
-        denom = np.outer(norms, norms)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom == 0.0, 0.0, sims / denom)
-        sims = round_half_up(sims, decimals)
+        norms = row_norms(mat)
+        sims = rounded_cosine(mat, mat, norms, norms, decimals)
         iu, ju = np.triu_indices(n, k=1)
         keep = sims[iu, ju] >= min_score
         return pd.DataFrame(
@@ -98,13 +145,9 @@ def make_incremental_semdedup_fn(tau, decimals=6):
         mat = np.stack(pdf["embedding"].to_numpy()).astype(
             np.float64, copy=False
         )
-        norms = np.sqrt((mat * mat).sum(axis=1))
+        norms = row_norms(mat)
         dids = ids[dmask]
-        sims = mat[dmask] @ mat.T
-        denom = np.outer(norms[dmask], norms)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom == 0.0, 0.0, sims / denom)
-        sims = round_half_up(sims, decimals)
+        sims = rounded_cosine(mat[dmask], mat, norms[dmask], norms, decimals)
         # ranked-before: base rows always precede; delta rows precede
         # only when lower-id; never self
         before = (~dmask[None, :]) | (ids[None, :] < dids[:, None])
@@ -172,20 +215,15 @@ def make_batch_topk_mapper(qids, qvecs, k, rank_mode=False, payload_cols=()):
     carry the payload bytes.
     """
     qarr = np.asarray(qvecs, dtype=np.float64)  # Q x d
-    qn = np.sqrt((qarr * qarr).sum(axis=1))  # Q
+    qn = row_norms(qarr)  # Q
     qid_arr = np.asarray(qids, dtype=np.int64)
     pcols = list(payload_cols)
 
     def score_block(pdf):
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
         ids = pdf["vec_id"].to_numpy()
-        dn = np.sqrt((mat * mat).sum(axis=1))  # N
-        scores = mat @ qarr.T  # N x Q
-        denom = np.outer(dn, qn)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(denom == 0.0, 0.0, scores / denom)
         payload = {c: pdf[c].to_numpy() for c in pcols}
-        return ids, round_half_up(scores, 6), payload
+        return ids, rounded_cosine(mat, qarr, b_norms=qn), payload  # N x Q
 
     def topk_frame(ids, scores, payload, with_rank):
         out = {"query_id": [], "vec_id": [], "score": []}
@@ -195,11 +233,7 @@ def make_batch_topk_mapper(qids, qvecs, k, rank_mode=False, payload_cols=()):
             out[c] = []
         for j in range(len(qid_arr)):
             col = scores[:, j]
-            # exact (score desc, id asc) selection: lexsort's LAST key is
-            # the primary sort key
-            order = np.lexsort((ids, -col))
-            if len(order) > k:
-                order = order[:k]
+            order = top_positions(col, ids, k)
             out["query_id"].append(np.full(len(order), qid_arr[j], dtype=np.int64))
             out["vec_id"].append(ids[order])
             out["score"].append(col[order])
@@ -271,7 +305,7 @@ def make_pair_cosine_udf():
         A = np.stack(a.to_numpy()).astype(np.float64, copy=False)
         B = np.stack(b.to_numpy()).astype(np.float64, copy=False)
         dots = (A * B).sum(axis=1)
-        denom = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
+        denom = row_norms(A) * row_norms(B)
         with np.errstate(divide="ignore", invalid="ignore"):
             out = np.where(denom == 0.0, 0.0, dots / denom)
         return pd.Series(out)
@@ -281,53 +315,33 @@ def make_pair_cosine_udf():
 
 def make_srp_bucket_mapper(n_tables, n_planes):
     """mapInPandas mapper: signed-random-projection LSH buckets for cosine,
-    with DETERMINISTIC md5-derived Rademacher hyperplanes (component
-    (g, j) is +1 iff the first hex nibble of md5('g:j') >= 8) — portable,
-    so the DuckDB oracle derives the IDENTICAL planes from the same md5
-    formula instead of embedding thousands of float literals.
+    with DETERMINISTIC md5-derived Rademacher hyperplanes (``_srp_planes``)
+    — portable, so the DuckDB oracle derives the IDENTICAL planes from the
+    same md5 formula instead of embedding thousands of float literals.
 
     Emits one row per (vector, table): (vec_id, embedding, block) where
-    block = 'table:bucket' packs the n_planes sign bits. Two vectors at
-    angle theta collide in one table with prob (1 - theta/pi)^n_planes;
-    n_tables unioned tables boost recall. Narrow (one matmul per Arrow
-    batch); the groupBy on block downstream is the only shuffle.
+    block = 'table:code' formats the row's ``srp_bucket_codes``. Two
+    vectors at angle theta collide in one table with prob
+    (1 - theta/pi)^n_planes; n_tables unioned tables boost recall.
+    Narrow (one matmul per Arrow batch); the groupBy on block downstream
+    is the only shuffle.
 
     Sign boundary note: dot products are float64; numpy's summation order
     differs from DuckDB's left-to-right list_dot_product, so a sign could
     in principle flip when |dot| ~ 1e-13 — the same measure-zero class as
     every rounded-score comparison in this repo (see registry docstring).
     """
-    import hashlib
-
-    total = n_tables * n_planes
-    state = {}
-
-    def planes_for(d):
-        P = np.empty((total, d), dtype=np.float64)
-        for g in range(total):
-            for j in range(d):
-                nib = int(hashlib.md5(f"{g}:{j}".encode()).hexdigest()[0], 16)
-                P[g, j] = 1.0 if nib >= 8 else -1.0
-        return P
-
-    shifts = np.arange(n_planes, dtype=np.int64)
 
     def mapper(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
-            P = state.get("P")
-            if P is None:
-                P = state.setdefault("P", planes_for(mat.shape[1]))
-            bits = (mat @ P.T >= 0).astype(np.int64)  # N x (T*b)
+            codes = srp_bucket_codes(mat, n_tables, n_planes)  # N x T
             frames = []
             for t in range(n_tables):
-                bucket = (bits[:, t * n_planes : (t + 1) * n_planes] << shifts).sum(
-                    axis=1
-                )
                 f = pdf[["vec_id", "embedding"]].copy()
-                f["block"] = [f"{t}:{b}" for b in bucket]
+                f["block"] = [f"{t}:{c}" for c in codes[:, t]]
                 frames.append(f)
             yield pd.concat(frames, ignore_index=True)
 
@@ -339,9 +353,9 @@ _SRP_PLANES_MEMO: dict = {}
 
 def _srp_planes(n_tables, n_planes, d):
     """Deterministic md5-Rademacher hyperplanes, memoized per
-    (n_tables, n_planes, d) — the SAME formula as
-    ``make_srp_bucket_mapper`` / ``ann.srp_query_blocks``, so every
-    consumer (index build, index probe, in-mapper serving) derives
+    (n_tables, n_planes, d): component (g, j) is +1 iff the first hex
+    nibble of md5('g:j') >= 8. The only plane generator, so every
+    consumer (index build, index probe, serving, k-means seeds) derives
     identical planes from pure arithmetic."""
     import hashlib
 
@@ -363,9 +377,10 @@ def srp_bucket_codes(mat, n_tables, n_planes):
     matrix ``mat`` (N x T int64): table ``t``'s code packs the signs of
     the row's dot products with planes ``t*n_planes .. (t+1)*n_planes-1``
     of ``_srp_planes``, bit ``j`` for plane ``j``. The one body behind
-    ``make_srp_bucket_codes_udf``, the serving probe's query bucketing
-    and the store's resident working set, so all of them agree bit for
-    bit."""
+    every SRP block key (``make_srp_bucket_mapper``,
+    ``ann.srp_query_blocks``), ``make_srp_bucket_codes_udf``, the probe's
+    query bucketing, the store's resident working set and the k-means
+    seeds, so all of them agree bit for bit."""
     if len(mat) == 0:
         return np.zeros((0, n_tables), dtype=np.int64)
     P = _srp_planes(n_tables, n_planes, mat.shape[1])
@@ -378,6 +393,13 @@ def srp_bucket_codes(mat, n_tables, n_planes):
         ],
         axis=1,
     )
+
+
+def srp_seed_cells(mat, n_cells):
+    """The k-means seed cell of each row: its one-table SRP code under
+    ceil(log2(n_cells)) planes, mod ``n_cells``."""
+    b = max(1, math.ceil(math.log2(max(2, n_cells))))
+    return srp_bucket_codes(mat, 1, b)[:, 0] % n_cells
 
 
 def make_srp_bucket_codes_udf(n_tables=16, n_planes=6):
@@ -398,85 +420,77 @@ def make_srp_bucket_codes_udf(n_tables=16, n_planes=6):
     return _codes
 
 
-def make_srp_serving_mapper(
-    qids, qvecs, k, n_tables=16, n_planes=6, payload_cols=(), bucket_col=None
-):
-    """mapInPandas mapper for the store's ANN serving facade: the whole
-    SRP probe for a micro-batch of queries in ONE task over the cached
-    single-partition working set — no index scan, no join, no shuffle
-    (the exact facade's rank_mode discipline, applied to the ANN mode).
+def srp_probe(codes, ids, gather, qvecs, k, n_tables, n_planes):
+    """The SRP probe of each query in ``qvecs`` over rows whose bucket
+    codes are ``codes`` (N x T, ``srp_bucket_codes``) and ids ``ids``:
+    a row is a candidate of a query when it shares the query's code in
+    at least one table; candidates are scored by ``rounded_cosine`` and
+    the best ``k`` chosen by ``top_positions``. ``gather(pos)`` returns
+    the float64 vectors and ``row_norms`` of the rows at the ascending
+    positions ``pos``; it is called once, with the union of every
+    query's candidates, so only candidate vectors are touched.
 
-    Correctness contract: the md5-Rademacher planes are a pure function
-    of (n_tables, n_planes, d), so in-mapper bucketing reproduces the
-    PERSISTED index's blocks exactly — candidates (rows sharing >= 1
-    table bucket with the query), rescored cosine (round-half-up 6dp)
-    and (score desc, vec_id asc) ordering all match
-    ``ann.srp_index_topk`` row for row. Only correct on a
-    single-partition input (the caller coalesces); the serving cache
-    regime already bounds that partition to one task's worth.
-
-    ``bucket_col`` (ADVICE r9): name of a precomputed
-    ``make_srp_bucket_codes_udf`` column on the input. When present,
-    the per-cycle bucketing matmul over the WHOLE working set is
-    skipped, and embeddings are stacked only for the cycle's candidate
-    union — the steady-state dispatch cost becomes O(candidates), not
-    O(corpus). Candidate selection and scoring are bit-identical to
-    the recompute path (same planes, same float64 dot).
-
-    Emits (query_id, vec_id, score, rn, *payload_cols), rn 1-based."""
+    Returns one ``(positions, scores)`` pair per query, in rank order.
+    The planes are a pure function of (n_tables, n_planes, d), so this
+    is row for row the persisted index's ``ann.srp_index_topk`` answer.
+    The one probe body behind the resident set and
+    ``make_srp_serving_mapper``."""
     qarr = np.asarray(qvecs, dtype=np.float64)  # Q x d
-    qn = np.sqrt((qarr * qarr).sum(axis=1))
+    qn = row_norms(qarr)
+    cands = [
+        np.flatnonzero((codes == qc).any(axis=1))
+        for qc in srp_bucket_codes(qarr, n_tables, n_planes)
+    ]
+    union = np.unique(np.concatenate(cands))
+    if len(union) == 0:
+        return [(c, np.zeros(0)) for c in cands]
+    U, un = gather(union)
+    out = []
+    for qi, cand in enumerate(cands):
+        at = np.searchsorted(union, cand)
+        sc = rounded_cosine(U[at], qarr[qi : qi + 1], un[at], qn[qi : qi + 1])[:, 0]
+        top = top_positions(sc, ids[cand], k)
+        out.append((cand[top], sc[top]))
+    return out
+
+
+def make_srp_serving_mapper(qids, qvecs, k, n_tables=16, n_planes=6):
+    """mapInPandas mapper for the store's micro-batched ANN facade: the
+    whole SRP probe (``srp_probe``) for a micro-batch of queries in ONE
+    task over the cached single-partition working set — no index scan,
+    no join, no shuffle. Only correct on a single-partition input (the
+    caller coalesces); the serving regime already bounds that partition
+    to one task's worth.
+
+    The input carries (vec_id, embedding, text, metadata, srp_buckets),
+    the codes precomputed by ``make_srp_bucket_codes_udf``: a cycle
+    stacks the code column once and the embeddings of the candidate
+    union only, so its cost is O(candidates), not O(corpus). Emits
+    (query_id, vec_id, score, rn, text, metadata), rn 1-based."""
     qid_arr = np.asarray(qids, dtype=np.int64)
-    pcols = list(payload_cols)
 
     def mapper(batches):
         frames = [pdf for pdf in batches if len(pdf)]
-        out = {"query_id": [], "vec_id": [], "score": [], "rn": []}
-        for c in pcols:
-            out[c] = []
+        out = {c: [] for c in ("query_id", "vec_id", "score", "rn", "text", "metadata")}
         if frames:
             pdf = pd.concat(frames, ignore_index=True)
-            emb_np = pdf["embedding"].to_numpy()
-            q_b = srp_bucket_codes(qarr, n_tables, n_planes)  # Q x T
-            if bucket_col is not None and bucket_col in pdf.columns:
-                row_b = np.stack(pdf[bucket_col].to_numpy()).astype(
-                    np.int64, copy=False
-                )  # N x T, precomputed at batcher build
-            else:
-                full = np.stack(emb_np).astype(np.float64, copy=False)
-                row_b = srp_bucket_codes(full, n_tables, n_planes)
+            emb = pdf["embedding"].to_numpy()
             ids = pdf["vec_id"].to_numpy()
-            cand_masks = [
-                (row_b == q_b[qi]).any(axis=1) for qi in range(len(qid_arr))
-            ]
-            union = np.zeros(len(pdf), dtype=bool)
-            for m in cand_masks:
-                union |= m
-            if union.any():
-                uidx = np.nonzero(union)[0]
-                umat = np.stack(emb_np[uidx]).astype(np.float64, copy=False)
-                udn = np.sqrt((umat * umat).sum(axis=1))
-                pos = np.full(len(pdf), -1, dtype=np.int64)
-                pos[uidx] = np.arange(len(uidx))
-                payload = {c: pdf[c].to_numpy() for c in pcols}
-                for qi in range(len(qid_arr)):
-                    cand = cand_masks[qi]
-                    if not cand.any():
-                        continue
-                    ci = pos[np.nonzero(cand)[0]]
-                    sub = umat[ci]
-                    denom = udn[ci] * qn[qi]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sc = np.where(denom == 0.0, 0.0, sub @ qarr[qi] / denom)
-                    sc = round_half_up(sc, 6)
-                    cids = ids[cand]
-                    order = np.lexsort((cids, -sc))[:k]
-                    out["query_id"].extend([int(qid_arr[qi])] * len(order))
-                    out["vec_id"].extend(int(x) for x in cids[order])
-                    out["score"].extend(float(x) for x in sc[order])
-                    out["rn"].extend(range(1, len(order) + 1))
-                    for c in pcols:
-                        out[c].extend(payload[c][cand][order])
+            texts, metas = pdf["text"].to_numpy(), pdf["metadata"].to_numpy()
+
+            def gather(pos):
+                m = np.stack(emb[pos]).astype(np.float64, copy=False)
+                return m, row_norms(m)
+
+            codes = np.stack(pdf["srp_buckets"].to_numpy()).astype(np.int64, copy=False)
+            hits = srp_probe(codes, ids, gather, qvecs, k, n_tables, n_planes)
+            for qid, (pos, sc) in zip(qid_arr, hits):
+                out["query_id"].extend([int(qid)] * len(pos))
+                out["vec_id"].extend(ids[pos].tolist())
+                out["score"].extend(sc.tolist())
+                out["rn"].extend(range(1, len(pos) + 1))
+                out["text"].extend(texts[pos])
+                out["metadata"].extend(metas[pos])
         yield pd.DataFrame(out)
 
     return mapper
@@ -533,7 +547,7 @@ def _assign_cells(mat, cmat, cn, cids):
     profile: 70 s/10K-row batch -> the gemm's ~1 s); the division stays
     the single ``scores / outer(dn, cn)`` op so surviving scores are
     bit-identical to the old kernel."""
-    dn = np.sqrt((mat * mat).sum(axis=1))
+    dn = row_norms(mat)
     scores = mat @ cmat.T  # N x C — the irreducible gemm
     denom = np.outer(dn, cn)
     if (dn == 0.0).any() or (cn == 0.0).any():
@@ -551,23 +565,28 @@ def _assign_cells(mat, cmat, cn, cids):
     return cids[cols[order[first]]]
 
 
+def _sorted_centroids(cluster_ids, centroid_vecs):
+    """``_assign_cells``' (cmat, cn, cids): the centroids, their norms
+    and ids, ordered by cluster id ascending so argmax's first-wins
+    tie-break IS the lowest-cluster-id tie-break."""
+    cids = np.asarray(cluster_ids, dtype=np.int64)
+    order = np.argsort(cids, kind="stable")
+    cmat = np.asarray(centroid_vecs, dtype=np.float64)[order]  # C x d
+    return cmat, row_norms(cmat), cids[order]
+
+
 def make_cell_assign_mapper(cluster_ids, centroid_vecs):
     """mapInPandas mapper assigning each vector to its nearest centroid by
     cosine — one (N x d) @ (d x C) matmul per Arrow batch against the
     closure-shipped centroid matrix (C is tiny; no shuffle, no join).
 
-    Tie-break matches ``ann.nearest_centroid`` exactly: highest rounded
-    (6 dp, HALF_UP) score, then lowest cluster id — so a rebuild assigns
+    Tie-break matches ``ann.greedy_probes`` exactly, so a query probes
+    the cell its equal vector was assigned to: highest rounded (6 dp,
+    HALF_UP) score, then lowest cluster id — so a rebuild assigns
     identically regardless of partitioning.  Zero-norm vectors score 0.0
     against every centroid and land in the lowest cluster id.
     """
-    cmat = np.asarray(centroid_vecs, dtype=np.float64)  # C x d
-    cn = np.sqrt((cmat * cmat).sum(axis=1))  # C
-    # order columns by cluster id ascending so argmax's first-wins
-    # tie-break IS the lowest-cluster-id tie-break
-    order = np.argsort(np.asarray(cluster_ids, dtype=np.int64), kind="stable")
-    cmat, cn = cmat[order], cn[order]
-    cids = np.asarray(cluster_ids, dtype=np.int64)[order]
+    cmat, cn, cids = _sorted_centroids(cluster_ids, centroid_vecs)
 
     def mapper(batches):
         for pdf in batches:
@@ -671,11 +690,7 @@ def make_assign_sum_mapper(cluster_ids, centroid_vecs):
     C*d skinny (cell, pos, psum, cnt) rows leave the stage; the means
     assembled from these partials are bit-for-bit ``build_centroids``'s
     (parity-pinned by test_ann_index)."""
-    cmat = np.asarray(centroid_vecs, dtype=np.float64)
-    cn = np.sqrt((cmat * cmat).sum(axis=1))
-    order = np.argsort(np.asarray(cluster_ids, dtype=np.int64), kind="stable")
-    cmat, cn = cmat[order], cn[order]
-    cids = np.asarray(cluster_ids, dtype=np.int64)[order]
+    cmat, cn, cids = _sorted_centroids(cluster_ids, centroid_vecs)
 
     def mapper(batches):
         for pdf in batches:
@@ -690,28 +705,20 @@ def make_assign_sum_mapper(cluster_ids, centroid_vecs):
 
 
 def make_seed_sum_mapper(n_cells):
-    """Fused seed-round mapper: the SRP sign-pattern seed cell —
-    IDENTICAL formula to ``ann._srp_seed_col`` (md5-Rademacher planes,
-    bucket mod n_cells) — plus the same exact-decimal partial sums as
-    ``make_assign_sum_mapper``, replacing the seed-column pandas UDF +
-    posexplode aggregation with one fused pass."""
-    import math
-
-    b = max(1, math.ceil(math.log2(max(2, n_cells))))
+    """Fused seed-round mapper: the SRP sign-pattern seed cell
+    (``srp_seed_cells``, as ``ann._srp_seed_col``) plus the same
+    exact-decimal partial sums as ``make_assign_sum_mapper``, replacing
+    the seed-column pandas UDF + posexplode aggregation with one fused
+    pass."""
 
     def mapper(batches):
-        P = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat = np.stack(pdf["embedding"].to_numpy()).astype(
                 np.float64, copy=False
             )
-            if P is None or P.shape[1] != mat.shape[1]:
-                P = _srp_planes(1, b, mat.shape[1])
-            bits = (mat @ P.T >= 0).astype(np.int64)
-            cells = (bits << np.arange(b, dtype=np.int64)).sum(axis=1) % n_cells
-            yield _partial_sum_frame(cells, mat)
+            yield _partial_sum_frame(srp_seed_cells(mat, n_cells), mat)
 
     return mapper
 
@@ -915,14 +922,7 @@ def make_assign_encode_mapper(cluster_ids, centroid_vecs, codebook, m):
 
     cb = np.asarray(codebook, dtype=np.float64)
     if cluster_ids is not None:
-        cmat = np.asarray(centroid_vecs, dtype=np.float64)  # C x d
-        cn = np.sqrt((cmat * cmat).sum(axis=1))
-        # order columns by cluster id ascending so argmax's first-wins
-        # tie-break IS the lowest-cluster-id tie-break (same as
-        # make_cell_assign_mapper)
-        order = np.argsort(np.asarray(cluster_ids, dtype=np.int64), kind="stable")
-        cmat, cn = cmat[order], cn[order]
-        cids = np.asarray(cluster_ids, dtype=np.int64)[order]
+        cmat, cn, cids = _sorted_centroids(cluster_ids, centroid_vecs)
 
     def mapper(batches):
         for pdf in batches:
@@ -954,8 +954,8 @@ def make_mmr_selector(lam: float, k: int):
     argmax lam*rel - (1-lam)*max_sim_to_selected, ties -> vec_id asc.
 
     Cross-engine determinism: rel arrives already 6dp-rounded from the
-    candidate stage; pairwise cosines follow the _SQL_COS shape
-    (dot / (sqrt(aa)*sqrt(bb)), zero-norm -> 0) and are HALF_UP-rounded;
+    candidate stage; pairwise cosines are ``rounded_cosine`` (the
+    _SQL_COS shape: dot / (sqrt(aa)*sqrt(bb)), zero-norm -> 0, HALF_UP);
     the penalty weight is computed as ``1.0 - lam`` HERE and written as
     ``(1.0 - lam)`` in the oracle SQL (never the decimal literal — IEEE
     1-0.7 != 0.3), so both engines subtract the identical double.
@@ -968,19 +968,12 @@ def make_mmr_selector(lam: float, k: int):
         V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
         ids = pdf["vec_id"].to_numpy()
         rel = pdf["score"].to_numpy(dtype=np.float64)
-        nn = (V * V).sum(axis=1)
-        dots = V @ V.T
-        denom = np.sqrt(nn)[:, None] * np.sqrt(nn)[None, :]
-        zero = (nn[:, None] == 0.0) | (nn[None, :] == 0.0)
-        sims = round_half_up(np.where(zero, 0.0, dots / np.where(denom == 0.0, 1.0, denom)))
+        sims = rounded_cosine(V, V)
         n = len(ids)
         k_ = min(k, n)
 
         def argbest(scores, mask):
-            s = np.where(mask, scores, -np.inf)
-            m = s.max()
-            tied = np.where(s == m)[0]
-            return tied[np.argmin(ids[tied])]
+            return top_positions(np.where(mask, scores, -np.inf), ids, 1)[0]
 
         mask = np.ones(n, dtype=bool)
         first = argbest(rel, mask)

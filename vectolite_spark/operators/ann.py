@@ -151,60 +151,25 @@ def _centroids_from_partials(
     ]
 
 
-def nearest_centroid(
-    centroids: list[tuple[int, list[float]]], qvec: Sequence[float]
-) -> int:
-    """Driver-side probe selection: cosine against C centroids (C is tiny).
-    Ties break on the rounded score, then lowest cluster id — the same total
-    order as every other operator."""
-    qn = math.sqrt(sum(float(x) ** 2 for x in qvec))
-    best = None
-    for cid, cvec in centroids:
-        cn = math.sqrt(sum(float(x) ** 2 for x in cvec))
-        score = (
-            0.0
-            if qn == 0.0 or cn == 0.0
-            else sum(float(a) * float(b) for a, b in zip(cvec, qvec)) / (cn * qn)
-        )
-        key = (-round(score, SCORE_DECIMALS), cid)
-        if best is None or key < best[0]:
-            best = (key, cid)
-    return best[1]
-
-
 def greedy_probes(
     cents: list[tuple[int, list[float]]], qvec: Sequence[float], n_probe: int
 ) -> list[int]:
     """The n_probe nearest cells to the query, in probe order (rounded
-    cosine desc, cluster id asc) — driver-side over the centroid set.
-
-    Vectorized (r9): the old shape called ``nearest_centroid`` once per
-    pick, re-scoring every remaining centroid in pure Python —
-    O(n_probe * C * d) interpreter ops, ~1.5 s per query at C=1024,
-    n_probe=64 (the 1M SCALING run). One numpy matmul + the SAME
-    (-rounded score, cid) total order (Python ``round``, like
-    ``nearest_centroid``) is equivalent and ~1000x cheaper: selecting
-    the top n_probe of a fixed total order greedily or by sort is the
-    same list."""
+    cosine desc, cluster id asc) — driver-side over the centroid set,
+    one matmul. Scores are ``_pandas_udfs.rounded_cosine``, HALF_UP like
+    ``_assign_cells``, so a query probes first the cell its equal
+    vector was assigned to."""
     import numpy as np
+
+    from vectolite_spark._pandas_udfs import rounded_cosine, top_positions
 
     if not cents:
         return []
-    cids = [int(c) for c, _ in cents]
+    cids = np.asarray([int(c) for c, _ in cents], dtype=np.int64)
     M = np.asarray([v for _, v in cents], dtype=np.float64)
-    q = np.asarray([float(x) for x in qvec], dtype=np.float64)
-    qn = math.sqrt(float((q * q).sum()))
-    cn = np.sqrt((M * M).sum(axis=1))
-    if qn == 0.0:
-        scores = np.zeros(len(cids))
-    else:
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scores = np.where(cn == 0.0, 0.0, (M @ q) / (cn * qn))
-    keyed = sorted(
-        (-round(float(scores[i]), SCORE_DECIMALS), cids[i])
-        for i in range(len(cids))
-    )
-    return [cid for _, cid in keyed[: min(n_probe, len(cids))]]
+    q = np.asarray([[float(x) for x in qvec]], dtype=np.float64)
+    scores = rounded_cosine(M, q)[:, 0]
+    return cids[top_positions(scores, cids, n_probe)].tolist()
 
 
 def ivf_topk(
@@ -255,30 +220,23 @@ def _srp_seed_col(n_cells: int):
     """Geometry-aware k-means seed assignment: a pandas UDF mapping an
     embedding to the bucket of its sign pattern under
     ceil(log2(n_cells)) deterministic md5-Rademacher hyperplanes
-    (``_pandas_udfs._srp_planes`` — the SRP index's plane formula), mod
-    n_cells. Deterministic, partitioning-independent, and SEPARATES
+    (``_pandas_udfs.srp_seed_cells`` — the SRP index's plane formula),
+    mod n_cells. Deterministic, partitioning-independent, and SEPARATES
     clustered data from round zero — see the Lloyd comment in
     build_ivfpq_index."""
-    import math
-
     from pyspark.sql.functions import pandas_udf
-
-    b = max(1, math.ceil(math.log2(max(2, n_cells))))
 
     @pandas_udf("int")
     def _seed(emb):
         import numpy as np
         import pandas as pd
 
-        from vectolite_spark._pandas_udfs import _srp_planes
+        from vectolite_spark._pandas_udfs import srp_seed_cells
 
         if len(emb) == 0:
             return pd.Series([], dtype="int32")
         mat = np.stack(emb.to_numpy()).astype(np.float64, copy=False)
-        P = _srp_planes(1, b, mat.shape[1])
-        bits = (mat @ P.T >= 0).astype(np.int64)
-        bucket = (bits << np.arange(b, dtype=np.int64)).sum(axis=1)
-        return pd.Series((bucket % n_cells).astype("int32"))
+        return pd.Series(srp_seed_cells(mat, n_cells).astype("int32"))
 
     return _seed
 
@@ -373,6 +331,51 @@ def _topup_seed_centroids(
     return topped
 
 
+def _train_ivf(
+    embeddings: DataFrame, n_cells: int, n_rounds: int, id_col: str
+) -> tuple[list[tuple[int, list[float]]], list[tuple[int, list[float]]]]:
+    """IVF centroid training: SRP sign-pattern seeds (``srp_seed_cells``),
+    the empty-cell top-up, then ``n_rounds`` Lloyd rounds. Returns the
+    centroids the last round assigned with and the final centroids (the
+    same list when ``n_rounds`` is 0).
+
+    Each pass is ONE fused corpus pass (r13): the mapper assigns and
+    emits exact-decimal per-cell partial sums, so only C*d skinny rows
+    are shuffled (guide §2.3/§2.4); the means are bit-identical to
+    ``build_centroids`` (parity-pinned). Centroids (C x d floats)
+    round-trip through the driver because C is tiny by construction.
+    Deterministic: seeds are a pure function of the vector, means are
+    order-independent, assignment ties break on (rounded score, cell
+    id) — so rebuilds at any partitioning converge identically."""
+    from vectolite_spark._pandas_udfs import (
+        make_assign_sum_mapper,
+        make_seed_sum_mapper,
+    )
+
+    emb_in = embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
+    cents = _centroids_from_partials(
+        emb_in.mapInPandas(make_seed_sum_mapper(n_cells), schema=_PARTIAL_SUM_SCHEMA)
+    )
+    if len(cents) < n_cells:
+        # degenerate path only (empty seed cells): the top-up needs the
+        # per-row seed column — the seed is a pure function of the
+        # vector, so recomputing it here is identical
+        seeded = embeddings.withColumn(
+            "_seed_cell", _srp_seed_col(n_cells)(F.col("embedding"))
+        )
+        cents = _topup_seed_centroids(seeded, cents, n_cells, id_col=id_col)
+    prev = cents
+    for _ in range(n_rounds):
+        prev = cents
+        cents = _centroids_from_partials(
+            emb_in.mapInPandas(
+                make_assign_sum_mapper([c for c, _ in prev], [v for _, v in prev]),
+                schema=_PARTIAL_SUM_SCHEMA,
+            )
+        )
+    return prev, cents
+
+
 def build_ivf_index(
     embeddings: DataFrame,
     index_path: str,
@@ -397,54 +400,12 @@ def build_ivf_index(
     """
     clear_index_ready(embeddings.sparkSession, index_path)
     if cluster_col is None:
-        # seed centroids from a deterministic coarse partition of the id
-        # space, then ``n_iters`` Lloyd rounds (assign -> exact-DECIMAL
-        # mean). Each round is ONE fused corpus pass (r13): the mapper
-        # assigns and emits exact-decimal per-cell partial sums, so the
-        # old assign-mapper + N*d posexplode + wide pre-agg collapses to
-        # a C*d skinny-row shuffle (guide §2.3/§2.4); means are
-        # bit-identical to build_centroids (parity-pinned). Centroids
-        # (C x d floats) round-trip through the driver because C is tiny
-        # by construction. Deterministic: seed is geometry-derived,
-        # means are order-independent, ties in assignment break on
-        # (rounded score, cell id) — so rebuilds at any partitioning
-        # converge to the same index.
-        from vectolite_spark._pandas_udfs import (
-            make_assign_sum_mapper,
-            make_seed_sum_mapper,
-        )
-
-        n_seed_cells = 16
-        emb_in = embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
-        cents_list = _centroids_from_partials(
-            emb_in.mapInPandas(
-                make_seed_sum_mapper(n_seed_cells), schema=_PARTIAL_SUM_SCHEMA
-            )
-        )
-        if len(cents_list) < n_seed_cells:
-            # degenerate path only: the top-up needs the per-row seed
-            # column; the seed assignment is a pure function of the
-            # vector, so recomputing it here is identical
-            seeded = embeddings.withColumn(
-                "_seed_cell", _srp_seed_col(n_seed_cells)(F.col("embedding"))
-            )
-            cents_list = _topup_seed_centroids(
-                seeded, cents_list, n_seed_cells, id_col=id_col
-            )
-        prev_cents = cents_list
-        for _ in range(max(1, n_iters)):
-            prev_cents = cents_list
-            cents_list = _centroids_from_partials(
-                emb_in.mapInPandas(
-                    make_assign_sum_mapper(
-                        [c for c, _ in prev_cents], [v for _, v in prev_cents]
-                    ),
-                    schema=_PARTIAL_SUM_SCHEMA,
-                )
-            )
+        # 16 seed cells, then ``n_iters`` (at least one) Lloyd rounds;
         # the cells layout uses the LAST round's assignment (the one the
-        # final means were computed over) — same frame the old shape
-        # wrote, rebuilt lazily here since the fused pass kept only sums
+        # final means were computed over)
+        prev_cents, cents_list = _train_ivf(
+            embeddings, 16, max(1, n_iters), id_col
+        )
         assigned = assign_cells(embeddings, prev_cents, id_col=id_col)
         cents = local_df(
             embeddings.sparkSession,
@@ -933,27 +894,7 @@ def build_ivfpq_index(
             F.col(cluster_col).cast("long").alias("cell"),
         )
     else:
-        from vectolite_spark._pandas_udfs import (
-            make_assign_sum_mapper,
-            make_seed_sum_mapper,
-        )
-
         fused_in = embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
-        cents_list = _centroids_from_partials(
-            fused_in.mapInPandas(
-                make_seed_sum_mapper(n_cells), schema=_PARTIAL_SUM_SCHEMA
-            )
-        )
-        if len(cents_list) < n_cells:
-            # degenerate path only (empty seed cells): the top-up needs
-            # the per-row seed column — the seed is a pure function of
-            # the vector, so recomputing it here is identical
-            seeded = embeddings.withColumn(
-                "_seed_cell", _srp_seed_col(n_cells)(F.col("embedding"))
-            )
-            cents_list = _topup_seed_centroids(
-                seeded, cents_list, n_cells, id_col=id_col
-            )
         # Lloyd refinement of the IVF level, from GEOMETRY-AWARE seeds
         # (r9): seed cell = the vector's sign pattern under
         # ceil(log2(n_cells)) deterministic md5-Rademacher projections —
@@ -964,24 +905,11 @@ def build_ivfpq_index(
         # hundreds-plus that never recovered within a few rounds
         # (recall@10 = 0.06 at 1M x 1024 cells — the SCALING section-9
         # run). Sign-pattern seeds separate real clusters from round
-        # zero. Still deterministic and partitioning-independent (pure
-        # function of the vector), so rebuilds converge identically.
-        # Each round is ONE fused pass (r13): assignment + exact-decimal
-        # partial sums in the mapper, C*d skinny rows shuffled instead
-        # of the old N*d posexplode (guide §2.3/§2.4); means
-        # bit-identical to build_centroids (parity-pinned). The FINAL
-        # assignment below uses the refined centroids — routing at
-        # query time must agree with the cells on disk.
-        for _ in range(max(0, ivf_iters)):
-            cents_list = _centroids_from_partials(
-                fused_in.mapInPandas(
-                    make_assign_sum_mapper(
-                        [c for c, _ in cents_list],
-                        [v for _, v in cents_list],
-                    ),
-                    schema=_PARTIAL_SUM_SCHEMA,
-                )
-            )
+        # zero. The FINAL assignment below uses the refined centroids —
+        # routing at query time must agree with the cells on disk.
+        _, cents_list = _train_ivf(
+            embeddings, n_cells, max(0, ivf_iters), id_col
+        )
     try:
         codebook = fut_codebook.result()
     finally:
@@ -1499,28 +1427,16 @@ def srp_query_blocks(
     qvec, n_tables: int = 16, n_planes: int = 6
 ) -> list[str]:
     """Driver-side twin of ``make_srp_bucket_mapper`` for ONE vector:
-    the query's (table, bucket) block keys under the same deterministic
-    md5-Rademacher planes. Tiny (T*b*d md5 calls, cached nowhere — a
-    64-dim query is ~6k hashes, microseconds vs the job it prunes)."""
-    import hashlib
-
+    the query's (table, bucket) block keys, ``srp_bucket_codes`` of the
+    1 x d matrix holding it."""
     import numpy as np
 
-    d = len(qvec)
-    total = n_tables * n_planes
-    P = np.empty((total, d), dtype=np.float64)
-    for g in range(total):
-        for j in range(d):
-            nib = int(hashlib.md5(f"{g}:{j}".encode()).hexdigest()[0], 16)
-            P[g, j] = 1.0 if nib >= 8 else -1.0
-    bits = (np.asarray(qvec, dtype=np.float64) @ P.T >= 0).astype(np.int64)
-    out = []
-    for t in range(n_tables):
-        b = 0
-        for i in range(n_planes):
-            b |= int(bits[t * n_planes + i]) << i
-        out.append(f"{t}:{b}")
-    return out
+    from vectolite_spark._pandas_udfs import srp_bucket_codes
+
+    codes = srp_bucket_codes(
+        np.asarray([qvec], dtype=np.float64), n_tables, n_planes
+    )[0]
+    return [f"{t}:{c}" for t, c in enumerate(codes)]
 
 
 def _srp_meta(spark, index_path: str) -> tuple[int, int] | None:

@@ -801,12 +801,14 @@ def _srp_scored_candidates(
 ) -> DataFrame:
     """Shared SRP-block candidate kernel: distinct (anchor_id, other_id,
     same_label, score) pairs from capped LSH buckets, cosine scored with
-    the left-to-right JVM fold (bit-identical to DuckDB's
-    list_dot_product). Feeds hard-negative mining (different-label side)
-    and contrastive triplet assembly (both sides from ONE pass)."""
+    the left-to-right JVM fold ``functions.vector.dot_product``
+    (bit-identical to DuckDB's list_dot_product). Feeds hard-negative
+    mining (different-label side) and contrastive triplet assembly (both
+    sides from ONE pass)."""
     from pyspark.sql import Window
 
     from vectolite_spark._pandas_udfs import make_srp_bucket_mapper
+    from vectolite_spark.functions.vector import dot_product
 
     mapper = make_srp_bucket_mapper(n_tables, n_planes)
     bucketed = (
@@ -817,9 +819,6 @@ def _srp_scored_candidates(
     )
     labels = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(label_col).alias("label")
-    )
-    ltr_dot = lambda a, b: F.aggregate(  # noqa: E731  left-to-right, like DuckDB
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
     v = F.transform("embedding", lambda x: x.cast("double"))
     # Labels join FIRST, then one explicit block-keyed repartition that
@@ -854,13 +853,13 @@ def _srp_scored_candidates(
             "vec_id",
             "label",
             v.alias("v"),
-            ltr_dot(v, v).alias("nrm"),
+            dot_product(v, v).alias("nrm"),
         )
     )
     a, b = sides.alias("a"), sides.alias("b")
     aa = F.col("a.nrm")
     bb = F.col("b.nrm")
-    ab = ltr_dot(F.col("a.v"), F.col("b.v"))
+    ab = dot_product(F.col("a.v"), F.col("b.v"))
     score = F.round(
         F.when((aa == 0) | (bb == 0), F.lit(0.0)).otherwise(
             ab / (F.sqrt(aa) * F.sqrt(bb))

@@ -422,25 +422,53 @@ def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[flo
 
 
 # --------------------------------------------------------------------------
+# Oracle SQL fragments shared by several entries
+# --------------------------------------------------------------------------
+
+# rounded cosine of two DOUBLE[] expressions: zero norm -> 0.0, 6 dp
+# (``_pandas_udfs.rounded_cosine``'s contract)
+_SQL_COS = (
+    "ROUND(CASE WHEN list_dot_product({a}, {a}) = 0 OR list_dot_product({b}, {b}) = 0 "
+    "THEN 0.0 ELSE list_dot_product({a}, {b}) "
+    "/ (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))) END, 6)"
+)
+
+
+def _sql_srp_planes(n: int) -> str:
+    """The ``planes`` CTE: ``n`` md5-Rademacher planes (g, plane) over
+    64 dims — ``_pandas_udfs._srp_planes``' formula, component j of
+    plane g is +1 iff md5('g:j')'s first hex nibble is >= 8."""
+    return f"""planes AS (
+  SELECT g, list_transform(range(0, 64),
+    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
+                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
+         THEN 1.0 ELSE -1.0 END) AS plane
+  FROM range(0, {n}) t(g)
+)"""
+
+
+# the ``dims`` CTE: per-label exact-DECIMAL mean of each embedding
+# position (``ann.build_centroids``' arithmetic)
+_SQL_CENTROID_DIMS = """dims AS (
+  SELECT label, pos, CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
+  FROM (SELECT label, unnest(embedding) AS x,
+               generate_subscripts(embedding, 1) AS pos
+        FROM embeddings)
+  GROUP BY label, pos
+)"""
+
+
+# --------------------------------------------------------------------------
 # Flagship: exact brute-force cosine top-k (SURVEY.md §2.3)
 # --------------------------------------------------------------------------
 
-_COSINE_SCORED = """
+_COSINE_SCORED = f"""
 WITH q AS (
   SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
 ),
 scored AS (
   SELECT e.vec_id,
-         ROUND(
-           CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(e.embedding AS DOUBLE[])) = 0
-                  OR list_dot_product(q.qv, q.qv) = 0
-                THEN 0.0
-                ELSE list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                     / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(e.embedding AS DOUBLE[])))
-                        * sqrt(list_dot_product(q.qv, q.qv)))
-           END, 6) AS score
+         {_SQL_COS.format(a="CAST(e.embedding AS DOUBLE[])", b="q.qv")} AS score
   FROM embeddings e CROSS JOIN q
 )
 """
@@ -1301,23 +1329,14 @@ def grouped_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "batch_topk",
-    """
+    f"""
 WITH q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
   FROM embeddings WHERE vec_id % 100 = 0
 ),
 scored AS (
   SELECT q.query_id, e.vec_id,
-         ROUND(
-           CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(e.embedding AS DOUBLE[])) = 0
-                  OR list_dot_product(q.qv, q.qv) = 0
-                THEN 0.0
-                ELSE list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                     / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(e.embedding AS DOUBLE[])))
-                        * sqrt(list_dot_product(q.qv, q.qv)))
-           END, 6) AS score
+         {_SQL_COS.format(a="CAST(e.embedding AS DOUBLE[])", b="q.qv")} AS score
   FROM embeddings e CROSS JOIN q
 ),
 ranked AS (
@@ -2102,7 +2121,7 @@ FROM t WHERE token != '' GROUP BY lang ORDER BY lang
 
 @register(
     "diversity_sample",
-    """
+    f"""
 WITH e AS (
   SELECT label, vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
@@ -2121,13 +2140,7 @@ picked AS (
   FROM e
 )
 SELECT p.label, CAST(p.sample_rank AS BIGINT) AS sample_rank, p.vec_id,
-       ROUND(CASE WHEN list_dot_product(p.v, p.v) = 0
-                    OR list_dot_product(cent, cent) = 0
-                  THEN 0.0
-                  ELSE list_dot_product(p.v, cent)
-                       / (sqrt(list_dot_product(p.v, p.v))
-                          * sqrt(list_dot_product(cent, cent)))
-             END, 6) AS cos_to_centroid
+       {_SQL_COS.format(a="p.v", b="cent")} AS cos_to_centroid
 FROM picked p JOIN cents USING (label)
 WHERE sample_rank <= 5
 ORDER BY label, sample_rank
@@ -2934,22 +2947,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_embedding_cosine",
-    """
+    f"""
 WITH e AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND(CASE WHEN list_dot_product(a.v, a.v) = 0
-                    OR list_dot_product(b.v, b.v) = 0 THEN 0.0
-             ELSE list_dot_product(a.v, b.v)
-                  / (sqrt(list_dot_product(a.v, a.v))
-                     * sqrt(list_dot_product(b.v, b.v))) END, 6) AS score
+       {_SQL_COS.format(a="a.v", b="b.v")} AS score
 FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE ROUND(CASE WHEN list_dot_product(a.v, a.v) = 0
-                   OR list_dot_product(b.v, b.v) = 0 THEN 0.0
-            ELSE list_dot_product(a.v, b.v)
-                 / (sqrt(list_dot_product(a.v, a.v))
-                    * sqrt(list_dot_product(b.v, b.v))) END, 6) >= 0.3
+WHERE {_SQL_COS.format(a="a.v", b="b.v")} >= 0.3
 """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2958,13 +2963,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectolite_spark.operators.dedup import embedding_cosine_pairs
 
     return embedding_cosine_pairs(load_table(spark, sf_dir, "embeddings"))
-
-
-_SQL_COS = (
-    "ROUND(CASE WHEN list_dot_product({a}, {a}) = 0 OR list_dot_product({b}, {b}) = 0 "
-    "THEN 0.0 ELSE list_dot_product({a}, {b}) "
-    "/ (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))) END, 6)"
-)
 
 
 @register(
@@ -3012,13 +3010,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_embedding_srp",
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 32) t(g)
-),
+{_sql_srp_planes(32)},
 bits AS (
   SELECT e.vec_id, p.g // 8 AS t, p.g % 8 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit
@@ -3056,13 +3048,7 @@ def dedup_embedding_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
            FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 32) t(g)
-),
+{_sql_srp_planes(32)},
 bits AS (
   SELECT e.vec_id, p.g // 8 AS t, p.g % 8 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit
@@ -3169,13 +3155,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH q AS (
   SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
 ),
-dims AS (
-  SELECT label, pos, CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings)
-  GROUP BY label, pos
-),
+{_SQL_CENTROID_DIMS},
 cents AS (
   SELECT label, array_agg(c ORDER BY pos) AS centroid FROM dims GROUP BY label
 ),
@@ -3210,13 +3190,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH q AS (
   SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
 ),
-dims AS (
-  SELECT label, pos, CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings)
-  GROUP BY label, pos
-),
+{_SQL_CENTROID_DIMS},
 cents AS (
   SELECT label, array_agg(c ORDER BY pos) AS centroid FROM dims GROUP BY label
 ),
@@ -3348,13 +3322,7 @@ def ivf_seed_topup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_batch_lsh",
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 96) t(g)
-),
+{_sql_srp_planes(96)},
 bits AS (
   SELECT e.vec_id, p.g // 6 AS t, p.g % 6 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit
@@ -3407,13 +3375,7 @@ def ann_batch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_lsh_topk",
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 96) t(g)
-),
+{_sql_srp_planes(96)},
 bits AS (
   SELECT e.vec_id, p.g // 6 AS t, p.g % 6 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit
@@ -6636,13 +6598,7 @@ exact AS (
            e.vec_id ASC
   LIMIT 10
 ),
-dims AS (
-  SELECT label, pos, CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings)
-  GROUP BY label, pos
-),
+{_SQL_CENTROID_DIMS},
 cents AS (
   SELECT label, array_agg(c ORDER BY pos) AS centroid FROM dims GROUP BY label
 ),
@@ -6810,14 +6766,7 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "centroid_classify_confusion",
     f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-dims AS (
-  SELECT label, pos,
-         CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings)
-  GROUP BY label, pos
-),
+{_SQL_CENTROID_DIMS},
 cents AS (
   SELECT label AS clabel, array_agg(c ORDER BY pos) AS centroid
   FROM dims GROUP BY label
@@ -7294,23 +7243,14 @@ def ann_ivfpq_probe_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_ivfpq_batch_topk",
-    """
+    f"""
 WITH q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
   FROM embeddings WHERE vec_id % 200 = 0
 ),
 scored AS (
   SELECT q.query_id, e.vec_id,
-         ROUND(
-           CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(e.embedding AS DOUBLE[])) = 0
-                  OR list_dot_product(q.qv, q.qv) = 0
-                THEN 0.0
-                ELSE list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                     / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                              CAST(e.embedding AS DOUBLE[])))
-                        * sqrt(list_dot_product(q.qv, q.qv)))
-           END, 6) AS score
+         {_SQL_COS.format(a="CAST(e.embedding AS DOUBLE[])", b="q.qv")} AS score
   FROM embeddings e CROSS JOIN q
 ),
 ranked AS (
@@ -7402,13 +7342,7 @@ exact AS (
            e.vec_id ASC
   LIMIT 10
 ),
-dims AS (
-  SELECT label, pos, CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings)
-  GROUP BY label, pos
-),
+{_SQL_CENTROID_DIMS},
 cents AS (
   SELECT label, array_agg(c ORDER BY pos) AS centroid FROM dims GROUP BY label
 ),
@@ -7614,13 +7548,7 @@ WITH qs AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
   FROM embeddings WHERE vec_id IN (0, 1, 2)
 ),
-dims AS (
-  SELECT label, pos, CAST(SUM(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS c
-  FROM (SELECT label, unnest(embedding) AS x,
-               generate_subscripts(embedding, 1) AS pos
-        FROM embeddings)
-  GROUP BY label, pos
-),
+{_SQL_CENTROID_DIMS},
 cents AS (
   SELECT label, array_agg(c ORDER BY pos) AS centroid FROM dims GROUP BY label
 ),
@@ -9632,13 +9560,7 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cdf_synced_srp_topk",
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 16) t(g)
-),
+{_sql_srp_planes(16)},
 bits AS (
   SELECT e.vec_id, p.g // 4 AS t, p.g % 4 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit
@@ -10945,13 +10867,7 @@ def regex_trigram_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
            FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 32) t(g)
-),
+{_sql_srp_planes(32)},
 bits AS (
   SELECT e.vec_id, p.g // 8 AS t, p.g % 8 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit
@@ -11531,13 +11447,7 @@ def dsir_gumbel_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bitext_margin_mine",
     f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-planes AS (
-  SELECT g, list_transform(range(0, 64),
-    j -> CASE WHEN CAST('0x' || substr(md5(CAST(g AS VARCHAR) || ':'
-                                       || CAST(j AS VARCHAR)), 1, 1) AS INTEGER) >= 8
-         THEN 1.0 ELSE -1.0 END) AS plane
-  FROM range(0, 32) t(g)
-),
+{_sql_srp_planes(32)},
 bits AS (
   SELECT e.vec_id, p.g // 8 AS t, p.g % 8 AS b,
          CASE WHEN list_dot_product(e.v, p.plane) >= 0 THEN 1 ELSE 0 END AS bit

@@ -12,8 +12,10 @@ measured driver-memory budget (``resident_max_bytes``, default 256
 MiB) picks the regime:
 
 - **Resident** (the working set fits the budget): the frame is
-  collected once onto the driver and every query — exact, filtered or
-  SRP-approximate — is answered in numpy with no Spark job at all.
+  collected once onto the driver into numpy arrays (vectors, norms,
+  bucket codes; the set keeps no frame) and every query — exact,
+  filtered or SRP-approximate — is answered over those arrays with no
+  Spark job at all.
 - **Micro-batched** (over budget, or a zero budget): the frame is
   cached as one partition and two of this module's ``MicroBatcher``s
   share it, one ranking exactly and one running the SRP probe. The
@@ -26,10 +28,10 @@ MiB) picks the regime:
   dispatcher drains the queue into one batch job, and every waiter
   gets its own slice of the result.
 
-Both regimes share the ranking contract of the per-job paths, and the
-SRP probe kernel (``_pandas_udfs.make_srp_serving_mapper``) runs
-unchanged in either: over the resident frame on the driver, or inside
-the ANN batcher's one-task job.
+Both regimes share the ranking contract of the per-job paths, and one
+SRP probe body (``_pandas_udfs.srp_probe``) runs in either: over the
+resident set's arrays on the driver, or inside the ANN batcher's
+one-task job (``make_srp_serving_mapper``).
 
 Latency/throughput contract of the batcher: a lone query pays at most
 ``max_wait_ms`` extra latency; under load the batch fills to

@@ -180,21 +180,6 @@ def _match_filter(meta: dict | None, fcmp: dict) -> bool:
     return True
 
 
-def _top_positions(sc, ids, k: int):
-    """Positions of the ``k`` best rows by (score desc, id asc).
-    ``argpartition`` first narrows to the rows scoring at least the
-    k-th best score — every row tied at that score stays in, so the id
-    tie-break sees the whole tie group — then one lexsort orders them.
-    NaN scores sort last, as in a full lexsort."""
-    import numpy as np
-
-    cand = np.arange(len(sc))
-    if k < len(sc):
-        kth = sc[np.argpartition(-sc, k - 1)[k - 1]]
-        cand = np.flatnonzero(~(sc < kth))
-    return cand[np.lexsort((ids[cand], -sc[cand]))[:k]]
-
-
 def _size_stats() -> list:
     """The aggregate columns the resident budget estimate reads: row
     count, embedding dim, and the text+metadata payload in characters
@@ -284,10 +269,11 @@ class _Delta:
 
 class _ResidentSet:
     """The resident serving regime's working set: one table version on
-    the driver. ``ids``/``E`` (float64)/``norms`` serve exact ranking,
-    ``parsed`` metadata dicts filter masks, and ``frame`` — the rows
-    with each embedding a view into ``E`` and each row's SRP bucket
-    codes under ``planes`` a view into ``codes`` — the SRP probe.
+    the driver, as arrays only (no frame). ``ids``/``E``
+    (float64)/``norms`` serve exact ranking, ``parsed`` metadata dicts
+    filter masks, and ``codes`` (each row's SRP bucket codes under
+    ``planes``) with ``E``/``norms`` feed the array SRP probe
+    (``_pandas_udfs.srp_probe``).
 
     The set also records what it reflects: ``version``, the table
     version it was read from; ``dirs``, each row's data-dir name (what
@@ -300,29 +286,15 @@ class _ResidentSet:
     def __init__(
         self, rows: _Rows, codes, dirs, planes, version, payload, parsed=None
     ):
-        import numpy as np
-        import pandas as pd
+        from vectolite_spark._pandas_udfs import row_norms
 
-        n = len(rows.ids)
         self.planes, self.version, self.payload = planes, version, payload
         self.ids, self.E = rows.ids, rows.E
         self.texts, self.metas = rows.texts, rows.metas
         self.codes, self.dirs = codes, dirs
-        self.norms = np.sqrt((self.E * self.E).sum(axis=1))
+        self.norms = row_norms(self.E)
         self.parsed = (
             parsed if parsed is not None else [_parse_meta(m) for m in self.metas]
-        )
-        views, code_views = np.empty(n, dtype=object), np.empty(n, dtype=object)
-        for i in range(n):  # views: one float64 copy of the vectors, not two
-            views[i], code_views[i] = self.E[i], codes[i]
-        self.frame = pd.DataFrame(
-            {
-                "vec_id": self.ids,
-                "embedding": views,
-                "text": self.texts,
-                "metadata": self.metas,
-                "srp_buckets": code_views,
-            }
         )
 
     @classmethod
@@ -399,38 +371,33 @@ class _ResidentSet:
         )
 
     def query(self, qvec, top_k: int, fcmp: dict | None, ann: bool) -> list[dict]:
-        """Exact: same rounded cosine scores (round-half-up 6dp,
-        zero-norm -> 0.0 on either side), same (score desc, id asc)
-        order and same ``_match_filter`` normalization as the exact
-        Spark path. ``ann``: the batched regime's SRP probe kernel over
-        ``frame``, whose bucket codes come from the persisted index's
-        planes — row for row the per-job ``srp_index_topk`` answer.
-        Pinned by tests/test_serving.py
+        """Exact: ``rounded_cosine`` scores and ``top_positions`` order
+        — the exact Spark path's rounding, zero-norm rule and (score
+        desc, id asc) order — with the same ``_match_filter``
+        normalization. ``ann``: ``srp_probe`` over the set's ``codes``,
+        ``E`` and ``norms``, whose codes come from the persisted
+        index's planes — row for row the per-job ``srp_index_topk``
+        answer. Pinned by tests/test_serving.py
         (``test_resident_serving_matches_exact``,
         ``test_resident_ann_matches_per_job_path``)."""
         import numpy as np
 
         from vectolite_spark._pandas_udfs import (
-            make_srp_serving_mapper,
-            round_half_up,
+            rounded_cosine,
+            srp_probe,
+            top_positions,
         )
 
         if len(self.ids) == 0:
             return []
         if ann:
-            nt, npl = self.planes
-            hits = next(
-                make_srp_serving_mapper(
-                    [0], [qvec], top_k, n_tables=nt, n_planes=npl,
-                    payload_cols=_PAYLOAD,
-                    bucket_col="srp_buckets",
-                )(iter([self.frame]))
+            ((src, sc),) = srp_probe(
+                self.codes, self.ids, lambda p: (self.E[p], self.norms[p]),
+                [qvec], top_k, *self.planes,
             )
             return [
-                _hit(*r)
-                for r in zip(
-                    hits["vec_id"], hits["score"], hits["text"], hits["metadata"]
-                )
+                _hit(self.ids[i], s, self.texts[i], self.metas[i])
+                for i, s in zip(src, sc)
             ]
         E, norms, ids, rows = self.E, self.norms, self.ids, None
         if fcmp:
@@ -438,12 +405,8 @@ class _ResidentSet:
             if len(rows) == 0:
                 return []
             E, norms, ids = E[rows], norms[rows], ids[rows]
-        q = np.asarray(qvec, dtype=np.float64)
-        denom = norms * float(np.sqrt((q * q).sum()))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sc = np.where(denom == 0.0, 0.0, E @ q / denom)
-        sc = round_half_up(sc, 6)
-        top = _top_positions(sc, ids, top_k)
+        sc = rounded_cosine(E, np.asarray([qvec], dtype=np.float64), norms)[:, 0]
+        top = top_positions(sc, ids, top_k)
         src = top if rows is None else rows[top]
         return [
             _hit(ids[o], sc[o], self.texts[i], self.metas[i])
@@ -467,11 +430,11 @@ class _BatchedSet:
     ``exact`` ranks ``top_k * _FILTER_OVERFETCH`` rows so filtered
     queries can post-filter its prefix (a deeper heap is noise next to
     the job floor; the exact kernel column-prunes the bucket codes,
-    16 longs/row in the one shared cache). ``ann`` runs the WHOLE SRP probe for a
-    cycle's queries in one task (``make_srp_serving_mapper`` over the
-    precomputed bucket codes; in-mapper bucketing reproduces the
-    persisted index's md5-Rademacher blocks exactly, VERDICT r8 item
-    4). It scans the whole partition per cycle, the right trade only
+    16 longs/row in the one shared cache). ``ann`` runs the WHOLE SRP
+    probe for a cycle's queries in one task (``make_srp_serving_mapper``,
+    i.e. ``srp_probe`` over the precomputed bucket codes; the codes
+    reproduce the persisted index's md5-Rademacher blocks exactly,
+    VERDICT r8 item 4). It scans the whole partition per cycle, the right trade only
     for small/medium corpora (ADVICE r9): above ``_ANN_FACADE_MAX_ROWS``
     rows it is None and ANN queries keep the per-job persisted-index
     path, whose block-directory pruning is the big-corpus answer."""
@@ -497,10 +460,7 @@ class _BatchedSet:
 
                 return base.mapInPandas(
                     make_srp_serving_mapper(
-                        qids, qvecs, kmax,
-                        n_tables=nt, n_planes=npl,
-                        payload_cols=_PAYLOAD,
-                        bucket_col="srp_buckets",
+                        qids, qvecs, kmax, n_tables=nt, n_planes=npl
                     ),
                     schema=(
                         "query_id long, vec_id long, score double, "
@@ -908,13 +868,14 @@ class SparkVectolite:
         - **Resident** — the working set measures under
           ``resident_max_bytes`` (default 256 MiB; one measuring
           aggregate, see ``_build_working_set``). One collect puts the
-          rows on the driver as a float64 numpy matrix plus a pandas
-          frame (``_ResidentSet``). Exact and metadata-filtered queries
-          rank the full matrix in numpy (metadata JSON is parsed once at
+          rows on the driver as numpy arrays — a float64 matrix, its
+          norms and the SRP bucket codes; the set holds no frame
+          (``_ResidentSet``). Exact and metadata-filtered queries rank
+          the full matrix in numpy (metadata JSON is parsed once at
           build); unfiltered ``ann=True`` queries run
-          ``_pandas_udfs.make_srp_serving_mapper`` — the micro-batched
-          regime's probe kernel — over the frame. No Spark job per
-          query, any ``top_k``. Writes through this store patch the set
+          ``_pandas_udfs.srp_probe`` — the probe body the micro-batched
+          regime's mapper also calls — over the set's arrays. No Spark
+          job per query, any ``top_k``. Writes through this store patch the set
           instead of dropping it (``_mutate``), and ``delete_document``
           and ``upsert`` read from it which dirs hold their ids, so a
           read after a write runs no Spark job. Enabling on a store with
