@@ -98,7 +98,7 @@ def _bench_aniso_recall_floor(spark) -> float:
         build_ivfpq_index(
             corpus, path, n_cells=256, m=32, pq_k=64, pq_iters=1, ivf_iters=2
         )
-        idx = IVFPQIndex(spark, path, m=32)
+        idx = IVFPQIndex(spark, path)
         hits = 0
         for r in queries.collect():
             got = {
@@ -651,7 +651,7 @@ def main() -> None:
     timings["ivfpq_label_index_build_and_eval"] = round(time.time() - t0, 4)
     from vectolite_spark.operators.ann import IVFPQIndex
 
-    idx = IVFPQIndex(spark, idx_path, m=8)
+    idx = IVFPQIndex(spark, idx_path)
     idx.topk(qvecs[0], k=10, n_probe=4, refine=100).count()  # warm plans
     probe_q = qvecs[1 % len(qvecs)]  # tiny SFs may sample only one vector
     # min-of-3: this key sits under bench_diff's 1.25x serving hard gate,

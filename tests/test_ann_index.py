@@ -446,7 +446,7 @@ def test_ivfpq_batch_topk_matches_single_probes(spark, sf_dir, tmp_path):
     embs = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivfpq_batch")
     build_ivfpq_index(embs, path, n_cells=8, m=8, pq_k=16, pq_iters=0)
-    idx = IVFPQIndex(spark, path, m=8)
+    idx = IVFPQIndex(spark, path)
     queries = [
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in embs.filter(F.col("vec_id") % 17 == 3)
@@ -485,7 +485,7 @@ def test_ivfpq_build_query_and_pruning(spark, sf_dir, tmp_path):
     qvec = [float(x) for x in embs.filter(F.col("vec_id") == 0).first()["embedding"]]
     path = str(tmp_path / "ivfpq")
     build_ivfpq_index(embs, path, n_cells=8, m=8, pq_k=16, pq_iters=1)
-    idx = IVFPQIndex(spark, path, m=8)
+    idx = IVFPQIndex(spark, path)
 
     # full-probe + generous refine: the exact-rescore stage must put the
     # query's own vector first and recover most of the true top-10
@@ -544,7 +544,7 @@ def test_ivfpq_partial_probe_recall_sweep(spark, tmp_path):
     n = embs.count()
     path = str(tmp_path / "ivfpq01")
     build_ivfpq_index(embs, path, n_cells=16, m=8, pq_k=16, pq_iters=0)
-    idx = IVFPQIndex(spark, path, m=8)
+    idx = IVFPQIndex(spark, path)
     cells = spark.read.parquet(f"{path}/cells").select("vec_id", "cell")
     cellmap = {r["vec_id"]: r["cell"] for r in cells.collect()}
     cell_sizes: dict[int, int] = {}
@@ -805,16 +805,16 @@ def test_matryoshka_two_stage_recall_reasonable(spark, sf_dir):
 
 
 def test_srp_index_meta_drives_probe_parameters(spark, sf_dir, tmp_path):
-    """A non-default build persists (n_tables, n_planes) in meta; probes
-    and appends resolve from it instead of hard-coded defaults, so an
-    index built with other hyperplanes can never be probed with
-    mismatched planes (which silently returns near-empty/wrong sets)."""
-    import pytest
-
+    """A non-default build records (n_tables, n_planes) in its ready
+    marker; the single and batch probes read them from there, so an
+    index built with other hyperplanes is never probed with default
+    planes (which silently returns near-empty/wrong sets): both equal
+    the self-contained path run with the build's planes."""
     from vectolite_spark.operators.ann import (
         build_srp_index,
         srp_index_topk,
         srp_index_topk_batch,
+        topk_batch_lsh,
     )
 
     embs = load_table(spark, sf_dir, "embeddings")
@@ -823,25 +823,19 @@ def test_srp_index_meta_drives_probe_parameters(spark, sf_dir, tmp_path):
     build_srp_index(embs, path, n_tables=4, n_planes=3)
 
     implicit = [tuple(r) for r in srp_index_topk(spark, path, qvec, k=5).collect()]
-    explicit = [
-        tuple(r)
-        for r in srp_index_topk(
-            spark, path, qvec, k=5, n_tables=4, n_planes=3
-        ).collect()
-    ]
-    assert implicit == explicit and len(implicit) == 5
+    assert len(implicit) == 5
 
     queries = spark.createDataFrame(
         [(0, qvec)], "query_id long, query_vec array<double>"
     )
+    want = topk_batch_lsh(queries, embs, k=5, n_tables=4, n_planes=3).select(
+        "vec_id", "score", F.col("rn").cast("long")
+    )
+    assert implicit == [tuple(r) for r in want.collect()]
     batch = srp_index_topk_batch(spark, path, queries, k=5).collect()
     assert [(r["vec_id"], r["score"]) for r in batch] == [
         (v, s) for v, s, _ in implicit
     ]
-
-    # mismatched explicit parameters fail loudly, never serve garbage
-    with pytest.raises(ValueError, match="built with"):
-        srp_index_topk(spark, path, qvec, k=5, n_tables=16, n_planes=6)
 
 
 def test_embedding_outliers_flags_planted_point(spark):
@@ -889,85 +883,6 @@ def test_embedding_drift_closed_form(spark):
     assert got[1]["centroid_l2"] == 2.0
 
 
-def test_srp_meta_absent_vs_unreadable(spark, sf_dir, tmp_path):
-    """ADVICE r6 + r7: _srp_resolve must distinguish a genuinely
-    pre-meta index (meta dir absent -> trust the CALLER's explicit
-    params ONCE, then PERSIST them as the index meta so later
-    mismatches raise — the r7 self-heal) from an unreadable meta
-    (corrupt/transient -> the read error PROPAGATES instead of silently
-    probing with wrong planes)."""
-    import os
-
-    import pytest
-
-    from vectolite_spark.operators.ann import _srp_resolve, build_srp_index
-
-    embs = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "srp_premeta")
-    build_srp_index(embs, path, n_tables=4, n_planes=3)
-    # simulate a pre-meta index
-    import shutil
-
-    shutil.rmtree(os.path.join(path, "meta"))
-    # explicit caller params are trusted on the FIRST resolve — and
-    # persisted, so the assertion is checked from then on (ADVICE r7)
-    assert _srp_resolve(spark, path, 4, 3) == (4, 3)
-    assert os.path.exists(os.path.join(path, "meta"))
-    assert _srp_resolve(spark, path, 4, 3) == (4, 3)  # matching: fine
-    with pytest.raises(ValueError, match="mismatch|built with"):
-        _srp_resolve(spark, path, 8, 5)  # no longer silently trusted
-    # a fresh pre-meta index with unset params falls back to the
-    # historical defaults (and persists them)
-    shutil.rmtree(os.path.join(path, "meta"))
-    assert _srp_resolve(spark, path, None, None) == (16, 6)
-    assert _srp_resolve(spark, path, 16, 6) == (16, 6)
-    # a PRESENT but unreadable meta raises, never guesses
-    shutil.rmtree(os.path.join(path, "meta"))
-    os.makedirs(os.path.join(path, "meta"))
-    with open(os.path.join(path, "meta", "part-corrupt.parquet"), "w") as f:
-        f.write("this is not parquet")
-    with pytest.raises(Exception):
-        _srp_resolve(spark, path, None, None)
-
-
-def test_srp_resolve_lost_race_keeps_theirs(spark, sf_dir, tmp_path, monkeypatch):
-    """ADVICE r8 TOCTOU: if a concurrent first-resolver lands meta between
-    _srp_resolve's exists check and its rename, Hadoop rename moves the tmp
-    dir INTO the existing meta dir (meta/meta_tmp_<pid>) — a nested
-    non-partition dir that breaks every later parquet read of meta. The fix
-    detects the nested outcome post-rename and deletes it (keep-theirs)."""
-    import os
-    import shutil
-
-    from vectolite_spark.operators.ann import _srp_resolve, build_srp_index
-    from vectolite_spark.store import _HadoopFS
-
-    embs = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "srp_race")
-    build_srp_index(embs, path, n_tables=4, n_planes=3)
-    meta_path = f"{path}/meta"
-    assert os.path.exists(meta_path)
-
-    # simulate the race: exists() lies "absent" for the meta dir (the
-    # stale pre-check) while the concurrent winner's meta is really there
-    orig = _HadoopFS.exists
-
-    def lying_exists(self, p):
-        if p == meta_path:
-            return False
-        return orig(self, p)
-
-    monkeypatch.setattr(_HadoopFS, "exists", lying_exists)
-    # pre-meta branch runs: trusts the caller THIS call, rename nests
-    assert _srp_resolve(spark, path, 9, 5) == (9, 5)
-    monkeypatch.setattr(_HadoopFS, "exists", orig)
-
-    # the nested tmp must be gone and the WINNER's meta must still read
-    assert not any(n.startswith("meta_tmp_") for n in os.listdir(meta_path))
-    assert _srp_resolve(spark, path, None, None) == (4, 3)
-    shutil.rmtree(path)
-
-
 def test_handle_cache_session_object_keys():
     """ADVICE r8: the registry's one handle cache keys by the SESSION
     OBJECT, not id(spark) (id reuse after GC could hand a new session a
@@ -1010,9 +925,9 @@ def test_handle_cache_session_object_keys():
 
 
 def test_ivfpq_append_onto_missing_cells_layout(spark, sf_dir, tmp_path):
-    """ADVICE r8: the append m-guard must not raise a raw AnalysisException
-    on a partially built index (centroids+codebook present, cells absent)
-    — the guard is skipped and the append becomes the first fill."""
+    """ADVICE r8: an append onto an index whose cells layout is absent
+    (centroids, codebook and marker present) must not raise a raw
+    AnalysisException — the append becomes the first fill."""
     import shutil
 
     from vectolite_spark.operators.ann import (
@@ -1026,8 +941,8 @@ def test_ivfpq_append_onto_missing_cells_layout(spark, sf_dir, tmp_path):
     build_ivfpq_index(embs, path, n_cells=4, m=8, pq_k=16, pq_iters=0)
     shutil.rmtree(f"{path}/cells")
     later = embs.filter(F.col("vec_id") % 7 == 0)
-    ivfpq_index_append(spark, path, later, m=8)  # no raw AnalysisException
-    idx = IVFPQIndex(spark, path, m=8)
+    ivfpq_index_append(spark, path, later)  # no raw AnalysisException
+    idx = IVFPQIndex(spark, path)
     qvec = [float(x) for x in later.first()["embedding"]]
     got = idx.topk(qvec, k=5, n_probe=4, refine=10_000).collect()
     assert len(got) == 5  # serves from the appended fill

@@ -75,7 +75,7 @@ def test_ivfpq_recall_floor_100k(spark, corpus, queries, truth, tmp_path):
     build_ivfpq_index(
         corpus, path, n_cells=256, m=16, pq_k=64, pq_iters=1, ivf_iters=2
     )
-    idx = IVFPQIndex(spark, path, m=16)
+    idx = IVFPQIndex(spark, path)
     got: dict[int, set] = {}
     for r in queries.collect():
         rows = idx.topk(
@@ -99,7 +99,7 @@ def test_srp_recall_floor_100k(spark, corpus, queries, truth, tmp_path):
     build_srp_index(corpus, path, n_tables=8, n_planes=9)
     got: dict[int, set] = {}
     for r in srp_index_topk_batch(
-        spark, path, queries, k=K, n_tables=8, n_planes=9
+        spark, path, queries, k=K
     ).collect():
         got.setdefault(r["query_id"], set()).add(r["vec_id"])
     rec = _recall(got, truth)
@@ -164,7 +164,7 @@ def test_ivfpq_recall_floor_100k_aniso(
     build_ivfpq_index(
         aniso_corpus, path, n_cells=256, m=16, pq_k=64, pq_iters=1, ivf_iters=2
     )
-    idx = IVFPQIndex(spark, path, m=16)
+    idx = IVFPQIndex(spark, path)
     got: dict[int, set] = {}
     for r in aniso_queries.collect():
         rows = idx.topk(
@@ -201,7 +201,6 @@ def test_diagnose_operating_point_aniso(
         spark,
         path,
         aniso_queries,
-        m=16,
         k=K,
         n_probes=(8, 32),
         refine=200,
@@ -234,7 +233,7 @@ def test_srp_recall_floor_100k_aniso(
     build_srp_index(aniso_corpus, path, n_tables=8, n_planes=9)
     got: dict[int, set] = {}
     for r in srp_index_topk_batch(
-        spark, path, aniso_queries, k=K, n_tables=8, n_planes=9
+        spark, path, aniso_queries, k=K
     ).collect():
         got.setdefault(r["query_id"], set()).add(r["vec_id"])
     rec = _recall(got, aniso_truth)
@@ -280,7 +279,6 @@ def test_diagnose_operating_point_routing_bound(spark, sf_dir, tmp_path):
         spark,
         base,
         queries,
-        m=32,
         k=K,
         n_probes=(2, 12),
         refine=4000,

@@ -109,7 +109,7 @@ def test_sync_srp_and_ivfpq_consume_exactly_the_delta(
     assert sync_srp_index(store, srp) == {
         "v_from": v0, "v_to": v2, "n_rows": 10,
     }
-    assert sync_ivfpq_index(store, ivfpq, m=4) == {
+    assert sync_ivfpq_index(store, ivfpq) == {
         "v_from": v0, "v_to": v2, "n_rows": 10,
     }
     # SRP: every id present in every table's bucketing (2 tables)
@@ -120,13 +120,6 @@ def test_sync_srp_and_ivfpq_consume_exactly_the_delta(
     pq_rows = spark.read.parquet(f"{ivfpq}/cells").collect()
     assert sorted(r["vec_id"] for r in pq_rows) == list(range(30))
     assert all(len(r["codes"]) == 4 for r in pq_rows)
-    # appending with a mismatched m must refuse, not mix code lengths
-    import pytest
-
-    from vectolite_spark.operators.ann import ivfpq_index_append
-
-    with pytest.raises(ValueError, match="stores 4-code"):
-        ivfpq_index_append(spark, ivfpq, _vecs8(range(30, 32)), m=8)
 
 
 def test_sync_bm25_matches_rebuild(store, spark, tmp_path):
@@ -261,15 +254,14 @@ def _cells_audit(spark, index_path):
     return r["n"], r["c"]
 
 
-# family -> (builder, delta append the sync calls, sync, build kwargs,
-# sync kwargs)
+# family -> (builder, delta append the sync calls, sync, build kwargs)
 _FENCED_FAMILIES = {
     "ivf": ("build_ivf_index", "ivf_index_append", "sync_ivf_index",
-            {"cluster_col": "label"}, {}),
+            {"cluster_col": "label"}),
     "srp": ("build_srp_index", "srp_index_append", "sync_srp_index",
-            {"n_tables": 2, "n_planes": 3}, {}),
+            {"n_tables": 2, "n_planes": 3}),
     "ivfpq": ("build_ivfpq_index", "ivfpq_index_append", "sync_ivfpq_index",
-              {"cluster_col": "label", "m": 4}, {"m": 4}),
+              {"cluster_col": "label", "m": 4}),
 }
 
 
@@ -283,15 +275,13 @@ def test_sync_crash_after_append_is_fenced(spark, tmp_path, monkeypatch, family)
     from vectolite_spark.operators import ann, index_sync
     from vectolite_spark.operators.index_sync import rebuild_and_fast_forward
 
-    build_name, append_name, sync_name, build_kw, sync_kw = (
-        _FENCED_FAMILIES[family]
-    )
+    build_name, append_name, sync_name, build_kw = _FENCED_FAMILIES[family]
 
     def build(df, path):
         getattr(ann, build_name)(df, path, **build_kw)
 
     def sync(st, path):
-        return getattr(index_sync, sync_name)(st, path, **sync_kw)
+        return getattr(index_sync, sync_name)(st, path)
 
     def two_commits_past_build(root):
         st = SnapshotStore(spark, str(root / "table"))
@@ -333,7 +323,7 @@ def test_sync_crash_after_append_is_fenced(spark, tmp_path, monkeypatch, family)
 
 def test_partial_build_is_not_ready_and_gets_rebuilt(spark, tmp_path, monkeypatch):
     """A builder that raises after writing its first parts (the SRP cells
-    land, the meta write fails) leaves an index that index_ready
+    land, the ready-marker write fails) leaves an index that index_ready
     rejects; store.query(ann=True) and the registry's _cached_index both
     rebuild it, and their answers equal a clean build's."""
     import os
@@ -345,7 +335,7 @@ def test_partial_build_is_not_ready_and_gets_rebuilt(spark, tmp_path, monkeypatc
     from vectolite_spark.operators.index_sync import index_ready
     from vectolite_spark.store import SparkVectolite
 
-    def meta_write_fails(*args, **kwargs):
+    def marker_write_fails(*args, **kwargs):
         raise RuntimeError("crash mid-build")
 
     builds = []
@@ -362,7 +352,7 @@ def test_partial_build_is_not_ready_and_gets_rebuilt(spark, tmp_path, monkeypatc
     broken.insert_many(texts)
     clean.build_ann_index()
     with monkeypatch.context() as m:
-        m.setattr(ann, "local_df", meta_write_fails)
+        m.setattr(ann, "mark_index_ready", marker_write_fails)
         with pytest.raises(RuntimeError, match="crash mid-build"):
             broken.build_ann_index()
     assert os.path.isdir(f"{broken._ann_path()}/cells")  # first parts landed
@@ -381,7 +371,7 @@ def test_partial_build_is_not_ready_and_gets_rebuilt(spark, tmp_path, monkeypatc
     path = registry.index_cache_path("partial_build_test", sf)
     try:
         with monkeypatch.context() as m:
-            m.setattr(ann, "local_df", meta_write_fails)
+            m.setattr(ann, "mark_index_ready", marker_write_fails)
             with pytest.raises(RuntimeError, match="crash mid-build"):
                 registry._cached_index(
                     "partial_build_test", sf, lambda p: real_build(embs, p)
@@ -439,3 +429,177 @@ def test_cached_index_rebuilds_when_its_fingerprint_changes(spark, tmp_path):
         assert len(builds) == 3, "each stale fingerprint rebuilt once"
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+def _docs(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"term{i % 4} shared vector scan filler{i}") for i in ids],
+        "doc_id long, text string",
+    )
+
+
+_QVEC8 = [3.0, 1.0, 2.0, 0.5] * 2
+
+
+def _probe_srp(spark, idx):
+    from vectolite_spark.operators.ann import srp_index_topk
+
+    return srp_index_topk(spark, idx, _QVEC8, k=5).collect()
+
+
+def _probe_ivfpq(spark, idx):
+    from vectolite_spark.operators.ann import IVFPQIndex
+
+    h = IVFPQIndex(spark, idx)
+    return h.topk(
+        _QVEC8, k=5, n_probe=len(h.centroids), refine=10_000
+    ).collect()
+
+
+def _probe_bm25(spark, idx):
+    from vectolite_spark.operators.retrieval import BM25Index
+
+    return BM25Index(spark, idx).topk(["shared", "term1"], k=5).collect()
+
+
+def _probe_trigram(spark, idx):
+    from vectolite_spark.operators.retrieval import TrigramIndex
+
+    return TrigramIndex(spark, idx).similarity_topk("term1 shared", k=5).collect()
+
+
+# family -> (rows, builder module, builder, build kwargs, the non-default
+# parameters the marker must record, probe)
+_PARAM_FAMILIES = {
+    "srp": (_vecs8, "ann", "build_srp_index",
+            {"n_tables": 4, "n_planes": 3}, {"n_tables": 4, "n_planes": 3},
+            _probe_srp),
+    "ivfpq": (_vecs8, "ann", "build_ivfpq_index",
+              {"cluster_col": "label", "m": 4}, {"m": 4}, _probe_ivfpq),
+    "bm25": (_docs, "retrieval", "build_bm25_index",
+             {"n_buckets": 4}, {"n_buckets": 4}, _probe_bm25),
+    "trigram": (_docs, "retrieval", "build_trigram_index",
+                {"n_buckets": 4}, {"n_buckets": 4}, _probe_trigram),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_PARAM_FAMILIES))
+def test_index_carries_its_build_parameters(spark, tmp_path, family):
+    """Built with non-default parameters, each family records them in
+    its ready marker, and is probed, appended to (through its sync) and
+    synced with no caller restating them; the synced index equals a
+    rebuild over the current table: same marker, same answers."""
+    import importlib
+
+    from vectolite_spark.operators import index_sync
+    from vectolite_spark.operators.index_sync import index_params
+
+    rows, module, build_name, build_kw, recorded, probe = (
+        _PARAM_FAMILIES[family]
+    )
+    builder = getattr(
+        importlib.import_module(f"vectolite_spark.operators.{module}"),
+        build_name,
+    )
+    st = SnapshotStore(spark, str(tmp_path / "table"))
+    v0 = st.append(rows(spark, range(0, 20)))
+    idx = str(tmp_path / "idx")
+    builder(st.read(v0), idx, **build_kw)
+    params = index_params(spark, idx)
+    assert params["family"] == family
+    assert recorded.items() <= params.items()
+    assert probe(spark, idx)
+    set_index_watermark(spark, idx, v0)
+    st.append(rows(spark, range(20, 26)))
+    st.append(rows(spark, range(26, 30)))
+    sync = getattr(index_sync, f"sync_{family}_index")
+    assert sync(st, idx)["n_rows"] == 10
+
+    full = str(tmp_path / "full")
+    builder(st.read(), full, **build_kw)
+    assert index_params(spark, idx) == index_params(spark, full)
+    assert probe(spark, idx) == probe(spark, full)
+
+
+def test_marker_without_build_parameters_names_the_rebuild(spark, tmp_path):
+    """A ready marker written before markers recorded the build
+    parameters is refused with the rebuild named: a probe never guesses
+    the planes it would bucket with."""
+    from vectolite_spark.operators.ann import build_srp_index, srp_index_topk
+    from vectolite_spark.operators.index_sync import index_ready
+    from vectolite_spark.store import _HadoopFS
+
+    idx = str(tmp_path / "srp")
+    build_srp_index(_vecs8(spark, range(20)), idx, n_tables=2, n_planes=3)
+    # the marker as builds wrote it before it carried parameters
+    _HadoopFS(spark, idx).write_text(f"{idx}/_BUILT", "built", overwrite=True)
+    assert index_ready(spark, idx)
+    with pytest.raises(VectoliteError, match="rebuild"):
+        srp_index_topk(spark, idx, _QVEC8, k=3)
+
+
+def _dup_topk_batch(spark, tmp_path, queries):
+    from vectolite_spark.operators.topk import topk_batch
+
+    qdf = spark.createDataFrame(queries, "query_id long, query_vec array<double>")
+    return topk_batch(qdf, _vecs8(spark, range(20)), k=5)
+
+
+def _dup_srp(spark, tmp_path, queries):
+    from vectolite_spark.operators.ann import build_srp_index, srp_index_topk_batch
+
+    idx = str(tmp_path / "srp")
+    build_srp_index(_vecs8(spark, range(20)), idx, n_tables=2, n_planes=3)
+    qdf = spark.createDataFrame(queries, "query_id long, query_vec array<double>")
+    return srp_index_topk_batch(spark, idx, qdf, k=5)
+
+
+def _dup_ivf(spark, tmp_path, queries):
+    from vectolite_spark.operators.ann import build_ivf_index, load_ivf_index
+
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(_vecs8(spark, range(20)), idx, cluster_col="label")
+    return load_ivf_index(spark, idx).batch_topk(queries, k=5)
+
+
+def _dup_ivfpq(spark, tmp_path, queries):
+    from vectolite_spark.operators.ann import IVFPQIndex, build_ivfpq_index
+
+    idx = str(tmp_path / "ivfpq")
+    build_ivfpq_index(_vecs8(spark, range(20)), idx, cluster_col="label", m=4)
+    return IVFPQIndex(spark, idx).batch_topk(queries, k=5)
+
+
+def _dup_bm25(spark, tmp_path, queries):
+    from vectolite_spark.operators.retrieval import BM25Index, build_bm25_index
+
+    idx = str(tmp_path / "bm25")
+    build_bm25_index(_docs(spark, range(20)), idx)
+    return BM25Index(spark, idx).batch_topk(
+        [(q, ["shared", f"term{i}"]) for i, (q, _) in enumerate(queries)], k=5
+    )
+
+
+def _dup_trigram(spark, tmp_path, queries):
+    from vectolite_spark.operators.retrieval import TrigramIndex, build_trigram_index
+
+    idx = str(tmp_path / "trgm")
+    docs = _docs(spark, range(20))
+    build_trigram_index(docs, idx)
+    return TrigramIndex(spark, idx).batch_search(
+        docs, [(q, f"term{i}") for i, (q, _) in enumerate(queries)]
+    )
+
+
+@pytest.mark.parametrize(
+    "probe",
+    [_dup_topk_batch, _dup_srp, _dup_ivf, _dup_ivfpq, _dup_bm25, _dup_trigram],
+    ids=["topk_batch", "srp", "ivf", "ivfpq", "bm25", "trigram"],
+)
+def test_batch_probes_refuse_duplicate_query_ids(spark, tmp_path, probe):
+    """Two different queries under one query id would be merged into one
+    top-k (or scored against each other's state); every batch probe
+    refuses the batch instead."""
+    queries = [(0, _QVEC8), (0, [1.0, 0.0] * 4)]
+    with pytest.raises(ValueError, match="duplicate query ids"):
+        probe(spark, tmp_path, queries).collect()

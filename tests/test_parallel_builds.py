@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vectolite_spark.operators.index_sync import index_ready
+from vectolite_spark.operators.index_sync import index_params, index_ready
 
 
 def test_run_jobs_results_and_error_order():
@@ -111,11 +111,11 @@ def test_bm25_build_artifacts_consistent(spark, sf_dir, tmp_path):
         F.count(F.lit(1)).alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("total_dl"),
     ).collect()[0]
-    assert (srow["n_docs"], srow["total_dl"], srow["n_buckets"]) == (
+    assert (srow["n_docs"], srow["total_dl"]) == (
         want["n_docs"],
         want["total_dl"],
-        8,
     )
+    assert index_params(spark, path) == {"family": "bm25", "n_buckets": 8}
 
 
 def test_ivfpq_build_artifacts_consistent(spark, tmp_path):

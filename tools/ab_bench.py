@@ -31,6 +31,10 @@ Supported keys mirror bench.py's semantics for the same names:
   as ``<key>_jobs``. Prebuilt-index keys get their index
   ensured (untimed) first, as bench.py's build phase does;
 - serving keys (``*_qps``): bench.py's serving meters, median q/s.
+
+A ``--keys`` name that is none of these in the current checkout is
+refused, with exit code 2, before any rep runs. A key that only the
+``--old`` side lacks is reported as NaN for that side.
 """
 
 from __future__ import annotations
@@ -268,7 +272,28 @@ def measure(keys: list[str], inner: int) -> dict[str, float]:
     return out
 
 
+def unknown_keys(keys: list[str]) -> list[str]:
+    """The requested names this checkout cannot measure: neither a build
+    key, a serving key nor a ``registry.QUERIES`` entry."""
+    sys.path.insert(0, REPO)
+    from vectolite_spark.registry import QUERIES
+
+    return [
+        k for k in keys
+        if k not in BUILD_KEYS and k not in SERVING_KEYS and k not in QUERIES
+    ]
+
+
 def orchestrate(args) -> int:
+    keys = args.keys.split(",")
+    unknown = unknown_keys(keys)
+    if unknown:
+        print(
+            f"unknown --keys {', '.join(unknown)}: not a build key, a "
+            "serving key or a registry query of this checkout",
+            file=sys.stderr,
+        )
+        return 2
     sha = subprocess.run(
         ["git", "rev-parse", "--verify", f"{args.old}^{{commit}}"],
         cwd=REPO, check=True, capture_output=True, text=True,
@@ -282,7 +307,6 @@ def orchestrate(args) -> int:
         subprocess.run(["tar", "-x", "-C", old_wt], input=tree, check=True)
     sides = [("old", old_wt), ("new", REPO)]
     reps: list[dict] = []
-    keys = args.keys.split(",")
     for i in range(args.reps):
         for label, path in sides:
             env = dict(os.environ)

@@ -132,7 +132,7 @@ def main() -> None:
             results["ivfpq_build_s"] = round(time.time() - t0, 1)
             print(f"ivfpq build (cells={n_cells}, m={m}, pq_k={pq_k}): "
                   f"{results['ivfpq_build_s']}s")
-        idx = IVFPQIndex(spark, path, m=m)
+        idx = IVFPQIndex(spark, path)
         qpairs = [
             (int(r["query_id"]), [float(v) for v in r["query_vec"]])
             for r in queries.collect()
@@ -202,7 +202,7 @@ def main() -> None:
         results["ivfpq_build_s"] = round(time.time() - t0, 1)
         print(f"ivfpq build (cells={n_cells}, m={m}, pq_k={pq_k}): "
               f"{results['ivfpq_build_s']}s")
-    idx = IVFPQIndex(spark, ivfpq_path, m=m)
+    idx = IVFPQIndex(spark, ivfpq_path)
     qrows = queries.collect()
     for n_probe in (8, 32):
         hits = tot = 0
@@ -238,8 +238,7 @@ def main() -> None:
               f"{results['srp_build_s']}s")
     t0 = time.time()
     srp_rows = srp_index_topk_batch(
-        spark, srp_path, queries, k=k,
-        n_tables=n_tables, n_planes=n_planes, max_driver_rows=n_queries,
+        spark, srp_path, queries, k=k, max_driver_rows=n_queries,
     ).collect()
     dt = time.time() - t0
     got_map: dict[int, set] = {}

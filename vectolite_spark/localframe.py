@@ -13,7 +13,7 @@ schema-verification + pickle→InternalRow conversion path
 (``_createFromRDD`` maps the same ``prepare`` the local path applies
 eagerly) at ~0.4 s, byte-equal output.
 
-Use :func:`local_df` for every driver-local metadata frame (index meta,
+Use :func:`local_df` for every driver-local metadata frame (index
 stats merges, query vectors, routing tables). Frames that FAN OUT work —
 rows that each seed expensive distributed compute — should pass
 ``slices=`` explicitly so the work still parallelizes.

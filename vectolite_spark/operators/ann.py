@@ -30,8 +30,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectolite_spark.localframe import local_df
-from vectolite_spark.operators.index_sync import clear_index_ready, mark_index_ready
-from vectolite_spark.operators.topk import SCORE_DECIMALS, topk_ids
+from vectolite_spark.operators.index_sync import (
+    clear_index_ready,
+    index_params,
+    mark_index_ready,
+)
+from vectolite_spark.operators.topk import (
+    SCORE_DECIMALS,
+    require_unique_query_ids,
+    topk_ids,
+)
 from vectolite_spark.session import phase
 
 
@@ -431,7 +439,7 @@ def build_ivf_index(
         .partitionBy("cell")
         .parquet(f"{index_path}/cells")
     )
-    mark_index_ready(embeddings.sparkSession, index_path)
+    mark_index_ready(embeddings.sparkSession, index_path, {"family": "ivf"})
 
 
 class IVFIndex:
@@ -492,6 +500,7 @@ class IVFIndex:
 
         from vectolite_spark._pandas_udfs import make_pair_cosine_udf
 
+        require_unique_query_ids([qid for qid, _ in queries])
         qcells = [
             (int(qid), int(c), [float(x) for x in vec])
             for qid, vec in queries
@@ -958,7 +967,16 @@ def build_ivfpq_index(
         )
 
     run_jobs(_write_centroids, _write_codebook, _write_cells)
-    mark_index_ready(spark, index_path)
+    mark_index_ready(
+        spark,
+        index_path,
+        {
+            "family": "ivfpq",
+            "m": int(m),
+            "n_cells": len(cents_list),
+            "pq_k": int(codebook.shape[0]),
+        },
+    )
 
 
 class IVFPQIndex:
@@ -966,14 +984,15 @@ class IVFPQIndex:
     (partition pruning) -> PQ asymmetric distance over the narrow codes
     columns -> exact cosine rescore of the top ``refine`` survivors (the
     classic refine step: approximate order finds candidates, full
-    precision ranks them)."""
+    precision ranks them). The subspace count ``m`` comes from the
+    index's ready marker."""
 
-    def __init__(self, spark, index_path: str, m: int = 8):
+    def __init__(self, spark, index_path: str):
         import numpy as np
 
         self.spark = spark
         self.path = index_path
-        self.m = m
+        self.m = index_params(spark, index_path)["m"]
         self.centroids = [
             (int(r["cluster"]), list(r["centroid"]))
             for r in spark.read.parquet(f"{index_path}/centroids").collect()
@@ -1081,19 +1100,7 @@ class IVFPQIndex:
         qlist = [
             (int(qid), [float(x) for x in vec]) for qid, vec in queries
         ]
-        from collections import Counter
-
-        counts = Counter(q for q, _ in qlist)
-        dups = sorted(q for q, c in counts.items() if c > 1)
-        if dups:
-            # the per-query distance-table dict keys on query_id: a
-            # duplicate id would keep only the LAST query's table while
-            # the routing relation kept BOTH queries' (id, cell) rows —
-            # pairs silently scored against the wrong table. Refuse.
-            raise ValueError(
-                f"batch_topk: duplicate query ids {dups[:5]} — query ids "
-                "must be unique within one batch"
-            )
+        require_unique_query_ids([q for q, _ in qlist])
         spark = self.spark
         qcells = [
             (qid, int(c))
@@ -1148,8 +1155,7 @@ class IVFPQIndex:
 
 
 def ivfpq_index_append(
-    spark, index_path: str, embeddings: DataFrame,
-    m: int = 8, id_col: str = "vec_id",
+    spark, index_path: str, embeddings: DataFrame, id_col: str = "vec_id"
 ) -> None:
     """Incremental IVF-PQ maintenance (r8; the ``ivf_index_append`` twin
     for the compressed layout): route NEW vectors to the EXISTING IVF
@@ -1160,34 +1166,10 @@ def ivfpq_index_append(
     frozen index parameters). Neither centroids nor codebook move —
     after heavy distribution drift, rebuild with ``build_ivfpq_index``
     (quantization error of appended vectors grows with drift; the
-    exact-rescore refine step keeps returned SCORES true either way)."""
-    idx = IVFPQIndex(spark, index_path, m=m)
-    # m is an encode-time parameter the (k, d) codebook cannot recover;
-    # the stored codes arrays CAN — appending with a mismatched m would
-    # mix code lengths in one layout and silently corrupt every later
-    # probe's reshape (the SRP meta guard's corruption class). Guarded
-    # behind a cheap layout probe (ADVICE r8): on a missing/parquet-less
-    # cells dir, skip the guard and let IVFPQIndex raise its own clearer
-    # error instead of a raw AnalysisException from this read.
-    from vectolite_spark.store import _HadoopFS
-
-    existing = []
-    if _HadoopFS(spark, index_path).exists(f"{index_path}/cells"):
-        try:
-            existing = (
-                spark.read.parquet(f"{index_path}/cells")
-                .select(F.size("codes").alias("m"))
-                .limit(1)
-                .collect()
-            )
-        except Exception:
-            existing = []  # parquet-less dir: let IVFPQIndex raise its own
-    if existing and int(existing[0]["m"]) != int(m):
-        raise ValueError(
-            f"IVF-PQ index at {index_path} stores {existing[0]['m']}-code "
-            f"vectors; got m={m} — appending mismatched subspace counts "
-            "silently corrupts the codes layout"
-        )
+    exact-rescore refine step keeps returned SCORES true either way).
+    The delta is encoded with the ``m`` the index's ready marker
+    records, so every stored codes array keeps one length."""
+    idx = IVFPQIndex(spark, index_path)
     base = embeddings.select(
         F.col(id_col).alias("vec_id"), "embedding"
     )
@@ -1199,7 +1181,7 @@ def ivfpq_index_append(
         [c for c, _ in idx.centroids],
         [v for _, v in idx.centroids],
         idx.codebook,
-        m,
+        idx.m,
     )
     (
         base.mapInPandas(
@@ -1218,7 +1200,6 @@ def diagnose_operating_point(
     spark,
     index_path: str,
     queries,
-    m: int,
     k: int = 10,
     n_probes: Sequence[int] = (8, 32),
     refine: int = 1000,
@@ -1250,6 +1231,8 @@ def diagnose_operating_point(
     not asserted: (a) always, (b) when ``rebuild_dir`` is given (the 2m
     index is rebuilt from the raw embeddings that ride inside
     ``{index_path}/cells`` — self-contained, no corpus handle needed).
+    The index's ``m`` (ready marker) and cell count (its centroids) are
+    read from the index itself.
 
     ``queries``: DataFrame with (query_id, query_vec) columns.
     ``truth``: optional {query_id: set(vec_id)} exact top-k; computed
@@ -1284,7 +1267,8 @@ def diagnose_operating_point(
                 hits += 1
         return round(hits / denom, 4)
 
-    idx = IVFPQIndex(spark, index_path, m=m)
+    idx = IVFPQIndex(spark, index_path)
+    m, n_cells = idx.m, len(idx.centroids)
     probes = sorted(set(int(p) for p in n_probes))
     sweep = {p: _recall(idx, p, refine) for p in probes}
     lo, hi = sweep[probes[0]], sweep[probes[-1]]
@@ -1292,7 +1276,7 @@ def diagnose_operating_point(
     base_recall = sweep[probes[0]]
     out: dict = {
         "index_path": index_path,
-        "m": int(m),
+        "m": m,
         "k": int(k),
         "refine": int(refine),
         "n_probe_sweep": {str(p): sweep[p] for p in probes},
@@ -1331,18 +1315,17 @@ def diagnose_operating_point(
                 corpus = spark.read.parquet(f"{index_path}/cells").select(
                     "vec_id", "embedding"
                 )
-            n_cells = spark.read.parquet(f"{index_path}/centroids").count()
-            c2 = 2 * int(n_cells)
+            c2 = 2 * n_cells
             build_ivfpq_index(
                 corpus,
                 rebuild_dir,
                 n_cells=c2,
-                m=int(m),
+                m=m,
                 pq_k=pq_k,
                 pq_iters=pq_iters,
                 ivf_iters=ivf_iters,
             )
-            idx2 = IVFPQIndex(spark, rebuild_dir, m=int(m))
+            idx2 = IVFPQIndex(spark, rebuild_dir)
             same_frac = _recall(idx2, 2 * probes[0], refine)
             same_jobs = _recall(idx2, probes[0], refine)
             out["cells_doubled"] = {
@@ -1386,18 +1369,17 @@ def diagnose_operating_point(
             corpus = spark.read.parquet(f"{index_path}/cells").select(
                 "vec_id", "embedding"
             )
-        n_cells = spark.read.parquet(f"{index_path}/centroids").count()
-        m2 = 2 * int(m)
+        m2 = 2 * m
         build_ivfpq_index(
             corpus,
             rebuild_dir,
-            n_cells=int(n_cells),
+            n_cells=n_cells,
             m=m2,
             pq_k=pq_k,
             pq_iters=pq_iters,
             ivf_iters=ivf_iters,
         )
-        idx2 = IVFPQIndex(spark, rebuild_dir, m=m2)
+        idx2 = IVFPQIndex(spark, rebuild_dir)
         m2_recall = _recall(idx2, probes[0], refine)
         out["m_doubled"] = {
             "m": m2,
@@ -1439,83 +1421,6 @@ def srp_query_blocks(
     return [f"{t}:{c}" for t, c in enumerate(codes)]
 
 
-def _srp_meta(spark, index_path: str) -> tuple[int, int] | None:
-    """(n_tables, n_planes) the index was BUILT with, or None for a
-    pre-meta index (built before the meta file existed). Probing with
-    other values computes different hyperplanes and silently returns
-    near-empty/wrong results, so the probe/append paths must never
-    guess. Absence is decided by an explicit FS existence check — a
-    TRANSIENT read failure (object-store hiccup, permissions) must
-    propagate, not quietly masquerade as "no meta" and probe with the
-    wrong planes: that is the exact silent corruption this file guards
-    against."""
-    from vectolite_spark.store import _HadoopFS
-
-    meta_path = f"{index_path}/meta"
-    if not _HadoopFS(spark, index_path).exists(meta_path):
-        return None
-    r = spark.read.parquet(meta_path).collect()[0]
-    return int(r["n_tables"]), int(r["n_planes"])
-
-
-def _srp_resolve(spark, index_path, n_tables, n_planes) -> tuple[int, int]:
-    meta = _srp_meta(spark, index_path)
-    if meta is None:
-        # pre-meta index: the caller's explicit hyperparameters are the
-        # only record of how it was built — trust them on THIS call (the
-        # caller asserts them; there is nothing to check against), fall
-        # back to the historical defaults only when left unset, and then
-        # PERSIST the resolved pair as the index's meta so every
-        # subsequent probe/append is checked against it instead of being
-        # trusted again (first resolve wins; a later caller passing
-        # different values gets the mismatch error, not silent wrong
-        # planes). Best-effort: a read-only index location keeps the
-        # trust-the-caller behavior rather than failing the probe.
-        nt = 16 if n_tables is None else int(n_tables)
-        npl = 6 if n_planes is None else int(n_planes)
-        try:
-            # write-then-RENAME: a crash mid-write must not leave a
-            # half-written {index_path}/meta that turns every later
-            # probe's meta read into a hard failure — the tmp dir is
-            # invisible to _srp_meta until the atomic rename lands, and
-            # a stray tmp from a dead writer is harmlessly overwritten
-            from vectolite_spark.store import _HadoopFS
-
-            import os as _os
-
-            tmp = f"{index_path}/meta_tmp_{_os.getpid()}"
-            local_df(
-                spark, [(nt, npl)], "n_tables int, n_planes int"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            fs = _HadoopFS(spark, index_path)
-            if not fs.exists(f"{index_path}/meta"):  # lost race: keep theirs
-                fs.rename(tmp, f"{index_path}/meta")
-                # TOCTOU (ADVICE r8): a concurrent first-resolver can land
-                # meta between the exists check and the rename — Hadoop
-                # rename then moves tmp INTO the existing dir as
-                # meta/meta_tmp_<pid>, and the nested non-partition dir
-                # breaks every later parquet read of meta. Detect the
-                # nested outcome and fall back to keep-theirs.
-                nested = f"{index_path}/meta/meta_tmp_{_os.getpid()}"
-                if fs.exists(nested):
-                    fs.delete(nested)
-            else:
-                fs.delete(tmp)
-        except Exception:
-            pass  # unwritable index dir: stay caller-asserted
-        return nt, npl
-    mt, mp = meta
-    if n_tables is not None and int(n_tables) != mt or (
-        n_planes is not None and int(n_planes) != mp
-    ):
-        raise ValueError(
-            f"SRP index at {index_path} was built with n_tables={mt}, "
-            f"n_planes={mp}; got ({n_tables}, {n_planes}) — probing or "
-            "appending with mismatched planes silently corrupts results"
-        )
-    return mt, mp
-
-
 def build_srp_index(
     embeddings: DataFrame,
     index_path: str,
@@ -1529,7 +1434,9 @@ def build_srp_index(
     probe reads exactly the query's T block directories (directory
     pruning, no scan of the other T*2^b - T); storage is T copies of the
     vector table — the standard multi-table LSH trade, and the copies
-    are what let each probe touch ~T/(T*2^b) of the data."""
+    are what let each probe touch ~T/(T*2^b) of the data. The ready
+    marker records (n_tables, n_planes), so probes and appends bucket
+    with the build's planes without restating them."""
     from vectolite_spark._pandas_udfs import make_srp_bucket_mapper
     from vectolite_spark.operators.layout import fan_out_small_scan
 
@@ -1542,47 +1449,32 @@ def build_srp_index(
     vb = fan_out_small_scan(
         embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
     ).mapInPandas(mapper, schema="vec_id long, embedding array<float>, block string")
-    # the cells write and the tiny meta write are independent —
-    # overlapped as concurrent jobs (guide §2.6); the ready marker
-    # follows both
-    from vectolite_spark.parallel import run_jobs
-
-    def _write_cells():
-        # cluster by block before partitionBy — the build_ivf_index
-        # pattern: without it every mapper task writes a sliver into
-        # every one of the T*2^b block dirs (tasks x 1024 tiny files,
-        # and the single-task tiny-corpus case serializes 1024 file
-        # creates behind one another — measured 21-52 s at sf0.1 for
-        # ~3 MB of data). The shuffle moves only the delta the write
-        # itself is about to move, AQE sizes the partition count, and
-        # each block dir comes out as one splittable file.
-        # explicit numPartitions = defaultParallelism: an AQE-coalesced
-        # keyed exchange packs these tiny-BYTE partitions onto a few
-        # tasks, but the write cost here is per-FILE (one parquet
-        # create per block dir), so byte-based coalescing serializes
-        # ~1024 file creates behind ~6 tasks. A fixed partition count
-        # keyed by block keeps whole blocks together (still one file
-        # per dir) while spreading file creation across the cluster.
-        with phase("srp build: cells write"):
-            vb.repartition(
-                spark.sparkContext.defaultParallelism, F.col("block")
-            ).write.mode("overwrite").partitionBy("block").parquet(
-                f"{index_path}/cells"
-            )
-
-    def _write_meta():
-        # persist the build hyperparameters (the trigram index's meta
-        # discipline): probes/appends resolve (n_tables, n_planes) from
-        # here so a non-default build can never be probed with default
-        # planes
-        local_df(
-            spark,
-            [(int(n_tables), int(n_planes))],
-            "n_tables int, n_planes int",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
-
-    run_jobs(_write_cells, _write_meta)
-    mark_index_ready(spark, index_path)
+    # cluster by block before partitionBy — the build_ivf_index
+    # pattern: without it every mapper task writes a sliver into
+    # every one of the T*2^b block dirs (tasks x 1024 tiny files,
+    # and the single-task tiny-corpus case serializes 1024 file
+    # creates behind one another — measured 21-52 s at sf0.1 for
+    # ~3 MB of data). The shuffle moves only the delta the write
+    # itself is about to move, AQE sizes the partition count, and
+    # each block dir comes out as one splittable file.
+    # explicit numPartitions = defaultParallelism: an AQE-coalesced
+    # keyed exchange packs these tiny-BYTE partitions onto a few
+    # tasks, but the write cost here is per-FILE (one parquet
+    # create per block dir), so byte-based coalescing serializes
+    # ~1024 file creates behind ~6 tasks. A fixed partition count
+    # keyed by block keeps whole blocks together (still one file
+    # per dir) while spreading file creation across the cluster.
+    with phase("srp build: cells write"):
+        vb.repartition(
+            spark.sparkContext.defaultParallelism, F.col("block")
+        ).write.mode("overwrite").partitionBy("block").parquet(
+            f"{index_path}/cells"
+        )
+    mark_index_ready(
+        spark,
+        index_path,
+        {"family": "srp", "n_tables": int(n_tables), "n_planes": int(n_planes)},
+    )
 
 
 def srp_index_topk(
@@ -1590,20 +1482,19 @@ def srp_index_topk(
     index_path: str,
     qvec,
     k: int = 10,
-    n_tables: int | None = None,
-    n_planes: int | None = None,
 ) -> DataFrame:
     """Probe a persisted SRP-LSH index: compute the query's T blocks
-    driver-side, scan ONLY those partition directories, dedupe
-    cross-table collisions on the narrow (vec_id, score) pair, exact
-    top-k. Same planes as ``topk_batch_lsh`` -> identical results to
-    the self-contained path (oracle-shared)."""
+    driver-side with the planes its ready marker records, scan ONLY
+    those partition directories, dedupe cross-table collisions on the
+    narrow (vec_id, score) pair, exact top-k. Same planes as
+    ``topk_batch_lsh`` -> identical results to the self-contained path
+    (oracle-shared)."""
     from pyspark.sql import Window
 
     from vectolite_spark.functions.vector import cosine_score
 
-    n_tables, n_planes = _srp_resolve(spark, index_path, n_tables, n_planes)
-    blocks = srp_query_blocks(qvec, n_tables, n_planes)
+    params = index_params(spark, index_path)
+    blocks = srp_query_blocks(qvec, params["n_tables"], params["n_planes"])
     # enumerate ONLY the query's block directories (basePath keeps the
     # partition column): listing T dirs beats listing all T*2^b and
     # pruning after — the file-index walk is the probe's fixed cost.
@@ -1655,8 +1546,6 @@ def srp_index_topk_batch(
     index_path: str,
     queries: DataFrame,
     k: int = 10,
-    n_tables: int | None = None,
-    n_planes: int | None = None,
     qid_col: str = "query_id",
     qvec_col: str = "query_vec",
     max_driver_rows: int | None = None,
@@ -1674,7 +1563,6 @@ def srp_index_topk_batch(
         collect_query_working_set,
     )
 
-    n_tables, n_planes = _srp_resolve(spark, index_path, n_tables, n_planes)
     qrows = collect_query_working_set(
         queries,
         [qid_col, qvec_col],
@@ -1687,8 +1575,6 @@ def srp_index_topk_batch(
         [int(r[qid_col]) for r in qrows],
         [[float(x) for x in r[qvec_col]] for r in qrows],
         k,
-        n_tables=n_tables,
-        n_planes=n_planes,
         qid_col=qid_col,
     )
 
@@ -1699,50 +1585,33 @@ def srp_index_topk_vecs(
     qids,
     qvecs_in,
     k: int = 10,
-    n_tables: int | None = None,
-    n_planes: int | None = None,
     qid_col: str = "query_id",
-    cells: DataFrame | None = None,
 ) -> DataFrame:
     """``srp_index_topk_batch``'s core for a DRIVER-RESIDENT query
     working set (the ``topk_batch_vecs`` twin): ids + vectors as plain
-    lists, skipping the createDataFrame -> collect round trip — the
-    store's ANN serving facade calls this on every micro-batch dispatch
-    cycle, where that round trip was one extra Spark job of pure
-    latency per cycle.
-
-    ``cells`` (optional): a pre-opened (vec_id, embedding, block)
-    relation for the index — typically CACHED by a serving caller, so
-    each dispatch cycle prunes with a ``block isin`` filter over
-    in-memory columnar batches (batch-stat skipping) instead of
-    re-listing and re-reading the block directories from storage. When
-    ``cells`` is given WITH explicit ``n_tables``/``n_planes``, the
-    per-call meta read (one Spark job) is skipped too — the serving
-    facade validates against the persisted meta once at batcher build."""
+    lists, skipping the createDataFrame -> collect round trip. Query
+    ids must be unique within the batch."""
     import os
 
     from pyspark.sql import Window
 
     from vectolite_spark._pandas_udfs import make_pair_cosine_udf
 
-    if cells is None or n_tables is None or n_planes is None:
-        n_tables, n_planes = _srp_resolve(spark, index_path, n_tables, n_planes)
+    qids = [int(q) for q in qids]
+    require_unique_query_ids(qids)
+    params = index_params(spark, index_path)
     pairs = []
     qvecs = []
     for qid, vec_in in zip(qids, qvecs_in):
         vec = [float(x) for x in vec_in]
-        qvecs.append((int(qid), vec))
-        for b in srp_query_blocks(vec, n_tables, n_planes):
-            pairs.append((int(qid), b))
-    if cells is not None:
-        cells = cells.filter(
-            F.col("block").isin(sorted({b for _, b in pairs}))
-        )
+        qvecs.append((qid, vec))
+        for b in srp_query_blocks(vec, params["n_tables"], params["n_planes"]):
+            pairs.append((qid, b))
     # same remote-store discipline as the single-query probe above: an
     # os.path.exists probe is local-FS only, so on hdfs:// / s3a:// it
     # is ALWAYS false — read the full layout and let the partition
     # filter prune instead of silently returning an empty result set
-    elif "://" not in index_path:
+    if "://" not in index_path:
         dirs = sorted(
             {
                 p
@@ -1786,23 +1655,21 @@ def srp_index_append(
     spark,
     index_path: str,
     embeddings: DataFrame,
-    n_tables: int | None = None,
-    n_planes: int | None = None,
     id_col: str = "vec_id",
 ) -> None:
     """Incremental SRP-LSH maintenance (the ``ivf_index_append`` twin):
-    bucket ONLY the new vectors with the same deterministic planes and
-    append them under their block directories — no rebuild, no touch of
-    existing blocks' files. Probes see the new vectors immediately
-    because block membership is a pure function of the vector; unlike
-    IVF there are no centroids to drift, so append never degrades
-    routing."""
+    bucket ONLY the new vectors with the planes the index's ready marker
+    records and append them under their block directories — no rebuild,
+    no touch of existing blocks' files. Probes see the new vectors
+    immediately because block membership is a pure function of the
+    vector; unlike IVF there are no centroids to drift, so append never
+    degrades routing."""
     from vectolite_spark._pandas_udfs import make_srp_bucket_mapper
 
     from vectolite_spark.operators.layout import fan_out_small_scan
 
-    n_tables, n_planes = _srp_resolve(spark, index_path, n_tables, n_planes)
-    mapper = make_srp_bucket_mapper(n_tables, n_planes)
+    params = index_params(spark, index_path)
+    mapper = make_srp_bucket_mapper(params["n_tables"], params["n_planes"])
     vb = fan_out_small_scan(
         embeddings.select(F.col(id_col).alias("vec_id"), "embedding")
     ).mapInPandas(mapper, schema="vec_id long, embedding array<float>, block string")

@@ -10,6 +10,13 @@ lifecycle, owned here:
   check: no caller inspects a family's subdirectories or their
   ``_SUCCESS`` files, and builders may write their artifacts in any
   order, concurrently.
+- **Build parameters.** The marker is also the one record of how the
+  index was built: a JSON object holding the family and the parameters
+  its probes and appends need (SRP ``n_tables``/``n_planes``; IVF-PQ
+  ``m``/``n_cells``/``pq_k``; BM25 and trigram ``n_buckets``).
+  ``index_params`` reads it back with one file read and no Spark job,
+  so no reader restates a build parameter, and a reader can never probe
+  or append with values the index was not built with.
 - **Watermark.** An index serving a VERSIONED table is bound to a
   ``SnapshotStore`` through a watermark file recording the last store
   version folded into the index. Each ``sync_*`` call consumes exactly
@@ -47,11 +54,14 @@ _WATERMARK = "_store_watermark.json"
 _READY = "_BUILT"
 
 
-def mark_index_ready(spark: SparkSession, index_path: str) -> None:
+def mark_index_ready(spark: SparkSession, index_path: str, params: dict) -> None:
     """Declare the index at ``index_path`` complete: every builder's last
-    step, after all of its artifacts have landed."""
+    step, after all of its artifacts have landed. ``params`` (the
+    ``family`` and the build parameters readers need) is stored in the
+    marker as JSON for ``index_params``."""
     _HadoopFS(spark, index_path).write_text(
-        f"{index_path}/{_READY}", "built", overwrite=True
+        f"{index_path}/{_READY}", json.dumps(params, sort_keys=True),
+        overwrite=True,
     )
 
 
@@ -66,6 +76,30 @@ def clear_index_ready(spark: SparkSession, index_path: str) -> None:
 def index_ready(spark: SparkSession, index_path: str) -> bool:
     """True when a build of the index at ``index_path`` ran to the end."""
     return _HadoopFS(spark, index_path).exists(f"{index_path}/{_READY}")
+
+
+def index_params(spark: SparkSession, index_path: str) -> dict:
+    """The ``family`` and build parameters the ready marker of the index
+    at ``index_path`` records. Raises ``VectoliteError`` when no build
+    of it ran to the end, or when its marker predates recorded
+    parameters: such an index must be rebuilt."""
+    fs = _HadoopFS(spark, index_path)
+    marker = f"{index_path}/{_READY}"
+    if not fs.exists(marker):
+        raise VectoliteError(
+            f"no complete index at {index_path}: build it first"
+        )
+    try:
+        params = json.loads(fs.read_text(marker))
+    except json.JSONDecodeError:
+        params = None
+    if not isinstance(params, dict) or "family" not in params:
+        raise VectoliteError(
+            f"index at {index_path} was built before its ready marker "
+            "recorded the build parameters; rebuild it with its build_* "
+            "function"
+        )
+    return params
 
 
 def _watermark_state(spark: SparkSession, index_path: str) -> dict | None:
@@ -200,10 +234,10 @@ def rebuild_and_fast_forward(
 
 def sync_srp_index(store, index_path: str, id_col: str = "vec_id") -> dict:
     """Fold every store commit since the watermark into the SRP-LSH
-    index: the delta buckets with the same deterministic planes
-    (resolved from the index meta) and appends under its block dirs —
-    block membership is a pure function of the vector, so append never
-    degrades routing. Returns {v_from, v_to, n_rows}."""
+    index: the delta buckets with the planes its ready marker records
+    and appends under its block dirs — block membership is a pure
+    function of the vector, so append never degrades routing. Returns
+    {v_from, v_to, n_rows}."""
     from vectolite_spark.operators.ann import srp_index_append
 
     return _sync(
@@ -215,9 +249,7 @@ def sync_srp_index(store, index_path: str, id_col: str = "vec_id") -> dict:
     )
 
 
-def sync_ivfpq_index(
-    store, index_path: str, m: int = 8, id_col: str = "vec_id"
-) -> dict:
+def sync_ivfpq_index(store, index_path: str, id_col: str = "vec_id") -> dict:
     """Fold every store commit since the watermark into the IVF-PQ
     index: delta vectors route to the frozen centroids and encode with
     the frozen codebook (``ivfpq_index_append``) — rebuild after heavy
@@ -229,7 +261,7 @@ def sync_ivfpq_index(
         store,
         index_path,
         lambda delta: ivfpq_index_append(
-            store.spark, index_path, delta, m=m, id_col=id_col
+            store.spark, index_path, delta, id_col=id_col
         ),
     )
 

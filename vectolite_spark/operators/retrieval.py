@@ -27,7 +27,12 @@ from pyspark.sql import functions as F
 
 from vectolite_spark.localframe import local_df
 from vectolite_spark.operators.dedup import norm_tokens
-from vectolite_spark.operators.index_sync import clear_index_ready, mark_index_ready
+from vectolite_spark.operators.index_sync import (
+    clear_index_ready,
+    index_params,
+    mark_index_ready,
+)
+from vectolite_spark.operators.topk import require_unique_query_ids
 from vectolite_spark.session import phase
 
 BM25_K1 = 1.2
@@ -197,7 +202,10 @@ def build_bm25_index(
         {path}/termstats  vocabulary-sized (term, df)
         {path}/doclen     (doc_id, dl) — replay guard + exact avgdl
         {path}/stats      one row: n_docs, total_dl (integer; avgdl is
-                          derived at handle construction), n_buckets
+                          derived at handle construction)
+
+    ``n_buckets`` is recorded in the ready marker
+    (``index_sync.index_params``), where probes and appends read it.
 
     ``bm25_scores`` re-scans and re-tokenizes the corpus per query — right
     when term stats ride an existing scan, wrong amortization for a query
@@ -288,14 +296,15 @@ def build_bm25_index(
                     .cast("long")
                     .alias("total_dl"),
                 )
-                .withColumn("n_buckets", F.lit(n_buckets))
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(f"{index_path}/stats")
             )
 
     run_jobs(_write_termstats, _write_stats)
-    mark_index_ready(spark, index_path)
+    mark_index_ready(
+        spark, index_path, {"family": "bm25", "n_buckets": int(n_buckets)}
+    )
 
 
 def append_bm25_index(
@@ -321,8 +330,8 @@ def append_bm25_index(
     written, died before doclen — is owned by the streaming sink's
     batch marker, same as the trigram path."""
     spark = new_docs.sparkSession
+    n_buckets = index_params(spark, index_path)["n_buckets"]
     srow = spark.read.parquet(f"{index_path}/stats").first()
-    n_buckets = int(srow["n_buckets"])
     overlap = (
         new_docs.select(F.col(id_col).alias("doc_id"))
         .distinct()
@@ -422,10 +431,9 @@ def append_bm25_index(
             (
                 int(srow["n_docs"]) + int(delta_tot["n"]),
                 int(srow["total_dl"]) + int(delta_tot["s"]),
-                n_buckets,
             )
         ],
-        "n_docs bigint, total_dl bigint, n_buckets int",
+        "n_docs bigint, total_dl bigint",
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/stats")
 
 
@@ -449,7 +457,7 @@ class BM25Index:
         self.avgdl = (
             float(self.total_dl) / self.n_docs if self.n_docs else 0.0
         )
-        self.n_buckets = int(row["n_buckets"])
+        self.n_buckets = index_params(spark, index_path)["n_buckets"]
         self._df_cache: dict | None = None
 
     def _dfs(self) -> dict:
@@ -527,6 +535,7 @@ class BM25Index:
         never touched. Returns (query_id, doc_id, score, rn)."""
         from pyspark.sql import Window
 
+        require_unique_query_ids([qid for qid, _ in queries])
         qt = [
             (int(qid), t)
             for qid, terms in queries
@@ -716,8 +725,9 @@ def build_trigram_index(
     then derived by re-reading just the narrow trigram column of what
     was written (columnar scan of the index, not the corpus — measured
     ~2x build win over tokenizing twice). The ready marker
-    (``index_sync.mark_index_ready``) lands after every artifact, so a
-    crash mid-build always rebuilds. A probe reads only the buckets
+    (``index_sync.mark_index_ready``), which records ``n_buckets`` for
+    probes and appends, lands after every artifact, so a crash
+    mid-build always rebuilds. A probe reads only the buckets
     of the pattern's trigrams — partition pruning turns a 100 TB
     corpus problem into a posting-list problem."""
     from vectolite_spark._pandas_udfs import make_trigram_udf
@@ -751,17 +761,11 @@ def build_trigram_index(
             .parquet(f"{index_path}/postings")
         )
 
-    # meta, doclen and stats all derive from the written postings (or a
-    # constant) and write to disjoint directories — independent jobs,
-    # overlapped from driver threads (guide §2.6) instead of paying
-    # three sequential job launches; the ready marker follows them all.
+    # doclen and stats both derive from the written postings and write
+    # to disjoint directories — independent jobs, overlapped from driver
+    # threads (guide §2.6) instead of paying sequential job launches;
+    # the ready marker, which records n_buckets, follows them both.
     from vectolite_spark.parallel import run_jobs
-
-    def _write_meta():
-        with phase("trgm build: meta write"):
-            local_df(
-                spark, [(n_buckets,)], "n_buckets int"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
 
     def _write_doclen():
         # doclen (per-doc distinct-trigram count) powers
@@ -789,8 +793,10 @@ def build_trigram_index(
                 .parquet(f"{index_path}/stats")
             )
 
-    run_jobs(_write_meta, _write_doclen, _write_stats)
-    mark_index_ready(spark, index_path)
+    run_jobs(_write_doclen, _write_stats)
+    mark_index_ready(
+        spark, index_path, {"family": "trigram", "n_buckets": int(n_buckets)}
+    )
 
 
 def append_trigram_index(
@@ -822,9 +828,7 @@ def append_trigram_index(
     but died before doclen — that window is owned by the streaming
     sink's batch marker."""
     spark = new_docs.sparkSession
-    n_buckets = int(
-        spark.read.parquet(f"{index_path}/meta").collect()[0]["n_buckets"]
-    )
+    n_buckets = index_params(spark, index_path)["n_buckets"]
     from vectolite_spark._pandas_udfs import make_trigram_udf
 
     overlap = (
@@ -988,9 +992,7 @@ class TrigramIndex:
         self._path = index_path
         self._stats = spark.read.parquet(f"{index_path}/stats")
         self._postings = spark.read.parquet(f"{index_path}/postings")
-        self._nb = int(
-            spark.read.parquet(f"{index_path}/meta").collect()[0]["n_buckets"]
-        )
+        self._nb = index_params(spark, index_path)["n_buckets"]
 
     def _probe_trigrams(
         self, pattern: str, max_probe: int
@@ -1090,7 +1092,9 @@ class TrigramIndex:
         as in ``search``; the union of (query_id, trigram) pairs ships
         as a broadcast map; intersection is one count-match aggregation
         keyed (query_id, doc_id); verification joins the corpus ONCE
-        with the per-query pattern riding the broadcast."""
+        with the per-query pattern riding the broadcast. Query ids must be
+        unique within the batch."""
+        require_unique_query_ids([qid for qid, _ in queries])
         probe_rows = []  # (query_id, trigram, n_probed)
         pat_rows = []  # (query_id, pattern_lower)
         for qid, pattern in queries:

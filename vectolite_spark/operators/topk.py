@@ -22,6 +22,7 @@ when raw doubles differ in the last ulp.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -57,6 +58,20 @@ def collect_query_working_set(
             "keeps both sides distributed"
         )
     return rows
+
+
+def require_unique_query_ids(qids: Sequence[int]) -> None:
+    """Refuse a batch that repeats a query id. Batch probes key their
+    per-query state (routing rows, distance tables, ranking windows) on
+    the id, so two queries under one id would be merged into one top-k
+    or scored against each other's state."""
+    counts = Counter(qids)
+    dups = sorted(q for q, c in counts.items() if c > 1)
+    if dups:
+        raise ValueError(
+            f"duplicate query ids {dups[:5]} — query ids must be unique "
+            "within one batch"
+        )
 
 
 def topk_ids(
@@ -133,7 +148,8 @@ def topk_batch_vecs(
     """``topk_batch``'s core for a DRIVER-RESIDENT query working set:
     ids+vectors as plain lists, skipping the createDataFrame → collect
     round trip (the serving micro-batcher calls this on every dispatch
-    cycle, where that round trip was pure latency).
+    cycle, where that round trip was pure latency). Query ids must be
+    unique within the batch.
 
     ``payload_cols``: extra columns of ``embeddings`` (e.g. text,
     metadata) carried onto the winning rows INSIDE the mapper — result
@@ -143,6 +159,7 @@ def topk_batch_vecs(
 
     from vectolite_spark._pandas_udfs import make_batch_topk_mapper
 
+    require_unique_query_ids(qids)
     qv = [[float(x) for x in v] for v in qvecs]
     pcols = list(payload_cols)
     src = embeddings.select(F.col(id_col).alias("vec_id"), "embedding", *pcols)

@@ -2,8 +2,8 @@
 
 Spark's scheduler runs several jobs at once inside one application;
 actions are only sequential because driver code calls them sequentially.
-An index build that writes four artifacts (postings, meta, doclen,
-stats) as four back-to-back actions pays four fixed job launches AND
+An index build that writes three artifacts (postings, doclen, stats)
+as three back-to-back actions pays three fixed job launches AND
 leaves the cluster idle through each job's straggler tail. Where the
 artifacts are independent — different output directories, no
 read-after-write between them — submitting them from a small thread

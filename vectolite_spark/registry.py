@@ -372,11 +372,11 @@ def _bm25_handle(spark, sf_dir: str):
     return _handle(spark, path, "bm25", lambda: BM25Index(spark, path))
 
 
-def _ivfpq_handle(spark, index_path: str, m: int = 8):
+def _ivfpq_handle(spark, index_path: str):
     from vectolite_spark.operators.ann import IVFPQIndex
 
     return _handle(
-        spark, index_path, m, lambda: IVFPQIndex(spark, index_path, m=m)
+        spark, index_path, "ivfpq", lambda: IVFPQIndex(spark, index_path)
     )
 
 
@@ -4517,7 +4517,7 @@ def ann_ivfpq_exact_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     embs = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vector(spark, sf_dir)
     n = _table_count(spark, sf_dir, "embeddings")
-    idx = _ivfpq_handle(spark, _ensure_ivfpq_index(spark, sf_dir, embs), m=8)
+    idx = _ivfpq_handle(spark, _ensure_ivfpq_index(spark, sf_dir, embs))
     rows = idx.topk(qvec, k=10, n_probe=16, refine=n).collect()
     return local_df(spark,
         [(r["vec_id"], r["score"]) for r in rows], "vec_id long, score double"
@@ -7234,7 +7234,7 @@ def ann_ivfpq_probe_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     embs = load_table(spark, sf_dir, "embeddings")
     qvec = _query_vector(spark, sf_dir)
     n = _table_count(spark, sf_dir, "embeddings")
-    idx = _ivfpq_handle(spark, _ensure_ivfpq_index(spark, sf_dir, embs), m=8)
+    idx = _ivfpq_handle(spark, _ensure_ivfpq_index(spark, sf_dir, embs))
     rows = idx.topk(qvec, k=10, n_probe=16, refine=n).collect()
     return local_df(spark,
         [(r["vec_id"], r["score"]) for r in rows], "vec_id long, score double"
@@ -7281,7 +7281,7 @@ def ann_ivfpq_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     n = _table_count(spark, sf_dir, "embeddings")
-    idx = _ivfpq_handle(spark, _ensure_ivfpq_index(spark, sf_dir, embs), m=8)
+    idx = _ivfpq_handle(spark, _ensure_ivfpq_index(spark, sf_dir, embs))
     return idx.batch_topk(queries, k=5, n_probe=16, refine=n).select(
         "query_id", "vec_id", "score", "rn"
     )
@@ -7394,7 +7394,7 @@ def ann_ivfpq_partial_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _cached_index("ivfpq_lbl_m8k16", sf_dir, lambda p: build_ivfpq_index(
         embs, p, m=8, pq_k=16, pq_iters=0, cluster_col="label"
     ))
-    idx = _ivfpq_handle(spark, path, m=8)
+    idx = _ivfpq_handle(spark, path)
     exact = {
         r["vec_id"]
         for r in topk_op.topk_ids(embs, qvec, 10).select("vec_id").collect()
@@ -9591,8 +9591,8 @@ def cdf_synced_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-after-two-delta-commits gate for CDF-driven SRP-LSH upkeep
     (r8; fourth index family on the watermark loop): build the bucket
     layout over snapshot v0, land two append commits,
-    ``sync_srp_index`` buckets ONLY the delta with the planes resolved
-    from the index meta and appends under its block dirs. Block
+    ``sync_srp_index`` buckets ONLY the delta with the planes its ready
+    marker records and appends under its block dirs. Block
     membership is a pure function of the vector, so the synced index
     serves EXACTLY what a from-scratch build over the current table
     would — the oracle replays the same deterministic md5-Rademacher

@@ -81,10 +81,10 @@ class MicroBatcher:
         ``(query_id, vec_id, score, rn, *payload_cols)``, rn 1-based
         per query. Default is the exact cosine batch
         (``topk_batch_vecs`` over ``embeddings``); the store's ANN
-        facade passes the union SRP index probe instead, so concurrent
-        approximate queries coalesce into ONE pruned-scan job exactly
-        like exact ones (VERDICT r8 item 4). With a kernel set,
-        ``embeddings`` may be None."""
+        facade passes a ``make_srp_serving_mapper`` job over its cached
+        working set instead, so concurrent approximate queries coalesce
+        into ONE job exactly like exact ones (VERDICT r8 item 4). With
+        a kernel set, ``embeddings`` may be None."""
         self._embs = embeddings
         self._kernel = kernel
         self._k = int(k)

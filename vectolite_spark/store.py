@@ -1053,13 +1053,14 @@ class SparkVectolite:
 
     def _serving_planes(self) -> tuple[int, int]:
         """(n_tables, n_planes) the serving working set's bucket codes
-        are derived from: the persisted index's meta when one exists (a
-        custom-plane ``build_ann_index`` stays authoritative), else the
-        build defaults."""
+        are derived from: the ones the persisted index's ready marker
+        records when one exists (a custom-plane ``build_ann_index``
+        stays authoritative), else the build defaults."""
         if self._index_ready(self._ann_path()):
-            from vectolite_spark.operators.ann import _srp_resolve
+            from vectolite_spark.operators.index_sync import index_params
 
-            return _srp_resolve(self.spark, self._ann_path(), None, None)
+            params = index_params(self.spark, self._ann_path())
+            return params["n_tables"], params["n_planes"]
         return 16, 6
 
     def _serve(self, qvec, top_k: int, fcmp: dict | None, ann: bool):
@@ -1695,7 +1696,7 @@ class SparkVectolite:
         if not self._has_text_index():
             return None
         if self._trgm_handle is None:
-            # cached across greps: the handle's init pays a meta collect
+            # cached across greps: the handle's init pays a marker read
             # + two reader opens; _invalidate_text_index (the staleness
             # boundary) drops it with the index
             from vectolite_spark.operators.retrieval import TrigramIndex
